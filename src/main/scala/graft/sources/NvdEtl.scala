@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -13,9 +14,16 @@ import org.apache.spark.sql.types._
   *
   * Spark-first differences, by design:
   *  - extract+transform is one declarative `spark.read.schema(...).json`
-  *    (native gzip codec) + `explode(CVE_Items)` — no driver-side JSON pass;
-  *    a directory of feed files parallelizes per-file (each gz feed is one
-  *    task; the 100 TB shape is many feeds, not one giant file);
+  *    (native gzip codec) + `explode(CVE_Items)` — no driver-side JSON pass.
+  *    A gz feed is unsplittable, so each file is read whole by ONE task,
+  *    but Spark's file source packs small files into shared partitions
+  *    (`spark.sql.files.openCostInBytes`): at NVD feed sizes a directory
+  *    of feeds reads as a handful of tasks, not one per file (the
+  *    two-feed load directory of the benchmark reads as 1 partition).
+  *    Read parallelism comes from feed bytes, not feed count;
+  *  - the bootstrap reads every feed in ONE scan and resolves overlaps
+  *    between feeds (earliest feed in run order wins) inside the same
+  *    dataflow, so the warehouse sees one anti-join and one append;
   *  - the incremental set-difference is a distributed left-anti join on the
   *    CVE ID — never a collected id list on the driver;
   *  - the warehouse is year-partitioned parquet, so queries over a CVE-year
@@ -100,11 +108,31 @@ object NvdEtl {
     * the explode when the 2.0 markers appear without CVE_Items. The
     * guard lives inside the explode input (a raise_error branch of the
     * CaseWhen), so no separate envelope scan or eager action is added
-    * to the ingest hot path, and column pruning cannot drop it.
+    * to the ingest hot path, and column pruning cannot drop it. The
+    * message names the offending file, also when `feedPath` is a
+    * directory.
     */
   def ingest(spark: SparkSession, feedPath: String,
       schemaPath: String = DefaultSchemaPath,
-      strict: Boolean = false): DataFrame = {
+      strict: Boolean = false): DataFrame =
+    ingestFeeds(spark, Seq(feedPath), schemaPath, strict).drop(FeedRank)
+
+  /** Column [[ingestFeeds]] tags each row with: the 0-based position, in
+    * the path list, of the feed the row came from.
+    */
+  private val FeedRank = "__feed"
+
+  /** [[ingest]] over several feed files in ONE scan. Each row carries
+    * [[FeedRank]], matched on the file name (several feeds are always one
+    * directory listing, so names are distinct). A single path may be a
+    * directory: all its files are one feed, rank 0.
+    */
+  private def ingestFeeds(spark: SparkSession, feedPaths: Seq[String],
+      schemaPath: String, strict: Boolean): DataFrame = {
+    val names = feedPaths.map(p => new org.apache.hadoop.fs.Path(p).getName)
+    val rank =
+      if (feedPaths.size == 1) lit(0)
+      else (array_position(lit(names.toArray), col("_metadata.file_name")) - 1).cast("int")
     val itemsType = ArrayType(itemSchema(schemaPath))
     val probeSchema = feedSchema(schemaPath)
       .add(StructField("version", StringType))
@@ -118,7 +146,7 @@ object NvdEtl {
       // real NVD 1.1 feeds publish minute-precision timestamps
       // ("2019-04-09T20:15Z") — seconds and millis must both be optional
       .option("timestampFormat", "yyyy-MM-dd'T'HH:mm[:ss][.SSS]XXX")
-      .json(feedPath)
+      .json(feedPaths: _*)
       .select(explode(
         when(col("CVE_Items").isNull &&
             (col("vulnerabilities").isNotNull || col("version").isNotNull),
@@ -126,9 +154,9 @@ object NvdEtl {
             lit("NVD feed schema drift: expected a 1.1 feed with " +
               "CVE_Items, found API-2.0 markers (version="),
             coalesce(col("version"), lit("?")),
-            lit(s", file=$feedPath)"))).cast(itemsType))
-          .otherwise(col("CVE_Items"))).as("item"))
-      .select("item.*")
+            lit(", file="), col("_metadata.file_path"), lit(")"))).cast(itemsType))
+          .otherwise(col("CVE_Items"))).as("item"), rank.as(FeedRank))
+      .select("item.*", FeedRank)
   }
 
   /** The reference transform's staging artifact (etl.py:94-116): scrubbed
@@ -202,19 +230,61 @@ object NvdEtl {
     * loads by construction. Returns the number of newly loaded CVEs.
     */
   def loadFeed(spark: SparkSession, feedPath: String, warehouseDir: String,
-      schemaPath: String = DefaultSchemaPath): Long = {
-    val feed = ingest(spark, feedPath, schemaPath)
-    // checkpoint(): a REAL materialization barrier, not a cache hint.
-    // The append below writes into the same directory the delta's
-    // anti-join lazily reads; persist() could silently drop partitions and
-    // recompute the delta WHILE the warehouse is being appended to. An
-    // eager reliable checkpoint truncates the lineage first, so the append
-    // can never re-read its own output.
-    val delta = newCves(feed, warehouse(spark, warehouseDir, schemaPath))
-      .checkpoint()
-    val n = delta.count()
-    if (n > 0) append(delta, warehouseDir)
-    n
+      schemaPath: String = DefaultSchemaPath): Long =
+    loadFeeds(spark, Seq(feedPath), warehouseDir, schemaPath)
+
+  /** Load feeds in run order as ONE pass, with exactly the result of
+    * loading them one by one through [[loadFeed]]: one scan, one anti-join,
+    * one barrier, one append. A CVE ID present in several feeds keeps only
+    * the rows of the earliest feed (what the first load would have
+    * appended and every later load dropped); rows within that feed all
+    * stay, duplicates included, and null-ID rows all stay, as the
+    * anti-join keeps them.
+    */
+  private def loadFeeds(spark: SparkSession, feedPaths: Seq[String],
+      warehouseDir: String, schemaPath: String): Long = {
+    val feeds = ingestFeeds(spark, feedPaths, schemaPath, strict = false)
+    val firstFeedWins =
+      if (feedPaths.size == 1) feeds
+      else feeds
+        .withColumn("__first", min(col(FeedRank)).over(Window.partitionBy(cveId)))
+        .filter(cveId.isNull || col(FeedRank) === col("__first"))
+        .drop("__first")
+    commit(newCves(firstFeedWins.drop(FeedRank), warehouse(spark, warehouseDir, schemaPath)),
+      warehouseDir)
+  }
+
+  /** The write half of every warehouse load, batch ([[loadFeed]]) and
+    * streaming ([[graft.streaming.StreamOps.warehouseSink]]): materialize
+    * `delta`, count it, append it, then delete the checkpoint's files.
+    * Returns the count.
+    *
+    * checkpoint(): a REAL materialization barrier, not a cache hint. The
+    * append writes into the same directory the delta's anti-join lazily
+    * reads; persist() could silently drop partitions and recompute the
+    * delta WHILE the warehouse is being appended to. An eager reliable
+    * checkpoint truncates the lineage first, so the append can never
+    * re-read its own output. Its files are a full copy of the delta in
+    * the session checkpoint dir (RAM-backed by default, see
+    * [[graft.GraftSession]]) and nothing reads them after the append, so
+    * they are deleted here rather than left for the life of the JVM.
+    */
+  private[graft] def commit(delta: DataFrame, warehouseDir: String): Long = {
+    val barrier = delta.checkpoint()
+    try {
+      val n = barrier.count()
+      if (n > 0) append(barrier, warehouseDir)
+      n
+    } finally {
+      val conf = barrier.sparkSession.sparkContext.hadoopConfiguration
+      barrier.queryExecution.logical
+        .collectFirst { case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd }
+        .flatMap(_.getCheckpointFile)
+        .foreach { f =>
+          val p = new org.apache.hadoop.fs.Path(f)
+          p.getFileSystem(conf).delete(p, true)
+        }
+    }
   }
 
   /** The reference's whole driver flow (bq-nvd.py:153-163 main):
@@ -230,12 +300,14 @@ object NvdEtl {
     val dir = new java.io.File(feedDir)
     require(dir.isDirectory, s"feed dir not found: $feedDir")
     if (bootstrapNeeded(spark, warehouseDir, threshold)) {
-      // bootstrap: every feed file, yearly feeds first (reference
-      // bq-nvd.py:87-96 iterates 2002..now), recent last
+      // bootstrap: every feed file in one pass, in run order yearly
+      // feeds first (reference bq-nvd.py:87-96 loads 2002..now one by
+      // one), recent last
       val feeds = dir.listFiles().map(_.getName)
         .filter(_.endsWith(".json.gz")).sorted
         .sortBy(_ == recentFeedName) // recent last
-      val n = feeds.map(f => loadFeed(spark, s"$feedDir/$f", warehouseDir, schemaPath)).sum
+      val n = if (feeds.isEmpty) 0L
+        else loadFeeds(spark, feeds.map(f => s"$feedDir/$f").toSeq, warehouseDir, schemaPath)
       (true, n)
     } else {
       val recent = new java.io.File(dir, recentFeedName)

@@ -519,8 +519,9 @@ object StreamOps {
   /** stream_warehouse_load: the streaming SINK of the reference's daily
     * pipeline — micro-batches of parsed CVEs land in the year-partitioned
     * warehouse through the SAME first-writer-wins path the batch loader
-    * uses ([[graft.sources.NvdEtl.newCves]] anti-join + partitioned
-    * append), so the streaming sink and the batch loader cannot diverge.
+    * uses ([[graft.sources.NvdEtl.newCves]] anti-join, then
+    * [[graft.sources.NvdEtl.commit]]'s barrier and partitioned append), so
+    * the streaming sink and the batch loader cannot diverge.
     * `foreachBatch` is Structured Streaming's bridge for sinks with their
     * own merge semantics: dedup WITHIN the stream is upstream
     * ([[nvdFeedStream]]'s checkpointed dropDuplicates); dedup across
@@ -535,12 +536,11 @@ object StreamOps {
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val spark = batch.sparkSession
-        // same materialization barrier as NvdEtl.loadFeed: the append
-        // writes into the directory the anti-join lazily reads
-        val delta = graft.sources.NvdEtl.newCves(batch.drop("cve_id"),
-          graft.sources.NvdEtl.warehouse(spark, warehouseDir)).checkpoint()
-        if (delta.count() > 0) graft.sources.NvdEtl.append(delta, warehouseDir)
+        // the batch loader's own barrier → count → append → release
+        graft.sources.NvdEtl.commit(
+          graft.sources.NvdEtl.newCves(batch.drop("cve_id"),
+            graft.sources.NvdEtl.warehouse(batch.sparkSession, warehouseDir)),
+          warehouseDir)
         ()
       }
       .start()

@@ -581,7 +581,7 @@ case class PairsGenerator(child: Expression)
   * any round runs, so this is shape-safety, not semantics).
   */
 case class BisectBucket(grp: Expression, v: Expression,
-    mids: Seq[(Option[String], Array[Long])])
+    mids: Seq[(Option[String], scala.collection.immutable.ArraySeq[Long])])
     extends BinaryExpression with ExpectsInputTypes {
   override def left: Expression = grp
   override def right: Expression = v
@@ -591,13 +591,15 @@ case class BisectBucket(grp: Expression, v: Expression,
 
   // probe arrays keyed by group, shipped to executors as one codegen
   // reference object (the RhpBuckets pattern); HashMap accepts the null
-  // key, so the null group needs no sentinel encoding
+  // key, so the null group needs no sentinel encoding. The case-class
+  // field stays an immutable ArraySeq, so two expressions over equal
+  // probes compare (and hash) equal; arrays exist only here.
   @transient private lazy val jmap: java.util.HashMap[
       org.apache.spark.unsafe.types.UTF8String, Array[Long]] = {
     val m = new java.util.HashMap[
       org.apache.spark.unsafe.types.UTF8String, Array[Long]]()
     mids.foreach { case (k, a) =>
-      m.put(k.map(org.apache.spark.unsafe.types.UTF8String.fromString).orNull, a)
+      m.put(k.map(org.apache.spark.unsafe.types.UTF8String.fromString).orNull, a.toArray)
     }
     m
   }
@@ -655,7 +657,8 @@ object GraftColumns {
   /** Per-group bisection probe bucket index (see [[BisectBucket]]). */
   def bisectBucket(grp: Column, v: Column,
       mids: Seq[(Option[String], Array[Long])]): Column =
-    col(BisectBucket(ex(grp), ex(v), mids))
+    col(BisectBucket(ex(grp), ex(v),
+      mids.map { case (g, a) => (g, scala.collection.immutable.ArraySeq.from(a)) }))
   /** Bloom-filter sketch aggregate over 64-bit hashes (the runtime-filter
     * build side; Spark's own InjectRuntimeFilter uses the same expression
     * pair). Returns the serialized filter — O(numBits), corpus-independent.

@@ -72,7 +72,7 @@ class GroupQuantileBisectSpec extends AnyFunSuite {
     val data = (1 to 300).map(_ => ("a", rnd.nextLong() % 1000000L)) ++
       (1 to 7).map(i => ("b", i * 1001L)) ++ Seq(("c", -9L))
     val expected = ref(data)
-    for (fan <- Seq(2, 8, 32)) {
+    for (fan <- Seq(2, 8, 32, Relational.BisectFan)) {
       val got = Relational
         .groupQuantileBisectCore(data.toDF("grp", "v"), fan = fan)
         .collect()
@@ -119,6 +119,14 @@ class GroupQuantileBisectSpec extends AnyFunSuite {
     assert(kb("a", -6) === 0 && kb("a", -5) === 0 && kb("a", -4) === 1 &&
       kb("a", 0) === 1 && kb("a", 10) === 2 && kb("a", 11) === 3 &&
       kb("zz", 1) === -1 && kb(null, 7) === 0 && kb(null, 8) === 1)
+    // equal probes make equal expressions (structural, not array identity)
+    val df = rows.toDF("grp", "v")
+    def bucketOf(m: Seq[(Option[String], Array[Long])]) =
+      df.select(graft.functions.GraftFunctions.bisectBucket(col("grp"), col("v"), m))
+        .queryExecution.analyzed.expressions
+        .flatMap(_.collect { case b: org.apache.spark.sql.graft.BisectBucket => b }).head
+    val (b1, b2) = (bucketOf(mids), bucketOf(mids.map { case (g, m) => (g, m.clone()) }))
+    assert(b1 === b2 && b1.hashCode === b2.hashCode)
   }
 
   test("the 64-group probe-literal cap throws loudly and names the " +

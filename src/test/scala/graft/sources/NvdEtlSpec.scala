@@ -244,4 +244,134 @@ class NvdEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(plan.contains("PartitionFilters") && plan.contains("cve_year"),
       s"expected partition pruning on cve_year in:\n$plan")
   }
+
+  /** One CVE item: `id` None leaves CVE_data_meta.ID out (a null ID). */
+  private def item(id: Option[String], desc: String): String = {
+    val meta = id.fold("")(i => s""""ID":"$i",""")
+    s"""{"cve":{"CVE_data_meta":{$meta"ASSIGNER":"cve@mitre.org"},""" +
+      s""""description":{"description_data":[{"lang":"en","value":"$desc"}]}},""" +
+      """"publishedDate":"2020-01-01T00:00Z"}"""
+  }
+
+  private def writeGz(path: String, body: String): Unit = {
+    val out = new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(path))
+    try out.write(body.getBytes("UTF-8")) finally out.close()
+  }
+
+  /** A 1.1 feed file `nvdcve-1.1-<name>.json.gz` holding `items`. */
+  private def writeFeed(dir: String, name: String, items: String*): Unit =
+    writeGz(s"$dir/nvdcve-1.1-$name.json.gz",
+      """{"CVE_data_type":"CVE","CVE_data_format":"MITRE",""" +
+        s""""CVE_data_version":"4.0","CVE_data_numberOfCVEs":"${items.size}",""" +
+        s""""CVE_data_timestamp":"2024-01-01T00:00Z","CVE_Items":[${items.mkString(",")}]}""")
+
+  private val recentName = "nvdcve-1.1-recent.json.gz"
+
+  /** Every warehouse row as JSON, sorted: a multiset to compare exactly. */
+  private def rowsOf(wh: String): Seq[String] = {
+    val df = NvdEtl.warehouse(spark, wh)
+    df.select(to_json(struct(df.columns.map(col).toSeq: _*)))
+      .collect().map(_.getString(0)).sorted.toSeq
+  }
+
+  /** Bootstrap `feedDir` with [[NvdEtl.run]] and, into a second warehouse,
+    * with the per-feed loop it replaces (loadFeed over run's feed order);
+    * assert both give the same count and the same rows. Returns (count,
+    * the one-pass warehouse).
+    */
+  private def bootstrapBothWays(feedDir: String,
+      recent: String = recentName): (Long, String) = {
+    val loopWh = TestSpark.tmpDir("nvd_loop_wh")
+    val feeds = new java.io.File(feedDir).list().filter(_.endsWith(".json.gz"))
+      .sorted.sortBy(_ == recent)
+    val nLoop = feeds.map(f => NvdEtl.loadFeed(spark, s"$feedDir/$f", loopWh)).sum
+    val wh = TestSpark.tmpDir("nvd_pass_wh")
+    val (boot, n) = NvdEtl.run(spark, feedDir, wh, recentFeedName = recent, threshold = 1)
+    assert(boot)
+    assert(n === nLoop)
+    assert(rowsOf(wh) === rowsOf(loopWh))
+    (n, wh)
+  }
+
+  private def descOf(wh: String, id: String): Seq[String] =
+    NvdEtl.warehouse(spark, wh).filter(NvdEtl.cveId === id)
+      .select(col("cve.description.description_data").getItem(0).getField("value"))
+      .collect().map(_.getString(0)).sorted.toSeq
+
+  test("nvd_bootstrap: one pass over the fixture pair == the per-feed loop, " +
+      "120 CVEs, one data file per cve_year") {
+    val (n, wh) = bootstrapBothWays("fixtures/nvd")
+    assert(n === 120)
+    val years = new java.io.File(wh).listFiles().filter(_.getName.startsWith("cve_year="))
+    assert(years.length === 24)
+    years.foreach { y =>
+      assert(y.list().count(_.endsWith(".parquet")) === 1, y.getName)
+    }
+  }
+
+  test("nvd_bootstrap: across feeds the earliest feed in run order wins an ID; " +
+      "duplicates within that feed and null-ID rows all stay") {
+    val dir = TestSpark.tmpDir("nvd_overlap")
+    writeFeed(dir, "2019",
+      item(Some("CVE-2019-0001"), "from 2019"),
+      item(Some("CVE-2019-0002"), "dup a"),
+      item(Some("CVE-2019-0002"), "dup b"),
+      item(None, "null id 2019"))
+    writeFeed(dir, "2020",
+      item(Some("CVE-2019-0001"), "from 2020"),
+      item(Some("CVE-2019-0002"), "late dup"),
+      item(Some("CVE-2020-0001"), "only 2020"),
+      item(None, "null id 2020"))
+    writeFeed(dir, "recent",
+      item(Some("CVE-2019-0001"), "from recent"),
+      item(Some("CVE-2020-0001"), "late 2020"),
+      item(Some("CVE-2021-0001"), "only recent"),
+      item(None, "null id recent"))
+    // a corrupt feed contributes nothing, in both forms
+    writeGz(s"$dir/nvdcve-1.1-2018.json.gz", """{"CVE_data_type":"CVE","CVE_Items":[{""")
+    val (n, wh) = bootstrapBothWays(dir)
+    assert(n === 8)
+    assert(descOf(wh, "CVE-2019-0001") === Seq("from 2019"))
+    assert(descOf(wh, "CVE-2019-0002") === Seq("dup a", "dup b"))
+    assert(descOf(wh, "CVE-2020-0001") === Seq("only 2020"))
+    assert(descOf(wh, "CVE-2021-0001") === Seq("only recent"))
+    assert(NvdEtl.warehouse(spark, wh).filter(NvdEtl.cveId.isNull).count() === 3)
+    // run order, not name order, decides: name 2020 the `recent` feed and
+    // it loads last, after 2019 and the feed named recent
+    val (n2, wh2) = bootstrapBothWays(dir, recent = "nvdcve-1.1-2020.json.gz")
+    assert(n2 === 8)
+    assert(descOf(wh2, "CVE-2019-0002") === Seq("dup a", "dup b"))
+    assert(descOf(wh2, "CVE-2020-0001") === Seq("late 2020"))
+  }
+
+  test("nvd_bootstrap: a 2.0 envelope among 1.1 feeds fails loudly and the " +
+      "message names that file") {
+    val dir = TestSpark.tmpDir("nvd_boot_v2")
+    writeFeed(dir, "2019", item(Some("CVE-2019-0001"), "ok"))
+    writeGz(s"$dir/nvdcve-1.1-2020.json.gz",
+      """{"format":"NVD_CVE","version":"2.0",
+        |"vulnerabilities":[{"cve":{"id":"CVE-2020-9999"}}]}""".stripMargin)
+    writeFeed(dir, "recent", item(Some("CVE-2021-0001"), "ok"))
+    val e = intercept[Exception] {
+      NvdEtl.run(spark, dir, TestSpark.tmpDir("nvd_boot_v2_wh"), threshold = 1)
+    }
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    assert(msgs(e).exists(m => m.contains("schema drift") &&
+      m.contains("nvdcve-1.1-2020.json.gz")), e)
+  }
+
+  test("nvd_load: a load deletes its checkpoint copy of the delta") {
+    val ckpt = new java.io.File(
+      new java.net.URI(spark.sparkContext.getCheckpointDir.get))
+    def rddDirs(): Set[String] =
+      Option(ckpt.list()).toSet.flatten.filter(_.startsWith("rdd-"))
+    val before = rddDirs()
+    val wh = TestSpark.tmpDir("nvd_ckpt_wh")
+    assert(NvdEtl.loadFeed(spark, fixture, wh) === 96)
+    assert(rddDirs() -- before === Set.empty[String])
+    val (boot, n) = NvdEtl.run(spark, "fixtures/nvd", TestSpark.tmpDir("nvd_ckpt_run"), threshold = 1)
+    assert(boot && n === 120)
+    assert(rddDirs() -- before === Set.empty[String])
+  }
 }
