@@ -1,9 +1,14 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 
 /** Round-barrier materialization for iterative loops (pagerank, label
-  * propagation, connected-components pointer jumping).
+  * propagation, connected-components pointer jumping), plus the two
+  * rules every graph core's loop setup shares: the stationary edge
+  * cache ([[stationaryEdges]]) and the driver-finish edge bound
+  * ([[DriverFinishEdgeBound]]).
   *
   * Every loop here cuts its per-round lineage with an EAGER checkpoint
   * (the CLAUDE.md iterative contract — persist/unpersist chains break
@@ -48,4 +53,35 @@ object Barriers {
         df.checkpoint() // eager; survives executor loss
       else
         df.localCheckpoint()) // eager; executor-local blocks
+
+  /** The edge list a graph loop joins every round, made STATIONARY:
+    * partitioned once by `src` (the per-round join key, so rounds
+    * shuffle only the slim frontier/label side, never the edges),
+    * persisted, and EAGERLY counted before any consumer is built — a
+    * cold multi-consumer cache races concurrent stages into each
+    * recomputing the upstream pipeline (the eager-count invariant). Caches in `releaseAfterMaterialize` fed only the edge
+    * subtree, so they are unpersisted once the edge cache holds the
+    * rows. Returns the cache and its row count; the caller owns the
+    * cache and unpersists it when its loop is done.
+    */
+  def stationaryEdges(edges: DataFrame,
+      releaseAfterMaterialize: Seq[DataFrame] = Nil): (DataFrame, Long) = {
+    val cached = edges.repartition(col("src"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val n = cached.count()
+    releaseAfterMaterialize.foreach(_.unpersist())
+    (cached, n)
+  }
+
+  /** Edge count at or under which a graph core finishes on the DRIVER
+    * (connected components' union-find, SCC's Tarjan scan, k-core's
+    * in-memory peel): 4M slim (long, long) rows ≈ 64 MB, far below
+    * driver heap and far above any dimension-sized graph the queries
+    * feed (sf0.1 dedup_cluster: 1,776 contracted edges from 964,854
+    * pairs). Above it the distributed loop runs, so the collect is an
+    * explicitly bounded finishing step, never a scale risk. The bound
+    * gates WHICH engine finishes, never the answer: each core's spec
+    * asserts both regimes bit-identical.
+    */
+  val DriverFinishEdgeBound = 4000000L
 }

@@ -44,12 +44,10 @@ object BetwProbe {
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
       cs.count()
-      val edges = cs.select(col("c").as("src"), col("s").as("dst"))
-        .unionAll(cs.select(col("s").as("src"), col("c").as("dst")))
-        .repartition(col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      edges.count()
-      cs.unpersist()
+      val (edges, _) = Barriers.stationaryEdges(
+        cs.select(col("c").as("src"), col("s").as("dst"))
+          .unionAll(cs.select(col("s").as("src"), col("c").as("dst"))),
+        Seq(cs))
       val verts = edges.select(col("src").as("v")).distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
       verts.count()

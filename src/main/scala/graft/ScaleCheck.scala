@@ -155,11 +155,13 @@ object ScaleCheck {
         .filter(col("cc2") =!= col("canonical_id")).count()
       val above = cc.filter(col("canonical_id") > col("id")).count()
       val nComp = cc.select(col("canonical_id")).distinct().count()
-      println(s"SCALECHECK graph cc_$tag components=$nComp " +
-        s"crossing_edges=$crossing non_fixpoint=$nonFix " +
-        s"label_above_id=$above " +
-        s"ok=${crossing == 0 && nonFix == 0 && above == 0}")
+      val summary = s"components=$nComp crossing_edges=$crossing " +
+        s"non_fixpoint=$nonFix label_above_id=$above"
+      val ok = crossing == 0 && nonFix == 0 && above == 0
+      println(s"SCALECHECK graph cc_$tag $summary ok=$ok")
       cc.unpersist()
+      assert(ok, s"cc_$tag labeling is not the exact component labeling: " +
+        summary)
     }
     // giant regime: the skewed graph is one connected component — the
     // fixpoint must still hold exactly
@@ -197,10 +199,12 @@ object ScaleCheck {
     }
     val coreStats = core.agg(count(lit(1)).as("n"),
       coalesce(min(col("core_degree")), lit(-1L)).as("dmin")).head()
-    println(s"SCALECHECK graph kcore k=$k rounds=$rounds " +
-      s"core_size=${coreStats.getLong(0)} min_core_degree=${coreStats.getLong(1)} " +
-      s"ok=${coreStats.getLong(0) == 0 || coreStats.getLong(1) >= k}")
+    val coreSummary = s"k=$k rounds=$rounds " +
+      s"core_size=${coreStats.getLong(0)} min_core_degree=${coreStats.getLong(1)}"
+    val coreOk = coreStats.getLong(0) == 0 || coreStats.getLong(1) >= k
+    println(s"SCALECHECK graph kcore $coreSummary ok=$coreOk")
     core.unpersist()
+    assert(coreOk, s"kcore left a vertex under degree k: $coreSummary")
 
     // 3+4) LPA and pagerank over the symmetrized relation: the vertex
     // count sits ABOVE PagerankBroadcastMaxVertices, so the repartition
@@ -329,11 +333,9 @@ object ScaleCheck {
     val pairs = powerLawPairs(spark, nDraws, v)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val e = timed("cen_build_pairs")(pairs.count())
-    val sym = pairs.select(col("i").as("src"), col("j").as("dst"))
-      .unionAll(pairs.select(col("j").as("src"), col("i").as("dst")))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    sym.count()
+    val (sym, _) = Barriers.stationaryEdges(
+      pairs.select(col("i").as("src"), col("j").as("dst"))
+        .unionAll(pairs.select(col("j").as("src"), col("i").as("dst"))))
     val verts = sym.select(col("src").as("v")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nV = verts.count()

@@ -321,24 +321,16 @@ object Dedup {
     * canonical doc per duplicate cluster (the step a pipeline actually
     * applies before training: keep the canonical, drop the rest).
     *
-    * Distributed min-label propagation: per iteration, ONE neighbor-min
-    * shuffle on the edge destination + one co-partitioned label join;
-    * labels persist per round (plan barrier AND lineage bound), and
-    * convergence is detected by counting changed labels — at fixpoint the
-    * label of every doc is the minimum doc_id of its connected component.
-    * Iterations needed = component diameter (near-dup clusters are
-    * shallow; the cap is a safety net). The DuckDB oracle computes TRUE
-    * transitive components via a recursive CTE, so the gate proves the
-    * fixpoint is the exact component labeling, not an approximation.
+    * [[connectedComponents]] first CONTRACTS the pair graph (one
+    * neighbor-min pass collapses each near-dup clique to a supernode),
+    * then labels the contracted supernode graph: a driver union-find
+    * under [[graft.Barriers.DriverFinishEdgeBound]], the shared
+    * pointer-jump fixpoint [[Relational.minLabelFix]] above it. At the
+    * end the label of every doc is the minimum doc_id of its connected
+    * component. The DuckDB oracle computes TRUE transitive components
+    * via a recursive CTE, so the gate proves the labeling exact, not an
+    * approximation.
     */
-  /** Max contracted-graph edge count finished on the driver: 4M slim
-    * (long, long) rows ≈ 64 MB — far below driver heap, far above any
-    * plausible inter-cluster link count (sf0.1: 1,776 from 964,854 pairs).
-    * Above the bound the distributed fixpoint loop runs instead, so the
-    * collect is an explicitly-bounded finishing step, never a scale risk.
-    */
-  private val DriverFinishEdgeBound = 4000000L
-
   def dedupCluster(spark: SparkSession, dir: String): DataFrame = {
     val (pairs, upstream) = ngramPairs(spark, dir)
     connectedComponents(spark,
@@ -352,16 +344,16 @@ object Dedup {
   /** Connected components over an undirected (i, j) pair relation:
     * (id, canonical_id = component minimum) for every id in `universe`.
     * Shared by dedup_cluster (token-Jaccard pairs) and dedup_semantic
-    * (embedding-cosine pairs). Caches in `releaseAfterMaterialize` are
-    * unpersisted as soon as the pair relation's own cache is populated —
-    * they fed the pair subtree and nothing else, so once `p` holds the
-    * rows they are dead weight the session would otherwise carry until
-    * the harness-level GraftCaches.release.
+    * (embedding-cosine pairs). Caches in `releaseAfterMaterialize` fed
+    * the pair subtree and nothing else; they are unpersisted together
+    * with the pair cache once the contracted edge cache holds its rows,
+    * instead of being carried until the harness-level
+    * GraftCaches.release.
     */
   private[graft] def connectedComponents(spark: SparkSession,
       pairs: DataFrame, universe: DataFrame,
       releaseAfterMaterialize: Seq[DataFrame] = Nil,
-      driverFinishEdgeBound: Long = DriverFinishEdgeBound,
+      driverFinishEdgeBound: Long = graft.Barriers.DriverFinishEdgeBound,
       verbose: Boolean = false): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     // persist the UNDIRECTED pair relation once — half the rows of a
@@ -377,7 +369,6 @@ object Dedup {
     // already started computing). One count() populates the cache before
     // any consumer launches.
     p.count()
-    releaseAfterMaterialize.foreach(_.unpersist())
     // CONTRACTION pass before the loop: l0(v) = min(v, direct neighbors).
     // Near-dup components are overwhelmingly CLIQUES (c duplicate docs →
     // c²/2 pairs — the 964,854 pairs at sf0.1 live in a handful of dense
@@ -407,27 +398,28 @@ object Dedup {
     // supernode edge relation: each original pair links its endpoints'
     // contracted labels; intra-supernode pairs vanish, parallel pairs
     // collapse in the distinct. Only the TINY contracted relation is
-    // symmetrized into both directions. Pre-partitioned by src so every
-    // loop round's join shuffles only the (smaller) label relation.
-    val edges = p
-      .join(l0.select(col("id").as("i"), col("lab").as("ls")), Seq("i"))
-      .join(l0.select(col("id").as("j"), col("lab").as("ld")), Seq("j"))
-      .filter(col("ls") =!= col("ld"))
-      .select(col("ls"), col("ld")).distinct()
-      .select(explode(array(
-        struct(col("ls").as("src"), col("ld").as("dst")),
-        struct(col("ld").as("src"), col("ls").as("dst")))).as("e"))
-      .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // symmetrized into both directions, and it is made stationary ONCE
+    // here — the driver finish collects it, the fixpoint joins it every
+    // round. Once it holds its rows the pair cache and the caller's
+    // upstream caches are dead weight.
+    //
     // count-then-collect, deliberately: the count materializes the persist
     // at full parallelism; the collect then drains the (tiny) cache. A
     // fused limit+collect was tried and is WORSE — CollectLimit's
     // executeTake scales up 1→4→16… partitions in sequential rounds while
     // it hunts for limit rows, so the expensive materializing pass runs
     // nearly serial (dedup_cluster 4.2 → 8.2 s measured).
+    val (edges, nSuperEdges) = graft.Barriers.stationaryEdges(
+      p.join(l0.select(col("id").as("i"), col("lab").as("ls")), Seq("i"))
+        .join(l0.select(col("id").as("j"), col("lab").as("ld")), Seq("j"))
+        .filter(col("ls") =!= col("ld"))
+        .select(col("ls"), col("ld")).distinct()
+        .select(explode(array(
+          struct(col("ls").as("src"), col("ld").as("dst")),
+          struct(col("ld").as("src"), col("ls").as("dst")))).as("e"))
+        .select(col("e.src").as("src"), col("e.dst").as("dst")),
+      releaseAfterMaterialize :+ p)
     import spark.implicits._
-    val nSuperEdges = edges.count()
     if (nSuperEdges <= driverFinishEdgeBound) {
       // FINISH ON THE DRIVER: the contracted graph is cluster-adjacency
       // structure, not corpus data — its size tracks how many near-dup
@@ -451,7 +443,7 @@ object Dedup {
         if (rs != rd) parent(math.max(rs, rd)) = math.min(rs, rd)
       }
       val roots = parent.keysIterator.map(k => (k, find(k))).toSeq
-      edges.unpersist(); p.unpersist()
+      edges.unpersist()
       val lmap = spark.createDataset(roots).toDF("lab", "slab")
       // left join: supernodes with no inter-cluster link keep their own
       // label (coalesce) — lmap only covers nodes seen in superEdges
@@ -459,75 +451,16 @@ object Dedup {
         .select(col("id"),
           coalesce(col("slab"), col("lab")).as("canonical_id"))
     }
-    var labels = l0.select(col("lab").as("id")).distinct()
-      .select(col("id"), col("id").as("lab"))
-    var changed = 1L
-    var iter = 0
-    // Iteration state is materialized with EAGER localCheckpoint, not
-    // persist: checkpointing truncates the logical plan per round, so (a)
-    // lineage stays O(1) instead of nesting every prior round, and (b) no
-    // downstream plan ever references an unpersisted parent cache — the
-    // persist/unpersist version silently lost cache matching at the final
-    // write and recomputed the whole loop 2^rounds times.
-    if (verbose)
-      println(s"[cc] superEdges=$nSuperEdges " +
-        s"supernodes=${labels.count()}")
-    // Termination: every per-vertex label is non-increasing and strictly
-    // decreases whenever `changed` > 0, and labels are bounded below by
-    // the component minimum — so the loop ALWAYS reaches changed == 0.
-    // The r11 large-regime drill (25M-edge power-law graph, blocked
-    // variant: 511k supernodes in 295k chain-heavy components) caught
-    // the previous silent `iter < 20` cap exiting with 810 labels still
-    // moving — 1,128 edges crossed components in the returned labeling.
-    // A convergence cap on a fixpoint loop must be LOUD: the guard below
-    // is a hard failure, never a silent partial answer.
-    while (changed > 0) {
-      // neighbor-min step: the best label one edge away
-      val nbr = edges.join(labels, col("src") === col("id"))
-        .groupBy(col("dst")).agg(min(col("lab")).as("nl"))
-      // NOT checkpointed: the jump self-joins read `stepped` repeatedly,
-      // but every read is the identical subtree shuffled on compatible
-      // keys, so ReuseExchange computes it once — one materialization
-      // job per round instead of three (same wall-clock at sf0.1 where
-      // per-job overhead is tiny; at cluster scale each saved job is a
-      // real scheduling + shuffle-write round trip)
-      val stepped = labels.select(col("id"), col("lab").as("old"))
-        .join(nbr, col("id") === col("dst"), "left_outer")
-        .select(col("id"),
-          least(col("old"), coalesce(col("nl"), col("old"))).as("lab1"),
-          col("old"))
-      // pointer-jump steps: labels ARE doc ids, so the current label OF
-      // my label is also a valid (no larger) label for me — following it
-      // halves chain depth; applying it TWICE per round quarters it
-      // (measured on the drill's chain-heavy blocked graph: 20+ rounds
-      // unconverged with one jump → converged in 11 with two), so rounds
-      // = O(log diameter) with a halved constant
-      val jump = stepped.select(col("id").as("jid"), col("lab1").as("jlab"))
-      val mid = stepped
-        .join(jump, col("lab1") === col("jid"), "left_outer")
-        .select(col("id"),
-          least(col("lab1"), coalesce(col("jlab"), col("lab1"))).as("lab2"),
-          col("old"))
-      val jump2 = mid.select(col("id").as("jid2"), col("lab2").as("jlab2"))
-      val next = mid
-        .join(jump2, col("lab2") === col("jid2"), "left_outer")
-        .select(col("id"),
-          least(col("lab2"), coalesce(col("jlab2"), col("lab2"))).as("lab"),
-          col("old"))
-        .transform(graft.Barriers.roundBarrier) // the round barrier: O(1) lineage across rounds
-      changed = next.filter(col("lab") =!= col("old")).count()
-      labels = next.select(col("id"), col("lab"))
-      iter += 1
-      if (verbose) println(s"[cc] round=$iter changed=$changed")
-      if (iter > 100)
-        throw new IllegalStateException(
-          s"connectedComponents fixpoint still moving after $iter rounds " +
-            s"($changed labels) — monotonicity is broken, refusing to " +
-            "return a partial labeling")
-    }
-    if (verbose) println(s"[cc] done rounds=$iter")
-    edges.unpersist()
-    p.unpersist()
+    if (verbose) println(s"[cc] superEdges=$nSuperEdges")
+    // the shared pointer-jump fixpoint over the contracted graph, every
+    // supernode starting as its own label; its result is checkpoint-
+    // truncated, so the edge cache can go as soon as it returns
+    val labels =
+      try Relational.minLabelFix(
+        l0.select(col("lab").as("id")).distinct()
+          .select(col("id"), col("id").as("lab")),
+        edges, "connectedComponents", verbose)
+      finally edges.unpersist()
     // expand the contraction: an id's component label is the fixpoint
     // label of its supernode (supernode ids are member ids, so the min
     // over supernodes in a component IS the component's minimum id)

@@ -348,9 +348,10 @@ object Relational {
     * the measured optimum. The r17 BUCKETIZED round (one grouped count
     * over [[org.apache.spark.sql.graft.BisectBucket]]'s binary-search
     * bucket index) makes per-row cost O(log probes), so the same sweep
-    * now runs MONOTONE FASTER with width (BisectProbe, fans
-    * 8/64/512/4096 interleaved ×2, checksums identical: 1682/1336/
-    * 1375/917 ms ungrouped on the second rep): wide fans win because
+    * now runs MONOTONE FASTER with width (OPTIMIZATION_r17.md's fan
+    * sweep, the inverse of OPTIMIZATION_r16.md's: fans 8/64/512/4096
+    * interleaved ×2, checksums identical, 1682/1336/1375/917 ms
+    * ungrouped on the second rep): wide fans win because
     * rounds — full passes over the cents relation, the 100 TB cost —
     * drop from ⌈log₈ W⌉ to ⌈log₄₀₉₆ W⌉ (8 → 2 passes on the 10⁷-cent
     * corpus domain) while the per-pass scan gets CHEAPER (≈12 long
@@ -2048,13 +2049,11 @@ object Relational {
     // an explicit persist+count was A/B-measured ~15% SLOWER at sf0.1
     // (cache write + materialization job outweigh the reuse it
     // duplicates) and would double-cache the edge bytes at scale
-    val edges = edges0
-      .join(edges0.groupBy(col("src")).agg(count(lit(1)).as("outdeg")),
-        Seq("src"))
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    edges.count() // EAGER: 10 rounds + the vertex/dangling builds consume this
-    releaseAfterMaterialize.foreach(_.unpersist())
+    // 10 rounds + the vertex/dangling builds consume the edge cache
+    val (edges, _) = graft.Barriers.stationaryEdges(
+      edges0.join(edges0.groupBy(col("src")).agg(count(lit(1)).as("outdeg")),
+        Seq("src")),
+      releaseAfterMaterialize)
     // vertices derive from the CACHED edge relation, not edges0 — the
     // outdeg inner join preserves every edge row (its build side is
     // edges0's own groupBy), so the src/dst vertex set is identical and
@@ -2213,14 +2212,11 @@ object Relational {
       rounds: Int = 10,
       broadcastMaxVertices: Long = PagerankBroadcastMaxVertices,
       releaseAfterMaterialize: Seq[DataFrame] = Nil): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val edges = edges0
-      .join(edges0.groupBy(col("src")).agg(count(lit(1)).as("outdeg")),
-        Seq("src"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edges.count() // eager: rounds + the seed/routing builds consume
-    releaseAfterMaterialize.foreach(_.unpersist())
+    // rounds + the seed/routing builds consume the edge cache
+    val (edges, _) = graft.Barriers.stationaryEdges(
+      edges0.join(edges0.groupBy(col("src")).agg(count(lit(1)).as("outdeg")),
+        Seq("src")),
+      releaseAfterMaterialize)
     val nVerts = edges.select(col("src")).distinct().count()
     val routed: DataFrame => DataFrame =
       if (nVerts <= broadcastMaxVertices) broadcast
@@ -2254,11 +2250,9 @@ object Relational {
   private[graft] def lpaCore(edges0: DataFrame, rounds: Int = 4,
       broadcastMaxVertices: Long = PagerankBroadcastMaxVertices,
       releaseAfterMaterialize: Seq[DataFrame] = Nil): DataFrame = {
-    val edges = edges0
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    edges.count() // EAGER: all rounds consume this cache
-    releaseAfterMaterialize.foreach(_.unpersist())
+    // all rounds consume the edge cache
+    val (edges, _) = graft.Barriers.stationaryEdges(edges0,
+      releaseAfterMaterialize)
     var labels = graft.Barriers.roundBarrier(
       edges.select(col("src").as("v"))
         .unionAll(edges.select(col("dst").as("v")))
@@ -2370,10 +2364,10 @@ object Relational {
     * Scale shape: the pair relation persists once (digest-slim: two
     * longs per edge), the contraction collapses it to the inter-
     * supernode graph, and the driver union-find runs only under the
-    * explicit [[Dedup.DriverFinishEdgeBound]] — above it the
-    * distributed pointer-jump fixpoint takes over, so the plan never
-    * depends on the driver branch (PlanAuditSpec asserts the bound and
-    * both finish regimes agree bit-for-bit). Component ids are exact
+    * explicit [[graft.Barriers.DriverFinishEdgeBound]] — above it the
+    * shared pointer-jump fixpoint [[minLabelFix]] takes over, so the
+    * plan never depends on the driver branch (PlanAuditSpec asserts the
+    * bound and both finish regimes agree bit-for-bit). Component ids are exact
     * integer minima, so the DuckDB recursive-CTE oracle (min-label
     * walk, pruned to labels below the receiving vertex — the component
     * minimum always survives the prune) matches bit-for-bit.
@@ -2520,12 +2514,9 @@ object Relational {
   private[graft] def ssspCore(edges0: DataFrame, nSeeds: Int = 3,
       maxRounds: Int = SsspMaxRounds,
       releaseAfterMaterialize: Seq[DataFrame] = Nil): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val edges = edges0
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edges.count() // eager: seeds + every relaxation round consume
-    releaseAfterMaterialize.foreach(_.unpersist())
+    // seeds + every relaxation round consume the edge cache
+    val (edges, _) = graft.Barriers.stationaryEdges(edges0,
+      releaseAfterMaterialize)
     val seeds = edges.filter(col("src") % 2 === 0)
       .select(col("src").as("id")).distinct()
       .orderBy(col("id")).limit(nSeeds)
@@ -2574,13 +2565,18 @@ object Relational {
     */
   private[graft] val SccMaxRounds = 64
 
-  /** Min-label propagation to FIXPOINT along directed edges — the shared
-    * inner loop of [[sccCore]]'s two passes. `init` is (id, lab) with
-    * lab = id; each round takes the min of the current label and the
-    * labels of all in-neighbors (labels flow src → dst), then applies
-    * TWO pointer jumps. The jumps are sound exactly as in the
-    * connected-components fixpoint (Dedup.scala) because labels ARE
-    * vertex ids and the invariant "lab(v) reaches v" is transitive:
+  /** Min-label propagation to FIXPOINT along directed edges — the one
+    * pointer-jump fixpoint of the graph family: [[sccCore]]'s two passes
+    * and the distributed branch of [[Dedup.connectedComponents]] (on its
+    * symmetrized contracted edges, where "ancestors" are the whole
+    * component). `init` is (id, lab) with lab = id; `edges` is a
+    * (src, dst) list the CALLER made stationary
+    * ([[graft.Barriers.stationaryEdges]]) and unpersists after the call —
+    * the result is checkpoint-truncated and references no cache. Each
+    * round takes the min of the current label and the labels of all
+    * in-neighbors (labels flow src → dst), then applies TWO pointer
+    * jumps. The jumps are sound because labels ARE vertex ids and the
+    * invariant "lab(v) reaches v" is transitive:
     * lab(lab(v)) reaches lab(v) reaches v, so following it is a valid
     * (never larger) label — and it turns diameter-bounded convergence
     * into O(log diameter) rounds WHEN label chains form, which is what
@@ -2674,17 +2670,8 @@ object Relational {
   private[graft] val MlfDeltaStallRounds = 3
   private[graft] val MlfEscalateIter = 50
 
-  private def minLabelFix(init: DataFrame, edges0: DataFrame,
+  private[graft] def minLabelFix(init: DataFrame, edges: DataFrame,
       what: String, verbose: Boolean = false): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    // stationary per call, consumed every round: partition once by the
-    // join key so per-round joins reuse the layout instead of
-    // re-shuffling the edge list (the ssspCore edge-cache pattern);
-    // labels flow through roundBarrier so the final result references
-    // no cache and the unpersist below is safe
-    val edges = edges0.repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edges.count()
     // the label table is (base, pending-overlay): `labels` is the view
     // base-minus-pending-ids ∪ pending. Full rounds rewrite base
     // wholesale (they recompute every row anyway); delta rounds fold
@@ -2789,8 +2776,10 @@ object Relational {
         // moving (the giant-cycle phase collapses its 2M-node hashed
         // label forest this way); the jump self-joins re-read
         // `stepped`/`mid`, but each re-read is an identical subtree on
-        // compatible keys — ReuseExchange computes it once (the cc-core
-        // pattern).
+        // compatible keys — ReuseExchange computes it once, one
+        // materialization job per round instead of three. Two jumps,
+        // not one: on the drill's chain-heavy blocked CC graph one jump
+        // was still unconverged after 20+ rounds, two converged in 11.
         val nbr = edges.join(frontier, col("src") === col("id"))
           .groupBy(col("dst")).agg(min(col("lab")).as("nl"))
         val stepped = labels.select(col("id"), col("lab").as("old"))
@@ -2823,8 +2812,7 @@ object Relational {
         println(f"[mlf] $what iter=$iter changed=$changed " +
           f"mode=${if (delta) "delta" else "full"} " +
           f"sec=${(System.nanoTime() - tRound) / 1e9}%.1f")
-      if (iter > 100) {
-        edges.unpersist()
+      if (iter > 100)
         throw new IllegalStateException(
           s"$what min-label fixpoint still moving after $iter rounds " +
             s"($changed labels) — either monotonicity is broken or the " +
@@ -2832,10 +2820,8 @@ object Relational {
             "(the w.h.p.-excluded hashed-order worst case) and exceeded " +
             "the convergence budget; refusing to return a partial " +
             "labeling")
-      }
     }
     compact() // return one checkpointed relation, overlay folded in
-    edges.unpersist() // labels is checkpoint-truncated — no cache refs
     base
   }
 
@@ -2890,10 +2876,14 @@ object Relational {
     * jumps; outer rounds are bounded by condensation depth with a LOUD
     * [[SccMaxRounds]] throw. Trading-bloc graphs (the query) condense
     * in 1-2 rounds; web-shaped graphs (giant SCC + shallow periphery)
-    * in a handful. Below [[SccDriverFinishEdgeBound]] the whole
-    * computation finishes driver-side instead ([[sccTarjan]]) — the
-    * bounded-finish contract shared with connectedComponents, regimes
-    * spec-asserted identical.
+    * in a handful. At or below [[graft.Barriers.DriverFinishEdgeBound]]
+    * the whole computation finishes driver-side instead: one
+    * [[sccTarjan]] scan over the collected edge list, so a
+    * dimension-sized graph (graph_scc's nation digraph, ≤ 625 edges)
+    * pays two collects instead of ~50 scheduled jobs of distributed
+    * fixpoint overhead. SccSpec asserts both regimes bit-identical on
+    * every reference graph; the 25M-edge drill exercises ONLY the
+    * distributed branch.
     *
     * Three round-count cutters wrap the coloring loop (r14 verdict #3 —
     * the drill profile showed the remaining cost was ROUNDS, not
@@ -2911,18 +2901,6 @@ object Relational {
     *    same bound the entry branch honors, the diameter-many tail
     *    rounds collapse into one [[sccTarjan]] scan.
     */
-  /** Below this many (deduplicated) edges the SCC finishes DRIVER-SIDE
-    * with one iterative Tarjan pass over the collected edge list — the
-    * same bounded-finish contract as connectedComponents' union-find
-    * (Dedup.DriverFinishEdgeBound, same value): a dimension-sized graph
-    * (graph_scc's nation digraph, ≤ 625 edges) pays two collects and a
-    * linear scan instead of ~50 scheduled jobs of distributed fixpoint
-    * overhead. Above the bound the coloring loop runs — SccSpec asserts
-    * both regimes bit-identical on every reference graph, and the
-    * 25M-edge drill exercises ONLY the distributed branch.
-    */
-  private[graft] val SccDriverFinishEdgeBound = 4000000L
-
   /** Trim-prologue round cap for [[sccCore]] (the "Trim" of the FW-BW-Trim
     * family, Slota-Rajamanickam-Madduri 2014; r14 verdict #3): a vertex
     * with no in-edges or no out-edges in the live subgraph can sit on no
@@ -3002,7 +2980,8 @@ object Relational {
 
   private[graft] def sccCore(vertices0: DataFrame, edges0: DataFrame,
       verbose: Boolean = false,
-      driverFinishEdgeBound: Long = SccDriverFinishEdgeBound): DataFrame = {
+      driverFinishEdgeBound: Long = graft.Barriers.DriverFinishEdgeBound)
+      : DataFrame = {
     // static (v ↔ hashed v) map; the loop runs entirely in hash space.
     // Ids are normalized to BIGINT before hashing on BOTH the vertex and
     // edge sides: xxhash64 is width-sensitive (int 5 and long 5 hash
@@ -3131,10 +3110,17 @@ object Relational {
             s"$round outer rounds — condensation deeper than the " +
             s"documented $SccMaxRounds-layer bound, refusing to return " +
             "a partial labeling")
-      val colors = graft.Barriers.roundBarrier( // 3 consumers below
-        minLabelFix(
+      // one fixpoint over `edges`, made stationary for its rounds, with
+      // every surviving vertex starting as its own label
+      def fixpoint(edges: DataFrame, what: String): DataFrame = {
+        val (stationary, _) = graft.Barriers.stationaryEdges(edges)
+        try minLabelFix(
           remaining.select(col("hv").as("id"), col("hv").as("lab")),
-          live, s"scc-forward-r$round", verbose)
+          stationary, what, verbose)
+        finally stationary.unpersist()
+      }
+      val colors = graft.Barriers.roundBarrier( // 3 consumers below
+        fixpoint(live, s"scc-forward-r$round")
           .select(col("id").as("hv"), col("lab").as("color")))
       // class-confined edges, REVERSED for the backward pass
       val ceRev = graft.Barriers.roundBarrier(
@@ -3145,11 +3131,8 @@ object Relational {
             Seq("dst"))
           .filter(col("cs") === col("cd"))
           .select(col("dst").as("src"), col("src").as("dst")))
-      val bcolors =
-        minLabelFix(
-          remaining.select(col("hv").as("id"), col("hv").as("lab")),
-          ceRev, s"scc-backward-r$round", verbose)
-          .select(col("id").as("hv"), col("lab").as("bcolor"))
+      val bcolors = fixpoint(ceRev, s"scc-backward-r$round")
+        .select(col("id").as("hv"), col("lab").as("bcolor"))
       val done = graft.Barriers.roundBarrier(
         colors.join(bcolors, Seq("hv"))
           .filter(col("color") === col("bcolor"))
@@ -3301,11 +3284,9 @@ object Relational {
       maxHops: Long,
       broadcastMaxVertices: Long = PagerankBroadcastMaxVertices,
       releaseAfterMaterialize: Seq[DataFrame] = Nil): DataFrame = {
-    val edges = edges0
-      .repartition(col("src"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    edges.count() // EAGER: seeds + every BFS round consume this cache
-    releaseAfterMaterialize.foreach(_.unpersist())
+    // seeds + every BFS round consume the edge cache
+    val (edges, _) = graft.Barriers.stationaryEdges(edges0,
+      releaseAfterMaterialize)
     val seeds = edges.filter(col("src") % 2 === 0)
       .select(col("src").as("id")).distinct()
       .orderBy(col("id")).limit(nSeeds)
@@ -3349,7 +3330,7 @@ object Relational {
     *
     * Scale shape: simultaneous-removal peeling, two-regime like
     * [[Dedup.connectedComponents]] — an edge list at or under
-    * [[KcoreDriverEdgeBound]] peels in driver memory (rounds are hash-
+    * [[graft.Barriers.DriverFinishEdgeBound]] peels in memory (rounds are hash-
     * map sweeps, free); above it each distributed round is ONE degree
     * aggregate over the surviving edge list plus two co-partitioned
     * left-semi joins (never a broadcast of the O(V) keep set), landed
@@ -3374,22 +3355,14 @@ object Relational {
       .orderBy(col("node_type"), col("entity_key"))
   }
 
-  /** graph_kcore's driver-finish bound, the [[Dedup.connectedComponents]]
-    * pattern: an edge list at or under this collects to the driver (≤
-    * ~64 MB of longs) and peels in memory — rounds are FREE there,
-    * while each distributed round pays scheduling + a barrier; above
-    * it, the distributed loop runs. The bound gates WHICH engine peels,
-    * never the answer (KcoreSpec asserts both regimes bit-identical).
-    */
-  private[graft] val KcoreDriverEdgeBound = 4000000L
-
   /** The simultaneous-removal k-core peel under graph_kcore, on an
     * UNDIRECTED distinct (i, j) pair relation. Returns the surviving
     * per-vertex within-core degrees and the number of peel rounds the
     * fixpoint took (0 = the input already was its own k-core).
     */
   private[graft] def kCoreCore(pairs: DataFrame, k: Int,
-      driverEdgeBound: Long = KcoreDriverEdgeBound): (DataFrame, Int) = {
+      driverEdgeBound: Long = graft.Barriers.DriverFinishEdgeBound)
+      : (DataFrame, Int) = {
     val spark = pairs.sparkSession
     var edges = graft.Barriers.roundBarrier(
       pairs.select(col("i"), col("j")))
@@ -3623,12 +3596,12 @@ object Relational {
       dir: String): (DataFrame, DataFrame) = {
     import org.apache.spark.storage.StorageLevel
     val cs = commercePairs(spark, dir)
-    val edges = cs.select(col("c").as("src"), col("s").as("dst"))
-      .unionAll(cs.select(col("s").as("src"), col("c").as("dst")))
-      .repartition(col("src")) // stationary: only slim frontiers shuffle
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edges.count() // eager: every BFS round + the successor build consume
-    cs.unpersist() // edge cache materialized — the pair cache is dead weight
+    // every BFS round + the successor build consume the edge cache; once
+    // it holds the rows the pair cache is dead weight
+    val (edges, _) = graft.Barriers.stationaryEdges(
+      cs.select(col("c").as("src"), col("s").as("dst"))
+        .unionAll(cs.select(col("s").as("src"), col("c").as("dst"))),
+      Seq(cs))
     val verts = edges.select(col("src").as("v")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     verts.count() // eager: roots + the final left join consume
@@ -3664,11 +3637,10 @@ object Relational {
       maxFold: Long = BrandesMaxFoldWidth,
       releaseAfterMaterialize: Seq[DataFrame] = Nil): DataFrame = {
     import org.apache.spark.storage.StorageLevel
-    val edges = edges0
-      .repartition(col("src")) // stationary: only slim frontiers shuffle
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edges.count() // eager: every BFS round + the successor build consume
-    releaseAfterMaterialize.foreach(_.unpersist())
+    // every BFS round + the successor build consume the edge cache;
+    // only slim frontiers shuffle
+    val (edges, _) = graft.Barriers.stationaryEdges(edges0,
+      releaseAfterMaterialize)
     val verts = edges.select(col("src").as("v")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     verts.count() // eager: roots + the final left join consume
@@ -3800,11 +3772,10 @@ object Relational {
       releaseAfterMaterialize: Seq[DataFrame] = Nil): DataFrame = {
     import org.apache.spark.storage.StorageLevel
     require(nPivots >= 1, s"need at least one pivot: $nPivots")
-    val edges = edges0
-      .repartition(col("src")) // stationary: only slim frontiers shuffle
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edges.count() // eager: every BFS round + the successor build consume
-    releaseAfterMaterialize.foreach(_.unpersist())
+    // every BFS round + the successor build consume the edge cache;
+    // only slim frontiers shuffle
+    val (edges, _) = graft.Barriers.stationaryEdges(edges0,
+      releaseAfterMaterialize)
     // src ∪ dst: pure-sink vertices are never path-interior (BC 0) but
     // they ARE in the exact core's output domain — a caller swapping
     // exact → approx past the fold cap must not see the relation narrow

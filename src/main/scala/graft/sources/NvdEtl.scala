@@ -133,31 +133,52 @@ object NvdEtl {
     val rank =
       if (feedPaths.size == 1) lit(0)
       else (array_position(lit(names.toArray), col("_metadata.file_name")) - 1).cast("int")
-    val itemsType = ArrayType(itemSchema(schemaPath))
-    val probeSchema = feedSchema(schemaPath)
+    val schema = probeSchema(schemaPath)
+    spark.read
+      .schema(schema)
+      .options(readerOptions(strict))
+      .json(feedPaths: _*)
+      .select(guardedItems(schema).as("item"), rank.as(FeedRank))
+      .select("item.*", FeedRank)
+  }
+
+  /** The read schema of every feed read, batch ([[ingest]]) and
+    * streaming ([[graft.streaming.StreamOps.nvdFeedStream]]):
+    * [[feedSchema]] plus the two API-2.0 probe fields (`version`,
+    * `vulnerabilities`) a 1.1 feed never populates — see [[ingest]]'s
+    * schema-drift guard.
+    */
+  private[graft] def probeSchema(schemaPath: String): StructType =
+    feedSchema(schemaPath)
       .add(StructField("version", StringType))
       .add(StructField("vulnerabilities",
         ArrayType(StructType(Seq(StructField("cve",
           StructType(Seq(StructField("id", StringType)))))))))
-    spark.read
-      .schema(probeSchema)
-      .option("multiLine", value = true)
-      .option("mode", if (strict) "FAILFAST" else "PERMISSIVE")
+
+  /** The reader options of every feed read, batch and streaming. */
+  private[graft] def readerOptions(strict: Boolean): Map[String, String] =
+    Map("multiLine" -> "true",
+      "mode" -> (if (strict) "FAILFAST" else "PERMISSIVE"),
       // real NVD 1.1 feeds publish minute-precision timestamps
       // ("2019-04-09T20:15Z") — seconds and millis must both be optional
-      .option("timestampFormat", "yyyy-MM-dd'T'HH:mm[:ss][.SSS]XXX")
-      .json(feedPaths: _*)
-      .select(explode(
-        when(col("CVE_Items").isNull &&
-            (col("vulnerabilities").isNotNull || col("version").isNotNull),
-          raise_error(concat(
-            lit("NVD feed schema drift: expected a 1.1 feed with " +
-              "CVE_Items, found API-2.0 markers (version="),
-            coalesce(col("version"), lit("?")),
-            lit(", file="), col("_metadata.file_path"), lit(")"))).cast(itemsType))
-          .otherwise(col("CVE_Items"))).as("item"), rank.as(FeedRank))
-      .select("item.*", FeedRank)
-  }
+      "timestampFormat" -> "yyyy-MM-dd'T'HH:mm[:ss][.SSS]XXX")
+
+  /** `explode(CVE_Items)` over a feed read with `schema` (a
+    * [[probeSchema]]), raising when the envelope carries the 2.0 markers
+    * instead of CVE_Items — [[ingest]]'s schema-drift guard, shared with
+    * the streaming ingest. The message names the offending file.
+    */
+  private[graft] def guardedItems(schema: StructType): Column =
+    explode(
+      when(col("CVE_Items").isNull &&
+          (col("vulnerabilities").isNotNull || col("version").isNotNull),
+        raise_error(concat(
+          lit("NVD feed schema drift: expected a 1.1 feed with " +
+            "CVE_Items, found API-2.0 markers (version="),
+          coalesce(col("version"), lit("?")),
+          lit(", file="), col("_metadata.file_path"), lit(")")))
+          .cast(schema("CVE_Items").dataType))
+        .otherwise(col("CVE_Items")))
 
   /** The reference transform's staging artifact (etl.py:94-116): scrubbed
     * CVE rows as newline-delimited JSON for a bulk loader. Our warehouse

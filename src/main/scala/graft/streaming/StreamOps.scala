@@ -496,25 +496,28 @@ object StreamOps {
   /** stream_nvd_ingest: the reference's cron-driven incremental loop
     * (bq-nvd.py:98-104 download → extract → transform → load) as a
     * Structured Streaming file source: drop a new feed .json.gz into the
-    * watched directory and its CVEs flow through the same schema-driven
-    * parse + explode as the batch path ([[graft.sources.NvdEtl]]),
-    * deduplicated on CVE ID across ALL feeds ever seen (`dropDuplicates` —
-    * warehouse-lifetime first-writer-wins, exactly the reference's
-    * set-difference semantics with checkpointed state instead of a
-    * re-queried id list).
+    * watched directory and its CVEs flow through the same read schema,
+    * reader options and schema-drift-guarded explode as the batch path
+    * ([[graft.sources.NvdEtl.ingest]] — a 2.0 envelope fails the stream
+    * naming the file, never lands zero rows), deduplicated on CVE ID
+    * across ALL feeds ever seen (`dropDuplicates` — warehouse-lifetime
+    * first-writer-wins, exactly the reference's set-difference semantics
+    * with checkpointed state instead of a re-queried id list).
     */
   def nvdFeedStream(spark: org.apache.spark.sql.SparkSession,
       watchDir: String,
-      schemaPath: String = graft.sources.NvdEtl.DefaultSchemaPath): DataFrame =
+      schemaPath: String = graft.sources.NvdEtl.DefaultSchemaPath): DataFrame = {
+    import graft.sources.NvdEtl
+    val schema = NvdEtl.probeSchema(schemaPath)
     spark.readStream
-      .schema(graft.sources.NvdEtl.feedSchema(schemaPath))
-      .option("multiLine", value = true)
-      .option("timestampFormat", "yyyy-MM-dd'T'HH:mm[:ss][.SSS]XXX")
+      .schema(schema)
+      .options(NvdEtl.readerOptions(strict = false))
       .json(watchDir)
-      .select(explode(col("CVE_Items")).as("item"))
+      .select(NvdEtl.guardedItems(schema).as("item"))
       .select("item.*")
-      .withColumn("cve_id", graft.sources.NvdEtl.cveId)
+      .withColumn("cve_id", NvdEtl.cveId)
       .dropDuplicates("cve_id")
+  }
 
   /** stream_warehouse_load: the streaming SINK of the reference's daily
     * pipeline — micro-batches of parsed CVEs land in the year-partitioned

@@ -5,9 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.TestSpark
 
 /** The connectedComponents core on synthetic graphs, in BOTH finish
-  * regimes — the driver union-find under the edge bound and the
-  * distributed pointer-jump fixpoint above it — against a driver-side
-  * union-find reference. The commerce-slice operator itself is
+  * regimes — the driver union-find under the edge bound and the shared
+  * pointer-jump fixpoint (Relational.minLabelFix) above it — against a
+  * driver-side union-find reference. The commerce-slice operator itself is
   * oracle-gated (graph_connected_components, recursive-CTE oracle);
   * this spec is the contraction-bound audit VERDICT r9 #7 asked for:
   * the bound only gates WHICH finisher runs, never the answer, and the
@@ -70,6 +70,52 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     // the chain shape whose contracted graph stays a long chain
     val distributed = run(pairs, universe, bound = -1L)
     assert(distributed === run(pairs, universe, bound = Long.MaxValue))
+  }
+
+  test("distributed branch runs the shared fixpoint's delta rounds and " +
+      "still matches the reference union-find") {
+    // a clique-free star of 400 three-edge spokes contracts to 800
+    // supernodes that all settle in the first full round; the separate
+    // 200-edge ascending chain keeps moving afterwards, so under half
+    // the labels change and the fixpoint switches to delta rounds
+    val star = (1L to 400L).flatMap(k =>
+      Seq((0L, 1000L + k), (1000L + k, 2000L + k), (2000L + k, 3000L + k)))
+    val longChain = (0L until 200L).map(t => (1000000L + t, 1000001L + t))
+    val ps = star ++ longChain
+    val uni = ps.flatMap { case (a, b) => Seq(a, b) }.distinct
+    val log = new java.io.ByteArrayOutputStream()
+    val got = Console.withOut(log) {
+      import spark.implicits._
+      Dedup.connectedComponents(spark, ps.toDF("i", "j"), uni.toDF("id"),
+          driverFinishEdgeBound = -1L, verbose = true)
+        .as[(Long, Long)].collect().toMap
+    }
+    assert(got === reference(ps, uni))
+    assert(got(1000200L) === 1000000L)
+    val rounds = log.toString.linesIterator
+      .filter(_.startsWith("[mlf] connectedComponents")).toSeq
+    assert(rounds.exists(_.contains("mode=delta")), rounds.mkString("\n"))
+  }
+
+  test("neither finish regime leaves its pair or edge cache behind") {
+    // the call's only surviving SQL cache is the contracted-label
+    // relation l0, which the returned plan reads; the pair cache and the
+    // stationary edge cache are released inside the call. Cached
+    // Datasets are the persistent RDDs Spark names after their plan;
+    // round barriers are unnamed.
+    val sc = spark.sparkContext
+    for (bound <- Seq(Long.MaxValue, -1L)) {
+      // earlier calls on the same input would serve l0 from their cache
+      graft.GraftCaches.release(spark)
+      val before = sc.getPersistentRDDs.keySet
+      run(pairs, universe, bound)
+      val left = sc.getPersistentRDDs.collect {
+        case (id, r) if !before(id) && r.name != null => r.name
+      }.toSeq
+      assert(left.size === 1, s"bound=$bound: ${left.mkString("\n---\n")}")
+      assert(left.head.contains("AS lab"), s"bound=$bound: ${left.head}")
+    }
+    graft.GraftCaches.release(spark)
   }
 
   test("commerce-slice query agrees across finish regimes end to end") {

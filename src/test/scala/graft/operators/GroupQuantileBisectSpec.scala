@@ -72,6 +72,10 @@ class GroupQuantileBisectSpec extends AnyFunSuite {
     val data = (1 to 300).map(_ => ("a", rnd.nextLong() % 1000000L)) ++
       (1 to 7).map(i => ("b", i * 1001L)) ++ Seq(("c", -9L))
     val expected = ref(data)
+    // the ungrouped core over the same values: one group, whole domain
+    val expectedAll = ref(data.map { case (_, v) => ("all", v) })
+      .map { case ((_, p), v) => p -> v }
+    var ungroupedRef: Seq[Seq[Any]] = null
     for (fan <- Seq(2, 8, 32, Relational.BisectFan)) {
       val got = Relational
         .groupQuantileBisectCore(data.toDF("grp", "v"), fan = fan)
@@ -80,6 +84,14 @@ class GroupQuantileBisectSpec extends AnyFunSuite {
       graft.GraftCaches.release(spark)
       assert(got.keySet === expected.keySet, s"fan=$fan")
       for ((k, v) <- got) assert(v === expected(k), s"fan=$fan $k")
+      val ungrouped = Relational
+        .quantileBisectCore(data.map(_._2).toDF("v"), fan = fan)
+        .collect().map(_.toSeq).toSeq
+      graft.GraftCaches.release(spark)
+      assert(ungrouped.map(r => r(0) -> r(3)).toMap === expectedAll,
+        s"ungrouped fan=$fan")
+      if (ungroupedRef == null) ungroupedRef = ungrouped
+      else assert(ungrouped === ungroupedRef, s"ungrouped fan=$fan")
     }
   }
 

@@ -48,7 +48,7 @@ class KcoreSpec extends AnyFunSuite {
   }
 
   private def run(pairs: Seq[(Long, Long)], k: Int,
-      bound: Long = Relational.KcoreDriverEdgeBound)
+      bound: Long = graft.Barriers.DriverFinishEdgeBound)
       : (Map[Long, Long], Int) = {
     import spark.implicits._
     val (core, rounds) = Relational.kCoreCore(pairs.toDF("i", "j"), k,

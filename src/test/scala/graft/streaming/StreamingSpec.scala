@@ -121,6 +121,35 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  test("stream_nvd_ingest: a 2.0 envelope in the watch directory fails " +
+      "the stream with the schema-drift diagnostic, never a zero-row batch") {
+    val watch = graft.TestSpark.tmpDir("nvd_watch_v2")
+    val out = new java.util.zip.GZIPOutputStream(
+      new java.io.FileOutputStream(s"$watch/api2.json.gz"))
+    out.write(
+      """{"resultsPerPage":1,"startIndex":0,"totalResults":1,
+        |"format":"NVD_CVE","version":"2.0",
+        |"timestamp":"2024-01-01T00:00:00.000",
+        |"vulnerabilities":[{"cve":{"id":"CVE-2024-9999",
+        |  "sourceIdentifier":"cve@mitre.org","vulnStatus":"Analyzed"}}]}
+        |""".stripMargin.getBytes)
+    out.close()
+    val q = StreamOps.nvdFeedStream(spark, watch)
+      .select(col("cve_id"))
+      .writeStream.format("memory").queryName("nvd_stream_v2")
+      .outputMode("append").start()
+    try {
+      val e = intercept[Exception](q.processAllAvailable())
+      def msgs(t: Throwable): Seq[String] =
+        if (t == null) Nil
+        else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+      assert(msgs(e).exists(_.contains("schema drift")),
+        s"stream failed without the drift diagnostic: $e")
+      assert(msgs(e).exists(_.contains("api2.json.gz")),
+        s"the drift diagnostic does not name the file: $e")
+    } finally q.stop()
+  }
+
   test("stream_warehouse_load: foreachBatch sink is first-writer-wins and replay-idempotent") {
     val watch = graft.TestSpark.tmpDir("nvd_sink_watch")
     val wh = graft.TestSpark.tmpDir("nvd_sink_wh") + "/warehouse"
