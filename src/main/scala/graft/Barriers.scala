@@ -5,10 +5,11 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
 /** Round-barrier materialization for iterative loops (pagerank, label
-  * propagation, connected-components pointer jumping), plus the two
-  * rules every graph core's loop setup shares: the stationary edge
-  * cache ([[stationaryEdges]]) and the driver-finish edge bound
-  * ([[DriverFinishEdgeBound]]).
+  * propagation, connected-components pointer jumping), plus the rules
+  * every graph core's loop setup shares: the eager count that
+  * materializes a multi-consumer cache and releases what fed it
+  * ([[materialize]]), the stationary edge cache ([[stationaryEdges]])
+  * and the driver-finish edge bound ([[DriverFinishEdgeBound]]).
   *
   * Every loop here cuts its per-round lineage with an EAGER checkpoint
   * (the CLAUDE.md iterative contract — persist/unpersist chains break
@@ -54,34 +55,62 @@ object Barriers {
       else
         df.localCheckpoint()) // eager; executor-local blocks
 
+  /** Materialize an already persisted multi-consumer cache: EAGERLY count
+    * it before any consumer is built — a cold multi-consumer cache races
+    * concurrent stages into each recomputing the upstream pipeline (the
+    * eager-count invariant) — then unpersist the caches in
+    * `releaseAfterMaterialize`, which fed only its subtree and are dead
+    * weight once it holds the rows. Returns the row count. The one
+    * release point for upstream caches: [[stationaryEdges]] and
+    * connected components' pair cache both materialize through it.
+    */
+  def materialize(cached: DataFrame,
+      releaseAfterMaterialize: Seq[DataFrame] = Nil): Long = {
+    val n = cached.count()
+    releaseAfterMaterialize.foreach(_.unpersist())
+    n
+  }
+
   /** The edge list a graph loop joins every round, made STATIONARY:
     * partitioned once by `src` (the per-round join key, so rounds
     * shuffle only the slim frontier/label side, never the edges),
-    * persisted, and EAGERLY counted before any consumer is built — a
-    * cold multi-consumer cache races concurrent stages into each
-    * recomputing the upstream pipeline (the eager-count invariant). Caches in `releaseAfterMaterialize` fed only the edge
-    * subtree, so they are unpersisted once the edge cache holds the
-    * rows. Returns the cache and its row count; the caller owns the
-    * cache and unpersists it when its loop is done.
+    * persisted, and [[materialize]]d before any consumer is built,
+    * releasing `releaseAfterMaterialize`. Returns the cache and its row
+    * count; the caller owns the cache and unpersists it when its loop
+    * is done.
     */
   def stationaryEdges(edges: DataFrame,
       releaseAfterMaterialize: Seq[DataFrame] = Nil): (DataFrame, Long) = {
     val cached = edges.repartition(col("src"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val n = cached.count()
-    releaseAfterMaterialize.foreach(_.unpersist())
-    (cached, n)
+    (cached, materialize(cached, releaseAfterMaterialize))
   }
 
   /** Edge count at or under which a graph core finishes on the DRIVER
     * (connected components' union-find, SCC's Tarjan scan, k-core's
-    * in-memory peel): 4M slim (long, long) rows ≈ 64 MB, far below
-    * driver heap and far above any dimension-sized graph the queries
-    * feed (sf0.1 dedup_cluster: 1,776 contracted edges from 964,854
-    * pairs). Above it the distributed loop runs, so the collect is an
-    * explicitly bounded finishing step, never a scale risk. The bound
-    * gates WHICH engine finishes, never the answer: each core's spec
-    * asserts both regimes bit-identical.
+    * in-memory peel): far above any dimension-sized graph the queries
+    * feed, and bounded, so the collect is an explicitly bounded
+    * finishing step, never a scale risk — above it the distributed loop
+    * runs. Connected components applies it twice: first to the RAW pair
+    * count (sf0.1 dedup_cluster: 964,854 pairs, union-found straight
+    * from the pair cache, no contraction), then — only when the pairs
+    * exceed it — to the contracted edge count (the 1,776 contracted
+    * edges those pairs would contract to are what the second check
+    * would see). The bound gates WHICH engine finishes, never the
+    * answer: each core's spec asserts its regimes bit-identical.
+    *
+    * Driver memory at the bound is not the 4M slim rows' 64 MB. The
+    * `ScaleCheck ccdriver` drill (4M disjoint pairs — 8M union-find
+    * nodes, 4M moved into the root map, the worst shape for both; 4
+    * vCPUs, local mode, the same pairs also forced through the
+    * contraction) measured on the raw-pair finish: a 189 MB root-map
+    * broadcast; 1.38 GB live heap while the returned plan is held (its
+    * 4M-row local root relation and the broadcast copies; 0.09 GB on
+    * the contraction path); a 2.2–2.4 GB post-GC live peak during the
+    * phase, the same on both paths (executor buffers share that heap);
+    * 26–30 s against the contraction's 28–34 s; it completes under
+    * -Xmx3g. A driver finishing CC at the bound needs a heap of that
+    * order.
     */
   val DriverFinishEdgeBound = 4000000L
 }

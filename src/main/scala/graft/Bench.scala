@@ -122,6 +122,14 @@ object Bench {
     */
   val RecordForeignMaxPct = 10.0
 
+  /** The reproducibility bar: `repro_steady_ge1s_max_ratio` (the steady
+    * slowest/fastest pass ratio over queries whose fastest comparable
+    * pass is ≥ 1 s) must not exceed this for the artifact to be a
+    * record. Sub-second queries stay out of the bar (scheduler-jitter
+    * dominated) but stay quantified in `repro_steady_max_ratio`.
+    */
+  val RecordReproSteadyGe1sMaxRatio = 1.5
+
   /** Passes shorter than this are excluded from the foreign-CPU and
     * flat-CPU anomaly checks: a sub-2 s window divides too few jiffies
     * for stable attribution, and sub-second queries are already
@@ -476,14 +484,16 @@ object Bench {
     // record_valid: the machine-readable verdict "these totals are a perf
     // record", not merely "the flanks looked quiet" (r13 What's-wrong #1:
     // probe_quiet self-certified an artifact carrying 4-8× phantom
-    // regressions). Three conjuncts, each with its own reason string:
+    // regressions). Four conjuncts, each with its own reason string:
     //  (a) probe_quiet — flank + between-run probes at calibration;
     //  (b) every per-query in-run steal ≤ RecordInRunStealMaxPct;
     //  (c) no contention anomaly: no ≥2 s pass with foreign CPU ≥
     //      RecordForeignMaxPct, and no ≥2 s pass whose wall inflated
     //      ≥1.5× over the query's fastest comparable pass while its JVM
     //      CPU-seconds stayed flat (wall grew, compute didn't — the
-    //      process was descheduled by load the steal counter can't see).
+    //      process was descheduled by load the steal counter can't see);
+    //  (d) repro_steady_ge1s_max_ratio ≤ RecordReproSteadyGe1sMaxRatio —
+    //      the record's own passes agree with each other.
     // A false=direction-valid-only artifact still embeds every number.
     val maxInRunSteal =
       stealRuns.flatMap(_.values.filter(_ >= 0)) match {
@@ -511,10 +521,12 @@ object Bench {
       (if (maxInRunSteal <= RecordInRunStealMaxPct) Nil
        else List(s"in_run_steal_${rd(maxInRunSteal, 2)}pct")) ++
       (if (cpuAnomalies.isEmpty) Nil
-       else List(s"cpu_anomalies_${cpuAnomalies.size}"))
+       else List(s"cpu_anomalies_${cpuAnomalies.size}")) ++
+      (if (steadyGe1sMax <= RecordReproSteadyGe1sMaxRatio) Nil
+       else List(s"repro_steady_ge1s_${r3(steadyGe1sMax)}"))
     val recordValid = invalidReasons.isEmpty
     val detailJson =
-      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${names.size},"n_runs":$nRuns,"queries":${jmap(warm)},"queries_cold":${jmap(cold)},"run_totals":${runTotals.map(r3).mkString("[", ",", "]")},"runs_warm":$runsJson,"runs_query_steal_pct":$stealJson,"runs_query_gc_sec":$gcJson,"runs_query_cpu_sec":$cpuJson,"runs_query_foreign_pct":$foreignJson,"record_valid":$recordValid,"record_invalid_reasons":${invalidReasons.map(r => "\"" + jstr(r) + "\"").mkString("[", ",", "]")},"max_inrun_steal_pct":${rd(maxInRunSteal, 2)},"cpu_anomalies":${cpuAnomalies.map(n => "\"" + jstr(n) + "\"").mkString("[", ",", "]")},"record_inrun_steal_max_pct":$RecordInRunStealMaxPct,"record_foreign_max_pct":$RecordForeignMaxPct,"repro_max_ratio":${r3(maxRatio)},"repro_worst":${jmap(worstRatios)},"repro_steady_max_ratio":${r3(steadyMax)},"repro_steady_worst":${jmap(steadyWorst)},"repro_steady_ge1s_max_ratio":${r3(steadyGe1sMax)},"repro_steady_ge1s_worst":${jmap(steadyGe1sWorst)},"errors":${jsmap(errors)},"probe_before":${jprobe(probeBefore)},"probe_between_runs":${midProbes.map(jprobe).mkString("[", ",", "]")},"probe_after":${jprobe(probeAfter)},"probe_quiet":$probeQuiet,"probe_quiet_floor":$QuietProbeMedianFloor,"probe_quiet_steal_max_pct":$QuietProbeStealMaxPct,"residual_storage_max_bytes":$residualMax,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${names.size},"n_runs":$nRuns,"queries":${jmap(warm)},"queries_cold":${jmap(cold)},"run_totals":${runTotals.map(r3).mkString("[", ",", "]")},"runs_warm":$runsJson,"runs_query_steal_pct":$stealJson,"runs_query_gc_sec":$gcJson,"runs_query_cpu_sec":$cpuJson,"runs_query_foreign_pct":$foreignJson,"record_valid":$recordValid,"record_invalid_reasons":${invalidReasons.map(r => "\"" + jstr(r) + "\"").mkString("[", ",", "]")},"max_inrun_steal_pct":${rd(maxInRunSteal, 2)},"cpu_anomalies":${cpuAnomalies.map(n => "\"" + jstr(n) + "\"").mkString("[", ",", "]")},"record_inrun_steal_max_pct":$RecordInRunStealMaxPct,"record_foreign_max_pct":$RecordForeignMaxPct,"record_repro_steady_ge1s_max_ratio":$RecordReproSteadyGe1sMaxRatio,"repro_max_ratio":${r3(maxRatio)},"repro_worst":${jmap(worstRatios)},"repro_steady_max_ratio":${r3(steadyMax)},"repro_steady_worst":${jmap(steadyWorst)},"repro_steady_ge1s_max_ratio":${r3(steadyGe1sMax)},"repro_steady_ge1s_worst":${jmap(steadyGe1sWorst)},"errors":${jsmap(errors)},"probe_before":${jprobe(probeBefore)},"probe_between_runs":${midProbes.map(jprobe).mkString("[", ",", "]")},"probe_after":${jprobe(probeAfter)},"probe_quiet":$probeQuiet,"probe_quiet_floor":$QuietProbeMedianFloor,"probe_quiet_steal_max_pct":$QuietProbeStealMaxPct,"residual_storage_max_bytes":$residualMax,"sf":"$sfDir"}"""
     // a SPARK_GRAFT_ONLY dev run must never clobber the committed
     // full-suite record (r7 postmortem: a 3-query rerun overwrote the
     // round's only full-suite detail) — filtered runs get their own

@@ -307,6 +307,92 @@ object ScaleCheck {
     pairs.unpersist()
   }
 
+  /** `runMain graft.ScaleCheck ccdriver [nPairs]` — connected components'
+    * raw-pair driver finish AT its bound (default nPairs =
+    * [[Barriers.DriverFinishEdgeBound]]): nPairs disjoint pairs
+    * (2k, 2k+1), the shape that maximizes both driver structures — every
+    * pair brings two fresh nodes into the union-find map (2·nPairs
+    * entries) and moves one of them into the broadcast root map (nPairs
+    * rows). The same pairs first run the contraction path (bound
+    * nPairs − 1) for comparison. Per phase it prints the largest heap
+    * any collection left live (GC notifications — the live-set peak a
+    * heap must hold; in local mode the executors' buffers share that
+    * heap, so it bounds the driver's share from above), the post-GC live
+    * heap before the phase and while its result plan is still held, and
+    * the broadcast size (the exchanges' dataSize metric); a wrong label
+    * throws.
+    */
+  private def ccDriverDrill(spark: org.apache.spark.sql.SparkSession,
+      nPairs: Long): Unit = {
+    import org.apache.spark.storage.StorageLevel
+    import java.lang.management.{ManagementFactory, MemoryType}
+    import javax.management.{Notification, NotificationEmitter,
+      NotificationListener}
+    import javax.management.openmbean.CompositeData
+    import com.sun.management.GarbageCollectionNotificationInfo
+    import scala.jdk.CollectionConverters._
+    val pairs = spark.range(nPairs)
+      .select((col("id") * 2).as("i"), (col("id") * 2 + 1).as("j"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    pairs.count()
+    val universe = pairs.select(col("i").as("id"))
+      .unionAll(pairs.select(col("j").as("id")))
+    val heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getType == MemoryType.HEAP).map(_.getName).toSet
+    def liveMb() = {
+      System.gc()
+      ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed >> 20
+    }
+    val maxAfterGc = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new NotificationListener {
+      def handleNotification(n: Notification, hb: AnyRef): Unit =
+        if (n.getType ==
+            GarbageCollectionNotificationInfo.GARBAGE_COLLECTION_NOTIFICATION) {
+          val after = GarbageCollectionNotificationInfo
+            .from(n.getUserData.asInstanceOf[CompositeData])
+            .getGcInfo.getMemoryUsageAfterGc.asScala
+            .collect { case (k, u) if heapPools(k) => u.getUsed }.sum
+          maxAfterGc.accumulateAndGet(after, math.max)
+        }
+    }
+    val gcs = ManagementFactory.getGarbageCollectorMXBeans.asScala
+      .collect { case e: NotificationEmitter => e }
+    val helper =
+      new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    def phase(tag: String, bound: Long): Unit = {
+      val live0 = liveMb()
+      maxAfterGc.set(0L)
+      gcs.foreach(_.addNotificationListener(listener, null, null))
+      val (q, row) = timed(s"cc_$tag") {
+        val cc = Dedup.connectedComponents(spark, pairs, universe,
+          driverFinishEdgeBound = bound, verbose = true)
+        val q = cc.agg(count(lit(1)).as("n"), sum(when(
+          col("canonical_id") =!= col("id") - col("id") % 2, 1L)
+          .otherwise(0L)).as("bad"))
+        (q, q.collect().head)
+      }
+      gcs.foreach(_.removeNotificationListener(listener))
+      val held = liveMb() // q, and through it the plan, still referenced
+      val bcastBytes = helper.collect(q.queryExecution.executedPlan) {
+        case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec =>
+          b.metrics("dataSize").value
+      }.sum
+      val (n, bad) = (row.getLong(0), row.getLong(1))
+      println(s"SCALECHECK ccdriver $tag pairs=$nPairs labels=$n wrong=$bad " +
+        s"live_before_mb=$live0 max_live_after_gc_mb=${maxAfterGc.get >> 20} " +
+        s"live_with_plan_mb=$held broadcast_mb=${bcastBytes >> 20} " +
+        s"xmx_mb=${Runtime.getRuntime.maxMemory >> 20}")
+      assert(n == 2 * nPairs && bad == 0,
+        s"ccdriver $tag labeling wrong: labels=$n (want ${2 * nPairs}) " +
+          s"wrong=$bad")
+    }
+    // contracted first: the raw-pair finish's broadcast outlives its plan
+    // until the ContextCleaner runs, and would inflate the next baseline
+    phase("contracted", nPairs - 1)
+    phase("raw_pairs", nPairs)
+    pairs.unpersist()
+  }
+
   /** The centrality large-regime drill (r11 verdict #2): Brandes
     * betweenness + the harmonic-closeness rollup on the generated
     * power-law graph — the one iterative family the 25M-edge graph
@@ -1505,6 +1591,12 @@ object ScaleCheck {
     if (args.headOption.contains("hits")) {
       hitsDrill(spark,
         args.drop(1).headOption.map(_.toLong).getOrElse(25000000L))
+      spark.stop()
+      return
+    }
+    if (args.headOption.contains("ccdriver")) {
+      ccDriverDrill(spark, args.drop(1).headOption.map(_.toLong)
+        .getOrElse(Barriers.DriverFinishEdgeBound))
       spark.stop()
       return
     }

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated star schema (see TESTDATA.md).
   *
@@ -9,8 +11,59 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * and prunes columns at the source.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+
+  /** A parquet read with a known schema. A schema-less read infers the
+    * schema with a Spark job (`mergeSchemasInParallel`), so every query
+    * paid one job, and the gap after it, per table it touched. The schema
+    * is inferred once per table and passed in through `.schema(...)`;
+    * later reads plan without a job.
+    */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    identity(spark, path) match {
+      case Some(id) => spark.read.schema(schemaOf(spark, path, id)).parquet(path)
+      case None     => spark.read.parquet(path) // missing: Spark's own error
+    }
+  }
+
+  /** path → (identity it was inferred under, schema); one entry per path,
+    * replaced when the identity changes. */
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, (Seq[Any], StructType)]()
+
+  private def schemaOf(spark: SparkSession, path: String,
+      id: Seq[Any]): StructType = {
+    val hit = schemas.get(path)
+    if (hit != null && hit._1 == id) hit._2
+    else {
+      val inferred = spark.read.parquet(path).schema
+      schemas.put(path, (id, inferred))
+      inferred
+    }
+  }
+
+  /** What the inferred schema depends on: every leaf file under `path`
+    * (name, length, modification time — a rewritten table is a new
+    * identity) and every session conf naming parquet or case
+    * sensitivity (the schema converter reads `nanosAsLong`,
+    * `inferTimestampNTZ.enabled`, `binaryAsString`, `int96AsTimestamp`,
+    * and merging reads `mergeSchema`). None when the path does not exist.
+    */
+  private def identity(spark: SparkSession, path: String): Option[Seq[Any]] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val files = Iterator.unfold(fs.listFiles(p, true))(it =>
+        if (it.hasNext) Some((it.next(), it)) else None)
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+        .toVector.sorted
+      val confs = spark.conf.getAll.toVector.filter { case (k, _) =>
+        k.toLowerCase.contains("parquet") || k == "spark.sql.caseSensitive"
+      }.sorted
+      Some(Vector(files, confs))
+    }
+  }
 
   /** events.parquet has shipped with two physical types for `ts`, so we
     * dispatch on the schema Spark actually read rather than assuming one:

@@ -435,22 +435,19 @@ object GraftKernels {
     hash
   }
 
-  /** Bisection probe bucket: the smallest index i with v ≤ mids(i) over
-    * the group's sorted probe-midpoint array (mids.length when v exceeds
-    * every midpoint), or −1 when the group has no open bracket this round
-    * (absent from the map) — those rows are counted under a bucket the
+  /** Bisection probe bucket: the smallest index i with v ≤ m(i) over a
+    * group's sorted probe-midpoint array `m` (m.length when v exceeds
+    * every midpoint), or −1 when `m` is null — the group has no open
+    * bracket this round, so its rows are counted under a bucket the
     * driver ignores. One binary search (O(log probes)) replaces the
     * per-probe conditional-sum chain that made wide bisection fans lose
     * to their own expression width (see Relational.BisectFan history):
     * per-row cost is now logarithmic in the probe count, so a round can
     * carry thousands of midpoints and the bracket search closes in 2–3
-    * counting passes instead of 8–24. A null group key is a first-class
-    * group (HashMap supports a null key), matching the cores' null-safe
-    * group handling.
+    * counting passes instead of 8–24. The group → array lookup is the
+    * caller's ([[org.apache.spark.sql.graft.BisectBucket]]).
     */
-  def bisectBucket(grp: UTF8String, v: Long,
-      mids: java.util.HashMap[UTF8String, Array[Long]]): Int = {
-    val m = mids.get(grp)
+  def bisectIndex(m: Array[Long], v: Long): Int = {
     if (m == null) -1
     else {
       var lo = 0

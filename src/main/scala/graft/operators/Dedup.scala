@@ -25,13 +25,28 @@ object Dedup {
   /** Whitespace tokens of the document text (testdata is single-spaced). */
   private def toks: Column = split(col("text"), " ")
 
-  /** Word 3-shingles of a token array column (empty when < 3 tokens). */
-  private def shingles3(t: Column): Column =
-    when(size(t) >= 3,
-      transform(sequence(lit(0), size(t) - 3),
-        i => concat_ws(" ", element_at(t, i + 1), element_at(t, i + 2),
-          element_at(t, i + 3))))
-      .otherwise(array().cast("array<string>"))
+  /** Sorted, distinct word 3-shingle set `sh` (empty when < 3 tokens) of
+    * each document of a (doc_id, text, …) relation — the one shingling of
+    * dedup_minhash_lsh, the minhash sketch and dedup_containment.
+    *
+    * The token array lands in its own projection first. The shingle
+    * expression reads it five times (two sizes, then three element_at
+    * per shingle inside the lambda); an inlined `split(text)` is
+    * re-evaluated at every reference, so each shingle re-split the whole
+    * text — O(tokens²) per document, interpreted. CollapseProject does
+    * not inline a non-cheap expression its consumer references more than
+    * once, so the split now runs once per document.
+    */
+  private[graft] def shingleSets(docs: DataFrame): DataFrame = {
+    val t = col("w")
+    docs.select(col("doc_id"), toks.as("w"))
+      .select(col("doc_id"), array_sort(array_distinct(
+        when(size(t) >= 3,
+          transform(sequence(lit(0), size(t) - 3),
+            i => concat_ws(" ", element_at(t, i + 1), element_at(t, i + 2),
+              element_at(t, i + 3))))
+          .otherwise(array().cast("array<string>")))).as("sh"))
+  }
 
   /** Jaccard over sorted+distinct sets: one merge walk per pair (codegen'd
     * kernel) — the sort happens once per DOC in the projection, not once
@@ -321,15 +336,18 @@ object Dedup {
     * canonical doc per duplicate cluster (the step a pipeline actually
     * applies before training: keep the canonical, drop the rest).
     *
-    * [[connectedComponents]] first CONTRACTS the pair graph (one
-    * neighbor-min pass collapses each near-dup clique to a supernode),
-    * then labels the contracted supernode graph: a driver union-find
-    * under [[graft.Barriers.DriverFinishEdgeBound]], the shared
-    * pointer-jump fixpoint [[Relational.minLabelFix]] above it. At the
-    * end the label of every doc is the minimum doc_id of its connected
-    * component. The DuckDB oracle computes TRUE transitive components
-    * via a recursive CTE, so the gate proves the labeling exact, not an
-    * approximation.
+    * Scale shape: [[connectedComponents]] counts the persisted pair
+    * relation and picks its finish on that count. Pairs at or under
+    * [[graft.Barriers.DriverFinishEdgeBound]] (964,854 at sf0.1) are
+    * collected once and union-found on the driver; above it the pair
+    * graph is first CONTRACTED (one neighbor-min pass collapses each
+    * near-dup clique to a supernode), then the supernode graph is
+    * labeled by the same union-find when its edges fit the bound, by
+    * the shared pointer-jump fixpoint [[Relational.minLabelFix]] when
+    * they do not. Every doc's label is the minimum doc_id of its
+    * connected component. The DuckDB oracle computes TRUE transitive
+    * components via a recursive CTE, so the gate proves the labeling
+    * exact, not an approximation.
     */
   def dedupCluster(spark: SparkSession, dir: String): DataFrame = {
     val (pairs, upstream) = ngramPairs(spark, dir)
@@ -343,12 +361,28 @@ object Dedup {
 
   /** Connected components over an undirected (i, j) pair relation:
     * (id, canonical_id = component minimum) for every id in `universe`.
-    * Shared by dedup_cluster (token-Jaccard pairs) and dedup_semantic
-    * (embedding-cosine pairs). Caches in `releaseAfterMaterialize` fed
-    * the pair subtree and nothing else; they are unpersisted together
-    * with the pair cache once the contracted edge cache holds its rows,
-    * instead of being carried until the harness-level
-    * GraftCaches.release.
+    * Shared by dedup_cluster (token-Jaccard pairs), dedup_semantic
+    * (embedding-cosine pairs) and graph_connected_components.
+    *
+    * The finish regime is decided on the pair count the eager count
+    * already paid for, the rule [[Relational.kCoreCore]] uses:
+    *  - pairs ≤ `driverFinishEdgeBound`: the pairs are collected once
+    *    and union-found on the driver ([[componentRoots]]); no
+    *    contraction, no label cache;
+    *  - above it: the neighbor-min contraction, then the same
+    *    union-find over the contracted edges when THEY fit the bound,
+    *    else [[Relational.minLabelFix]].
+    * Caches in `releaseAfterMaterialize` fed the pair subtree and nothing
+    * else; they are unpersisted as soon as the pair cache holds its rows
+    * ([[graft.Barriers.materialize]]). The pair cache is released here
+    * only when this call persisted it: right after the collect under
+    * the bound, with the contracted edge cache above it. `pairs` the
+    * caller already persisted stay the caller's — a caller whose
+    * `universe` reads the pairs (graph_connected_components derives it
+    * from them) persists them itself, so the returned plan keeps
+    * reading that cache until [[graft.GraftCaches.release]].
+    * `verbose` prints `[cc] pairs=N`, then `[cc] superEdges=N` when the
+    * contraction runs.
     */
   private[graft] def connectedComponents(spark: SparkSession,
       pairs: DataFrame, universe: DataFrame,
@@ -356,26 +390,47 @@ object Dedup {
       driverFinishEdgeBound: Long = graft.Barriers.DriverFinishEdgeBound,
       verbose: Boolean = false): DataFrame = {
     import org.apache.spark.storage.StorageLevel
+    import spark.implicits._
     // persist the UNDIRECTED pair relation once — half the rows of a
     // doubled edge list, and the one evaluation of the (expensive) pair
     // subtree that every downstream pass reads. (A pairs ∪ pairs.swap
     // self-union would additionally plant that subtree in the plan twice.)
-    val p = pairs.persist(StorageLevel.MEMORY_AND_DISK)
+    // Pairs the caller already persisted are read, never released, here.
+    val owned = pairs.storageLevel == StorageLevel.NONE
+    val p = if (owned) pairs.persist(StorageLevel.MEMORY_AND_DISK) else pairs
     // EAGER materialization: the contraction fans out into three
     // independent consumer stages (both nbrMin roles + the edge joins)
     // that the scheduler runs CONCURRENTLY — against a still-cold cache,
     // each would race to compute the expensive pair pipeline itself
     // (first-writer-wins cache population doesn't stop a stage that
     // already started computing). One count() populates the cache before
-    // any consumer launches.
-    p.count()
-    // CONTRACTION pass before the loop: l0(v) = min(v, direct neighbors).
+    // any consumer launches, and its answer picks the finish regime.
+    //
+    // count-then-collect, deliberately: the count materializes the persist
+    // at full parallelism; the collect then drains the cache. A fused
+    // limit+collect was tried and is WORSE — CollectLimit's executeTake
+    // scales up 1→4→16… partitions in sequential rounds while it hunts
+    // for limit rows, so the expensive materializing pass runs nearly
+    // serial (dedup_cluster 4.2 → 8.2 s measured).
+    val nPairs = graft.Barriers.materialize(p, releaseAfterMaterialize)
+    if (verbose) println(s"[cc] pairs=$nPairs")
+    if (nPairs <= driverFinishEdgeBound) {
+      // FINISH ON THE DRIVER straight from the pairs: the bound keeps the
+      // collect a bounded finishing step, and a dimension-sized graph
+      // pays one collect instead of the contraction's aggregates, label
+      // cache and edge cache. Null endpoints join nothing in the
+      // contraction, so they link nothing here either.
+      val roots = componentRoots(
+        p.select(col("i"), col("j")).na.drop().as[(Long, Long)].collect())
+      if (owned) p.unpersist()
+      return relabel(universe.select(col("id"), col("id").as("lab")), roots)
+    }
+    // CONTRACTION pass before the finish: l0(v) = min(v, direct neighbors).
     // Near-dup components are overwhelmingly CLIQUES (c duplicate docs →
-    // c²/2 pairs — the 964,854 pairs at sf0.1 live in a handful of dense
-    // clusters), and one neighbor-min collapses a whole clique to a single
-    // supernode. The iterative fixpoint then runs on the INTER-supernode
+    // c²/2 pairs), and one neighbor-min collapses a whole clique to a
+    // single supernode. The finish then runs on the INTER-supernode
     // graph — typically empty or tiny — instead of re-joining the full
-    // million-edge relation every round. At 100 TB this is the difference
+    // pair relation every round. At 100 TB this is the difference
     // between O(rounds) passes over the pair relation and ONE pass plus a
     // loop over a graph whose size tracks cluster-chain structure, not
     // corpus size. Contraction preserves connectivity exactly, so the
@@ -400,15 +455,8 @@ object Dedup {
     // collapse in the distinct. Only the TINY contracted relation is
     // symmetrized into both directions, and it is made stationary ONCE
     // here — the driver finish collects it, the fixpoint joins it every
-    // round. Once it holds its rows the pair cache and the caller's
-    // upstream caches are dead weight.
-    //
-    // count-then-collect, deliberately: the count materializes the persist
-    // at full parallelism; the collect then drains the (tiny) cache. A
-    // fused limit+collect was tried and is WORSE — CollectLimit's
-    // executeTake scales up 1→4→16… partitions in sequential rounds while
-    // it hunts for limit rows, so the expensive materializing pass runs
-    // nearly serial (dedup_cluster 4.2 → 8.2 s measured).
+    // round. Once it holds its rows the pair cache, if this call owns
+    // it, is dead weight.
     val (edges, nSuperEdges) = graft.Barriers.stationaryEdges(
       p.join(l0.select(col("id").as("i"), col("lab").as("ls")), Seq("i"))
         .join(l0.select(col("id").as("j"), col("lab").as("ld")), Seq("j"))
@@ -418,40 +466,17 @@ object Dedup {
           struct(col("ls").as("src"), col("ld").as("dst")),
           struct(col("ld").as("src"), col("ls").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst")),
-      releaseAfterMaterialize :+ p)
-    import spark.implicits._
-    if (nSuperEdges <= driverFinishEdgeBound) {
-      // FINISH ON THE DRIVER: the contracted graph is cluster-adjacency
-      // structure, not corpus data — its size tracks how many near-dup
-      // clusters chain into each other, which the bound just guarded.
-      // Union-find (union-by-min keeps every root the component
-      // minimum) resolves it in O(E α(E)); the root map broadcasts back
-      // over the contracted labels. The distributed fixpoint below stays
-      // as the guarded fallback, so scale never depends on this branch.
-      val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-      def find(x: Long): Long = {
-        var r = x
-        while (parent(r) != r) r = parent(r)
-        var c = x
-        while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-        r
-      }
-      edges.as[(Long, Long)].collect().foreach { case (s, d) =>
-        parent.getOrElseUpdate(s, s)
-        parent.getOrElseUpdate(d, d)
-        val rs = find(s); val rd = find(d)
-        if (rs != rd) parent(math.max(rs, rd)) = math.min(rs, rd)
-      }
-      val roots = parent.keysIterator.map(k => (k, find(k))).toSeq
-      edges.unpersist()
-      val lmap = spark.createDataset(roots).toDF("lab", "slab")
-      // left join: supernodes with no inter-cluster link keep their own
-      // label (coalesce) — lmap only covers nodes seen in superEdges
-      return l0.join(broadcast(lmap), Seq("lab"), "left_outer")
-        .select(col("id"),
-          coalesce(col("slab"), col("lab")).as("canonical_id"))
-    }
+      if (owned) Seq(p) else Nil)
     if (verbose) println(s"[cc] superEdges=$nSuperEdges")
+    if (nSuperEdges <= driverFinishEdgeBound) {
+      // the contracted graph is cluster-adjacency structure, not corpus
+      // data: its size tracks how many clusters chain into each other,
+      // which the bound just guarded
+      val roots =
+        try componentRoots(edges.as[(Long, Long)].collect())
+        finally edges.unpersist()
+      return relabel(l0, roots)
+    }
     // the shared pointer-jump fixpoint over the contracted graph, every
     // supernode starting as its own label; its result is checkpoint-
     // truncated, so the edge cache can go as soon as it returns
@@ -467,6 +492,40 @@ object Dedup {
     l0.join(labels.select(col("lab").as("slab"), col("id").as("lab")),
         Seq("lab"))
       .select(col("id"), col("slab").as("canonical_id"))
+  }
+
+  /** Driver union-find over a collected edge list — the one finisher of
+    * both [[connectedComponents]] driver regimes. Union-by-min keeps
+    * every root its component's minimum id; O(E α(E)). Returns
+    * (node, root) for every node whose root is not itself, so the
+    * broadcast root map carries only the nodes that move.
+    */
+  private def componentRoots(edges: Array[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent(r) != r) r = parent(r)
+      var c = x
+      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { case (s, d) =>
+      parent.getOrElseUpdate(s, s)
+      parent.getOrElseUpdate(d, d)
+      val rs = find(s); val rd = find(d)
+      if (rs != rd) parent(math.max(rs, rd)) = math.min(rs, rd)
+    }
+    parent.keysIterator.map(k => (k, find(k))).filter(kr => kr._1 != kr._2)
+      .toVector
+  }
+
+  /** (id, canonical_id) from (id, lab) labels and a union-find root map:
+    * a label the map does not move is its own component's root. */
+  private def relabel(labels: DataFrame, roots: Seq[(Long, Long)]): DataFrame = {
+    val spark = labels.sparkSession
+    import spark.implicits._
+    labels.join(broadcast(roots.toDF("lab", "slab")), Seq("lab"), "left_outer")
+      .select(col("id"), coalesce(col("slab"), col("lab")).as("canonical_id"))
   }
 
   // Bucket pair emission uses the custom streaming PairsGenerator
@@ -541,33 +600,8 @@ object Dedup {
     *    pairs ≥ 0.5 — the oracle checks against DuckDB's exhaustive
     *    all-pairs Jaccard, so LSH recall itself is being graded.
     */
-  def dedupMinhashLsh(spark: SparkSession, dir: String): DataFrame = {
-    // ONE persisted relation carries both the shingle set (reused by the
-    // rerank joins) and the 128-minima signature (read by the banding) —
-    // without the cache the scan + shingling would run three times (at
-    // warehouse scale this is the relation you'd materialize anyway). The
-    // persist is also a PLAN BARRIER — without it CollapseProject inlines
-    // the signature kernel into the 16-way band transform's lambda (16×
-    // recompute) and pushes the size() filter into a second shingle
-    // evaluation. persist, not localCheckpoint: the InMemoryRelation
-    // keeps stats for join sizing (see ngramPairs); the harness clears
-    // the cache between queries. repartition first: single-row-group
-    // local files would otherwise run the whole kernel pipeline in one
-    // task.
-    val cached = Tables.documents(spark, dir)
-      .repartition(col("doc_id"))
-      .select(col("doc_id"), array_sort(array_distinct(shingles3(toks))).as("sh"))
-      .select(col("doc_id"), col("sh"),
-        GraftFunctions.minhashSignature(col("sh"), 128, 42).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // EAGER materialization (see connectedComponents): the banding and the
-    // two rerank joins are independent consumer stages the scheduler runs
-    // CONCURRENTLY — against a still-cold cache each would recompute the
-    // shingle+128-minhash pipeline itself (measured: warm pass 16.5 s
-    // mid-suite vs 1.8 s isolated, purely scheduling-dependent recompute).
-    cached.count()
-    minhashLshPairs(cached)
-  }
+  def dedupMinhashLsh(spark: SparkSession, dir: String): DataFrame =
+    minhashLshPairs(minhashSketch(spark, dir))
 
   /** The post-shingle pipeline of [[dedupMinhashLsh]] — 16×8 banding of
     * the 128-minima signature, width-capped bucket pair generation, exact
@@ -778,9 +812,10 @@ object Dedup {
     * embedding-cosine near-dup pair relation closed into connected
     * components, one canonical vector per semantic cluster (what a
     * pipeline drops before training: all but one of each meaning-level
-    * duplicate group). Same contraction + bounded driver union-find as
-    * dedup_cluster; the recursive-CTE oracle proves the labeling is the
-    * exact transitive closure over the RHP-blocked pair relation.
+    * duplicate group). Same bounded driver union-find (contraction
+    * first only above the bound) as dedup_cluster; the recursive-CTE
+    * oracle proves the labeling is the exact transitive closure over the
+    * RHP-blocked pair relation.
     */
   def dedupSemantic(spark: SparkSession, dir: String): DataFrame =
     connectedComponents(spark,
@@ -881,14 +916,32 @@ object Dedup {
 
   /** The persisted (doc_id, sh, sig) sketch relation — shingle set +
     * MinHash(128) signature, the artifact a warehouse materializes once
-    * per corpus (plan barrier + multi-consumer cache + EAGER count, same
-    * protocol as dedupMinhashLsh).
+    * per corpus, read by dedup_minhash_lsh and dedup_incremental_minhash.
     */
   private[operators] def minhashSketch(spark: SparkSession,
       dir: String): DataFrame = {
+    // ONE persisted relation carries both the shingle set (reused by the
+    // rerank joins) and the 128-minima signature (read by the banding) —
+    // without the cache the scan + shingling would run once per consumer
+    // (at warehouse scale this is the relation you'd materialize anyway).
+    // The persist is also a PLAN BARRIER — without it CollapseProject
+    // inlines the signature kernel into the 16-way band transform's
+    // lambda (16× recompute) and pushes the size() filter into a second
+    // shingle evaluation. Below it, [[shingleSets]]' token projection is
+    // the second barrier: the text is split once per document, not once
+    // per shingle. persist, not localCheckpoint: the InMemoryRelation
+    // keeps stats for join sizing (see ngramPairs); the harness clears
+    // the cache between queries. repartition first: single-row-group
+    // local files would otherwise run the whole kernel pipeline in one
+    // task.
     val cached = sketchOf(Tables.documents(spark, dir)
       .repartition(col("doc_id")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // EAGER materialization (see connectedComponents): the banding and the
+    // two rerank joins are independent consumer stages the scheduler runs
+    // CONCURRENTLY — against a still-cold cache each would recompute the
+    // shingle+128-minhash pipeline itself (measured: warm pass 16.5 s
+    // mid-suite vs 1.8 s isolated, purely scheduling-dependent recompute).
     cached.count()
     cached
   }
@@ -901,8 +954,7 @@ object Dedup {
     * the batch operator uses.
     */
   private[graft] def sketchOf(docs: DataFrame): DataFrame =
-    docs
-      .select(col("doc_id"), array_sort(array_distinct(shingles3(toks))).as("sh"))
+    shingleSets(docs)
       .select(col("doc_id"), col("sh"),
         GraftFunctions.minhashSignature(col("sh"), 128, 42).as("sig"))
 
@@ -956,10 +1008,8 @@ object Dedup {
     */
   def dedupContainment(spark: SparkSession, dir: String): DataFrame = {
     // persisted: feeds the posting build and both rerank joins
-    val d = Tables.documents(spark, dir)
-      .repartition(col("doc_id"))
-      .select(col("doc_id"),
-        array_sort(array_distinct(shingles3(toks))).as("sh"))
+    val d = shingleSets(Tables.documents(spark, dir)
+        .repartition(col("doc_id")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // EAGER materialization (see connectedComponents): the posting build
     // and both rerank joins race a cold cache otherwise — measured 118 s

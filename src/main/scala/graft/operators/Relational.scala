@@ -2362,18 +2362,27 @@ object Relational {
     * finish exist for).
     *
     * Scale shape: the pair relation persists once (digest-slim: two
-    * longs per edge), the contraction collapses it to the inter-
-    * supernode graph, and the driver union-find runs only under the
-    * explicit [[graft.Barriers.DriverFinishEdgeBound]] — above it the
-    * shared pointer-jump fixpoint [[minLabelFix]] takes over, so the
-    * plan never depends on the driver branch (PlanAuditSpec asserts the
-    * bound and both finish regimes agree bit-for-bit). Component ids are exact
-    * integer minima, so the DuckDB recursive-CTE oracle (min-label
-    * walk, pruned to labels below the receiving vertex — the component
-    * minimum always survives the prune) matches bit-for-bit.
+    * longs per edge) and its eager count picks the finish. At or under
+    * [[graft.Barriers.DriverFinishEdgeBound]] (this slice: a few hundred
+    * pairs) the pairs are collected once and union-found on the driver,
+    * so the query runs no contraction jobs at all. Above it the
+    * contraction collapses the pairs to the inter-supernode graph, which
+    * the same union-find finishes when its edges fit the bound and the
+    * shared pointer-jump fixpoint [[minLabelFix]] otherwise — the bound
+    * gates which engine finishes, never the answer
+    * (ConnectedComponentsSpec asserts all three regimes bit-identical).
+    * The universe is derived from the pair relation, so this query
+    * persists the pairs itself: the returned plan reads that cache and
+    * it stays for [[graft.GraftCaches.release]]. Component ids are exact integer
+    * minima, so the DuckDB recursive-CTE oracle (min-label walk, pruned
+    * to labels below the receiving vertex — the component minimum
+    * always survives the prune) matches bit-for-bit.
     */
   def graphConnectedComponents(spark: SparkSession, dir: String): DataFrame = {
     val pairs = urgentSlicePairs(spark, dir)
+      // released by GraftCaches.release(spark) after the caller's action;
+      // connectedComponents counts it before any consumer is built
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // universe = the slice's endpoints, derived FROM the persisted pair
     // relation (plan-matches its cache — the join above evaluates once)
     val universe = pairs.select(col("i").as("id"))

@@ -607,10 +607,8 @@ case class BisectBucket(grp: Expression, v: Expression,
   override def eval(input: InternalRow): Any = {
     val vv = v.eval(input)
     if (vv == null) -1
-    else GraftKernels.bisectBucket(
-      grp.eval(input)
-        .asInstanceOf[org.apache.spark.unsafe.types.UTF8String],
-      vv.asInstanceOf[Long], jmap)
+    else GraftKernels.bisectIndex(jmap.get(grp.eval(input)),
+      vv.asInstanceOf[Long])
   }
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -625,8 +623,8 @@ case class BisectBucket(grp: Expression, v: Expression,
         ${vv.code}
         int ${ev.value} = -1;
         if (!${vv.isNull}) {
-          ${ev.value} = graft.functions.GraftKernels.bisectBucket(
-            ${g.isNull} ? null : ${g.value}, ${vv.value}, $ref);
+          ${ev.value} = graft.functions.GraftKernels.bisectIndex(
+            (long[]) $ref.get(${g.isNull} ? null : ${g.value}), ${vv.value});
         }""", isNull = FalseLiteral)
   }
 

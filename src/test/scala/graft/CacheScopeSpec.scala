@@ -27,8 +27,9 @@ class CacheScopeSpec extends AnyFunSuite {
     f.get(cm).asInstanceOf[IndexedSeq[_]].size
   }
 
-  test("pagerank releases every SQL cache inline; cluster leaves exactly " +
-      "its one plan-referenced barrier per run") {
+  test("pagerank and dedup_cluster release every SQL cache inline; " +
+      "graph_connected_components leaves exactly its one plan-referenced " +
+      "pair cache") {
     val dir = TestSpark.sfDir
     GraftCaches.release(spark) // clean baseline only — never called again
     assert(sqlCacheCount === 0)
@@ -39,18 +40,27 @@ class CacheScopeSpec extends AnyFunSuite {
     assert(sqlCacheCount === 0,
       "pagerank must not leave SQL caches for the harness to clean")
 
-    // dedup_cluster's returned plan references the contracted-label cache
-    // (l0) — the ONE documented barrier. Its upstream ngram-pipeline
-    // caches (t, ids, post) and the pair/edge caches release inline, so
-    // back-to-back runs grow the cache population by exactly one entry
-    // per run, not by the whole five-cache pipeline.
+    // dedup_cluster's pairs fit the driver-finish bound: its upstream
+    // ngram-pipeline caches (t, ids, post) release once the pair cache is
+    // counted, and the pair cache after its collect — the returned plan
+    // reads only the documents scan and a broadcast root map
     val r1 = Dedup.dedupCluster(spark, dir).collect()
-    assert(sqlCacheCount === 1,
-      "cluster run 1 should leave exactly the l0 barrier cached")
+    assert(sqlCacheCount === 0, "cluster run 1 must leave no SQL cache")
     val r2 = Dedup.dedupCluster(spark, dir).collect()
-    assert(sqlCacheCount === 2,
-      "cluster run 2 should add exactly one more barrier, not a pipeline")
+    assert(sqlCacheCount === 0, "cluster run 2 must leave no SQL cache")
     assert(r2.map(_.toSeq).toSeq === r1.map(_.toSeq).toSeq)
+
+    // graph_connected_components derives its universe from the pair
+    // relation, so its returned plan reads the pair cache: that ONE
+    // barrier stays, nothing else. A second run's pair plan matches the
+    // first's, so it reads the same cache instead of adding one.
+    val g1 = Relational.graphConnectedComponents(spark, dir).collect()
+    assert(sqlCacheCount === 1,
+      "graph_connected_components run 1 should leave exactly its pair cache")
+    val g2 = Relational.graphConnectedComponents(spark, dir).collect()
+    assert(sqlCacheCount === 1,
+      "graph_connected_components run 2 should reuse that one cache")
+    assert(g2.map(_.toSeq).toSeq === g1.map(_.toSeq).toSeq)
 
     GraftCaches.release(spark)
     assert(sqlCacheCount === 0)

@@ -2,8 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampType}
+import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Testdata-drift guard. The r8 round was lost to a silent physical-type
@@ -79,5 +80,105 @@ class TablesSpec extends AnyFunSuite {
       dir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
     val raw = spark.read.parquet(dir.resolve("events.parquet").toString)
     assert(raw.schema("ts").dataType === LongType)
+  }
+
+  private def layoutDir(file: String): String = {
+    val dir = Files.createTempDirectory("graft-events-memo")
+    Files.copy(Paths.get(s"fixtures/events_layouts/$file"),
+      dir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    dir.toString
+  }
+
+  test("a known schema is the one Spark infers, for every testdata table") {
+    for (t <- Seq("region", "nation", "customer", "supplier", "part",
+        "orders", "lineitem", "documents", "embeddings", "events")) {
+      val plain = spark.read.parquet(s"${TestSpark.sfDir}/$t.parquet").schema
+      assert(Tables.table(spark, TestSpark.sfDir, t).schema === plain, t)
+      assert(Tables.table(spark, TestSpark.sfDir, t).schema === plain, t)
+    }
+  }
+
+  test("a table rewritten at the same path is read with its new schema") {
+    import spark.implicits._
+    val dir = TestSpark.tmpDir("graft-tables-rewrite")
+    Seq((1, "a")).toDF("k", "v").write.parquet(s"$dir/t.parquet")
+    assert(Tables.table(spark, dir, "t").columns.toSeq === Seq("k", "v"))
+    Seq((2L, 3.0, true)).toDF("id", "x", "flag")
+      .write.mode("overwrite").parquet(s"$dir/t.parquet")
+    val df = Tables.table(spark, dir, "t")
+    assert(df.columns.toSeq === Seq("id", "x", "flag"))
+    assert(df.collect().map(_.toSeq).toSeq === Seq(Seq(2L, 3.0, true)))
+    // one file replaced in place by another layout of the events rows
+    val ev = layoutDir("events_us.parquet")
+    assert(Tables.table(spark, ev, "events").schema("ts").dataType === TimestampType)
+    Files.copy(Paths.get("fixtures/events_layouts/events_ns.parquet"),
+      Paths.get(ev, "events.parquet"), StandardCopyOption.REPLACE_EXISTING)
+    assert(Tables.table(spark, ev, "events").schema("ts").dataType === LongType)
+    assert(Tables.events(spark, ev).select(unix_micros(col("ts")))
+      .orderBy(col("event_id")).collect().map(_.getLong(0)).toSeq === ExpectedUs)
+  }
+
+  test("events read under both nanosAsLong and both inferTimestampNTZ values " +
+      "gets the ts type of the conf in force") {
+    def withConf[T](k: String, v: String)(body: => T): T = {
+      val saved = spark.conf.get(k)
+      spark.conf.set(k, v)
+      try body finally spark.conf.set(k, saved)
+    }
+    val ns = layoutDir("events_ns.parquet")
+    val nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    assert(spark.conf.get(nanos) === "true") // GraftSession's setting
+    assert(Tables.table(spark, ns, "events").schema("ts").dataType === LongType)
+    // without the legacy conf Spark refuses TIMESTAMP(NANOS): a schema
+    // remembered under the other value must not hide that
+    val err = withConf(nanos, "false")(intercept[Exception](
+      Tables.table(spark, ns, "events").schema))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("NANOS")), err)
+    assert(Tables.events(spark, ns).schema("ts").dataType === TimestampType)
+
+    val us = layoutDir("events_us.parquet")
+    val ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    val byConf = Seq("false", "true", "false").map(v => withConf(ntz, v) {
+      val raw = Tables.table(spark, us, "events").schema("ts").dataType
+      val ts = Tables.events(spark, us).select(unix_micros(col("ts")))
+        .orderBy(col("event_id")).collect().map(_.getLong(0)).toSeq
+      assert(ts === ExpectedUs, v)
+      raw
+    })
+    assert(byConf === Seq(TimestampType, TimestampNTZType, TimestampType))
+  }
+
+  test("a second read of a table launches zero jobs") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.put(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    // the listener bus is asynchronous and in order: a marker job seen
+    // by the listener means every job started before it was seen too
+    def jobsUntilMarker(): Seq[String] = {
+      sc.setJobGroup("tables-spec-marker", "marker")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      def next() = jobs.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+      val seen = List.newBuilder[String]
+      var g = next()
+      while (g != null && g != "tables-spec-marker") { seen += g; g = next() }
+      assert(g != null, "listener timed out")
+      seen.result()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val dir = layoutDir("events_us.parquet")
+      jobsUntilMarker()
+      val first = Tables.events(spark, dir).filter(col("event_id") > 0)
+      assert(jobsUntilMarker().nonEmpty, "the first read infers the schema")
+      val second = Tables.events(spark, dir).filter(col("event_id") > 0)
+      second.queryExecution.optimizedPlan
+      assert(jobsUntilMarker().isEmpty)
+      assert(second.schema === first.schema)
+    } finally sc.removeSparkListener(listener)
   }
 }

@@ -1,13 +1,16 @@
 package graft.operators
 
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** The connectedComponents core on synthetic graphs, in BOTH finish
-  * regimes — the driver union-find under the edge bound and the shared
-  * pointer-jump fixpoint (Relational.minLabelFix) above it — against a
-  * driver-side union-find reference. The commerce-slice operator itself is
+/** The connectedComponents core on synthetic graphs, in all THREE finish
+  * regimes — the driver union-find straight from the pairs when they fit
+  * the edge bound, the same union-find over the contracted edges when
+  * only those fit, and the shared pointer-jump fixpoint
+  * (Relational.minLabelFix) above both — against a driver-side
+  * union-find reference. The commerce-slice operator itself is
   * oracle-gated (graph_connected_components, recursive-CTE oracle);
   * this spec is the contraction-bound audit VERDICT r9 #7 asked for:
   * the bound only gates WHICH finisher runs, never the answer, and the
@@ -38,11 +41,28 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   }
 
   private def run(pairs: Seq[(Long, Long)], universe: Seq[Long],
-      bound: Long): Map[Long, Long] = {
+      bound: Long): Map[Long, Long] = runLogged(pairs, universe, bound)._1
+
+  /** The labeling plus the regime that produced it, read from the
+    * verbose progress lines: "pairs" (driver finish from the raw pairs),
+    * "contracted" (driver finish from the contracted edges) or
+    * "fixpoint" (minLabelFix rounds). */
+  private def runLogged(pairs: Seq[(Long, Long)], universe: Seq[Long],
+      bound: Long): (Map[Long, Long], String) = {
     import spark.implicits._
-    Dedup.connectedComponents(spark, pairs.toDF("i", "j"),
-        universe.toDF("id"), driverFinishEdgeBound = bound)
-      .as[(Long, Long)].collect().toMap
+    val log = new java.io.ByteArrayOutputStream()
+    val got = Console.withOut(log) {
+      Dedup.connectedComponents(spark, pairs.toDF("i", "j"),
+          universe.toDF("id"), driverFinishEdgeBound = bound, verbose = true)
+        .as[(Long, Long)].collect().toMap
+    }
+    val lines = log.toString.linesIterator.toSeq
+    assert(lines.contains(s"[cc] pairs=${pairs.size}"), lines)
+    val regime =
+      if (lines.exists(_.startsWith("[mlf] connectedComponents"))) "fixpoint"
+      else if (lines.exists(_.startsWith("[cc] superEdges="))) "contracted"
+      else "pairs"
+    (got, regime)
   }
 
   // chain 0-1-…-40: diameter 40, the contraction-hostile shape (one
@@ -55,6 +75,24 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   } yield (a, b)).toSeq
   private val pairs = chain ++ clique
   private val universe = (0L to 41L) ++ (100L to 105L) :+ 200L
+
+  // the same chain plus a 25-clique: enough pairs (341) that the
+  // contracted edge list (the chain's 40 links, both directions) fits a
+  // bound the raw pairs exceed — the shape with all three regimes
+  private val bigClique = (for {
+    a <- 100L to 124L; b <- (a + 1) to 124L
+  } yield (a, b)).toSeq
+  private val chainClique = chain ++ bigClique
+  private val chainCliqueUniverse = (0L to 41L) ++ (100L to 124L) :+ 200L
+
+  // a 400-spoke star of 3-edge chains (no clique: contraction leaves 800
+  // supernode links) plus a 200-edge ascending chain and a 45-clique
+  // (990 pairs) that lifts the raw count above the contracted one
+  private val star = (1L to 400L).flatMap(k =>
+    Seq((0L, 1000L + k), (1000L + k, 2000L + k), (2000L + k, 3000L + k))) ++
+    (0L until 200L).map(t => (1000000L + t, 1000001L + t)) ++
+    (for (a <- 5000000L to 5000044L; b <- (a + 1) to 5000044L) yield (a, b))
+  private val starUniverse = star.flatMap { case (a, b) => Seq(a, b) }.distinct
 
   test("driver union-find branch matches the reference union-find") {
     val got = run(pairs, universe, bound = Long.MaxValue)
@@ -97,29 +135,73 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     assert(rounds.exists(_.contains("mode=delta")), rounds.mkString("\n"))
   }
 
-  test("neither finish regime leaves its pair or edge cache behind") {
-    // the call's only surviving SQL cache is the contracted-label
-    // relation l0, which the returned plan reads; the pair cache and the
-    // stationary edge cache are released inside the call. Cached
-    // Datasets are the persistent RDDs Spark names after their plan;
-    // round barriers are unnamed.
-    val sc = spark.sparkContext
-    for (bound <- Seq(Long.MaxValue, -1L)) {
-      // earlier calls on the same input would serve l0 from their cache
-      graft.GraftCaches.release(spark)
-      val before = sc.getPersistentRDDs.keySet
-      run(pairs, universe, bound)
-      val left = sc.getPersistentRDDs.collect {
-        case (id, r) if !before(id) && r.name != null => r.name
-      }.toSeq
-      assert(left.size === 1, s"bound=$bound: ${left.mkString("\n---\n")}")
-      assert(left.head.contains("AS lab"), s"bound=$bound: ${left.head}")
+  test("raw-pair driver finish, contracted driver finish and distributed " +
+      "branch are bit-identical on the chain+clique and star shapes") {
+    for ((shape, ps, uni) <- Seq(
+        ("chain+clique", chainClique, chainCliqueUniverse),
+        ("star", star, starUniverse))) {
+      // bound ps.size - 1: the raw pairs miss it, the contracted edges fit
+      val byRegime = Seq(Long.MaxValue, ps.size - 1L, -1L)
+        .map(b => runLogged(ps, uni, b))
+      assert(byRegime.map(_._2) === Seq("pairs", "contracted", "fixpoint"), shape)
+      val ref = reference(ps, uni)
+      byRegime.foreach { case (got, regime) =>
+        assert(got === ref, s"$shape/$regime")
+      }
     }
     graft.GraftCaches.release(spark)
   }
 
+  test("neither finish regime leaves its pair or edge cache behind") {
+    // the only SQL cache a call may leave is one its returned plan
+    // reads: the contracted-label relation l0 in the contracted
+    // regimes, nothing in the raw-pair driver finish (the pair cache is
+    // released inline) unless the caller persisted the pairs itself.
+    // The stationary edge cache never survives. Cached Datasets are the
+    // persistent RDDs Spark names after their plan; round barriers are
+    // unnamed.
+    val sc = spark.sparkContext
+    def leftBehind(call: => Unit): Seq[String] = {
+      // earlier calls on the same input would serve from their caches
+      graft.GraftCaches.release(spark)
+      val before = sc.getPersistentRDDs.keySet
+      call
+      sc.getPersistentRDDs.collect {
+        case (id, r) if !before(id) && r.name != null => r.name
+      }.toSeq
+    }
+    for ((bound, regime) <- Seq((Long.MaxValue, "pairs"),
+        (chainClique.size - 1L, "contracted"), (-1L, "fixpoint"))) {
+      var seen = ""
+      val left = leftBehind {
+        seen = runLogged(chainClique, chainCliqueUniverse, bound)._2 }
+      assert(seen === regime)
+      if (regime == "pairs") assert(left.isEmpty, left.mkString("\n---\n"))
+      else {
+        assert(left.size === 1, s"$regime: ${left.mkString("\n---\n")}")
+        assert(left.head.contains("AS lab"), s"$regime: ${left.head}")
+      }
+    }
+    // universe derived FROM the pairs (graph_connected_components): the
+    // caller persists the pairs, the returned plan reads that cache, so
+    // it stays — and nothing else
+    import spark.implicits._
+    val left = leftBehind {
+      val pairsDf = chainClique.toDF("i", "j")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val uni = pairsDf.select(col("i").as("id"))
+        .unionAll(pairsDf.select(col("j").as("id"))).distinct()
+      val got = Dedup.connectedComponents(spark, pairsDf, uni)
+        .as[(Long, Long)].collect().toMap
+      assert(got === reference(chainClique, chainClique.flatMap(e => Seq(e._1, e._2))))
+    }
+    assert(left.size === 1, left.mkString("\n---\n"))
+    assert(!left.head.contains("AS lab") && left.head.contains("LocalTableScan"),
+      left.head)
+    graft.GraftCaches.release(spark)
+  }
+
   test("commerce-slice query agrees across finish regimes end to end") {
-    import org.apache.spark.sql.functions.col
     val q = graft.SparkEntry.queries("graph_connected_components")
     val byQuery = q(spark, TestSpark.sfDir).collect().toSeq
     // same slice pushed through the distributed finisher

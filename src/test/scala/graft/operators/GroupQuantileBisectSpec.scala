@@ -125,9 +125,9 @@ class GroupQuantileBisectSpec extends AnyFunSuite {
       org.apache.spark.unsafe.types.UTF8String, Array[Long]]()
     mids.foreach { case (g, m) => k.put(
       g.map(org.apache.spark.unsafe.types.UTF8String.fromString).orNull, m) }
-    def kb(g: String, v: Long) = graft.functions.GraftKernels.bisectBucket(
-      Option(g).map(org.apache.spark.unsafe.types.UTF8String.fromString)
-        .orNull, v, k)
+    def kb(g: String, v: Long) = graft.functions.GraftKernels.bisectIndex(
+      k.get(Option(g).map(org.apache.spark.unsafe.types.UTF8String.fromString)
+        .orNull), v)
     assert(kb("a", -6) === 0 && kb("a", -5) === 0 && kb("a", -4) === 1 &&
       kb("a", 0) === 1 && kb("a", 10) === 2 && kb("a", 11) === 3 &&
       kb("zz", 1) === -1 && kb(null, 7) === 0 && kb(null, 8) === 1)
