@@ -9,7 +9,9 @@ import org.apache.spark.storage.StorageLevel
   * every graph core's loop setup shares: the eager count that
   * materializes a multi-consumer cache and releases what fed it
   * ([[materialize]]), the stationary edge cache ([[stationaryEdges]])
-  * and the driver-finish edge bound ([[DriverFinishEdgeBound]]).
+  * and the driver-finish edge bound ([[DriverFinishEdgeBound]]); and the
+  * scoped reliable checkpoint of sinks that write into what they read
+  * ([[withCheckpoint]]).
   *
   * Every loop here cuts its per-round lineage with an EAGER checkpoint
   * (the CLAUDE.md iterative contract — persist/unpersist chains break
@@ -54,6 +56,31 @@ object Barriers {
         df.checkpoint() // eager; survives executor loss
       else
         df.localCheckpoint()) // eager; executor-local blocks
+
+  /** Run `body` over an EAGER reliable checkpoint of `df`, then delete
+    * the checkpoint's files, also when `body` throws. For a micro-batch
+    * sink whose several appends write into directories `df` lazily reads:
+    * without the barrier each append would recompute `df` against the
+    * output of the appends before it. The files are a full copy of `df`
+    * in the session checkpoint dir (RAM-backed by default, see
+    * [[GraftSession]]); nothing reads them after `body`, and the session
+    * does not clean checkpoints, so they are deleted here rather than
+    * left for the life of the JVM, one set per batch.
+    */
+  def withCheckpoint[A](df: DataFrame)(body: DataFrame => A): A = {
+    val barrier = df.checkpoint()
+    try body(barrier)
+    finally {
+      val conf = barrier.sparkSession.sparkContext.hadoopConfiguration
+      barrier.queryExecution.logical
+        .collectFirst { case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd }
+        .flatMap(_.getCheckpointFile)
+        .foreach { f =>
+          val p = new org.apache.hadoop.fs.Path(f)
+          p.getFileSystem(conf).delete(p, true)
+        }
+    }
+  }
 
   /** Materialize an already persisted multi-consumer cache: EAGERLY count
     * it before any consumer is built — a cold multi-consumer cache races

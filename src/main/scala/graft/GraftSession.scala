@@ -110,9 +110,10 @@ object GraftSession {
   def build(cpus: Int): SparkSession = {
     val s = builder(cpus).getOrCreate()
     s.sparkContext.setLogLevel("WARN")
-    // reliable-checkpoint target for materialization barriers
-    // (NvdEtl.commit, which deletes its own files after the append); on a
-    // cluster this would be a durable FS path
+    // reliable-checkpoint target for materialization barriers (the
+    // streaming dedup sinks' Barriers.withCheckpoint, which deletes its
+    // files after the batch; reliable round barriers); on a cluster this
+    // would be a durable FS path
     if (s.sparkContext.getCheckpointDir.isEmpty)
       s.sparkContext.setCheckpointDir(checkpointDir)
     s

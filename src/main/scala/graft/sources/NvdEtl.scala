@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -16,10 +16,12 @@ import org.apache.spark.sql.types._
   *  - extract+transform is one declarative `spark.read.schema(...).json`
   *    (native gzip codec) + `explode(CVE_Items)` — no driver-side JSON pass.
   *    A gz feed is unsplittable, so each file is read whole by ONE task,
-  *    but Spark's file source packs small files into shared partitions
-  *    (`spark.sql.files.openCostInBytes`): at NVD feed sizes a directory
-  *    of feeds reads as a handful of tasks, not one per file (the
-  *    two-feed load directory of the benchmark reads as 1 partition).
+  *    and Spark's file source packs files into shared partitions only
+  *    when the split size — the scan's bytes per core, at least
+  *    `spark.sql.files.openCostInBytes` (4 MB) — holds more than one file
+  *    plus its open cost: the benchmark's two-feed load directory reads
+  *    as 2 partitions (each file plus 4 MB exceeds the 4 MB split), while
+  *    a directory of full-size yearly feeds packs into a handful of tasks.
   *    Read parallelism comes from feed bytes, not feed count;
   *  - the bootstrap reads every feed in ONE scan and resolves overlaps
   *    between feeds (earliest feed in run order wins) inside the same
@@ -220,8 +222,9 @@ object NvdEtl {
     df.withColumn("cve_year", cveYear)
       .write.partitionBy("cve_year").mode("append").parquet(warehouseDir)
 
-  /** The warehouse table, or an empty frame with the right schema if the
-    * warehouse does not exist yet (greenfield).
+  /** The warehouse table, or an empty local relation with the right
+    * schema if the warehouse does not exist yet (greenfield) — so the
+    * bootstrap's anti-join against it is removed at planning.
     */
   def warehouse(spark: SparkSession, warehouseDir: String,
       schemaPath: String = DefaultSchemaPath): DataFrame = {
@@ -229,14 +232,16 @@ object NvdEtl {
     if (new java.io.File(warehouseDir).exists())
       spark.read.schema(schema).parquet(warehouseDir)
     else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
   }
 
   /** COUNT(cve.CVE_data_meta.ID) over the warehouse (reference
-    * bq.py:125-127) — the probe behind the bootstrap decision.
+    * bq.py:125-127) — the probe behind the bootstrap decision. A missing
+    * warehouse counts 0 without a Spark job.
     */
   def countCves(spark: SparkSession, warehouseDir: String): Long =
-    warehouse(spark, warehouseDir).agg(count(cveId)).head().getLong(0)
+    if (!new java.io.File(warehouseDir).exists()) 0L
+    else warehouse(spark, warehouseDir).agg(count(cveId)).head().getLong(0)
 
   /** Bootstrap-vs-incremental decision (reference bq-nvd.py:70-85): a
     * warehouse with fewer than `threshold` CVEs is treated as greenfield.
@@ -256,7 +261,7 @@ object NvdEtl {
 
   /** Load feeds in run order as ONE pass, with exactly the result of
     * loading them one by one through [[loadFeed]]: one scan, one anti-join,
-    * one barrier, one append. A CVE ID present in several feeds keeps only
+    * one append. A CVE ID present in several feeds keeps only
     * the rows of the earliest feed (what the first load would have
     * appended and every later load dropped); rows within that feed all
     * stay, duplicates included, and null-ID rows all stay, as the
@@ -276,36 +281,26 @@ object NvdEtl {
   }
 
   /** The write half of every warehouse load, batch ([[loadFeed]]) and
-    * streaming ([[graft.streaming.StreamOps.warehouseSink]]): materialize
-    * `delta`, count it, append it, then delete the checkpoint's files.
-    * Returns the count.
+    * streaming ([[graft.streaming.StreamOps.warehouseSink]]): append
+    * `delta` and return its row count, in ONE job — the count is an
+    * [[Observation]] taken by the write itself.
     *
-    * checkpoint(): a REAL materialization barrier, not a cache hint. The
-    * append writes into the same directory the delta's anti-join lazily
-    * reads; persist() could silently drop partitions and recompute the
-    * delta WHILE the warehouse is being appended to. An eager reliable
-    * checkpoint truncates the lineage first, so the append can never
-    * re-read its own output. Its files are a full copy of the delta in
-    * the session checkpoint dir (RAM-backed by default, see
-    * [[graft.GraftSession]]) and nothing reads them after the append, so
-    * they are deleted here rather than left for the life of the JVM.
+    * The append writes into the directory the delta's anti-join reads,
+    * yet no materialization barrier is needed. The warehouse scan lists
+    * its files once, when the DataFrame is planned; the writer stages
+    * every task's output under the hidden `_temporary` directory and
+    * publishes it only at job commit, after every task has read. So no
+    * read sees this load's own output, and a retried task re-reads the
+    * same file list. No exchange separates the observation from the
+    * write: its counter runs in the write's result stage, which counts
+    * each partition once, also under task retry. It is read only after
+    * the write returns, so a failed write throws before any count is
+    * awaited.
     */
   private[graft] def commit(delta: DataFrame, warehouseDir: String): Long = {
-    val barrier = delta.checkpoint()
-    try {
-      val n = barrier.count()
-      if (n > 0) append(barrier, warehouseDir)
-      n
-    } finally {
-      val conf = barrier.sparkSession.sparkContext.hadoopConfiguration
-      barrier.queryExecution.logical
-        .collectFirst { case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd }
-        .flatMap(_.getCheckpointFile)
-        .foreach { f =>
-          val p = new org.apache.hadoop.fs.Path(f)
-          p.getFileSystem(conf).delete(p, true)
-        }
-    }
+    val obs = Observation()
+    append(delta.observe(obs, count(lit(1)).as("n")), warehouseDir)
+    obs.get("n").asInstanceOf[Long]
   }
 
   /** The reference's whole driver flow (bq-nvd.py:153-163 main):

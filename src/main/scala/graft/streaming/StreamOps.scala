@@ -523,7 +523,7 @@ object StreamOps {
     * pipeline — micro-batches of parsed CVEs land in the year-partitioned
     * warehouse through the SAME first-writer-wins path the batch loader
     * uses ([[graft.sources.NvdEtl.newCves]] anti-join, then
-    * [[graft.sources.NvdEtl.commit]]'s barrier and partitioned append), so
+    * [[graft.sources.NvdEtl.commit]]'s counted partitioned append), so
     * the streaming sink and the batch loader cannot diverge.
     * `foreachBatch` is Structured Streaming's bridge for sinks with their
     * own merge semantics: dedup WITHIN the stream is upstream
@@ -539,7 +539,7 @@ object StreamOps {
       .option("checkpointLocation", checkpointDir)
       .outputMode("append")
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // the batch loader's own barrier → count → append → release
+        // the batch loader's own one-job counted append
         graft.sources.NvdEtl.commit(
           graft.sources.NvdEtl.newCves(batch.drop("cve_id"),
             graft.sources.NvdEtl.warehouse(batch.sparkSession, warehouseDir)),
@@ -578,18 +578,18 @@ object StreamOps {
           spark.read.parquet(whBandsDir),
           spark.read.parquet(whShinglesDir),
           sk.filter(size(col("sh")) > 0))
-        // same materialization barrier as the warehouse sink: the appends
-        // below write into directories the anti-join lazily reads
-        val surv = sk.join(dup, Seq("doc_id"), "left_anti").checkpoint()
-        if (surv.count() > 0) {
-          val banded = surv.filter(size(col("sh")) > 0)
-          graft.operators.Dedup.bandTable(banded)
-            .write.mode("append").parquet(whBandsDir)
-          banded.select(col("doc_id"), col("sh"))
-            .write.mode("append").parquet(whShinglesDir)
-          surv.select(col("doc_id")).write.mode("append").parquet(outDir)
+        // materialization barrier: the appends below write into
+        // directories the anti-join lazily reads
+        graft.Barriers.withCheckpoint(sk.join(dup, Seq("doc_id"), "left_anti")) { surv =>
+          if (surv.count() > 0) {
+            val banded = surv.filter(size(col("sh")) > 0)
+            graft.operators.Dedup.bandTable(banded)
+              .write.mode("append").parquet(whBandsDir)
+            banded.select(col("doc_id"), col("sh"))
+              .write.mode("append").parquet(whShinglesDir)
+            surv.select(col("doc_id")).write.mode("append").parquet(outDir)
+          }
         }
-        ()
       }
       .start()
 
@@ -625,22 +625,21 @@ object StreamOps {
             col("dig"))
         // materialization barrier (see minhashDedupSink): the appends
         // below write into the directory the anti-join lazily reads
-        val fresh = winners
-          .join(spark.read.parquet(whBlocksDir), Seq("dig"), "left_anti")
-          .checkpoint()
-        if (fresh.count() > 0) {
-          val kept = blocks.join(fresh.select(col("doc_id"), col("idx")),
-            Seq("doc_id", "idx"))
-          kept.groupBy(col("doc_id"))
-            .agg(
-              concat_ws(" ", transform(
-                array_sort(collect_list(struct(col("idx"), col("block")))),
-                b => b.getField("block"))).as("clean_text"),
-              count(col("idx")).as("n_kept_blocks"))
-            .write.mode("append").parquet(outDir)
-          fresh.select(col("dig")).write.mode("append").parquet(whBlocksDir)
+        graft.Barriers.withCheckpoint(winners
+            .join(spark.read.parquet(whBlocksDir), Seq("dig"), "left_anti")) { fresh =>
+          if (fresh.count() > 0) {
+            val kept = blocks.join(fresh.select(col("doc_id"), col("idx")),
+              Seq("doc_id", "idx"))
+            kept.groupBy(col("doc_id"))
+              .agg(
+                concat_ws(" ", transform(
+                  array_sort(collect_list(struct(col("idx"), col("block")))),
+                  b => b.getField("block"))).as("clean_text"),
+                count(col("idx")).as("n_kept_blocks"))
+              .write.mode("append").parquet(outDir)
+            fresh.select(col("dig")).write.mode("append").parquet(whBlocksDir)
+          }
         }
-        ()
       }
       .start()
 
@@ -668,17 +667,17 @@ object StreamOps {
         val sigs = graft.operators.Multimodal.cdcSigs(batch)
         val dup = graft.operators.Multimodal.cdcIncrementalDup(
           spark.read.parquet(whIndexDir), spark.read.parquet(whSigsDir), sigs)
-        // materialization barrier (see warehouseSink): the appends below
-        // write into directories the anti-join lazily reads
-        val surv = sigs.join(dup, Seq("doc_id"), "left_anti").checkpoint()
-        if (surv.count() > 0) {
-          surv.select(explode(col("digs")).as("dig"), col("doc_id"))
-            .write.mode("append").parquet(whIndexDir)
-          surv.select(col("doc_id"), col("digs"))
-            .write.mode("append").parquet(whSigsDir)
-          surv.select(col("doc_id")).write.mode("append").parquet(outDir)
+        // materialization barrier (see minhashDedupSink): the appends
+        // below write into directories the anti-join lazily reads
+        graft.Barriers.withCheckpoint(sigs.join(dup, Seq("doc_id"), "left_anti")) { surv =>
+          if (surv.count() > 0) {
+            surv.select(explode(col("digs")).as("dig"), col("doc_id"))
+              .write.mode("append").parquet(whIndexDir)
+            surv.select(col("doc_id"), col("digs"))
+              .write.mode("append").parquet(whSigsDir)
+            surv.select(col("doc_id")).write.mode("append").parquet(outDir)
+          }
         }
-        ()
       }
       .start()
 

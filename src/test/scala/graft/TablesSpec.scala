@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -150,35 +149,16 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("a second read of a table launches zero jobs") {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.put(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    val dir = layoutDir("events_us.parquet")
+    val (first, l1) = TestSpark.launched(
+      Tables.events(spark, dir).filter(col("event_id") > 0))
+    assert(l1.jobs > 0, "the first read infers the schema")
+    val (second, l2) = TestSpark.launched {
+      val d = Tables.events(spark, dir).filter(col("event_id") > 0)
+      d.queryExecution.optimizedPlan
+      d
     }
-    // the listener bus is asynchronous and in order: a marker job seen
-    // by the listener means every job started before it was seen too
-    def jobsUntilMarker(): Seq[String] = {
-      sc.setJobGroup("tables-spec-marker", "marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      def next() = jobs.poll(30, java.util.concurrent.TimeUnit.SECONDS)
-      val seen = List.newBuilder[String]
-      var g = next()
-      while (g != null && g != "tables-spec-marker") { seen += g; g = next() }
-      assert(g != null, "listener timed out")
-      seen.result()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val dir = layoutDir("events_us.parquet")
-      jobsUntilMarker()
-      val first = Tables.events(spark, dir).filter(col("event_id") > 0)
-      assert(jobsUntilMarker().nonEmpty, "the first read infers the schema")
-      val second = Tables.events(spark, dir).filter(col("event_id") > 0)
-      second.queryExecution.optimizedPlan
-      assert(jobsUntilMarker().isEmpty)
-      assert(second.schema === first.schema)
-    } finally sc.removeSparkListener(listener)
+    assert(l2.jobs === 0)
+    assert(second.schema === first.schema)
   }
 }

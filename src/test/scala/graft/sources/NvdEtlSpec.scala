@@ -361,7 +361,7 @@ class NvdEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
       m.contains("nvdcve-1.1-2020.json.gz")), e)
   }
 
-  test("nvd_load: a load deletes its checkpoint copy of the delta") {
+  test("nvd_load: a load leaves no checkpoint files") {
     val ckpt = new java.io.File(
       new java.net.URI(spark.sparkContext.getCheckpointDir.get))
     def rddDirs(): Set[String] =
@@ -373,5 +373,67 @@ class NvdEtlSpec extends AnyFunSuite with BeforeAndAfterAll {
     val (boot, n) = NvdEtl.run(spark, "fixtures/nvd", TestSpark.tmpDir("nvd_ckpt_run"), threshold = 1)
     assert(boot && n === 120)
     assert(rddDirs() -- before === Set.empty[String])
+  }
+
+  test("nvd_load: a greenfield bootstrap is one job, a load into an " +
+      "existing warehouse at most 2, and neither runs a checkpoint stage") {
+    val wh = s"${TestSpark.tmpDir("nvd_onejob")}/warehouse"
+    val feeds = TestSpark.tmpDir("nvd_onejob_feeds")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(fixture),
+      java.nio.file.Paths.get(s"$feeds/nvdcve-1.1-2002.json.gz"))
+    // greenfield: no probe job, and the anti-join against the empty
+    // warehouse is removed at planning — the write is the only job
+    val ((boot, n0), bootJobs) = TestSpark.launched(
+      NvdEtl.run(spark, feeds, wh, threshold = 1))
+    assert(boot && n0 === 96)
+    assert(bootJobs.jobs === 1, bootJobs)
+    val (n, launched) = TestSpark.launched(NvdEtl.loadFeed(spark, recent, wh))
+    assert(n === 24)
+    assert(launched.jobs <= 2, launched)
+    assert(!(bootJobs.stages ++ launched.stages).exists(_.startsWith("checkpoint")),
+      (bootJobs, launched))
+  }
+
+  test("nvd_load: the returned count is the rows the load appended — a " +
+      "normal load, a zero-row reload, a feed with null-ID rows") {
+    val wh = TestSpark.tmpDir("nvd_count_wh")
+    /** (returned, Δ warehouse rows, Δ countCves) of one load. */
+    def load(feed: String): (Long, Long, Long) = {
+      def rows() = NvdEtl.warehouse(spark, wh).count()
+      val (r0, c0) = (rows(), NvdEtl.countCves(spark, wh))
+      val n = NvdEtl.loadFeed(spark, feed, wh)
+      (n, rows() - r0, NvdEtl.countCves(spark, wh) - c0)
+    }
+    assert(load(fixture) === ((96L, 96L, 96L)))
+    assert(load(fixture) === ((0L, 0L, 0L)))
+    // null-ID rows load (the anti-join keeps them) and count as rows,
+    // while countCves is COUNT(ID) and skips them
+    val dir = TestSpark.tmpDir("nvd_count_feed")
+    writeFeed(dir, "nulls",
+      item(Some("CVE-2002-1000"), "already loaded"),
+      item(Some("CVE-2030-0001"), "new"),
+      item(None, "null id a"),
+      item(None, "null id b"))
+    assert(load(s"$dir/nvdcve-1.1-nulls.json.gz") === ((3L, 3L, 1L)))
+  }
+
+  test("nvd_load: an empty load into a missing warehouse leaves it greenfield") {
+    val wh = s"${TestSpark.tmpDir("nvd_empty")}/warehouse"
+    val dir = TestSpark.tmpDir("nvd_empty_feed")
+    writeFeed(dir, "empty")
+    assert(NvdEtl.loadFeed(spark, s"$dir/nvdcve-1.1-empty.json.gz", wh) === 0)
+    assert(NvdEtl.countCves(spark, wh) === 0)
+    assert(NvdEtl.bootstrapNeeded(spark, wh, threshold = 1))
+    // a delta the planner already knows is empty returns 0 too
+    val none = NvdEtl.warehouse(spark, s"$wh-missing").drop("cve_year")
+    assert(NvdEtl.commit(none, wh) === 0)
+    assert(NvdEtl.countCves(spark, wh) === 0)
+  }
+
+  test("nvd_bootstrap_detect: a missing warehouse is probed without a job") {
+    val wh = s"${TestSpark.tmpDir("nvd_missing")}/warehouse"
+    val (needed, launched) = TestSpark.launched(NvdEtl.bootstrapNeeded(spark, wh))
+    assert(needed)
+    assert(launched.jobs === 0, launched)
   }
 }

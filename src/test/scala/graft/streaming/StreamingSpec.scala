@@ -1191,4 +1191,58 @@ class StreamingSpec extends AnyFunSuite {
         r.getDouble(3), r.getDouble(4), r.getDouble(5))).toSet
     assert(batchRun === expected(Seq(evs)).toSet)
   }
+
+  test("stream dedup sinks: each micro-batch's reliable checkpoint is " +
+      "deleted, no rdd-* directory is left") {
+    import spark.implicits._
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import graft.operators.{Dedup, Multimodal, TextAnalysis}
+
+    val ckpt = new java.io.File(
+      new java.net.URI(spark.sparkContext.getCheckpointDir.get))
+    def rddDirs(): Set[String] =
+      Option(ckpt.list()).toSet.flatten.filter(_.startsWith("rdd-"))
+    val before = rddDirs()
+
+    val docs = Tables.documents(spark, TestSpark.sfDir)
+      .select(col("doc_id"), col("text"))
+    val standing = docs.filter(col("doc_id") < 5)
+    val batches = Seq((5, 15), (15, 25)).map { case (lo, hi) =>
+      docs.filter(col("doc_id") >= lo && col("doc_id") < hi)
+        .as[(Long, String)].collect().toSeq
+    }
+    val payload = encode(col("text"), "UTF-8").as("payload")
+    val base = TestSpark.tmpDir("sink_ckpt")
+    val sk0 = Dedup.sketchOf(standing).filter(size(col("sh")) > 0)
+    Dedup.bandTable(sk0).write.parquet(s"$base/bands")
+    sk0.select(col("doc_id"), col("sh")).write.parquet(s"$base/shingles")
+    TextAnalysis.docBlocks(standing)
+      .select(xxhash64(col("block")).as("dig")).distinct()
+      .write.parquet(s"$base/blocks")
+    val cdc0 = Multimodal.cdcSigs(standing.select(col("doc_id"), payload))
+    cdc0.select(explode(col("digs")).as("dig"), col("doc_id"))
+      .write.parquet(s"$base/index")
+    cdc0.select(col("doc_id"), col("digs")).write.parquet(s"$base/sigs")
+
+    type Sink = org.apache.spark.sql.DataFrame =>
+      org.apache.spark.sql.streaming.StreamingQuery
+    val sinks: Seq[(String, Sink)] = Seq(
+      "mh" -> (d => StreamOps.minhashDedupSink(d, s"$base/bands",
+        s"$base/shingles", s"$base/out_mh", TestSpark.tmpDir("sink_ck_mh"))),
+      "block" -> (d => StreamOps.blockDedupSink(d, s"$base/blocks",
+        s"$base/out_block", TestSpark.tmpDir("sink_ck_block"))),
+      "cdc" -> (d => StreamOps.cdcDedupSink(d.select(col("doc_id"), payload),
+        s"$base/index", s"$base/sigs", s"$base/out_cdc",
+        TestSpark.tmpDir("sink_ck_cdc"))))
+    for ((name, sink) <- sinks) {
+      val stream = MemoryStream[(Long, String)]
+      val q = sink(stream.toDF().toDF("doc_id", "text"))
+      try batches.foreach { b =>
+        stream.addData(b)
+        q.processAllAvailable()
+      } finally q.stop()
+      assert(spark.read.parquet(s"$base/out_$name").count() > 0, name)
+      assert(rddDirs() -- before === Set.empty[String], name)
+    }
+  }
 }
