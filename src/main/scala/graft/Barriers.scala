@@ -1,11 +1,23 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.SparkListenerEvent
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
 
-/** Round-barrier materialization for iterative loops (pagerank, label
-  * propagation, connected-components pointer jumping), plus the rules
+/** One round of a [[Barriers.fixpoint]] loop, posted on the session's
+  * listener bus when the round's step returns: the loop's name, the
+  * 1-based round, the step's `changed` count (−1 for a fixed-round loop
+  * that counts nothing), the round's wall milliseconds and the step's
+  * free-form detail (`mode=delta` for a min-label delta round). A
+  * listener reads it in `onOtherEvent`; ScaleCheck prints it, specs
+  * assert on it.
+  */
+final case class LoopRound(loop: String, round: Int, changed: Long,
+    wallMs: Long, detail: String) extends SparkListenerEvent
+
+/** The one round loop of the graph family ([[Barriers.fixpoint]]) and
+  * round-barrier materialization for its rounds, plus the rules
   * every graph core's loop setup shares: the eager count that
   * materializes a multi-consumer cache and releases what fed it
   * ([[materialize]]), the stationary edge cache ([[stationaryEdges]])
@@ -32,6 +44,75 @@ import org.apache.spark.storage.StorageLevel
   * production loop reliably, flipping the conf between queries.
   */
 object Barriers {
+
+  /** How a [[fixpoint]] loop reads its round limit. Each call site picks
+    * one as a constant of the operator, never as a user setting.
+    */
+  sealed trait Limit { def rounds: Long }
+
+  /** The limit is part of the operator's definition — its oracle unrolls
+    * exactly this many rounds — so reaching it returns the state.
+    */
+  final case class Horizon(rounds: Long) extends Limit
+
+  /** The loop must converge within this many rounds: one still moving
+    * after its last round throws (the CLAUDE.md cap contract — a silent
+    * cap once shipped a labeling with 1,128 cross-component edges).
+    */
+  final case class Budget(rounds: Long) extends Limit
+
+  /** What one [[fixpoint]] step returns: the next state, the row count
+    * the step already takes to decide convergence (0 stops the loop, −1
+    * means "not counted" — a fixed-round loop adds no job to report a
+    * count) and a detail for the round event.
+    */
+  final case class Round[S](state: S, changed: Long, detail: String = "")
+
+  /** Run `step` from `init` round by round, 1-based, until a round
+    * reports `changed` 0 or `limit` rounds have run; returns the final
+    * state and the number of rounds run. A [[Budget]] loop still moving
+    * after its last round throws `IllegalStateException` naming the loop
+    * and the rows still moving; no partial result is returned. Every
+    * round posts one [[LoopRound]] event. An exception from `step`
+    * propagates as is.
+    *
+    * The step lands its state through [[roundBarrier]] itself: the state
+    * shapes differ too much (pairs of frames, an overlay with counts)
+    * for the loop to do it, and a round that skips the barrier chains
+    * its plan into the next one.
+    */
+  def fixpoint[S](loop: String, limit: Limit)(init: S)(
+      step: (S, Int) => Round[S]): (S, Int) = {
+    var state = init
+    var changed = -1L
+    var round = 0
+    while (round < limit.rounds && changed != 0) {
+      round += 1
+      val t0 = System.nanoTime()
+      val r = step(state, round)
+      post(LoopRound(loop, round, r.changed,
+        (System.nanoTime() - t0) / 1000000, r.detail))
+      state = r.state
+      changed = r.changed
+    }
+    if (changed != 0 && limit.isInstanceOf[Budget])
+      throw new IllegalStateException(
+        s"$loop: still moving after its budget of ${limit.rounds} rounds " +
+          s"($changed rows changed in the last) — refusing to return a " +
+          "partial result")
+    (state, round)
+  }
+
+  /** Post a count a loop's set-up takes before its rounds as a round-0
+    * [[LoopRound]] (connected components' pair and contracted-edge
+    * counts, which pick its finish).
+    */
+  def postSetup(loop: String, rows: Long, detail: String): Unit =
+    post(LoopRound(loop, 0, rows, 0, detail))
+
+  private def post(e: LoopRound): Unit =
+    org.apache.spark.sql.graft.GraftRuntime.post(
+      SparkSession.active.sparkContext, e)
 
   /** Runtime conf key; unset/false → localCheckpoint, true → reliable
     * `checkpoint()` into the session's checkpoint dir.

@@ -139,7 +139,7 @@ object ScaleCheck {
         .unionAll(edgeRel.select(col("j").as("id"))).distinct()
       val cc = timed(s"cc_pointer_jump_$tag") {
         val cc0 = operators.Dedup.connectedComponents(spark, edgeRel,
-          universe, driverFinishEdgeBound = 0L, verbose = true)
+          universe, driverFinishEdgeBound = 0L)
           .persist(StorageLevel.MEMORY_AND_DISK)
         cc0.count(); cc0
       }
@@ -365,7 +365,7 @@ object ScaleCheck {
       gcs.foreach(_.addNotificationListener(listener, null, null))
       val (q, row) = timed(s"cc_$tag") {
         val cc = Dedup.connectedComponents(spark, pairs, universe,
-          driverFinishEdgeBound = bound, verbose = true)
+          driverFinishEdgeBound = bound)
         val q = cc.agg(count(lit(1)).as("n"), sum(when(
           col("canonical_id") =!= col("id") - col("id") % 2, 1L)
           .otherwise(0L)).as("bad"))
@@ -738,8 +738,7 @@ object ScaleCheck {
     println(s"SCALECHECK scc vertices=$nV groups=$groups layers=$layers " +
       s"cycle_edges=$nV dag_edges=$nDag")
     val labels = timed("scc_core")(
-      Relational.sccCore(spark.range(nV).select(col("id").as("v")), edges,
-        verbose = true))
+      Relational.sccCore(spark.range(nV).select(col("id").as("v")), edges))
     val s = labels.agg(count(lit(1)).as("n"),
       sum(when(col("scc_id") === (col("v") / g).cast("bigint") * g, 0L)
         .otherwise(1L)).as("bad"),
@@ -760,7 +759,7 @@ object ScaleCheck {
     // volume: raw ascending ids along the cycle are EXACTLY the
     // adversarial crawl configuration, so convergence in dozens (not
     // millions) of inner rounds is the hashed pointer-jump machinery
-    // working — and the verbose [scc] line proves one outer round.
+    // working — and the `[loop] scc` lines prove one outer round.
     val nCyc = 2000000L
     val nTail = 1000000L
     val cycB = spark.range(nCyc).select(col("id").as("src"),
@@ -772,8 +771,7 @@ object ScaleCheck {
     val labelsB = timed("scc_giant_cycle")(
       Relational.sccCore(
         spark.range(nCyc + nTail).select(col("id").as("v")),
-        cycB.unionAll(chords).unionAll(tails), verbose = true,
-        driverFinishEdgeBound = 0L))
+        cycB.unionAll(chords).unionAll(tails), driverFinishEdgeBound = 0L))
     val sB = labelsB.agg(count(lit(1)).as("n"),
       sum(when((col("v") < nCyc && col("scc_id") === 0L) ||
           (col("v") >= nCyc && col("scc_id") === col("v")), 0L)
@@ -1544,6 +1542,18 @@ object ScaleCheck {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.build(32)
     spark.sparkContext.setLogLevel("ERROR")
+    // one line per round of every graph loop (Barriers.fixpoint), and per
+    // set-up count (round 0), from the listener bus
+    spark.sparkContext.addSparkListener(
+      new org.apache.spark.scheduler.SparkListener {
+        override def onOtherEvent(
+            e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+          case r: LoopRound =>
+            println(f"[loop] ${r.loop} iter=${r.round} changed=${r.changed} " +
+              f"${r.detail} sec=${r.wallMs / 1000.0}%.1f")
+          case _ =>
+        }
+      })
     if (args.headOption.contains("stream")) {
       streamDrill(spark,
         args.drop(1).headOption.map(_.toLong).getOrElse(20000000L))

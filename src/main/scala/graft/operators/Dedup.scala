@@ -381,14 +381,15 @@ object Dedup {
     * `universe` reads the pairs (graph_connected_components derives it
     * from them) persists them itself, so the returned plan keeps
     * reading that cache until [[graft.GraftCaches.release]].
-    * `verbose` prints `[cc] pairs=N`, then `[cc] superEdges=N` when the
-    * contraction runs.
+    * The pair count, and the contracted edge count when the contraction
+    * runs, are posted as round-0 [[graft.LoopRound]] events (detail
+    * `pairs`, `superEdges`).
     */
   private[graft] def connectedComponents(spark: SparkSession,
       pairs: DataFrame, universe: DataFrame,
       releaseAfterMaterialize: Seq[DataFrame] = Nil,
-      driverFinishEdgeBound: Long = graft.Barriers.DriverFinishEdgeBound,
-      verbose: Boolean = false): DataFrame = {
+      driverFinishEdgeBound: Long = graft.Barriers.DriverFinishEdgeBound)
+      : DataFrame = {
     import org.apache.spark.storage.StorageLevel
     import spark.implicits._
     // persist the UNDIRECTED pair relation once — half the rows of a
@@ -413,7 +414,7 @@ object Dedup {
     // for limit rows, so the expensive materializing pass runs nearly
     // serial (dedup_cluster 4.2 → 8.2 s measured).
     val nPairs = graft.Barriers.materialize(p, releaseAfterMaterialize)
-    if (verbose) println(s"[cc] pairs=$nPairs")
+    graft.Barriers.postSetup("connectedComponents", nPairs, "pairs")
     if (nPairs <= driverFinishEdgeBound) {
       // FINISH ON THE DRIVER straight from the pairs: the bound keeps the
       // collect a bounded finishing step, and a dimension-sized graph
@@ -467,7 +468,7 @@ object Dedup {
           struct(col("ld").as("src"), col("ls").as("dst")))).as("e"))
         .select(col("e.src").as("src"), col("e.dst").as("dst")),
       if (owned) Seq(p) else Nil)
-    if (verbose) println(s"[cc] superEdges=$nSuperEdges")
+    graft.Barriers.postSetup("connectedComponents", nSuperEdges, "superEdges")
     if (nSuperEdges <= driverFinishEdgeBound) {
       // the contracted graph is cluster-adjacency structure, not corpus
       // data: its size tracks how many clusters chain into each other,
@@ -484,7 +485,7 @@ object Dedup {
       try Relational.minLabelFix(
         l0.select(col("lab").as("id")).distinct()
           .select(col("id"), col("id").as("lab")),
-        edges, "connectedComponents", verbose)
+        edges, "connectedComponents")
       finally edges.unpersist()
     // expand the contraction: an id's component label is the fixpoint
     // label of its supernode (supernode ids are member ids, so the min

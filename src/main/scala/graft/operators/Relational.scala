@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.Barriers.{Budget, Horizon, Round}
 import graft.functions.GraftFunctions
 
 /** Warehouse-query suite (SURVEY.md §2.1 queries + §2.2).
@@ -2090,9 +2091,9 @@ object Relational {
       }
     val routed: DataFrame => DataFrame =
       if (n <= broadcastMaxVertices) broadcast else _.repartition(col("v"))
-    var scores = graft.Barriers.roundBarrier(
-      vertices.select(col("v"), lit(1000000L).as("s")))
-    for (_ <- 1 to rounds) {
+    val (scores, _) = graft.Barriers.fixpoint("pagerank", Horizon(rounds))(
+        graft.Barriers.roundBarrier(
+          vertices.select(col("v"), lit(1000000L).as("s")))) { (scores, _) =>
       val contrib = pagerankContrib(edges, scores, routed)
       val rebuilt =
         if (nSources == 0) contrib.select(col("dst").as("v"), col("c"))
@@ -2109,7 +2110,8 @@ object Relational {
               (lit(150000L) + coalesce(col("c"), lit(0L)) +
                 expr(s"(85 * dm) div (100 * $n)")).as("s"))
         }
-      scores = graft.Barriers.roundBarrier(next) // round barrier: O(1) lineage
+      // round barrier: O(1) lineage
+      Round(graft.Barriers.roundBarrier(next), -1)
     }
     // the returned plan is a checkpoint-truncated LogicalRDD — it holds
     // the final scores and references NONE of the stationary caches, so
@@ -2225,15 +2227,15 @@ object Relational {
       edges.filter(col("src") % 2 === 0)
         .select(col("src").as("v")).distinct()
         .orderBy(col("v")).limit(nSeeds))
-    var scores = graft.Barriers.roundBarrier(
-      seeds.select(col("v"), lit(1000000L).as("s")))
-    for (_ <- 1 to rounds) {
+    val (scores, _) = graft.Barriers.fixpoint("ppr", Horizon(rounds))(
+        graft.Barriers.roundBarrier(
+          seeds.select(col("v"), lit(1000000L).as("s")))) { (scores, _) =>
       val next = edges.join(routed(scores), col("src") === col("v"))
         .select(col("dst"), expr("(85 * s) div (100 * outdeg)").as("x"))
         .unionAll(seeds.select(col("v").as("dst"), lit(150000L).as("x")))
         .groupBy(col("dst")).agg(sum(col("x")).as("sn"))
         .select(col("dst").as("v"), col("sn").as("s"))
-      scores = graft.Barriers.roundBarrier(next)
+      Round(graft.Barriers.roundBarrier(next), -1)
     }
     edges.unpersist() // checkpoint-truncated result references no cache
     scores
@@ -2253,16 +2255,17 @@ object Relational {
     // all rounds consume the edge cache
     val (edges, _) = graft.Barriers.stationaryEdges(edges0,
       releaseAfterMaterialize)
-    var labels = graft.Barriers.roundBarrier(
+    val labels0 = graft.Barriers.roundBarrier(
       edges.select(col("src").as("v"))
         .unionAll(edges.select(col("dst").as("v")))
         .distinct()
         .select(col("v"), col("v").as("lbl")))
-    val n = labels.count()
+    val n = labels0.count()
     val routed: DataFrame => DataFrame =
       if (n <= broadcastMaxVertices) broadcast
       else _.repartition(col("v"))
-    for (_ <- 1 to rounds) {
+    val (labels, _) = graft.Barriers.fixpoint("lpa", Horizon(rounds))(labels0) {
+        (labels, _) =>
       val votes = edges
         .join(routed(labels), col("src") === col("v"))
         .select(col("dst"), col("lbl"))
@@ -2272,9 +2275,9 @@ object Relational {
         .groupBy(col("dst"))
         .agg(min(struct((-col("cnt")).as("nc"), col("lbl").as("l")))
           .as("best"))
-      labels = graft.Barriers.roundBarrier(
-        votes.select(col("dst").as("v"), col("best.l").as("lbl"))
-      ) // round barrier: O(1) lineage, reliable under the Barriers conf
+      // round barrier: O(1) lineage, reliable under the Barriers conf
+      Round(graft.Barriers.roundBarrier(
+        votes.select(col("dst").as("v"), col("best.l").as("lbl"))), -1)
     }
     edges.unpersist()
     labels
@@ -2529,12 +2532,10 @@ object Relational {
     val seeds = edges.filter(col("src") % 2 === 0)
       .select(col("src").as("id")).distinct()
       .orderBy(col("id")).limit(nSeeds)
-    var dist = graft.Barriers.roundBarrier(
+    val dist0 = graft.Barriers.roundBarrier(
       seeds.select(col("id"), lit(0L).as("dist")))
-    var frontier = dist
-    var round = 0
-    var done = false
-    while (round < maxRounds && !done) {
+    val ((dist, _), _) = graft.Barriers.fixpoint("sssp", Horizon(maxRounds))(
+        (dist0, dist0)) { case ((dist, frontier), _) =>
       val cand = edges
         .join(frontier.select(col("id").as("src"), col("dist").as("du")),
           Seq("src"))
@@ -2545,15 +2546,12 @@ object Relational {
           "left_outer")
         .filter(col("old").isNull || col("nd") < col("old"))
         .select(col("id"), col("nd").as("dist")))
-      if (improved.count() == 0) done = true
-      else {
-        dist = graft.Barriers.roundBarrier(
-          dist.join(improved.select(col("id").as("iid")),
-            col("id") === col("iid"), "left_anti")
-            .unionAll(improved))
-        frontier = improved
-      }
-      round += 1
+      val nImproved = improved.count()
+      if (nImproved == 0) Round((dist, frontier), 0)
+      else Round((graft.Barriers.roundBarrier(
+        dist.join(improved.select(col("id").as("iid")),
+          col("id") === col("iid"), "left_anti")
+          .unionAll(improved)), improved), nImproved)
     }
     edges.unpersist() // checkpoint-truncated result references no cache
     dist
@@ -2673,14 +2671,30 @@ object Relational {
     * [[MlfDeltaStallRounds]] consecutive delta rounds whose change
     * count did not decrease (the geometric decay delta mode bets on has
     * stopped), or (b) the iteration count passing [[MlfEscalateIter]]
-    * (half the 100-round cap) — the second half of the budget belongs
+    * (half of [[MlfMaxRounds]]) — the second half of the budget belongs
     * to the accelerator, never to a crawl.
     */
   private[graft] val MlfDeltaStallRounds = 3
   private[graft] val MlfEscalateIter = 50
 
+  /** Convergence budget of [[minLabelFix]]: labels are non-increasing and
+    * bounded below, so the fixpoint always arrives; a loop still moving
+    * after this many rounds has a broken monotonicity or hit the
+    * crawl-slow label order the hashed ids make vanishingly unlikely,
+    * and throws rather than return a partial labeling.
+    */
+  private[graft] val MlfMaxRounds = 100
+
+  /** [[minLabelFix]]'s round state: the label table as a checkpointed
+    * `base` under a checkpointed `pending` overlay of `nPending` rows,
+    * the `nFrontier` rows the last round changed, and the run of delta
+    * rounds whose change count did not drop.
+    */
+  private final case class MlfState(base: DataFrame, pending: DataFrame,
+      nPending: Long, frontier: DataFrame, nFrontier: Long, stall: Int)
+
   private[graft] def minLabelFix(init: DataFrame, edges: DataFrame,
-      what: String, verbose: Boolean = false): DataFrame = {
+      what: String): DataFrame = {
     // the label table is (base, pending-overlay): `labels` is the view
     // base-minus-pending-ids ∪ pending. Full rounds rewrite base
     // wholesale (they recompute every row anyway); delta rounds fold
@@ -2688,33 +2702,28 @@ object Relational {
     // full-table checkpoint — when the overlay outgrows the delta-mode
     // fraction. Both layers are checkpointed, so the view's plan depth
     // is a constant 2 regardless of round count.
-    var base = graft.Barriers.roundBarrier(init)
-    val nLabels = base.count()
-    var pending = init.limit(0)
-    var nPending = 0L
+    val base0 = graft.Barriers.roundBarrier(init)
+    val nLabels = base0.count()
+    val noPending = init.limit(0)
     // broadcast only under the ABSOLUTE cap; the fractional delta-mode
     // trigger alone scales the hint linearly with |labels| (r14 advice)
     def hinted(df: DataFrame, n: Long): DataFrame =
       if (n <= MlfBroadcastMaxRows) broadcast(df) else df
-    def labels: DataFrame =
-      if (nPending == 0) base
-      else base.join(hinted(pending.select(col("id").as("pid")), nPending),
-        col("id") === col("pid"), "left_anti").unionAll(pending)
-    def compact(): Unit = if (nPending > 0) {
-      base = graft.Barriers.roundBarrier(labels)
-      pending = init.limit(0)
-      nPending = 0
-    }
-    var frontier = base // round 1: every label is "changed"
-    var changed = nLabels
-    var iter = 0
-    var deltaStall = 0 // consecutive delta rounds with non-decreasing changed
-    while (changed > 0) {
-      val tRound = System.nanoTime()
-      val escalate = deltaStall >= MlfDeltaStallRounds ||
-        iter >= MlfEscalateIter
-      val delta = changed * MlfDeltaTriggerFraction < nLabels && !escalate
-      if (delta) {
+    def labels(st: MlfState): DataFrame =
+      if (st.nPending == 0) st.base
+      else st.base.join(
+        hinted(st.pending.select(col("id").as("pid")), st.nPending),
+        col("id") === col("pid"), "left_anti").unionAll(st.pending)
+    def compact(st: MlfState): MlfState =
+      if (st.nPending == 0) st
+      else st.copy(base = graft.Barriers.roundBarrier(labels(st)),
+        pending = noPending, nPending = 0)
+    // round 1: every label is "changed"
+    val (last, _) = graft.Barriers.fixpoint(what, Budget(MlfMaxRounds))(
+        MlfState(base0, noPending, 0, base0, nLabels, 0)) { (st, round) =>
+      val escalate = st.stall >= MlfDeltaStallRounds ||
+        round > MlfEscalateIter
+      if (st.nFrontier * MlfDeltaTriggerFraction < nLabels && !escalate) {
         // DELTA round (r14 profiling: inner rounds are edge-DIAMETER
         // bound — ~23 per fixpoint on the 8-layer drill — and the tail
         // rounds were paying two full-table pointer-jump self-joins, a
@@ -2734,16 +2743,15 @@ object Relational {
         // scales with |labels|); nbr/update sides are left to AQE,
         // which sees their true runtime sizes. No full-table shuffle
         // remains in the round.
-        val frontierN = changed
         val nbr = edges
-          .join(hinted(frontier, frontierN), col("src") === col("id"))
+          .join(hinted(st.frontier, st.nFrontier), col("src") === col("id"))
           .groupBy(col("dst")).agg(min(col("lab")).as("nl"))
-        val eImp = labels.join(nbr, col("id") === col("dst"))
+        val eImp = labels(st).join(nbr, col("id") === col("dst"))
           .filter(col("nl") < col("lab"))
           .select(col("id"), col("nl").as("lab1"))
-        val jImp = labels
-          .join(hinted(frontier
-            .select(col("id").as("jid"), col("lab").as("jlab")), frontierN),
+        val jImp = labels(st)
+          .join(hinted(st.frontier
+            .select(col("id").as("jid"), col("lab").as("jlab")), st.nFrontier),
             col("lab") === col("jid"))
           .filter(col("jlab") < col("lab"))
           .select(col("id"), col("jlab").as("lab1"))
@@ -2755,29 +2763,33 @@ object Relational {
           .select(col("id"),
             least(col("lab1"), coalesce(col("klab"), col("lab1")))
               .as("lab")))
-        changed = upd.count()
-        if (changed > 0) {
-          // fold the round's updates into the PENDING overlay instead of
-          // rewriting the full table: the labels view below is base
-          // anti-join pending ∪ pending (2 layers, both checkpointed —
-          // plan depth stays O(1)), and the full-table rewrite happens
-          // only at compaction, when the overlay outgrows
-          // [[MlfCompactFraction]] (looser than the delta trigger — an
-          // early half-table delta round must not re-pay the full
-          // rewrite every round). Kills the dominant fixed
-          // cost of a tiny round (checkpointing |labels| rows to apply
-          // a 4-row delta).
-          pending = graft.Barriers.roundBarrier(
-            pending.join(upd.select(col("id").as("uid")),
-              col("id") === col("uid"), "left_anti")
-              .unionAll(upd))
-          nPending = pending.count()
-          if (nPending * MlfCompactFraction >= nLabels) compact()
-          frontier = upd
-        }
+        val changed = upd.count()
         // non-decreasing change count means the geometric-decay bet
         // behind delta mode is off — count toward escalation
-        deltaStall = if (changed >= frontierN) deltaStall + 1 else 0
+        val stall = if (changed >= st.nFrontier) st.stall + 1 else 0
+        val next =
+          if (changed == 0) st
+          else {
+            // fold the round's updates into the PENDING overlay instead
+            // of rewriting the full table: the labels view is base
+            // anti-join pending ∪ pending (2 layers, both checkpointed —
+            // plan depth stays O(1)), and the full-table rewrite happens
+            // only at compaction, when the overlay outgrows
+            // [[MlfCompactFraction]] (looser than the delta trigger — an
+            // early half-table delta round must not re-pay the full
+            // rewrite every round). Kills the dominant fixed cost of a
+            // tiny round (checkpointing |labels| rows to apply a 4-row
+            // delta).
+            val pending = graft.Barriers.roundBarrier(
+              st.pending.join(upd.select(col("id").as("uid")),
+                col("id") === col("uid"), "left_anti")
+                .unionAll(upd))
+            val folded = st.copy(pending = pending, nPending = pending.count())
+            if (folded.nPending * MlfCompactFraction >= nLabels) compact(folded)
+            else folded
+          }
+        Round(next.copy(frontier = upd, nFrontier = changed, stall = stall),
+          changed, "mode=delta")
       } else {
         // FULL round: the doubling machinery — two pointer-jump
         // applications over the whole table per round. Worth its
@@ -2789,9 +2801,9 @@ object Relational {
         // materialization job per round instead of three. Two jumps,
         // not one: on the drill's chain-heavy blocked CC graph one jump
         // was still unconverged after 20+ rounds, two converged in 11.
-        val nbr = edges.join(frontier, col("src") === col("id"))
+        val nbr = edges.join(st.frontier, col("src") === col("id"))
           .groupBy(col("dst")).agg(min(col("lab")).as("nl"))
-        val stepped = labels.select(col("id"), col("lab").as("old"))
+        val stepped = labels(st).select(col("id"), col("lab").as("old"))
           .join(nbr, col("id") === col("dst"), "left_outer")
           .select(col("id"),
             least(col("old"), coalesce(col("nl"), col("old"))).as("lab1"),
@@ -2809,29 +2821,16 @@ object Relational {
             least(col("lab2"), coalesce(col("jlab2"), col("lab2"))).as("lab"),
             col("old"))
           .transform(graft.Barriers.roundBarrier) // O(1) lineage per round
-        frontier = next.filter(col("lab") =!= col("old"))
+        val frontier = next.filter(col("lab") =!= col("old"))
           .select(col("id"), col("lab")) // cheap filter over the barrier
-        changed = frontier.count()
-        base = next.select(col("id"), col("lab")) // full rewrite:
-        pending = init.limit(0); nPending = 0     // overlay absorbed
-        deltaStall = 0 // a doubling round resets the stall account
+        val changed = frontier.count()
+        // full rewrite: the overlay is absorbed, and a doubling round
+        // resets the stall account
+        Round(MlfState(next.select(col("id"), col("lab")), noPending, 0,
+          frontier, changed, 0), changed, "mode=full")
       }
-      iter += 1
-      if (verbose)
-        println(f"[mlf] $what iter=$iter changed=$changed " +
-          f"mode=${if (delta) "delta" else "full"} " +
-          f"sec=${(System.nanoTime() - tRound) / 1e9}%.1f")
-      if (iter > 100)
-        throw new IllegalStateException(
-          s"$what min-label fixpoint still moving after $iter rounds " +
-            s"($changed labels) — either monotonicity is broken or the " +
-            "label ordering is crawl-slow along the edge orientation " +
-            "(the w.h.p.-excluded hashed-order worst case) and exceeded " +
-            "the convergence budget; refusing to return a partial " +
-            "labeling")
     }
-    compact() // return one checkpointed relation, overlay folded in
-    base
+    compact(last).base // one checkpointed relation, overlay folded in
   }
 
   /** Strongly connected components of a DIRECTED graph by forward
@@ -2987,8 +2986,17 @@ object Relational {
     verts.zip(out).toMap
   }
 
+  /** [[sccCore]]'s round state: the surviving hashed vertices
+    * (`nRemaining` of them), the live edges among them (`nLive`), and
+    * the (hv, lbl) rows assigned so far, one checkpointed relation.
+    */
+  private final case class SccState(remaining: DataFrame, nRemaining: Long,
+      live: DataFrame, nLive: Long, out: Option[DataFrame]) {
+    def assigned(d: DataFrame): Option[DataFrame] =
+      Some(out.fold(d)(o => graft.Barriers.roundBarrier(o.unionAll(d))))
+  }
+
   private[graft] def sccCore(vertices0: DataFrame, edges0: DataFrame,
-      verbose: Boolean = false,
       driverFinishEdgeBound: Long = graft.Barriers.DriverFinishEdgeBound)
       : DataFrame = {
     // static (v ↔ hashed v) map; the loop runs entirely in hash space.
@@ -3042,118 +3050,104 @@ object Relational {
         s"sccCore: xxhash64 collision over ${chk.getLong(0)} vertex ids " +
           s"(${chk.getLong(1)} distinct hashes) — the hashed propagation " +
           "order would silently merge color classes, refusing to run")
-    var remaining = graft.Barriers.roundBarrier(vmap.select(col("hv")))
-    var nRemaining = remaining.count()
-    var live = graft.Barriers.roundBarrier(
-      rawLive.select(xxhash64(col("src")).as("src"),
-        xxhash64(col("dst")).as("dst")))
-    var nLiveE = nLive // deduped, self-loop-free — live starts as rawLive
-    var out: DataFrame = null
-    def assign(d: DataFrame): Unit =
-      out = if (out == null) d
-        else graft.Barriers.roundBarrier(out.unionAll(d))
+    // live starts as rawLive: deduped, self-loop-free
+    val remaining0 = graft.Barriers.roundBarrier(vmap.select(col("hv")))
+    val start = SccState(remaining0, remaining0.count(),
+      graft.Barriers.roundBarrier(
+        rawLive.select(xxhash64(col("src")).as("src"),
+          xxhash64(col("dst")).as("dst"))), nLive, None)
+    // `edges` confined to the surviving vertices
+    def confined(edges: DataFrame, remaining: DataFrame): DataFrame =
+      graft.Barriers.roundBarrier(edges
+        .join(remaining.select(col("hv").as("src")), Seq("src"), "left_semi")
+        .join(remaining.select(col("hv").as("dst")), Seq("dst"), "left_semi"))
     // TRIM prologue ([[SccTrimRounds]]): peel vertices that sit on no
     // cycle (no in-edge or no out-edge in the live subgraph) as
     // singleton SCCs — lbl = own hv, a member of its (one-vertex) class,
     // so the global min-member recovery below needs no special case.
-    var trimRound = 0
-    var trimming = nRemaining > 0
-    while (trimming && trimRound < SccTrimRounds) {
-      trimRound += 1
-      val cyclic = live
-        .select(col("src").as("hv"), lit(1).as("o"), lit(0).as("i"))
-        .unionAll(live
-          .select(col("dst").as("hv"), lit(0).as("o"), lit(1).as("i")))
-        .groupBy(col("hv"))
-        .agg(max(col("o")).as("ho"), max(col("i")).as("hi"))
-        .filter(col("ho") === 1 && col("hi") === 1)
-        .select(col("hv"))
-      val trivial = graft.Barriers.roundBarrier(
-        remaining.join(cyclic, Seq("hv"), "left_anti"))
-      val nTrivial = trivial.count()
-      if (verbose)
-        println(s"[scc] trim round=$trimRound removed=$nTrivial " +
-          s"remaining_before=$nRemaining")
-      if (nTrivial == 0) trimming = false
+    val (trimmed, _) = graft.Barriers.fixpoint("scc-trim",
+        Horizon(SccTrimRounds))(start) { (st, _) =>
+      if (st.nRemaining == 0) Round(st, 0)
       else {
-        assign(trivial.select(col("hv"), col("hv").as("lbl")))
-        remaining = graft.Barriers.roundBarrier(
-          remaining.join(trivial, Seq("hv"), "left_anti"))
-        nRemaining -= nTrivial
-        if (nRemaining == 0) trimming = false
+        val cyclic = st.live
+          .select(col("src").as("hv"), lit(1).as("o"), lit(0).as("i"))
+          .unionAll(st.live
+            .select(col("dst").as("hv"), lit(0).as("o"), lit(1).as("i")))
+          .groupBy(col("hv"))
+          .agg(max(col("o")).as("ho"), max(col("i")).as("hi"))
+          .filter(col("ho") === 1 && col("hi") === 1)
+          .select(col("hv"))
+        val trivial = graft.Barriers.roundBarrier(
+          st.remaining.join(cyclic, Seq("hv"), "left_anti"))
+        val nTrivial = trivial.count()
+        if (nTrivial == 0) Round(st, 0)
         else {
-          live = graft.Barriers.roundBarrier(live
-            .join(remaining.select(col("hv").as("src")), Seq("src"),
-              "left_semi")
-            .join(remaining.select(col("hv").as("dst")), Seq("dst"),
-              "left_semi"))
-          nLiveE = live.count()
+          val remaining = graft.Barriers.roundBarrier(
+            st.remaining.join(trivial, Seq("hv"), "left_anti"))
+          val nRemaining = st.nRemaining - nTrivial
+          val live =
+            if (nRemaining == 0) st.live else confined(st.live, remaining)
+          Round(SccState(remaining, nRemaining, live,
+              if (nRemaining == 0) 0 else live.count(),
+              st.assigned(trivial.select(col("hv"), col("hv").as("lbl")))),
+            nTrivial, s"remaining=$nRemaining")
         }
       }
     }
-    var round = 0
-    while (nRemaining > 0) {
-      if (nRemaining <= driverFinishEdgeBound &&
-          nLiveE <= driverFinishEdgeBound) {
-        // bounded MID-LOOP finish: rounds peel the subproblem, and once
-        // it fits the same bound the entry branch honors, diameter-many
-        // tail rounds collapse into one Tarjan scan (class-confined
-        // edges preserve every surviving SCC, see the live rebuild
-        // below, so the scan is over an equivalent subproblem). Labels
-        // are min-HASH members — unique per class, which is all the
-        // min-member recovery needs. Disabled when the caller pins the
-        // distributed regime (bound 0): regime-parity specs stay pure.
-        val vs = remaining.select(col("hv")).collect().map(_.getLong(0))
-        val es = live.collect().map(r => (r.getLong(0), r.getLong(1)))
-        if (verbose)
-          println(s"[scc] driver finish after round=$round " +
-            s"verts=${vs.length} edges=${es.length}")
+    // bounded MID-LOOP finish: rounds peel the subproblem, and once it
+    // fits the same bound the entry branch honors, diameter-many tail
+    // rounds collapse into one Tarjan scan (class-confined edges
+    // preserve every surviving SCC, see the live rebuild below, so the
+    // scan is over an equivalent subproblem). Labels are min-HASH
+    // members — unique per class, which is all the min-member recovery
+    // needs. Disabled when the caller pins the distributed regime
+    // (bound 0): regime-parity specs stay pure. Tried after every
+    // round, so it runs before the round budget is checked.
+    def finishIfBounded(st: SccState): SccState =
+      if (st.nRemaining == 0 || st.nRemaining > driverFinishEdgeBound ||
+          st.nLive > driverFinishEdgeBound) st
+      else {
+        val vs = st.remaining.select(col("hv")).collect().map(_.getLong(0))
+        val es = st.live.collect().map(r => (r.getLong(0), r.getLong(1)))
         import spark.implicits._
-        assign(sccTarjan(vs, es).toSeq.toDF("hv", "lbl"))
-        nRemaining = 0
-      } else {
-      round += 1
-      if (round > SccMaxRounds)
-        throw new IllegalStateException(
-          s"sccCore still has $nRemaining unassigned vertices after " +
-            s"$round outer rounds — condensation deeper than the " +
-            s"documented $SccMaxRounds-layer bound, refusing to return " +
-            "a partial labeling")
-      // one fixpoint over `edges`, made stationary for its rounds, with
-      // every surviving vertex starting as its own label
-      def fixpoint(edges: DataFrame, what: String): DataFrame = {
-        val (stationary, _) = graft.Barriers.stationaryEdges(edges)
-        try minLabelFix(
-          remaining.select(col("hv").as("id"), col("hv").as("lab")),
-          stationary, what, verbose)
-        finally stationary.unpersist()
+        st.copy(nRemaining = 0,
+          out = st.assigned(sccTarjan(vs, es).toSeq.toDF("hv", "lbl")))
       }
-      val colors = graft.Barriers.roundBarrier( // 3 consumers below
-        fixpoint(live, s"scc-forward-r$round")
-          .select(col("id").as("hv"), col("lab").as("color")))
-      // class-confined edges, REVERSED for the backward pass
-      val ceRev = graft.Barriers.roundBarrier(
-        live
-          .join(colors.select(col("hv").as("src"), col("color").as("cs")),
-            Seq("src"))
-          .join(colors.select(col("hv").as("dst"), col("color").as("cd")),
-            Seq("dst"))
-          .filter(col("cs") === col("cd"))
-          .select(col("dst").as("src"), col("src").as("dst")))
-      val bcolors = fixpoint(ceRev, s"scc-backward-r$round")
-        .select(col("id").as("hv"), col("lab").as("bcolor"))
-      val done = graft.Barriers.roundBarrier(
-        colors.join(bcolors, Seq("hv"))
-          .filter(col("color") === col("bcolor"))
-          .select(col("hv"), col("color").as("lbl")))
-      if (verbose)
-        println(s"[scc] round=$round assigned=${done.count()} " +
-          s"remaining_before=$nRemaining")
-      assign(done)
-      remaining = graft.Barriers.roundBarrier(
-        remaining.join(done.select(col("hv")), Seq("hv"), "left_anti"))
-      nRemaining = remaining.count()
-      if (nRemaining > 0) {
+    // one fixpoint over `edges`, made stationary for its rounds, with
+    // every surviving vertex starting as its own label
+    def minLabels(remaining: DataFrame, edges: DataFrame,
+        what: String): DataFrame = {
+      val (stationary, _) = graft.Barriers.stationaryEdges(edges)
+      try minLabelFix(
+        remaining.select(col("hv").as("id"), col("hv").as("lab")),
+        stationary, what)
+      finally stationary.unpersist()
+    }
+    val (last, _) = graft.Barriers.fixpoint("scc", Budget(SccMaxRounds))(
+        finishIfBounded(trimmed)) { (st, round) =>
+      if (st.nRemaining == 0) Round(st, 0)
+      else {
+        val colors = graft.Barriers.roundBarrier( // 3 consumers below
+          minLabels(st.remaining, st.live, s"scc-forward-r$round")
+            .select(col("id").as("hv"), col("lab").as("color")))
+        // class-confined edges, REVERSED for the backward pass
+        val ceRev = graft.Barriers.roundBarrier(
+          st.live
+            .join(colors.select(col("hv").as("src"), col("color").as("cs")),
+              Seq("src"))
+            .join(colors.select(col("hv").as("dst"), col("color").as("cd")),
+              Seq("dst"))
+            .filter(col("cs") === col("cd"))
+            .select(col("dst").as("src"), col("src").as("dst")))
+        val bcolors = minLabels(st.remaining, ceRev, s"scc-backward-r$round")
+          .select(col("id").as("hv"), col("lab").as("bcolor"))
+        val done = graft.Barriers.roundBarrier(
+          colors.join(bcolors, Seq("hv"))
+            .filter(col("color") === col("bcolor"))
+            .select(col("hv"), col("color").as("lbl")))
+        val remaining = graft.Barriers.roundBarrier(
+          st.remaining.join(done.select(col("hv")), Seq("hv"), "left_anti"))
+        val nRemaining = remaining.count()
         // FW-BW CLASS CONFINEMENT (r14 verdict #3): two vertices of one
         // SCC share their ancestor closure, hence their forward color —
         // an SCC never spans color classes, so cross-class edges can be
@@ -3163,26 +3157,30 @@ object Relational {
         // confinement as well as by removal, and classes only subdivide
         // — more root SCCs peel per round, never fewer, so the
         // SccMaxRounds layer argument is undisturbed.
-        live = graft.Barriers.roundBarrier(
-          ceRev.select(col("dst").as("src"), col("src").as("dst"))
-            .join(remaining.select(col("hv").as("src")), Seq("src"),
-              "left_semi")
-            .join(remaining.select(col("hv").as("dst")), Seq("dst"),
-              "left_semi"))
-        nLiveE = live.count()
-      }
+        val live =
+          if (nRemaining == 0) st.live
+          else confined(
+            ceRev.select(col("dst").as("src"), col("src").as("dst")),
+            remaining)
+        val next = finishIfBounded(SccState(remaining, nRemaining, live,
+          if (nRemaining == 0) 0 else live.count(), st.assigned(done)))
+        Round(next, next.nRemaining,
+          s"assigned=${st.nRemaining - nRemaining}")
       }
     }
-    if (out == null) // empty vertex set: nothing was ever assigned
-      return vmap.select(col("v"), col("v").as("scc_id"))
-    // back to raw ids; scc_id = the class's minimum member id. A class
-    // label never recurs across rounds (its root is assigned the round
-    // the class exists), so one global groupBy is exact.
-    val labeled = out.join(vmap, Seq("hv")).select(col("v"), col("lbl"))
-    labeled
-      .join(labeled.groupBy(col("lbl")).agg(min(col("v")).as("scc_id")),
-        Seq("lbl"))
-      .select(col("v"), col("scc_id"))
+    last.out match {
+      case None => // empty vertex set: nothing was ever assigned
+        vmap.select(col("v"), col("v").as("scc_id"))
+      case Some(out) =>
+        // back to raw ids; scc_id = the class's minimum member id. A
+        // class label never recurs across rounds (its root is assigned
+        // the round the class exists), so one global groupBy is exact.
+        val labeled = out.join(vmap, Seq("hv")).select(col("v"), col("lbl"))
+        labeled
+          .join(labeled.groupBy(col("lbl")).agg(min(col("v")).as("scc_id")),
+            Seq("lbl"))
+          .select(col("v"), col("scc_id"))
+    }
   }
 
   /** §2.2 q_eager_agg: per-market-segment revenue rollup via EAGER
@@ -3299,27 +3297,27 @@ object Relational {
     val seeds = edges.filter(col("src") % 2 === 0)
       .select(col("src").as("id")).distinct()
       .orderBy(col("id")).limit(nSeeds)
-    var visited = graft.Barriers.roundBarrier(
+    val visited0 = graft.Barriers.roundBarrier(
       seeds.select(col("id"), lit(0).cast("bigint").as("hops")))
-    var frontier = visited
-    var hop = 1L
-    var done = false
-    while (hop <= maxHops && !done) {
+    // state: (visited, frontier, |frontier|) — a round's one count of
+    // its fresh vertices is both its `changed` and the next round's
+    // routing decision
+    val ((visited, _, _), _) = graft.Barriers.fixpoint("bfs", Horizon(maxHops))(
+        (visited0, visited0, visited0.count())) {
+        case ((visited, frontier, nFrontier), hop) =>
       val routed =
-        if (frontier.count() <= broadcastMaxVertices) broadcast(frontier)
+        if (nFrontier <= broadcastMaxVertices) broadcast(frontier)
         else frontier.repartition(col("id"))
       val candidates = edges
         .join(routed, col("src") === col("id"))
         .select(col("dst").as("id")).distinct()
       val fresh = graft.Barriers.roundBarrier(
         candidates.join(visited.select(col("id")), Seq("id"), "left_anti")
-          .select(col("id"), lit(hop).as("hops")))
-      if (fresh.isEmpty) done = true
-      else {
-        visited = graft.Barriers.roundBarrier(visited.unionAll(fresh))
-        frontier = fresh
-        hop += 1
-      }
+          .select(col("id"), lit(hop.toLong).as("hops")))
+      val nFresh = fresh.count()
+      if (nFresh == 0) Round((visited, frontier, nFrontier), 0)
+      else Round((graft.Barriers.roundBarrier(visited.unionAll(fresh)), fresh,
+        nFresh), nFresh)
     }
     edges.unpersist()
     visited
@@ -3373,20 +3371,19 @@ object Relational {
       driverEdgeBound: Long = graft.Barriers.DriverFinishEdgeBound)
       : (DataFrame, Int) = {
     val spark = pairs.sparkSession
-    var edges = graft.Barriers.roundBarrier(
-      pairs.select(col("i"), col("j")))
-    var n = edges.count()
-    if (n <= driverEdgeBound) {
+    val edges0 = graft.Barriers.roundBarrier(pairs.select(col("i"), col("j")))
+    val n0 = edges0.count()
+    if (n0 <= driverEdgeBound) {
       // bounded finishing step, not corpus data: peel in memory where a
       // round is a hash-map sweep instead of a scheduled stage
       import spark.implicits._
       val adj = scala.collection.mutable.HashMap
         .empty[Long, scala.collection.mutable.Set[Long]]
-      edges.as[(Long, Long)].collect().foreach { case (a, b) =>
+      edges0.as[(Long, Long)].collect().foreach { case (a, b) =>
         adj.getOrElseUpdate(a, scala.collection.mutable.Set.empty) += b
         adj.getOrElseUpdate(b, scala.collection.mutable.Set.empty) += a
       }
-      edges.unpersist()
+      edges0.unpersist()
       var rounds = 0
       var changed = true
       while (changed) {
@@ -3401,24 +3398,29 @@ object Relational {
         .toSeq.toDF("v", "core_degree")
       return (out, rounds)
     }
-    var rounds = 0
-    var done = n == 0L
-    while (!done) {
-      val deg = edges.select(col("i").as("v"))
-        .unionAll(edges.select(col("j").as("v")))
-        .groupBy(col("v")).agg(count(lit(1)).as("d"))
-      val keep = deg.filter(col("d") >= k).select(col("v"))
-      val next = graft.Barriers.roundBarrier(edges
-        .join(keep.select(col("v").as("i")), Seq("i"), "left_semi")
-        .join(keep.select(col("v").as("j")), Seq("j"), "left_semi")
-        .select(col("i"), col("j")))
-      val m = next.count()
-      if (m == n) done = true
-      else { edges = next; n = m; rounds += 1; done = n == 0L }
+    // every round but the last removes at least one edge, so n0 + 1
+    // rounds always reach the fixpoint; a round over no edges reports 0
+    // without a job
+    val ((edges, _), rounds) = graft.Barriers.fixpoint("kcore", Budget(n0 + 1))(
+        (edges0, n0)) { case ((edges, n), _) =>
+      if (n == 0) Round((edges, n), 0)
+      else {
+        val deg = edges.select(col("i").as("v"))
+          .unionAll(edges.select(col("j").as("v")))
+          .groupBy(col("v")).agg(count(lit(1)).as("d"))
+        val keep = deg.filter(col("d") >= k).select(col("v"))
+        val next = graft.Barriers.roundBarrier(edges
+          .join(keep.select(col("v").as("i")), Seq("i"), "left_semi")
+          .join(keep.select(col("v").as("j")), Seq("j"), "left_semi")
+          .select(col("i"), col("j")))
+        val m = next.count()
+        if (m == n) Round((edges, n), 0) else Round((next, m), n - m)
+      }
     }
+    // the last round removed nothing
     (edges.select(col("i").as("v")).unionAll(edges.select(col("j").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).cast("bigint").as("core_degree")),
-      rounds)
+      rounds - 1)
   }
 
   /** Forward-BFS level cap for [[graphBetweenness]] — both engines
@@ -3560,17 +3562,17 @@ object Relational {
     */
   private[graft] def brandesForwardFrom(edges: DataFrame,
       roots: DataFrame): DataFrame = {
-    var frontier = graft.Barriers.roundBarrier(
+    val frontier0 = graft.Barriers.roundBarrier(
       roots.select(col("root"), col("root").as("v"), lit(0).as("lvl"),
         lit(1.0).as("sig")))
-    // visited = the union of the checkpointed per-level frontiers —
-    // accumulating PARTS instead of re-checkpointing a growing union
-    // per round turns O(levels²) materialized rows into O(levels)
-    var parts = List(frontier)
-    def visited = parts.reduce(_ unionAll _)
-    var lvl = 0
-    var more = frontier.count() > 0
-    while (more && lvl < BetweennessMaxLevel) {
+    // visited = the union of the checkpointed per-level frontiers (the
+    // state, newest first) — accumulating PARTS instead of
+    // re-checkpointing a growing union per round turns O(levels²)
+    // materialized rows into O(levels)
+    def visited(parts: List[DataFrame]) = parts.reduce(_ unionAll _)
+    val levels = if (frontier0.count() == 0) 0 else BetweennessMaxLevel
+    val (parts, _) = graft.Barriers.fixpoint("brandes-forward",
+        Horizon(levels))(List(frontier0)) { (parts, lvl) =>
       // σ is an INTEGER quantity (path counts: σ_w = Σ_preds σ_v with
       // σ_root = 1, integral by induction), so the per-predecessor sum
       // needs no sorted fold — integer-valued double addition is exact
@@ -3582,21 +3584,19 @@ object Relational {
       // collect_list bounded only by in-degree (178k on the drill hub).
       // The backward δ folds stay SORTED (genuine floats — σv/σw
       // ratios — where addition order matters for bit parity).
-      val nxt = frontier
+      val nxt = parts.head
         .join(edges, col("v") === col("src"))
-        .join(visited.select(col("root").as("vr"), col("v").as("vv")),
+        .join(visited(parts).select(col("root").as("vr"), col("v").as("vv")),
           col("root") === col("vr") && col("dst") === col("vv"),
           "left_anti")
         .groupBy(col("root"), col("dst"))
         .agg(sum(col("sig")).as("sig"))
-        .select(col("root"), col("dst").as("v"), lit(lvl + 1).as("lvl"),
+        .select(col("root"), col("dst").as("v"), lit(lvl).as("lvl"),
           col("sig"))
-      frontier = graft.Barriers.roundBarrier(nxt)
-      parts ::= frontier
-      lvl += 1
-      more = frontier.count() > 0
+      val frontier = graft.Barriers.roundBarrier(nxt)
+      Round(frontier :: parts, frontier.count())
     }
-    visited
+    visited(parts)
   }
 
   /** The symmetric customer–supplier edge relation both centrality
@@ -3633,6 +3633,54 @@ object Relational {
     * not a silent reorder.
     */
   private[graft] val BrandesMaxFoldWidth = 4000000L
+
+  /** The Brandes backward pass shared by [[betweennessCore]] and
+    * [[betweennessApproxCore]]: from the persisted forward pass `vis`
+    * (root, v, lvl, σ) over `edges`, the dependency δ(root, v) of every
+    * visited vertex. The cores differ only in how a vertex's successor
+    * terms (σv/σw)(1 + δw) aggregate: `deltaSum`.
+    */
+  private def brandesBackward(vis: DataFrame, edges: DataFrame,
+      deltaSum: Column => Column): DataFrame = {
+    import org.apache.spark.storage.StorageLevel
+    val maxLvl = vis.agg(coalesce(max(col("lvl")), lit(0)).as("m"))
+      .head().getInt(0)
+    // shortest-path DAG successors: (root, v at l, w at l+1, σv, σw)
+    val sp = vis.select(col("root"), col("v"), col("lvl"),
+        col("sig").as("sigv"))
+      .join(edges, col("v") === col("src"))
+      .join(vis.select(col("root").as("wr"), col("v").as("w"),
+        col("lvl").as("wl"), col("sig").as("sigw")),
+        col("root") === col("wr") && col("dst") === col("w") &&
+          col("wl") === col("lvl") + 1)
+      .select(col("root"), col("v"), col("lvl"), col("sigv"), col("w"),
+        col("sigw"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    sp.count() // eager: one consumer per backward level
+    // only the PREVIOUS level's δ is ever joined (successors of level-l
+    // vertices sit exactly at level l+1), so each round checkpoints one
+    // slim level and δ is the union of the checkpointed parts (the
+    // state, newest first)
+    val deepest = graft.Barriers.roundBarrier(vis.filter(col("lvl") === maxLvl)
+      .select(col("root"), col("v"), lit(0.0).as("delta")))
+    val (parts, _) = graft.Barriers.fixpoint("brandes-backward",
+        Horizon(maxLvl))(List(deepest)) { (parts, round) =>
+      val l = maxLvl - round
+      val dsum = sp.filter(col("lvl") === l)
+        .join(parts.head.select(col("root").as("dr"), col("v").as("dv"),
+          col("delta").as("dw")),
+          col("root") === col("dr") && col("w") === col("dv"))
+        .groupBy(col("root"), col("v"))
+        .agg(deltaSum(col("sigv") / col("sigw") * (lit(1.0) + col("dw")))
+          .as("dsum"))
+      Round(graft.Barriers.roundBarrier(vis.filter(col("lvl") === l)
+        .select(col("root"), col("v"))
+        .join(dsum, Seq("root", "v"), "left_outer")
+        .select(col("root"), col("v"),
+          coalesce(col("dsum"), lit(0.0)).as("delta"))) :: parts, -1)
+    }
+    parts.reduce(_ unionAll _)
+  }
 
   /** The k-source Brandes loop under graph_betweenness, on a SYMMETRIC
     * (src, dst) edge relation: (v, centrality) for every vertex, 6dp.
@@ -3686,48 +3734,10 @@ object Relational {
           brandesForward(edges, verts))
       case None => brandesForward(edges, verts)
     }
-    val vis = visRaw.persist(StorageLevel.MEMORY_AND_DISK)
-    val maxLvl = vis.agg(coalesce(max(col("lvl")), lit(0)).as("m"))
-      .head().getInt(0)
-    // shortest-path DAG successors: (root, v at l, w at l+1, σv, σw)
-    val sp = vis.select(col("root"), col("v"), col("lvl"),
-        col("sig").as("sigv"))
-      .join(edges, col("v") === col("src"))
-      .join(vis.select(col("root").as("wr"), col("v").as("w"),
-        col("lvl").as("wl"), col("sig").as("sigw")),
-        col("root") === col("wr") && col("dst") === col("w") &&
-          col("wl") === col("lvl") + 1)
-      .select(col("root"), col("v"), col("lvl"), col("sigv"), col("w"),
-        col("sigw"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    sp.count() // eager: one consumer per backward level
-    // backward: only the PREVIOUS level's δ is ever joined (successors
-    // of level-l vertices sit exactly at level l+1), so each round
-    // checkpoints one slim level and the full relation is the union of
-    // the checkpointed parts
-    var prevDelta = graft.Barriers.roundBarrier(
-      vis.filter(col("lvl") === maxLvl)
-        .select(col("root"), col("v"), lit(0.0).as("delta")))
-    var deltaParts = List(prevDelta)
-    for (l <- (maxLvl - 1) to 0 by -1) {
-      val dsum = sp.filter(col("lvl") === l)
-        .join(prevDelta.select(col("root").as("dr"), col("v").as("dv"),
-          col("delta").as("dw")),
-          col("root") === col("dr") && col("w") === col("dv"))
-        .groupBy(col("root"), col("v"))
-        .agg(GraftFunctions.sortedKeyFold(col("w"),
-          col("sigv") / col("sigw") * (lit(1.0) + col("dw")), maxFold,
-          "brandes δ accumulation: use betweennessApproxCore at this scale")
-          .as("dsum"))
-      val dl = vis.filter(col("lvl") === l)
-        .select(col("root"), col("v"))
-        .join(dsum, Seq("root", "v"), "left_outer")
-        .select(col("root"), col("v"),
-          coalesce(col("dsum"), lit(0.0)).as("delta"))
-      prevDelta = graft.Barriers.roundBarrier(dl)
-      deltaParts ::= prevDelta
-    }
-    val delta = deltaParts.reduce(_ unionAll _)
+    val delta = brandesBackward(
+      visRaw.persist(StorageLevel.MEMORY_AND_DISK), edges,
+      GraftFunctions.sortedKeyFold(col("w"), _, maxFold,
+        "brandes δ accumulation: use betweennessApproxCore at this scale"))
     // the contrib fold needs no guard: its width is the number of
     // ROOTS reaching v — bounded by the k-source sample, never degree
     val contrib = delta.filter(col("v") =!= col("root"))
@@ -3800,41 +3810,8 @@ object Relational {
       .limit(nPivots).select(col("v").as("root"))
     val vis = brandesForwardFrom(edges, pivots)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val maxLvl = vis.agg(coalesce(max(col("lvl")), lit(0)).as("m"))
-      .head().getInt(0)
     val k = vis.filter(col("lvl") === 0).count() // pivots actually used
-    val sp = vis.select(col("root"), col("v"), col("lvl"),
-        col("sig").as("sigv"))
-      .join(edges, col("v") === col("src"))
-      .join(vis.select(col("root").as("wr"), col("v").as("w"),
-        col("lvl").as("wl"), col("sig").as("sigw")),
-        col("root") === col("wr") && col("dst") === col("w") &&
-          col("wl") === col("lvl") + 1)
-      .select(col("root"), col("v"), col("lvl"), col("sigv"), col("w"),
-        col("sigw"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    sp.count() // eager: one consumer per backward level
-    var prevDelta = graft.Barriers.roundBarrier(
-      vis.filter(col("lvl") === maxLvl)
-        .select(col("root"), col("v"), lit(0.0).as("delta")))
-    var deltaParts = List(prevDelta)
-    for (l <- (maxLvl - 1) to 0 by -1) {
-      val dsum = sp.filter(col("lvl") === l)
-        .join(prevDelta.select(col("root").as("dr"), col("v").as("dv"),
-          col("delta").as("dw")),
-          col("root") === col("dr") && col("w") === col("dv"))
-        .groupBy(col("root"), col("v"))
-        .agg(sum(col("sigv") / col("sigw") * (lit(1.0) + col("dw")))
-          .as("dsum"))
-      val dl = vis.filter(col("lvl") === l)
-        .select(col("root"), col("v"))
-        .join(dsum, Seq("root", "v"), "left_outer")
-        .select(col("root"), col("v"),
-          coalesce(col("dsum"), lit(0.0)).as("delta"))
-      prevDelta = graft.Barriers.roundBarrier(dl)
-      deltaParts ::= prevDelta
-    }
-    val delta = deltaParts.reduce(_ unionAll _)
+    val delta = brandesBackward(vis, edges, sum(_))
     val scale = nVerts.toDouble / k
     val contrib = delta.filter(col("v") =!= col("root"))
       .groupBy(col("v"))
@@ -4708,16 +4685,20 @@ object Relational {
     }
     val mp = m.persist()
     mp.count()
-    var pi = trans.select(col("prev").as("state")).distinct()
-      .select(col("state"), lit(1000000L).as("ppm"))
-    for (_ <- 1 to rounds) {
-      pi = mp.join(pi, col("prev") === col("state"))
-        .select(col("cur"),
-          expr("(ppm * n) div r").as("contrib"))
-        .groupBy(col("cur"))
-        .agg(sum(col("contrib")).cast("bigint").as("ppm"))
-        .select(col("cur").as("state"), col("ppm"))
+    val (pi, _) = graft.Barriers.fixpoint("markov", Horizon(rounds))(
+        trans.select(col("prev").as("state")).distinct()
+          .select(col("state"), lit(1000000L).as("ppm"))) { (pi, _) =>
+      Round(graft.Barriers.roundBarrier(
+        mp.join(pi, col("prev") === col("state"))
+          .select(col("cur"),
+            expr("(ppm * n) div r").as("contrib"))
+          .groupBy(col("cur"))
+          .agg(sum(col("contrib")).cast("bigint").as("ppm"))
+          .select(col("cur").as("state"), col("ppm"))), -1)
     }
+    // the result is checkpoint-truncated (for rounds ≥ 1) and references
+    // neither cache
+    trans.unpersist(); mp.unpersist()
     pi.orderBy(col("state"))
   }
 

@@ -9,7 +9,9 @@ import graft.operators.Relational
   * loops must produce bit-identical results in both barrier modes, and
   * reliable mode must actually write through the session's durable
   * checkpoint dir (the executor-loss-survival property localCheckpoint
-  * lacks at cluster scale).
+  * lacks at cluster scale). Also the round loop's contract
+  * (Barriers.fixpoint) on a toy step: its stop rule, both limits, its
+  * round events and its exceptions.
   */
 class BarriersSpec extends AnyFunSuite {
 
@@ -79,5 +81,65 @@ class BarriersSpec extends AnyFunSuite {
     }
     assert(sizes.distinct.size === 1,
       s"barrier stats must not grow across rounds: $sizes")
+  }
+
+  import Barriers.{Budget, Horizon, Round}
+
+  test("fixpoint: a Budget loop still moving after its last round throws, " +
+      "naming the loop") {
+    var steps = 0
+    val e = intercept[IllegalStateException] {
+      Barriers.fixpoint("toy-budget", Budget(3))(0) { (s, _) =>
+        steps += 1
+        Round(s + 1, 5)
+      }
+    }
+    assert(steps === 3)
+    assert(e.getMessage.contains("toy-budget"), e.getMessage)
+    assert(e.getMessage.contains("5 rows"), e.getMessage)
+  }
+
+  test("fixpoint: a Horizon loop returns its state at the limit") {
+    assert(Barriers.fixpoint("toy-horizon", Horizon(4))(10) { (s, _) =>
+      Round(s + 1, 7)
+    } === ((14, 4)))
+    assert(Barriers.fixpoint("toy-horizon", Horizon(3))("") { (s, r) =>
+      Round(s + r, -1) // not counted: runs every round
+    } === (("123", 3)))
+    assert(Barriers.fixpoint("toy-horizon", Horizon(0))(10) { (_, _) =>
+      fail("a zero horizon runs no round")
+    } === ((10, 0)))
+  }
+
+  test("fixpoint: a round with changed 0 stops the loop") {
+    for (limit <- Seq(Budget(10), Horizon(10)))
+      assert(Barriers.fixpoint("toy-stop", limit)(0) { (s, r) =>
+        Round(s + 1, if (r == 3) 0 else 1)
+      } === ((3, 3)), limit)
+  }
+
+  test("fixpoint: one round event per round, in order, with the step's " +
+      "counts") {
+    val counts = Seq(9L, 4L, 0L)
+    val (_, launched) = TestSpark.launched {
+      Barriers.fixpoint("toy-events", Budget(5))(()) { (_, r) =>
+        Round((), counts(r - 1), s"d$r")
+      }
+    }
+    val rounds = launched.rounds.filter(_.loop == "toy-events")
+    assert(rounds.map(r => (r.round, r.changed, r.detail)) ===
+      Seq((1, 9L, "d1"), (2, 4L, "d2"), (3, 0L, "d3")))
+    assert(rounds.forall(_.wallMs >= 0))
+  }
+
+  test("fixpoint: an exception from the step propagates") {
+    val boom = new ArithmeticException("toy step failed")
+    val e = intercept[ArithmeticException] {
+      Barriers.fixpoint("toy-throw", Budget(5))(0) { (s, r) =>
+        if (r == 2) throw boom
+        Round(s + 1, 1)
+      }
+    }
+    assert(e eq boom)
   }
 }

@@ -16,18 +16,20 @@ object TestSpark {
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  /** What a body launched on the shared session: its job count and the
-    * names of the stages it submitted, in order.
+  /** What a body launched on the shared session: its job count, the
+    * names of the stages it submitted and the loop rounds it posted
+    * ([[Barriers.fixpoint]]), in order.
     */
-  final case class Launched(jobs: Int, stages: Seq[String])
+  final case class Launched(jobs: Int, stages: Seq[String],
+      rounds: Seq[LoopRound])
 
   private val Marker = "test-spark-marker"
 
-  /** Run `body` and return its result with the jobs and stages it
-    * launched. The listener bus is asynchronous and in order: a marker
-    * job seen by the listener means every event posted before it was
-    * seen too, so one marker before `body` drains earlier events and one
-    * after it closes the window.
+  /** Run `body` and return its result with the jobs, stages and loop
+    * rounds it launched. The listener bus is asynchronous and in order:
+    * a marker job seen by the listener means every event posted before
+    * it was seen too, so one marker before `body` drains earlier events
+    * and one after it closes the window.
     */
   def launched[A](body: => A): (A, Launched) = {
     val sc = spark.sparkContext
@@ -35,6 +37,10 @@ object TestSpark {
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = events.put(e)
       override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = events.put(e)
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case r: LoopRound => events.put(r)
+        case _ =>
+      }
     }
     def group(p: java.util.Properties): Option[String] =
       Option(p).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
@@ -65,7 +71,9 @@ object TestSpark {
       val seen = untilMarker()
       (result, Launched(
         seen.count(_.isInstanceOf[SparkListenerJobStart]),
-        seen.collect { case s: SparkListenerStageSubmitted => s.stageInfo.name }))
+        seen.collect {
+          case s: SparkListenerStageSubmitted => s.stageInfo.name },
+        seen.collect { case r: LoopRound => r }))
     } finally sc.removeSparkListener(listener)
   }
 }

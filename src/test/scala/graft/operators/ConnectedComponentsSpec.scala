@@ -43,26 +43,32 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   private def run(pairs: Seq[(Long, Long)], universe: Seq[Long],
       bound: Long): Map[Long, Long] = runLogged(pairs, universe, bound)._1
 
-  /** The labeling plus the regime that produced it, read from the
-    * verbose progress lines: "pairs" (driver finish from the raw pairs),
+  /** The labeling plus the regime that produced it, read from the loop
+    * events the call posted: "pairs" (driver finish from the raw pairs),
     * "contracted" (driver finish from the contracted edges) or
     * "fixpoint" (minLabelFix rounds). */
   private def runLogged(pairs: Seq[(Long, Long)], universe: Seq[Long],
       bound: Long): (Map[Long, Long], String) = {
-    import spark.implicits._
-    val log = new java.io.ByteArrayOutputStream()
-    val got = Console.withOut(log) {
-      Dedup.connectedComponents(spark, pairs.toDF("i", "j"),
-          universe.toDF("id"), driverFinishEdgeBound = bound, verbose = true)
-        .as[(Long, Long)].collect().toMap
-    }
-    val lines = log.toString.linesIterator.toSeq
-    assert(lines.contains(s"[cc] pairs=${pairs.size}"), lines)
+    val (got, rounds) = runRounds(pairs, universe, bound)
+    assert(rounds.exists(r => r.detail == "pairs" && r.changed == pairs.size),
+      rounds)
     val regime =
-      if (lines.exists(_.startsWith("[mlf] connectedComponents"))) "fixpoint"
-      else if (lines.exists(_.startsWith("[cc] superEdges="))) "contracted"
+      if (rounds.exists(_.round > 0)) "fixpoint"
+      else if (rounds.exists(_.detail == "superEdges")) "contracted"
       else "pairs"
     (got, regime)
+  }
+
+  /** The labeling plus the connectedComponents events the call posted. */
+  private def runRounds(pairs: Seq[(Long, Long)], universe: Seq[Long],
+      bound: Long): (Map[Long, Long], Seq[graft.LoopRound]) = {
+    import spark.implicits._
+    val (got, launched) = TestSpark.launched {
+      Dedup.connectedComponents(spark, pairs.toDF("i", "j"),
+          universe.toDF("id"), driverFinishEdgeBound = bound)
+        .as[(Long, Long)].collect().toMap
+    }
+    (got, launched.rounds.filter(_.loop == "connectedComponents"))
   }
 
   // chain 0-1-…-40: diameter 40, the contraction-hostile shape (one
@@ -121,18 +127,12 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val longChain = (0L until 200L).map(t => (1000000L + t, 1000001L + t))
     val ps = star ++ longChain
     val uni = ps.flatMap { case (a, b) => Seq(a, b) }.distinct
-    val log = new java.io.ByteArrayOutputStream()
-    val got = Console.withOut(log) {
-      import spark.implicits._
-      Dedup.connectedComponents(spark, ps.toDF("i", "j"), uni.toDF("id"),
-          driverFinishEdgeBound = -1L, verbose = true)
-        .as[(Long, Long)].collect().toMap
-    }
+    val (got, events) = runRounds(ps, uni, bound = -1L)
     assert(got === reference(ps, uni))
     assert(got(1000200L) === 1000000L)
-    val rounds = log.toString.linesIterator
-      .filter(_.startsWith("[mlf] connectedComponents")).toSeq
-    assert(rounds.exists(_.contains("mode=delta")), rounds.mkString("\n"))
+    val rounds = events.filter(_.round > 0)
+    assert(rounds.exists(_.detail.contains("mode=delta")),
+      rounds.mkString("\n"))
   }
 
   test("raw-pair driver finish, contracted driver finish and distributed " +
