@@ -16,9 +16,10 @@ import org.apache.spark.storage.StorageLevel
 final case class LoopRound(loop: String, round: Int, changed: Long,
     wallMs: Long, detail: String) extends SparkListenerEvent
 
-/** The one round loop of the graph family ([[Barriers.fixpoint]]) and
-  * round-barrier materialization for its rounds, plus the rules
-  * every graph core's loop setup shares: the eager count that
+/** The one round loop of every iterative core ([[Barriers.fixpoint]]:
+  * the graph family, both quantile bisections, the rank join, BPE, the
+  * coreset and k-means) and round-barrier materialization for its
+  * rounds, plus the rules every graph core's loop setup shares: the eager count that
   * materializes a multi-consumer cache and releases what fed it
   * ([[materialize]]), the stationary edge cache ([[stationaryEdges]])
   * and the driver-finish edge bound ([[DriverFinishEdgeBound]]); and the
@@ -76,10 +77,13 @@ object Barriers {
     * round posts one [[LoopRound]] event. An exception from `step`
     * propagates as is.
     *
-    * The step lands its state through [[roundBarrier]] itself: the state
-    * shapes differ too much (pairs of frames, an overlay with counts)
-    * for the loop to do it, and a round that skips the barrier chains
-    * its plan into the next one.
+    * A step whose state holds a per-round DataFrame lands it through
+    * [[roundBarrier]] itself: the state shapes differ too much (pairs of
+    * frames, an overlay with counts) for the loop to do it, and a round
+    * that skips the barrier chains its plan into the next one. A step
+    * whose state lives on the driver over a cached input (bisection
+    * brackets, rank-join slice depth, k-means centroid arrays) has no
+    * lineage to cut.
     */
   def fixpoint[S](loop: String, limit: Limit)(init: S)(
       step: (S, Int) => Round[S]): (S, Int) = {

@@ -2987,7 +2987,7 @@ object SparkEntry {
 
     // grouped extension: the oracle ranks per group by a partitioned
     // cumulative window — the IMPL never does (one GROUPED counting
-    // aggregate per round with group-dependent probe literals); same
+    // bucket count per round over group-keyed probe midpoints); same
     // ceil(q*n) integer-arithmetic k per group on exact cents
     "q_group_quantile_bisect" ->
       """WITH c AS (SELECT l_returnflag,

@@ -330,7 +330,8 @@ object Relational {
     * per-percentile scans; [[BisectFan]]-ary, so the 10⁷-cent corpus
     * domain closes in 2 passes); driver state is the ≤ 3·(fan−1)
     * midpoint histogram. No sort, no window, no shuffle beyond the
-    * bucket counts' combine.
+    * bucket counts' combine. The search is [[groupQuantileBisectCore]]'s
+    * over one constant group (see [[quantileBisectCore]]).
     */
   def qQuantileBisect(spark: SparkSession, dir: String): DataFrame =
     quantileBisectCore(
@@ -406,97 +407,13 @@ object Relational {
   private[graft] def bisectOpen(lo: Long, hi: Long): Boolean =
     java.lang.Long.compareUnsigned(hi - lo, 1L) > 0
 
-  /** The corpus-wide bracket-search body of [[qQuantileBisect]] over an
-    * explicit single-column (v: bigint) relation — factored (r15
-    * verdict) so the spec can drive the domain shapes the shipped cents
-    * corpus never produces: full-width 64-bit brackets (overflow-safe
-    * [[bisectMid]]/[[bisectOpen]]), the Long.MinValue sentinel guard,
-    * and the null-domain guard, each failing loud instead of spinning
-    * to the round cap. */
-  private[graft] def quantileBisectCore(cents0: DataFrame,
-      fan: Int = BisectFan): DataFrame = {
-    val spark = cents0.sparkSession
-    import spark.implicits._
-    val cents = cents0.select(col("v")).persist()
-    cents.count() // eager: min/max bootstrap + every bisection round
-    val mm = cents.agg(coalesce(min(col("v")), lit(0L)),
-      coalesce(max(col("v")), lit(0L)), count(lit(1)),
-      count(col("v"))).head()
-    val (vmin, vmax, n, nv) =
-      (mm.getLong(0), mm.getLong(1), mm.getLong(2), mm.getLong(3))
-    // empty corpus: no order statistics exist — return the empty result
-    // (the oracle's shape) instead of an unboxing NPE on the null min
-    if (n == 0) { cents.unpersist(); return spark.emptyDataFrame
-      .select(lit("").as("pct"), lit(0L).as("k"), lit(0L).as("n_rows"),
-        lit(0L).as("value_cents"), lit(0.0).as("value")).limit(0) }
-    // contract guards, loud (never a spin to the round cap): a null v
-    // makes count(v <= probe) undercount k forever; a Long.MinValue
-    // domain minimum has no exclusive lower sentinel in 64 bits
-    require(nv == n, s"quantile bisection: ${n - nv} null values in the " +
-      "bisection domain — probe counts would undercount k and the " +
-      "bracket search could never close; filter or impute nulls first")
-    require(vmin > Long.MinValue, "quantile bisection: domain minimum " +
-      "is Long.MinValue — the exclusive lower sentinel vmin - 1 does " +
-      "not exist in 64 bits; shift or rescale the value domain")
-    def ceilDiv(a: Long, b: Long) = (a + b - 1) / b
-    // bracket invariant: count(≤lo) < k ≤ count(≤hi); BisectFan-ary
-    // splits (fan − 1 interior probes per bracket per pass; the fan is
-    // a measured constant — see [[BisectFan]] for why wide fans LOSE
-    // on this engine despite saving rounds)
-    final class Bracket(val pct: String, val k: Long) {
-      var lo: Long = vmin - 1
-      var hi: Long = vmax
-      def open: Boolean = bisectOpen(lo, hi)
-      def probes: Seq[Long] =
-        (1 until fan).map(i => bisectMid(lo, hi, i, fan))
-          .filter(m => m > lo && m < hi).distinct
-    }
-    val brackets = Seq(new Bracket("p50", ceilDiv(n, 2)),
-      new Bracket("p90", ceilDiv(9 * n, 10)),
-      new Bracket("p99", ceilDiv(99 * n, 100)))
-    var rounds = 0
-    while (brackets.exists(_.open)) {
-      rounds += 1
-      // 64 halvings cover any 64-bit domain even at binary width: a
-      // logic-error backstop, NEVER a truncation (the fixpoint contract)
-      require(rounds <= 64, s"quantile bisection failed to converge")
-      val probeSets = brackets.map(b => if (b.open) b.probes else Nil)
-      // BUCKETIZED round (r17): one grouped count over the binary-search
-      // bucket index of each row within the merged sorted probe array —
-      // count(v ≤ m) for every probe m falls out of the cumulative bucket
-      // sums, bit-identical to the old per-probe conditional-sum slots at
-      // O(log probes) per row instead of O(probes), which is what lets
-      // [[BisectFan]] be wide (the r16 wide-fan loss was the when-chain
-      // aggregate's width, a cost this shape no longer pays).
-      val allMids = probeSets.flatten.distinct.sorted.toArray
-      val hist = cents
-        .groupBy(GraftFunctions.bisectBucket(lit(""), col("v"),
-          Seq((Some(""), allMids))).as("b"))
-        .agg(count(lit(1)).as("c")).collect()
-      val cum = new Array[Long](allMids.length)
-      hist.foreach { r =>
-        val i = r.getInt(0)
-        // bucket |mids| (v above every probe) contributes to no count(≤ m)
-        if (i >= 0 && i < cum.length) cum(i) = r.getLong(1)
-      }
-      var ci = 0
-      var run = 0L
-      while (ci < cum.length) { run += cum(ci); cum(ci) = run; ci += 1 }
-      def countLe(m: Long): Long =
-        cum(java.util.Arrays.binarySearch(allMids, m))
-      for ((b, ms) <- brackets.zip(probeSets)) {
-        val cnts = ms.map(countLe)
-        cnts.indexWhere(_ >= b.k) match {
-          case -1 => if (ms.nonEmpty) b.lo = ms.last
-          case i => b.hi = ms(i); if (i > 0) b.lo = ms(i - 1)
-        }
-      }
-    }
-    cents.unpersist()
-    brackets.map(b => (b.pct, b.k, n, b.hi, b.hi.toDouble / 100.0))
-      .toDF("pct", "k", "n_rows", "value_cents", "value")
-      .orderBy(col("pct"))
-  }
+  /** The corpus-wide bracket search of [[qQuantileBisect]] over an
+    * explicit single-column (v: bigint) relation: the grouped core over
+    * one constant group, the `grp` column dropped. */
+  private[graft] def quantileBisectCore(cents: DataFrame,
+      fan: Int = BisectFan): DataFrame =
+    groupQuantileBisectCore(cents.select(lit("").as("grp"), col("v")), fan)
+      .drop("grp")
 
   /** Group-count cap for [[qGroupQuantileBisect]]: the per-group probe
     * midpoints ship as a group-keyed reference map whose size (and the
@@ -543,10 +460,20 @@ object Relational {
         col("n_rows"), col("value_cents"), col("value"))
       .orderBy(col("l_returnflag"), col("pct"))
 
-  /** The grouped bracket-search body of [[qGroupQuantileBisect]] over an
-    * explicit (grp: string, v: bigint) relation — factored so the spec
-    * can drive arbitrary group shapes (the 64-group cap throw, known
-    * driver-side references) that the shipped corpus never produces.
+  /** The bracket search of both quantile operators over an explicit
+    * (grp: string, v: bigint) relation ([[quantileBisectCore]] is one
+    * constant group) — factored so the spec can drive the shapes the
+    * shipped corpus never produces: full-width 64-bit brackets
+    * (overflow-safe [[bisectMid]]/[[bisectOpen]]), the Long.MinValue
+    * sentinel and null-domain guards, null group keys and the 64-group
+    * cap, each failing loud instead of spinning to the round cap.
+    *
+    * The rounds run through [[graft.Barriers.fixpoint]] as loop
+    * `quantile-bisect`, `Budget(64)`: 64 halvings cover any 64-bit
+    * domain even at binary width, so reaching it is a logic error, never
+    * a truncation. A round reports the brackets still open; a round
+    * with none open returns without a job, so brackets that close at
+    * bootstrap (single-value groups) cost no round job.
     */
   private[graft] def groupQuantileBisectCore(rows0: DataFrame,
       fan: Int = GroupBisectFan): DataFrame = {
@@ -559,7 +486,7 @@ object Relational {
         count(lit(1)).as("n"), count(col("v")).as("nv"))
       .collect() // dimension-sized by contract (cap below)
     require(gstats.length <= GroupBisectMaxGroups,
-      s"q_group_quantile_bisect: ${gstats.length} groups exceed the " +
+      s"quantile bisection: ${gstats.length} groups exceed the " +
         s"$GroupBisectMaxGroups-group probe-literal cap — per-group " +
         "selection over corpus-sized groupings belongs to " +
         "Ranks.groupedRowNumber (two-pass distributed rank), not a " +
@@ -571,17 +498,17 @@ object Relational {
           lit(0L).as("k"), lit(0L).as("n_rows"),
           lit(0L).as("value_cents"), lit(0.0).as("value")).limit(0)
     }
-    // contract guards, loud (never a spin to the round cap) — same
-    // pair as the ungrouped core: null v undercounts k forever; a
-    // Long.MinValue group minimum has no exclusive lower sentinel
+    // contract guards, loud (never a spin to the round cap): a null v
+    // makes count(v <= probe) undercount k forever; a Long.MinValue
+    // group minimum has no exclusive lower sentinel in 64 bits
     gstats.foreach { r =>
       require(r.getLong(4) == r.getLong(3),
-        s"q_group_quantile_bisect: group '${r.getString(0)}' has " +
+        s"quantile bisection: group '${r.getString(0)}' has " +
           s"${r.getLong(3) - r.getLong(4)} null values in the bisection " +
           "domain — probe counts would undercount k and the bracket " +
           "search could never close; filter or impute nulls first")
       require(r.getLong(1) > Long.MinValue,
-        s"q_group_quantile_bisect: group '${r.getString(0)}' minimum is " +
+        s"quantile bisection: group '${r.getString(0)}' minimum is " +
           "Long.MinValue — the exclusive lower sentinel vmin - 1 does " +
           "not exist in 64 bits; shift or rescale the value domain")
     }
@@ -592,83 +519,79 @@ object Relational {
     val effFan = if (fan > 0) fan
       else math.max(8, math.min(BisectFan,
         GroupBisectMidBudget / (3 * gstats.length) + 1))
-    // one bracket per (group, percentile); same invariant and fan-ary
-    // split as the ungrouped operator ([[bisectMid]]/[[bisectOpen]] —
-    // exact on any 64-bit domain), plus the probes actually shipped
-    // this round (update must pair counts with the midpoints the
-    // expression was BUILT from, not post-update state)
-    final class GB(val grp: String, val pct: String, val k: Long,
-        val n: Long, vmin: Long, vmax: Long) {
-      var lo: Long = vmin - 1
-      var hi: Long = vmax
-      var shipped: IndexedSeq[Long] = IndexedSeq.empty
+    // one bracket per (group, percentile), invariant
+    // count_g(≤lo) < k ≤ count_g(≤hi), split effFan-ary
+    final case class Bracket(grp: String, pct: String, k: Long, n: Long,
+        lo: Long, hi: Long) {
       def open: Boolean = bisectOpen(lo, hi)
-      def probe(i: Int): Long = bisectMid(lo, hi, i, effFan)
     }
     val pcts = Seq("p50" -> ((n: Long) => ceilDiv(n, 2)),
       "p90" -> ((n: Long) => ceilDiv(9 * n, 10)),
       "p99" -> ((n: Long) => ceilDiv(99 * n, 100)))
-    val brackets = gstats.toSeq.flatMap { r =>
+    val brackets0 = gstats.toSeq.flatMap { r =>
       val (g, mn, mx, n) =
         (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3))
-      pcts.map { case (p, kf) => new GB(g, p, kf(n), n, mn, mx) }
+      pcts.map { case (p, kf) => Bracket(g, p, kf(n), n, mn - 1, mx) }
     }
-    var rounds = 0
-    val nProbes = effFan - 1
-    while (brackets.exists(_.open)) {
-      rounds += 1
-      require(rounds <= 64, "grouped quantile bisection failed to converge")
-      // BUCKETIZED round (r17, mirrors the ungrouped core): every open
-      // bracket's midpoints merge into its GROUP's sorted probe array,
-      // rows bucketize by one binary search ([[graft.functions
-      // .GraftFunctions.bisectBucket]] — a null group key is a
-      // first-class map key, preserving the r15 <=> null-group
-      // contract), and ONE grouped count per round replaces the
-      // 3 · (fan − 1) CASE-chain slots: count_g(v ≤ m) falls out of the
-      // group's cumulative bucket sums. Per-row cost is O(log probes)
-      // instead of O(fan · groups) chain arms, so the fan can be wide
-      // (see [[BisectFan]]) and per-round cost no longer grows with the
-      // group count.
-      brackets.foreach(b => b.shipped =
-        if (b.open) (1 to nProbes).map(b.probe(_)) else IndexedSeq.empty)
-      val midsByGrp: Seq[(Option[String], Array[Long])] = brackets
-        .filter(_.open).groupBy(b => Option(b.grp)).toSeq
-        .map { case (g, bs) =>
-          (g, bs.flatMap(_.shipped).distinct.sorted.toArray)
-        }
-      val res = rows
-        .groupBy(col("grp"),
-          GraftFunctions.bisectBucket(col("grp"), col("v"), midsByGrp)
-            .as("b"))
-        .agg(count(lit(1)).as("c")).collect()
-      val rowsByGrp = res.groupBy(r => Option(r.getString(0)))
-      val countLeByGrp: Map[Option[String], Long => Long] = midsByGrp
-        .map { case (g, m) =>
-          val cum = new Array[Long](m.length)
-          rowsByGrp.getOrElse(g, Array.empty[org.apache.spark.sql.Row])
-            .foreach { r =>
-              val i = r.getInt(1)
-              // bucket |m| (v above every probe) feeds no count(≤ mid)
-              if (i >= 0 && i < cum.length) cum(i) = r.getLong(2)
+    val (brackets, _) = graft.Barriers.fixpoint("quantile-bisect",
+        Budget(64))(brackets0) { (brackets, _) =>
+      if (!brackets.exists(_.open)) Round(brackets, 0)
+      else {
+        // BUCKETIZED round (r17): every open bracket's midpoints merge
+        // into its GROUP's sorted probe array, rows bucketize by one
+        // binary search ([[graft.functions.GraftFunctions.bisectBucket]]
+        // — a null group key is a first-class map key, preserving the
+        // r15 <=> null-group contract), and ONE grouped count per round
+        // replaces the per-probe conditional-sum slots: count_g(v ≤ m)
+        // falls out of the group's cumulative bucket sums. Per-row cost
+        // is O(log probes), so the fan can be wide (see [[BisectFan]])
+        // and per-round cost does not grow with the group count.
+        val shipped = brackets.map(b =>
+          if (b.open) (1 until effFan).map(bisectMid(b.lo, b.hi, _, effFan))
+          else IndexedSeq.empty[Long])
+        val midsByGrp: Seq[(Option[String], Array[Long])] =
+          brackets.zip(shipped).filter(_._1.open)
+            .groupBy(bs => Option(bs._1.grp)).toSeq
+            .map { case (g, bs) =>
+              (g, bs.flatMap(_._2).distinct.sorted.toArray)
             }
-          var ci = 0
-          var run = 0L
-          while (ci < cum.length) { run += cum(ci); cum(ci) = run; ci += 1 }
-          g -> ((mid: Long) => cum(java.util.Arrays.binarySearch(m, mid)))
-        }.toMap
-      for (b <- brackets if b.open) {
-        val countLe = countLeByGrp(Option(b.grp))
-        // valid = strictly interior midpoints, deduplicated (a narrow
-        // bracket repeats midpoints); counts are monotone across them
-        val valid = b.shipped
-          .filter(m => m > b.lo && m < b.hi).distinct
-          .map(m => (m, countLe(m)))
-        valid.indexWhere(_._2 >= b.k) match {
-          case -1 => if (valid.nonEmpty) b.lo = valid.last._1
-          case i =>
-            b.hi = valid(i)._1
-            if (i > 0) b.lo = valid(i - 1)._1
+        val res = rows
+          .groupBy(col("grp"),
+            GraftFunctions.bisectBucket(col("grp"), col("v"), midsByGrp)
+              .as("b"))
+          .agg(count(lit(1)).as("c")).collect()
+        val rowsByGrp = res.groupBy(r => Option(r.getString(0)))
+        val countLeByGrp: Map[Option[String], Long => Long] = midsByGrp
+          .map { case (g, m) =>
+            val cum = new Array[Long](m.length)
+            rowsByGrp.getOrElse(g, Array.empty[org.apache.spark.sql.Row])
+              .foreach { r =>
+                val i = r.getInt(1)
+                // bucket |m| (v above every probe) feeds no count(≤ mid)
+                if (i >= 0 && i < cum.length) cum(i) = r.getLong(2)
+              }
+            var ci = 0
+            var run = 0L
+            while (ci < cum.length) { run += cum(ci); cum(ci) = run; ci += 1 }
+            g -> ((mid: Long) => cum(java.util.Arrays.binarySearch(m, mid)))
+          }.toMap
+        val next = brackets.zip(shipped).map { case (b, ms) =>
+          if (!b.open) b
+          else {
+            val countLe = countLeByGrp(Option(b.grp))
+            // valid = strictly interior midpoints, deduplicated (a narrow
+            // bracket repeats midpoints); counts are monotone across them
+            val valid = ms.filter(m => m > b.lo && m < b.hi).distinct
+              .map(m => (m, countLe(m)))
+            valid.indexWhere(_._2 >= b.k) match {
+              case -1 => if (valid.isEmpty) b else b.copy(lo = valid.last._1)
+              case 0 => b.copy(hi = valid(0)._1)
+              case i => b.copy(lo = valid(i - 1)._1, hi = valid(i)._1)
+            }
+          }
         }
+        Round(next, next.count(_.open).toLong,
+          s"mids=${midsByGrp.map(_._2.length).sum}")
       }
     }
     rows.unpersist()
@@ -6114,76 +6037,76 @@ object Relational {
     */
   private[graft] val RankJoinMaxRankedRows = 100000000L
 
-  private[graft] def rankJoinCore(cr0: DataFrame, sr0: DataFrame,
-      bridge0: DataFrame, k: Int,
+  private[graft] def rankJoinCore(cr: DataFrame, sr: DataFrame,
+      bridge: DataFrame, k: Int,
       maxRanked: Long = RankJoinMaxRankedRows): (DataFrame, Int) = {
     import org.apache.spark.storage.StorageLevel
-    val spark = cr0.sparkSession
-    val cr = cr0.persist(StorageLevel.MEMORY_AND_DISK)
-    val sr = sr0.persist(StorageLevel.MEMORY_AND_DISK)
-    val bridge = bridge0.persist(StorageLevel.MEMORY_AND_DISK)
-    val nC = cr.count() // eager: sliced every round
-    val nS = sr.count()
-    require(nC <= maxRanked && nS <= maxRanked,
-      s"rank join inputs must be dimension-sized (≤$maxRanked " +
-        s"ranked rows; got $nC / $nS): the per-round slice and the " +
-        "full-coverage exit are TakeOrdered merges bounded by the input")
-    bridge.count() // eager: joined every round
-    def bd(r: org.apache.spark.sql.Row, i: Int): java.math.BigDecimal =
-      r.getDecimal(i)
-    val maxes = cr.agg(max(col("crev"))).head()
-    val maxC = bd(maxes, 0)
-    val maxS = bd(sr.agg(max(col("srev"))).head(), 0)
-    var c = 64L
-    var rounds = 0
-    var result: Option[DataFrame] = None
-    while (result.isEmpty) {
-      rounds += 1
-      // a logic-error backstop, NEVER a truncation: c covers both
-      // inputs long before 40 quadruplings (the full-coverage branch
-      // below is the guaranteed exit)
-      require(rounds <= 40, s"rank join failed to converge: c=$c")
-      val cInt = c.min(Int.MaxValue.toLong).toInt // limit() takes Int;
-      // past 2^31 ranked rows the TA must have terminated on the bound
-      // (or the round cap raises loudly — never a silent truncation)
-      val cs = cr.orderBy(col("crev").desc, col("custkey")).limit(cInt)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val ss = sr.orderBy(col("srev").desc, col("suppkey")).limit(cInt)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      cs.count(); ss.count() // eager: threshold row + candidate join
-      val cand = bridge
-        .join(broadcast(cs), Seq("custkey"))
-        .join(broadcast(ss), Seq("suppkey"))
-        .select(col("custkey"), col("suppkey"),
-          (col("crev") + col("srev")).as("score"))
-      val topk = cand
-        .orderBy(col("score").desc, col("custkey"), col("suppkey"))
-        .limit(k)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      val found = topk.count()
-      // full coverage is judged on the SLICED count cInt, not the raw
-      // deepening counter c: if c saturated Int.MaxValue while an input
-      // is larger, the slices are NOT total and declaring them so would
-      // silently truncate — instead the rounds require above fires
-      val full = cInt.toLong >= nC && cInt.toLong >= nS
-      if (full) result = Some(topk)
-      else if (found == k) {
-        // τ = the slice's smallest included value: any unseen pair has
-        // one side at or below its τ
-        val tauC = bd(cs.agg(min(col("crev"))).head(), 0)
-        val tauS = bd(ss.agg(min(col("srev"))).head(), 0)
-        val bound = tauC.add(maxS).max(maxC.add(tauS))
-        val kth = bd(topk.agg(min(col("score"))).head(), 0)
-        if (kth.compareTo(bound) > 0) result = Some(topk)
+    // inputs the caller already persisted are read, never released, here
+    val owned = Seq(cr, sr, bridge).filter(_.storageLevel == StorageLevel.NONE)
+    owned.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
+    // the returned top-k is its own materialized cache: once the loop has
+    // counted it (or thrown), nothing reads the three inputs again
+    val (topk, rounds) = try {
+      val nC = cr.count() // eager: sliced every round
+      val nS = sr.count()
+      require(nC <= maxRanked && nS <= maxRanked,
+        s"rank join inputs must be dimension-sized (≤$maxRanked " +
+          s"ranked rows; got $nC / $nS): the per-round slice and the " +
+          "full-coverage exit are TakeOrdered merges bounded by the input")
+      bridge.count() // eager: joined every round
+      def bd(r: org.apache.spark.sql.Row, i: Int): java.math.BigDecimal =
+        r.getDecimal(i)
+      val maxC = bd(cr.agg(max(col("crev"))).head(), 0)
+      val maxS = bd(sr.agg(max(col("srev"))).head(), 0)
+      // a Budget, not a truncation: c covers both inputs long before 40
+      // quadruplings (the full-coverage branch below is the guaranteed
+      // exit); a round reports 0 exactly when it returns the top-k, else
+      // its slice depth
+      val ((_, result), rounds) = graft.Barriers.fixpoint("rank-join",
+          Budget(40))((64L, Option.empty[DataFrame])) { case ((c, _), _) =>
+        val cInt = c.min(Int.MaxValue.toLong).toInt // limit() takes Int;
+        // past 2^31 ranked rows the TA must have terminated on the bound
+        // (or the Budget throws — never a silent truncation)
+        val cs = cr.orderBy(col("crev").desc, col("custkey")).limit(cInt)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        val ss = sr.orderBy(col("srev").desc, col("suppkey")).limit(cInt)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        cs.count(); ss.count() // eager: threshold row + candidate join
+        val cand = bridge
+          .join(broadcast(cs), Seq("custkey"))
+          .join(broadcast(ss), Seq("suppkey"))
+          .select(col("custkey"), col("suppkey"),
+            (col("crev") + col("srev")).as("score"))
+        val topk = cand
+          .orderBy(col("score").desc, col("custkey"), col("suppkey"))
+          .limit(k)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        val found = topk.count()
+        // full coverage is judged on the SLICED count cInt, not the raw
+        // deepening counter c: if c saturated Int.MaxValue while an input
+        // is larger, the slices are NOT total and declaring them so would
+        // silently truncate — instead the Budget throws
+        val done = (cInt.toLong >= nC && cInt.toLong >= nS) || (found == k && {
+          // τ = the slice's smallest included value: any unseen pair has
+          // one side at or below its τ
+          val tauC = bd(cs.agg(min(col("crev"))).head(), 0)
+          val tauS = bd(ss.agg(min(col("srev"))).head(), 0)
+          val bound = tauC.add(maxS).max(maxC.add(tauS))
+          val kth = bd(topk.agg(min(col("score"))).head(), 0)
+          kth.compareTo(bound) > 0
+        })
+        if (!done) topk.unpersist()
+        cs.unpersist(); ss.unpersist()
+        if (done) Round((c, Some(topk)), 0, s"c=$c found=$found")
+        else Round((c * 4, None), c, s"c=$c found=$found")
       }
-      if (result.isEmpty) { topk.unpersist(); c *= 4 }
-      cs.unpersist(); ss.unpersist()
-    }
+      (result.get, rounds)
+    } finally owned.foreach(_.unpersist())
     // order on the exact DECIMAL score (the oracle's ORDER BY key) and
     // cast to double only in the select list: two distinct decimals
     // collapsing to one double must still order by decimal, not by the
     // (custkey, suppkey) tie-break
-    val out = result.get
+    val out = topk
       .orderBy(col("score").desc, col("custkey"), col("suppkey"))
       .select(col("custkey"), col("suppkey"),
         col("score").cast("double").as("pair_score"))

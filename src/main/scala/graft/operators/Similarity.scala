@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.Barriers.{Horizon, Round}
 import graft.functions.GraftFunctions
 
 /** Approximate-nearest-neighbor search over the embeddings table
@@ -153,10 +154,13 @@ object Similarity {
       : Array[(Long, Array[Float])] = {
     val e = Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
-    var cents: Array[(Long, Array[Float])] = e.filter(col("vec_id") < k)
+    val cents0 = e.filter(col("vec_id") < k)
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toArray))
-    for (_ <- 0 until iters) {
+    // loop `kmeans`: exactly `iters` Lloyd rounds, no early stop — the
+    // double sums are not bit-stable across merge orders, so "no centroid
+    // moved" is not a reliable test
+    graft.Barriers.fixpoint("kmeans", Horizon(iters))(cents0) { (cents, _) =>
       // fused argmax kernel — same ranking as the cellRanks reference
       val assigned = e.withColumn("cell",
         element_at(GraftFunctions.ivfTopCells(col("embedding"), cents, 1), 1))
@@ -173,9 +177,9 @@ object Similarity {
           (cell, v)
         }
       // empty cells keep their previous centroid (deterministic)
-      cents = cents.map { case (cid, cv) => (cid, updated.getOrElse(cid, cv)) }
-    }
-    cents
+      Round(cents.map { case (cid, cv) => (cid, updated.getOrElse(cid, cv)) },
+        -1)
+    }._1
   }
 
   /** Best-first cell ranking of a vector against an explicit centroid
@@ -518,7 +522,8 @@ object Similarity {
     * 256-byte broadcast literal — min over the chosen set never
     * recomputes — and the argmin is a 1-row struct-min aggregate
     * (smax asc, vec_id asc), the same k·dim bounded driver result per
-    * round the k-means trainer already owns. Rounds land in
+    * round the k-means trainer already owns. Rounds run through
+    * [[graft.Barriers.fixpoint]] and land in
     * [[graft.Barriers.roundBarrier]] (O(1) lineage, the CLAUDE.md
     * iterative contract). The selection compares raw doubles computed by
     * the identical sequential fold on both engines (incremental
@@ -537,31 +542,30 @@ object Similarity {
       .collect()(0) // 1 row: the deterministic seed center
     val seedId = seed.getLong(0)
     val seedVec = seed.getSeq[Float](1)
-    val chosen = scala.collection.mutable.ArrayBuffer[(Long, Long, Option[Double])](
-      (1L, seedId, None))
-    var state = graft.Barriers.roundBarrier(
+    val state0 = graft.Barriers.roundBarrier(
       e.filter(col("vec_id") =!= seedId)
         .select(col("vec_id"), col("embedding"),
           GraftFunctions.cosine(col("embedding"), typedlit(seedVec)).as("smax")))
-    var step = 2
-    while (step <= k) {
+    // loop `coreset`: round r picks center r + 1; the last round's state
+    // is never read, so it skips the barrier
+    val ((_, chosen), _) = graft.Barriers.fixpoint("coreset", Horizon(k - 1))(
+        (state0, Vector[(Long, Long, Option[Double])]((1L, seedId, None)))) {
+        case ((state, chosen), round) =>
       val best = state
         .agg(min(struct(col("smax"), col("vec_id"), col("embedding"))).as("b"))
         .select(col("b.smax"), col("b.vec_id"), col("b.embedding"))
         .collect()(0) // 1 row: this round's center (+ its 256-byte vector)
-      val cover = best.getDouble(0)
       val id = best.getLong(1)
       val vec = best.getSeq[Float](2)
-      chosen += ((step.toLong, id, Some(cover)))
-      if (step < k) {
-        state = graft.Barriers.roundBarrier(
+      val next =
+        if (round == k - 1) state
+        else graft.Barriers.roundBarrier(
           state.filter(col("vec_id") =!= id)
             .select(col("vec_id"), col("embedding"),
               greatest(col("smax"),
                 GraftFunctions.cosine(col("embedding"), typedlit(vec)))
                 .as("smax")))
-      }
-      step += 1
+      Round((next, chosen :+ ((round + 1L, id, Some(best.getDouble(0))))), -1)
     }
     chosen.toSeq.toDF("rank", "vec_id", "cover_raw")
       .select(col("rank"), col("vec_id"),

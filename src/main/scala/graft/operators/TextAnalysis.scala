@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
+import graft.Barriers.{Horizon, Round}
 import graft.functions.GraftFunctions
 
 /** Text-analysis suite over the documents table (SURVEY.md §2.4).
@@ -1569,8 +1570,9 @@ object TextAnalysis {
     * combined count, a 1-row TakeOrdered argmax to the driver (the
     * bounded per-round result the k-means trainer also owns), and a
     * functions.aggregate fold applying the merge — no corpus re-scan,
-    * rounds land in [[graft.Barriers.roundBarrier]] (the iterative-loop
-    * invariant: eager truncation, never persist/unpersist chains).
+    * rounds run through [[graft.Barriers.fixpoint]] and land in
+    * [[graft.Barriers.roundBarrier]] (the iterative-loop invariant:
+    * eager truncation, never persist/unpersist chains).
     */
   def pipelineBpeFit(spark: SparkSession, dir: String): DataFrame =
     pipelineBpeFit(spark, dir, 12)
@@ -1600,13 +1602,14 @@ object TextAnalysis {
       : (DataFrame, DataFrame) = {
     val spark = wordFreq.sparkSession
     import spark.implicits._
-    var words = graft.Barriers.roundBarrier(
+    val words0 = graft.Barriers.roundBarrier(
       wordFreq.select(col("w"), col("freq"), split(col("w"), "").as("syms")))
-    val merges = scala.collection.mutable.ArrayBuffer
-      .empty[(Long, String, String, Long, String)]
-    var round = 1
-    var done = false
-    while (round <= rounds && !done) {
+    // loop `bpe`: a round reports its merged pair's count, 0 when no pair
+    // reaches count 2 (the early stop); `rounds` is the definition's
+    // merge count, so reaching it returns
+    val ((words, merges), _) = graft.Barriers.fixpoint("bpe", Horizon(rounds))(
+        (words0, Vector.empty[(Long, String, String, Long, String)])) {
+        case ((words, merges), round) =>
       val best = words
         .select(col("freq"), explode(arrays_zip(
           slice(col("syms"), lit(1), size(col("syms")) - 1).as("l"),
@@ -1617,17 +1620,17 @@ object TextAnalysis {
         .orderBy(col("cnt").desc, col("l"), col("r"))
         .limit(1)
         .collect() // 1 row: this round's merge (driver-bounded argmax)
-      if (best.isEmpty || best(0).getLong(2) < 2L) done = true
+      if (best.isEmpty || best(0).getLong(2) < 2L)
+        Round((words, merges), 0)
       else {
         val l = best(0).getString(0)
         val r = best(0).getString(1)
         val cnt = best(0).getLong(2)
-        merges += ((round.toLong, l, r, cnt, l + r))
         // greedy left-to-right merge: a just-merged symbol never
         // re-merges with the next element in the same pass (the fold
         // compares the ACCUMULATED last symbol, which is l+r ≠ l unless
         // r is empty — and "" never appears as a pair side)
-        words = graft.Barriers.roundBarrier(
+        val next = graft.Barriers.roundBarrier(
           words.select(col("w"), col("freq"),
             aggregate(col("syms"),
               array().cast("array<string>"),
@@ -1636,10 +1639,10 @@ object TextAnalysis {
                 concat(slice(acc, lit(1), size(acc) - 1),
                   array(lit(l + r))))
                 .otherwise(concat(acc, array(x)))).as("syms")))
-        round += 1
+        Round((next, merges :+ ((round.toLong, l, r, cnt, l + r))), cnt)
       }
     }
-    (merges.toSeq.toDF("round", "left", "right", "pair_count", "merged")
+    (merges.toDF("round", "left", "right", "pair_count", "merged")
       .orderBy(col("round")), words)
   }
 

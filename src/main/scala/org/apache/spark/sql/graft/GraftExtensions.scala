@@ -186,7 +186,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
     ext.injectTableFunction((FunctionIdentifier("graft_quantile_bisect"),
       info("graft_quantile_bisect",
-        "graft_quantile_bisect(corpus_dir) - exact corpus-wide order statistics (p50/p90/p99 of lineitem extended price) by driver-coordinated 8-ary bisection, no sort (table function)"),
+        "graft_quantile_bisect(corpus_dir) - exact corpus-wide order statistics (p50/p90/p99 of lineitem extended price) by a driver-coordinated bucketized bracket search (fan 4096), no sort (table function)"),
       (c0: Seq[Expression]) => { val c = arity(c0, 1, "graft_quantile_bisect")
         graft.operators.Relational.qQuantileBisect(
             org.apache.spark.sql.SparkSession.active,
@@ -198,7 +198,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // reachable without Scala just like its ungrouped sibling
     ext.injectTableFunction((FunctionIdentifier("graft_group_quantile_bisect"),
       info("graft_group_quantile_bisect",
-        "graft_group_quantile_bisect(corpus_dir) - exact PER-GROUP order statistics (p50/p90/p99 of lineitem extended price per return flag) by grouped driver-coordinated bisection with group-dependent probe literals, no partitioned sort (table function)"),
+        "graft_group_quantile_bisect(corpus_dir) - exact PER-GROUP order statistics (p50/p90/p99 of lineitem extended price per return flag) by a grouped driver-coordinated bucketized bracket search (group-keyed probe midpoints, fan adaptive to the group count), no partitioned sort (table function)"),
       (c0: Seq[Expression]) => {
         val c = arity(c0, 1, "graft_group_quantile_bisect")
         graft.operators.Relational.qGroupQuantileBisect(

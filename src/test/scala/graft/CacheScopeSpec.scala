@@ -65,4 +65,35 @@ class CacheScopeSpec extends AnyFunSuite {
     GraftCaches.release(spark)
     assert(sqlCacheCount === 0)
   }
+
+  test("rank join releases the input caches it persisted once the top-k " +
+      "is materialized, also when it throws; the plan-referenced top-k " +
+      "is the one cache left, and a caller's cache stays the caller's") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    def rel(key: String, v: String, top: Long) =
+      (0L until 100L).map(i => (i, top - i)).toDF(key, "raw")
+        .select(col(key), col("raw").cast("decimal(18,2)").as(v))
+    val cr = rel("custkey", "crev", 5000L)
+    val sr = rel("suppkey", "srev", 7000L)
+    val bridge = (0L until 100L).map(i => (i, (i * 7) % 100L))
+      .toDF("custkey", "suppkey")
+    GraftCaches.release(spark) // clean baseline
+    Relational.rankJoinCore(cr, sr, bridge, 5)._1.collect()
+    assert(sqlCacheCount === 1, "only the returned top-k may stay cached")
+    GraftCaches.release(spark)
+
+    intercept[IllegalArgumentException] {
+      Relational.rankJoinCore(cr, sr, bridge, 5, maxRanked = 10L)
+    }
+    assert(sqlCacheCount === 0, "a throwing rank join must release its inputs")
+
+    val mine = cr.persist()
+    mine.count()
+    Relational.rankJoinCore(mine, sr, bridge, 5)._1.collect()
+    assert(sqlCacheCount === 2, "the caller's cache and the top-k")
+    assert(mine.storageLevel !== org.apache.spark.storage.StorageLevel.NONE)
+    GraftCaches.release(spark)
+    assert(sqlCacheCount === 0)
+  }
 }

@@ -268,4 +268,33 @@ class GroupQuantileBisectSpec extends AnyFunSuite {
     assert(got.count() === 0L)
     graft.GraftCaches.release(spark)
   }
+
+  test("brackets closed at bootstrap (single-value groups only) run no " +
+      "round job: one quantile-bisect round with 0 open, set-up jobs only") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val data = (1 to 5).map(_ => ("a", 7L)) ++ Seq(("b", -2L)) ++
+      (1 to 3).map(_ => ("c", 0L))
+    val df = data.toDF("grp", "v")
+    // the core's set-up actions alone: the eager cache count and the
+    // group bootstrap aggregate
+    val (_, setup) = TestSpark.launched {
+      val rows = df.persist()
+      rows.count()
+      rows.groupBy(col("grp"))
+        .agg(min(col("v")), max(col("v")), count(lit(1)), count(col("v")))
+        .collect()
+      rows.unpersist()
+    }
+    val (built, launched) =
+      TestSpark.launched { Relational.groupQuantileBisectCore(df) }
+    val rounds = launched.rounds.filter(_.loop == "quantile-bisect")
+    assert(rounds.map(r => (r.round, r.changed)) === Seq((1, 0L)))
+    assert(launched.jobs === setup.jobs,
+      s"round jobs ran: ${launched.stages}")
+    val got = built.collect()
+      .map(r => (r.getString(1), r.getString(0)) -> r.getLong(4)).toMap
+    graft.GraftCaches.release(spark)
+    assert(got === ref(data))
+  }
 }
