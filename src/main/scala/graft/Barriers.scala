@@ -19,12 +19,12 @@ final case class LoopRound(loop: String, round: Int, changed: Long,
 /** The one round loop of every iterative core ([[Barriers.fixpoint]]:
   * the graph family, both quantile bisections, the rank join, BPE, the
   * coreset and k-means) and round-barrier materialization for its
-  * rounds, plus the rules every graph core's loop setup shares: the eager count that
-  * materializes a multi-consumer cache and releases what fed it
-  * ([[materialize]]), the stationary edge cache ([[stationaryEdges]])
-  * and the driver-finish edge bound ([[DriverFinishEdgeBound]]); and the
-  * scoped reliable checkpoint of sinks that write into what they read
-  * ([[withCheckpoint]]).
+  * rounds; the one shared-relation cache of every operator
+  * ([[materialize]]: persist, eager count, upstream release), with the
+  * graph cores' stationary edge cache on top of it ([[stationaryEdges]])
+  * and their driver-finish edge bound ([[DriverFinishEdgeBound]]); and
+  * the scoped reliable checkpoint of sinks that write into what they
+  * read ([[withCheckpoint]]).
   *
   * Every loop here cuts its per-round lineage with an EAGER checkpoint
   * (the CLAUDE.md iterative contract — persist/unpersist chains break
@@ -167,36 +167,46 @@ object Barriers {
     }
   }
 
-  /** Materialize an already persisted multi-consumer cache: EAGERLY count
-    * it before any consumer is built — a cold multi-consumer cache races
-    * concurrent stages into each recomputing the upstream pipeline (the
-    * eager-count invariant) — then unpersist the caches in
-    * `releaseAfterMaterialize`, which fed only its subtree and are dead
-    * weight once it holds the rows. Returns the row count. The one
-    * release point for upstream caches: [[stationaryEdges]] and
-    * connected components' pair cache both materialize through it.
+  /** Whether `df`'s plan is already in the session cache (persisted by
+    * this or an equal plan). Operators that release only the caches they
+    * made test their inputs with it before [[materialize]].
     */
-  def materialize(cached: DataFrame,
-      releaseAfterMaterialize: Seq[DataFrame] = Nil): Long = {
-    val n = cached.count()
-    releaseAfterMaterialize.foreach(_.unpersist())
-    n
+  def cached(df: DataFrame): Boolean = df.storageLevel != StorageLevel.NONE
+
+  /** The one shared-relation combinator: persist `df` at
+    * MEMORY_AND_DISK (an input that is already [[cached]] keeps its
+    * storage level), EAGERLY count it before any consumer is built,
+    * then unpersist the caches in `release`, which fed only its subtree
+    * and are dead weight once it holds the rows. Returns the cached
+    * relation and its row count.
+    *
+    * This is the CLAUDE.md cache invariant in one place. A relation with
+    * two or more consumers is persisted, not checkpointed: the cache
+    * keeps the column stats downstream join planning reads. And it is
+    * counted before its consumers exist: the scheduler runs independent
+    * consumer stages concurrently, and against a cold cache each of them
+    * recomputes the upstream pipeline (r5: containment 6 s isolated vs
+    * 118 s in-suite). The caller owns the returned cache: it unpersists
+    * it when its result no longer reads it, or leaves it to
+    * [[GraftCaches.release]].
+    */
+  def materialize(df: DataFrame,
+      release: Seq[DataFrame] = Nil): (DataFrame, Long) = {
+    if (!cached(df)) df.persist(StorageLevel.MEMORY_AND_DISK)
+    val n = df.count()
+    release.foreach(_.unpersist())
+    (df, n)
   }
 
   /** The edge list a graph loop joins every round, made STATIONARY:
     * partitioned once by `src` (the per-round join key, so rounds
-    * shuffle only the slim frontier/label side, never the edges),
-    * persisted, and [[materialize]]d before any consumer is built,
-    * releasing `releaseAfterMaterialize`. Returns the cache and its row
-    * count; the caller owns the cache and unpersists it when its loop
-    * is done.
+    * shuffle only the slim frontier/label side, never the edges) and
+    * [[materialize]]d, releasing `release`. Returns the cache and its
+    * row count; the caller unpersists the cache when its loop is done.
     */
   def stationaryEdges(edges: DataFrame,
-      releaseAfterMaterialize: Seq[DataFrame] = Nil): (DataFrame, Long) = {
-    val cached = edges.repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    (cached, materialize(cached, releaseAfterMaterialize))
-  }
+      release: Seq[DataFrame] = Nil): (DataFrame, Long) =
+    materialize(edges.repartition(col("src")), release)
 
   /** Edge count at or under which a graph core finishes on the DRIVER
     * (connected components' union-find, SCC's Tarjan scan, k-core's

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Distributed exact ranking — the two-pass (range sort + zipWithIndex)
   * assignment used wherever a TOTAL order over a fact-sized relation
@@ -44,16 +43,12 @@ object Ranks {
     * join — intended for SMALL group counts (event types, corpus
     * sources) whose per-group slices are corpus-sized, exactly the
     * partitions a ranking window must not own. Adds `out` (rank within
-    * group) and `sizeOut` (group row count). The ranked relation is
-    * persisted and eagerly counted: it has two consumers, and a cold
-    * cache raced concurrently recomputes the sort per consumer
-    * (CLAUDE.md invariant).
+    * group) and `sizeOut` (group row count). The ranked relation has
+    * two consumers, so it is [[Barriers.materialize]]d.
     */
   def groupedRowNumber(df: DataFrame, group: Column, out: String,
       sizeOut: String, order: Column*): DataFrame = {
-    val g = rowNumber(df, "_grk", (group +: order): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    g.count()
+    val (g, _) = Barriers.materialize(rowNumber(df, "_grk", (group +: order): _*))
     val off = g.groupBy(group.as("_gkey"))
       .agg((min(col("_grk")) - 1L).as("_goff"),
         count(lit(1)).as(sizeOut))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.Barriers.materialize
 import graft.functions.GraftFunctions
 
 /** LLM-pipeline deduplication suite (SURVEY.md §2.3).
@@ -37,16 +38,21 @@ object Dedup {
     * not inline a non-cheap expression its consumer references more than
     * once, so the split now runs once per document.
     */
-  private[graft] def shingleSets(docs: DataFrame): DataFrame = {
-    val t = col("w")
+  private[graft] def shingleSets(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), toks.as("w"))
-      .select(col("doc_id"), array_sort(array_distinct(
-        when(size(t) >= 3,
-          transform(sequence(lit(0), size(t) - 3),
-            i => concat_ws(" ", element_at(t, i + 1), element_at(t, i + 2),
-              element_at(t, i + 3))))
-          .otherwise(array().cast("array<string>")))).as("sh"))
-  }
+      .select(col("doc_id"),
+        array_sort(array_distinct(word3Grams(col("w")))).as("sh"))
+
+  /** The word 3-grams of a token array, in order (empty when it has < 3
+    * tokens). `w` must be an already-landed column: the lambda reads it
+    * three times per gram (the [[shingleSets]] note).
+    */
+  private[graft] def word3Grams(w: Column): Column =
+    when(size(w) >= 3,
+      transform(sequence(lit(0), size(w) - 3),
+        i => concat_ws(" ", element_at(w, i + 1), element_at(w, i + 2),
+          element_at(w, i + 3))))
+      .otherwise(array().cast("array<string>"))
 
   /** Jaccard over sorted+distinct sets: one merge walk per pair (codegen'd
     * kernel) — the sort happens once per DOC in the projection, not once
@@ -198,7 +204,7 @@ object Dedup {
       .repartition(col("doc_id")) // single-row-group parquet → spread CPU
       .select(col("doc_id"), toks.as("w"))
       .select(col("doc_id"), expr(grams).as("hs"))
-      // plan barrier only (single consumer — no eager count needed)
+      // raw persist: a plan barrier for its one consumer, no count needed
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     hashed
       .select(col("doc_id"), explode(expr(sel)).as("span_fp"))
@@ -236,11 +242,11 @@ object Dedup {
   private def ngramPairs(spark: SparkSession, dir: String)
       : (DataFrame, Seq[DataFrame]) = {
     // repartition: single-row-group testdata parquet would tokenize in ONE
-    // task; persist (NOT localCheckpoint — stats, see CLAUDE.md): t feeds
-    // the df count and the vocab-id join.
+    // task; t feeds the df count and the vocab-id join.
     val t = Tables.documents(spark, dir)
       .repartition(col("doc_id"))
       .select(col("doc_id"), array_sort(array_distinct(toks)).as("tset"))
+      // raw persist: the vocab ranking's zipWithIndex job below fills it
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tok = t.select(col("doc_id"), explode(col("tset")).as("token"))
     // dense integer id per token in global-rarity order (df asc, token
@@ -284,25 +290,17 @@ object Dedup {
     // a single task (12s). Pinning the partition count keeps every
     // downstream stage at full width.
     val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val ids = tok.join(vocab, Seq("token"))
+    // ids feeds the postings and both rerank joins, post both sides of
+    // its own self-join
+    val (ids, _) = materialize(tok.join(vocab, Seq("token"))
       .groupBy(col("doc_id"))
       .agg(array_sort(collect_list(col("tid"))).as("ts"))
-      .repartition(nParts, col("doc_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // EAGER materialization (see connectedComponents): ids feeds the
-    // postings and both rerank joins, post feeds both sides of its own
-    // self-join — concurrent consumer stages against a cold cache each
-    // recompute the whole vocab-join pipeline (the mid-suite 15-32 s
-    // dedup_cluster swings trace to exactly this race; one count() per
-    // cached relation runs the pipeline once at full parallelism).
-    ids.count()
+      .repartition(nParts, col("doc_id")))
     val n = size(col("ts"))
-    val post = ids
+    val (post, _) = materialize(ids
       .select(col("doc_id"), size(col("ts")).as("n"), explode(slice(col("ts"),
         lit(1), (n - expr("(size(ts) * 9 + 9) div 10") + 1).cast("int")))
-        .as("tid"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    post.count()
+        .as("tid")))
     // AllPairs SIZE filter alongside the prefix condition — lossless:
     // jac ≥ 0.9 forces 10·min(|a|,|b|) ≥ 9·max(|a|,|b|) (intersection is
     // bounded by the smaller set, union by the larger), so size-mismatched
@@ -390,22 +388,13 @@ object Dedup {
       releaseAfterMaterialize: Seq[DataFrame] = Nil,
       driverFinishEdgeBound: Long = graft.Barriers.DriverFinishEdgeBound)
       : DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     import spark.implicits._
-    // persist the UNDIRECTED pair relation once — half the rows of a
+    // cache the UNDIRECTED pair relation once — half the rows of a
     // doubled edge list, and the one evaluation of the (expensive) pair
     // subtree that every downstream pass reads. (A pairs ∪ pairs.swap
     // self-union would additionally plant that subtree in the plan twice.)
     // Pairs the caller already persisted are read, never released, here.
-    val owned = pairs.storageLevel == StorageLevel.NONE
-    val p = if (owned) pairs.persist(StorageLevel.MEMORY_AND_DISK) else pairs
-    // EAGER materialization: the contraction fans out into three
-    // independent consumer stages (both nbrMin roles + the edge joins)
-    // that the scheduler runs CONCURRENTLY — against a still-cold cache,
-    // each would race to compute the expensive pair pipeline itself
-    // (first-writer-wins cache population doesn't stop a stage that
-    // already started computing). One count() populates the cache before
-    // any consumer launches, and its answer picks the finish regime.
+    // The count's answer picks the finish regime.
     //
     // count-then-collect, deliberately: the count materializes the persist
     // at full parallelism; the collect then drains the cache. A fused
@@ -413,7 +402,8 @@ object Dedup {
     // scales up 1→4→16… partitions in sequential rounds while it hunts
     // for limit rows, so the expensive materializing pass runs nearly
     // serial (dedup_cluster 4.2 → 8.2 s measured).
-    val nPairs = graft.Barriers.materialize(p, releaseAfterMaterialize)
+    val owned = !graft.Barriers.cached(pairs)
+    val (p, nPairs) = materialize(pairs, releaseAfterMaterialize)
     graft.Barriers.postSetup("connectedComponents", nPairs, "pairs")
     if (nPairs <= driverFinishEdgeBound) {
       // FINISH ON THE DRIVER straight from the pairs: the bound keeps the
@@ -441,16 +431,12 @@ object Dedup {
     val nbrMin = p.groupBy(col("i").as("id")).agg(min(col("j")).as("nm"))
       .unionAll(p.groupBy(col("j").as("id")).agg(min(col("i")).as("nm")))
       .groupBy(col("id")).agg(min(col("nm")).as("nm"))
-    val l0 = universe
+    // the edge build reads l0 from two join stages (i-side and j-side)
+    // and the final labeling reads it again
+    val (l0, _) = materialize(universe
       .join(nbrMin, Seq("id"), "left_outer")
       .select(col("id"),
-        least(col("id"), coalesce(col("nm"), col("id"))).as("lab"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // eager for the same reason as p: the edge build reads l0 from TWO
-    // concurrent join stages (i-side and j-side) and the final labeling
-    // reads it again — a cold cache races all three into recomputing the
-    // neighbor-min aggregation
-    l0.count()
+        least(col("id"), coalesce(col("nm"), col("id"))).as("lab")))
     // supernode edge relation: each original pair links its endpoints'
     // contracted labels; intra-supernode pairs vanish, parallel pairs
     // collapse in the distinct. Only the TINY contracted relation is
@@ -562,15 +548,12 @@ object Dedup {
     */
   private[graft] def cappedBucketPairs(posts0: DataFrame, k1: String, k2: String,
       v: String, maxWidth: Int = BucketWidthCap): (DataFrame, DataFrame) = {
-    // posts feeds TWO consumer stages (the width pass and the pair-emission
-    // join) that the scheduler can run concurrently — persist + EAGER count
-    // per the multi-consumer cache contract, so the caller's bucket kernel
-    // (rhpBuckets / the 16-way band transform / simhash banding) evaluates
-    // exactly once per query instead of once per consumer. The cache is
-    // slim (id, 2×int) posting rows, never payloads; release is the
-    // harness's clearCache-per-query contract.
-    val posts = posts0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    posts.count()
+    // posts feeds the width pass and the pair-emission join, so the
+    // caller's bucket kernel (rhpBuckets / the 16-way band transform /
+    // simhash banding) evaluates once per query. The cache is slim (id,
+    // 2×int) posting rows, never payloads; release is the harness's
+    // clearCache-per-query contract.
+    val (posts, _) = materialize(posts0)
     val widths = posts.groupBy(col(k1), col(k2)).agg(count(lit(1)).as("width"))
     val ok = widths.filter(col("width").between(2, maxWidth))
       .select(col(k1), col(k2))
@@ -636,16 +619,24 @@ object Dedup {
     * bucket shuffle as one long; token-less docs are filtered before
     * banding (all-zero signatures would form a clique, as with minhash).
     */
-  def dedupSimhash(spark: SparkSession, dir: String): DataFrame = {
-    // persist = plan barrier (see dedupMinhashLsh): one simhash64 eval per
-    // doc instead of one per band projection after CollapseProject
-    val sigs = Tables.documents(spark, dir)
+  def dedupSimhash(spark: SparkSession, dir: String): DataFrame =
+    // the cache is also a plan barrier (see dedupMinhashLsh): one
+    // simhash64 eval per doc instead of one per band projection after
+    // CollapseProject
+    hammingBandPairs(materialize(Tables.documents(spark, dir)
       .repartition(col("doc_id"))
       .filter(size(toks) > 0 && length(col("text")) > 0)
-      .select(col("doc_id"), GraftFunctions.simhash64(toks).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sigs.count() // EAGER (multi-consumer cache contract): the banding
-    // explode and the final sig-carrying pair projection both read this
+      .select(col("doc_id"), GraftFunctions.simhash64(toks).as("sig")))._1)
+
+  /** The Hamming-band candidate step of dedup_simhash and
+    * mm_phash_neardup over a materialized (doc_id, sig) relation of
+    * 64-bit signatures: (i < j, hamming) pairs at distance ≤ 3, ordered
+    * by (i, j). A pair within distance 3 agrees on at least one of the
+    * four 16-bit bands (pigeonhole), so [[cappedBucketPairs]] over the
+    * band values loses none; the signature rides through the bucket
+    * shuffle beside the id, so the rerank needs no join.
+    */
+  private[graft] def hammingBandPairs(sigs: DataFrame): DataFrame = {
     val bandVals = (0 until 4).map(b =>
       shiftrightunsigned(col("sig"), b * 16).bitwiseAND(lit(0xFFFFL)))
     val posts = sigs
@@ -686,15 +677,11 @@ object Dedup {
     // histL1 > 2k ⇒ levenshtein > k. The O(64) integer walk prunes the
     // overwhelming share of length-blocked candidates before the O(len·k)
     // DP kernel — the rerank's cost tracks TRUE near-pairs, not block size.
-    val t = Tables.documents(spark, dir)
+    // both zone-join sides and both rerank joins read t
+    val (t, _) = materialize(Tables.documents(spark, dir)
       .repartition(col("doc_id"))
       .select(col("doc_id"), col("n_chars").cast("bigint").as("len"),
-        col("text"), GraftFunctions.charHist64(col("text")).as("hist"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // EAGER (see connectedComponents): both zone-join sides and both
-    // rerank joins consume t concurrently — a cold cache races them all
-    // into recomputing the histogram pipeline
-    t.count()
+        col("text"), GraftFunctions.charHist64(col("text")).as("hist")))
     val zoned = t.select(col("doc_id"), col("len"), col("text"),
       explode(array((col("len") / 32).cast("bigint"),
         (col("len") / 32).cast("bigint") + 1)).as("zone"))
@@ -837,12 +824,11 @@ object Dedup {
     * exact integers into one double division.
     */
   def graphTriangles(spark: SparkSession, dir: String): DataFrame = {
-    val e = embeddingPairs(spark, dir).select(col("i"), col("j"))
-      // released by GraftCaches.release(spark) after the caller's action
-      // (embedding contract) — the returned plan consumes e three ways,
-      // so no in-operator unpersist point exists
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    e.count() // eager: degree, wedge, and closing consumers fan out (see connectedComponents)
+    // released by GraftCaches.release(spark) after the caller's action
+    // (embedding contract) — the returned plan consumes e three ways, so
+    // no in-operator unpersist point exists
+    val (e, _) =
+      materialize(embeddingPairs(spark, dir).select(col("i"), col("j")))
     val deg = e.select(col("i").as("id")).unionAll(e.select(col("j").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("degree"))
     val wedges = e.select(col("i").as("a"), col("j").as("b"))
@@ -930,21 +916,11 @@ object Dedup {
     // lambda (16× recompute) and pushes the size() filter into a second
     // shingle evaluation. Below it, [[shingleSets]]' token projection is
     // the second barrier: the text is split once per document, not once
-    // per shingle. persist, not localCheckpoint: the InMemoryRelation
-    // keeps stats for join sizing (see ngramPairs); the harness clears
-    // the cache between queries. repartition first: single-row-group
-    // local files would otherwise run the whole kernel pipeline in one
-    // task.
-    val cached = sketchOf(Tables.documents(spark, dir)
-      .repartition(col("doc_id")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // EAGER materialization (see connectedComponents): the banding and the
-    // two rerank joins are independent consumer stages the scheduler runs
-    // CONCURRENTLY — against a still-cold cache each would recompute the
-    // shingle+128-minhash pipeline itself (measured: warm pass 16.5 s
-    // mid-suite vs 1.8 s isolated, purely scheduling-dependent recompute).
-    cached.count()
-    cached
+    // per shingle. The harness clears the cache between queries.
+    // repartition first: single-row-group local files would otherwise run
+    // the whole kernel pipeline in one task.
+    materialize(sketchOf(Tables.documents(spark, dir)
+      .repartition(col("doc_id"))))._1
   }
 
   /** The (doc_id, sh, sig) sketch of any (doc_id, text, …) relation —
@@ -1008,14 +984,9 @@ object Dedup {
     * so index recall itself is graded, not assumed.
     */
   def dedupContainment(spark: SparkSession, dir: String): DataFrame = {
-    // persisted: feeds the posting build and both rerank joins
-    val d = shingleSets(Tables.documents(spark, dir)
-        .repartition(col("doc_id")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // EAGER materialization (see connectedComponents): the posting build
-    // and both rerank joins race a cold cache otherwise — measured 118 s
-    // warm mid-suite vs 6 s isolated, purely concurrent recompute.
-    d.count()
+    // feeds the posting build and both rerank joins
+    val (d, _) = materialize(shingleSets(Tables.documents(spark, dir)
+      .repartition(col("doc_id"))))
     val post = d.select(col("doc_id"), explode(col("sh")).as("shingle"))
     val rare = post.groupBy(col("shingle"))
       .agg(count(lit(1)).as("df"))
@@ -1105,17 +1076,14 @@ object Dedup {
     * query's plan is the stored-relation scan).
     */
   private[graft] def dbscanLabels(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = embeddingPairs(spark, dir, minSim = DbscanTau)
-      .select(col("i"), col("j"))
-      // released by GraftCaches.release(spark) after the caller's action
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count() // eager: degree + core-edge + border consumers
+    // both released by GraftCaches.release(spark) after the caller's action
+    val (pairs, _) = materialize(embeddingPairs(spark, dir, minSim = DbscanTau)
+      .select(col("i"), col("j")))
     val deg = pairs.select(col("i").as("id"))
       .unionAll(pairs.select(col("j").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("n_nbrs"))
-    val core = deg.filter(col("n_nbrs") >= DbscanMinPts).select(col("id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    core.count() // eager: two semi-joins, CC universe, border anti-join
+    val (core, _) = materialize(
+      deg.filter(col("n_nbrs") >= DbscanMinPts).select(col("id")))
     val coreEdges = pairs
       .join(core.select(col("id").as("i")), Seq("i"), "left_semi")
       .join(core.select(col("id").as("j")), Seq("j"), "left_semi")

@@ -218,16 +218,13 @@ object Multimodal {
            substring(payload, greatest(length(payload) div 2, 1) + 1,
                      length(payload)),
            cast(' v2' as binary)) AS payload""")
-    // persist + EAGER count (see dedupMinhashLsh): the inverted index and
-    // both rerank joins consume sigs concurrently; the barrier also stops
-    // CollapseProject duplicating the chunking kernel per consumer.
+    // the inverted index and both rerank joins read sigs; the cache also
+    // stops CollapseProject duplicating the chunking kernel per consumer.
     // repartition first: single-row-group testdata parquet would run the
     // whole per-payload kernel pipeline in one task.
-    val sigs = base.unionAll(twin)
+    val (sigs, _) = graft.Barriers.materialize(base.unionAll(twin)
       .repartition(col("doc_id"))
-      .select(col("doc_id"), GraftFunctions.cdcChunks(col("payload")).as("digs"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sigs.count()
+      .select(col("doc_id"), GraftFunctions.cdcChunks(col("payload")).as("digs")))
     val cand = cdcCandidatePairs(sigs)
     cand
       .join(sigs.select(col("doc_id").as("i"), col("digs").as("digs_i")), Seq("i"))
@@ -274,27 +271,11 @@ object Multimodal {
            cast('X' as binary),
            substring(payload, greatest(length(payload) div 2, 1) + 1,
                      length(payload))) AS payload""")
-    // persist + EAGER count (the multi-consumer cache contract): the
-    // banding explode and the pair rerank both read sigs; the barrier
-    // also stops CollapseProject re-running the kernel per band.
-    val sigs = base.unionAll(twin)
+    // the cache also stops CollapseProject re-running the kernel per band
+    Dedup.hammingBandPairs(graft.Barriers.materialize(base.unionAll(twin)
       .repartition(col("doc_id"))
-      .select(col("doc_id"), GraftFunctions.avgHash64(col("payload")).as("sig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sigs.count()
-    val bandVals = (0 until 4).map(b =>
-      shiftrightunsigned(col("sig"), b * 16).bitwiseAND(lit(0xFFFFL)))
-    val posts = sigs
-      .select(struct(col("doc_id"), col("sig")).as("ds"),
-        posexplode(array(bandVals: _*)))
-      .toDF("ds", "band", "bval")
-    val (pairs, _) = Dedup.cappedBucketPairs(posts, "band", "bval", "ds")
-    val out = pairs
-      .select(col("i.doc_id").as("i"), col("j.doc_id").as("j"),
-        bit_count(col("i.sig").bitwiseXOR(col("j.sig"))).as("hamming"))
-      .filter(col("hamming") <= 3)
-      .orderBy(col("i"), col("j"))
-    out
+      .select(col("doc_id"),
+        GraftFunctions.avgHash64(col("payload")).as("sig")))._1)
   }
 
   /** Candidate (i, j) pairs from a df-capped CDC digest inverted index —
@@ -414,13 +395,12 @@ object Multimodal {
     * only 8-byte digests shuffle.
     */
   def mmCdcIncremental(spark: SparkSession, dir: String): DataFrame = {
-    val sigs = cdcSigs(
+    // the wh index and both rerank sides read sigs
+    val (sigs, _) = graft.Barriers.materialize(cdcSigs(
       Tables.documents(spark, dir)
         .filter(length(col("text")) > 0)
         .select(col("doc_id"), encode(col("text"), "UTF-8").as("payload"))
-        .repartition(col("doc_id")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    sigs.count() // EAGER: wh index + both rerank sides consume this cache
+        .repartition(col("doc_id"))))
     val wh = sigs.filter(col("doc_id") < 250)
     val feed = sigs.filter(col("doc_id") >= 250)
     val dup = cdcIncrementalDup(

@@ -380,9 +380,8 @@ object Nvd {
         coalesce(col("ch.negate"), lit(false)).as("cneg"),
         upper(coalesce(col("ch.operator"), lit("OR"))).as("cop"),
         explode(col("ch.cpe_match")).as("m"))
-    // three consumers (child totals, node totals, probe join) — persist
-    // with the eager-count contract (CLAUDE.md)
-    val entries = own.unionAll(fromChildren)
+    // three consumers: child totals, node totals, probe join
+    val (entries, _) = graft.Barriers.materialize(own.unionAll(fromChildren)
       .select(col("cve_id"), col("node_idx"), col("op"), col("src_idx"),
         col("cneg"), col("cop"),
         col("m.vulnerable").as("vul"),
@@ -391,9 +390,7 @@ object Nvd {
         col("m.versionEndExcluding").as("ee"),
         col("m.versionEndIncluding").as("ei"),
         col("m.versionStartIncluding").as("si"),
-        col("m.versionStartExcluding").as("se"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    entries.count()
+        col("m.versionStartExcluding").as("se")))
     // probe-independent component totals: per child (for AND children —
     // every entry must apply) and per node (for AND nodes — every own
     // entry and every non-negated child must match)

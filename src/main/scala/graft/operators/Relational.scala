@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
-import graft.Barriers.{Budget, Horizon, Round}
+import graft.Barriers.{Budget, Horizon, Round, materialize}
 import graft.functions.GraftFunctions
 
 /** Warehouse-query suite (SURVEY.md §2.1 queries + §2.2).
@@ -479,8 +479,7 @@ object Relational {
       fan: Int = GroupBisectFan): DataFrame = {
     val spark = rows0.sparkSession
     import spark.implicits._
-    val rows = rows0.persist()
-    rows.count() // eager: group bootstrap + every bisection round
+    val (rows, _) = materialize(rows0)
     val gstats = rows.groupBy(col("grp"))
       .agg(min(col("v")).as("mn"), max(col("v")).as("mx"),
         count(lit(1)).as("n"), count(col("v")).as("nv"))
@@ -866,21 +865,18 @@ object Relational {
     * raw lineitems.
     */
   def q21LateSoleSupplier(spark: SparkSession, dir: String): DataFrame = {
-    // persist: the collapsed relation feeds three consumers (late
-    // candidates, the EXISTS side, the NOT-EXISTS side); without a barrier
-    // the lineitem⋈orders aggregate would compute three times. persist,
-    // not localCheckpoint — the cached InMemoryRelation keeps stats for
-    // the downstream join sizing, and the harness clears the cache
-    // between queries so nothing lingers across the session (the r3
-    // bench's 49s dedup_cluster reading was THIS relation squatting in
-    // the CacheManager for the remaining 50+ queries).
-    val pairs = Tables.lineitem(spark, dir)
+    // cached: the collapsed relation feeds two consumers (the order stats
+    // and the late filter); without it the lineitem⋈orders aggregate
+    // would compute twice. The harness clears the cache between queries
+    // so nothing lingers across the session (the r3 bench's 49s
+    // dedup_cluster reading was THIS relation squatting in the
+    // CacheManager for the remaining 50+ queries).
+    val (pairs, _) = materialize(Tables.lineitem(spark, dir)
       .join(Tables.orders(spark, dir), col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("l_orderkey"), col("l_suppkey"))
       .agg(max(when(col("l_shipdate") >
         col("o_orderdate") + expr("INTERVAL 60 DAYS"), 1).otherwise(0))
-        .as("late"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .as("late")))
     // The stacked EXISTS/NOT-EXISTS collapses to one per-order aggregate:
     // a waiting supplier is LATE on an order that has ≥ 2 suppliers and
     // EXACTLY ONE late supplier (itself) — "another supplier exists" ⇔
@@ -1297,13 +1293,10 @@ object Relational {
     * consumers); output is a single row.
     */
   def qEventsMutualInfo(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val cells = Tables.events(spark, dir)
+    val (cells, _) = materialize(Tables.events(spark, dir)
       .select(col("event_type").as("x"),
         dayofweek(col("ts")).cast("bigint").as("y"))
-      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("c"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    cells.count() // eager: totals, two marginals, and the joint consume
+      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("c")))
     val tot = cells.agg(sum(col("c")).as("n"),
       count(lit(1)).as("n_cells"))
     val cx = cells.groupBy(col("x")).agg(sum(col("c")).as("cx"))
@@ -1359,7 +1352,6 @@ object Relational {
     * per-lag moments all run on that bounded relation.
     */
   def qEventsCrosscorr(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val daily = Tables.events(spark, dir)
       .filter(col("event_type").isin("click", "purchase"))
       .select(to_date(col("ts")).as("day"), col("event_type"))
@@ -1370,11 +1362,9 @@ object Relational {
           .as("y"))
     val spine = daily.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
       .select(explode(expr("sequence(d0, d1, interval 1 day)")).as("day"))
-    val s = spine.join(daily, Seq("day"), "left_outer")
+    val (s, _) = materialize(spine.join(daily, Seq("day"), "left_outer")
       .select(col("day"), coalesce(col("x"), lit(0L)).as("x"),
-        coalesce(col("y"), lit(0L)).as("y"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    s.count() // eager: both sides of the shifted self-join consume
+        coalesce(col("y"), lit(0L)).as("y")))
     val lags = spark.range(0, 8).select(col("id").cast("int").as("lag"))
     s.select(col("day"), col("x"))
       .crossJoin(broadcast(lags))
@@ -1982,12 +1972,10 @@ object Relational {
     // outdeg inner join preserves every edge row (its build side is
     // edges0's own groupBy), so the src/dst vertex set is identical and
     // the possibly-expensive upstream plan evaluates exactly once
-    val vertices = edges.select(col("src").as("v"))
+    val (vertices, n) = materialize(edges.select(col("src").as("v"))
       .unionAll(edges.select(col("dst").as("v")))
       .distinct()
-      .repartition(col("v"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = vertices.count() // EAGER + the uniform-redistribution denominator
+      .repartition(col("v")))
     // DANGLING (no out-edges) and SOURCE (no in-edges) counts in ONE pass
     // over the edge cache: every vertex is a src or a dst, so
     // |dangling| = n − |distinct src| and |sources| = n − |distinct dst| —
@@ -2004,14 +1992,9 @@ object Relational {
     // term does — a no-sink graph never builds or caches it
     val dangling: DataFrame =
       if (nDangling == 0) null
-      else {
-        val d = vertices
-          .join(edges.select(col("src").as("v")).distinct(), Seq("v"),
-            "left_anti")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        d.count() // EAGER: every round's dm aggregate consumes this
-        d
-      }
+      else materialize(vertices
+        .join(edges.select(col("src").as("v")).distinct(), Seq("v"),
+          "left_anti"))._1
     val routed: DataFrame => DataFrame =
       if (n <= broadcastMaxVertices) broadcast else _.repartition(col("v"))
     val (scores, _) = graft.Barriers.fixpoint("pagerank", Horizon(rounds))(
@@ -2056,24 +2039,19 @@ object Relational {
     * orders, so the canonical plans differ above the exchange); the
     * r16 same-window A/B measured the pagerank edge build at ~1.9-3.0 s
     * warm uncached vs ~1.2-1.9 s with this cache. Callers pass the
-    * handle to their core's `releaseAfterMaterialize` (the
-    * [[graft.operators.Dedup.connectedComponents]] pattern: release as
-    * soon as the downstream stationary cache is materialized) or
-    * unpersist it inline right after their own eager count.
+    * handle as the `release` of the cache built from it — their core's
+    * `releaseAfterMaterialize` or their own [[graft.Barriers.materialize]]
+    * — so it goes as soon as that cache holds its rows.
     */
-  private def commercePairs(spark: SparkSession, dir: String): DataFrame = {
-    val cs = Tables.orders(spark, dir)
+  private def commercePairs(spark: SparkSession, dir: String): DataFrame =
+    materialize(Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"))
       .join(Tables.lineitem(spark, dir)
         .select(col("l_orderkey").as("o_orderkey"), col("l_suppkey")),
         Seq("o_orderkey"))
       .select((col("o_custkey") * 2).as("c"),
         (col("l_suppkey") * 2 + 1).as("s"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    cs.count() // EAGER: both union arms (and degree self-joins) consume
-    cs
-  }
+      .distinct())._1
 
   /** §2.2 graph_pagerank over the commerce graph — see [[pagerankCore]]
     * for the loop; the symmetric edge set has no dangling nodes, so the
@@ -2305,9 +2283,9 @@ object Relational {
     * always survives the prune) matches bit-for-bit.
     */
   def graphConnectedComponents(spark: SparkSession, dir: String): DataFrame = {
+    // released by GraftCaches.release(spark) after the caller's action
     val pairs = urgentSlicePairs(spark, dir)
-      // released by GraftCaches.release(spark) after the caller's action;
-      // connectedComponents counts it before any consumer is built
+      // raw persist: connectedComponents' count is its first use
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // universe = the slice's endpoints, derived FROM the persisted pair
     // relation (plan-matches its cache — the join above evaluates once)
@@ -2366,12 +2344,9 @@ object Relational {
     * bit-for-bit.
     */
   def graphShortestPaths(spark: SparkSession, dir: String): DataFrame = {
-    // persisted: both union arms below read the cache instead of each
-    // re-evaluating the urgent-slice join+distinct (the commercePairs
-    // rationale)
-    val pairs = urgentSlicePairs(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count() // EAGER: both union arms consume
+    // cached: both union arms below read it instead of each re-evaluating
+    // the urgent-slice join+distinct (the commercePairs rationale)
+    val (pairs, _) = materialize(urgentSlicePairs(spark, dir))
     val edges0 = pairs.select(col("i").as("src"), col("j").as("dst"))
       .unionAll(pairs.select(col("j").as("src"), col("i").as("dst")))
     bfsCore(edges0, 3, BfsMaxHops, releaseAfterMaterialize = Seq(pairs))
@@ -2413,7 +2388,9 @@ object Relational {
     * anti-join + union, never a full rebuild.
     */
   def graphWeightedSssp(spark: SparkSession, dir: String): DataFrame = {
-    val base = Tables.orders(spark, dir)
+    // cached: both union arms read it instead of each re-evaluating the
+    // fact join + min rollup (commercePairs rationale)
+    val (base, _) = materialize(Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
       .join(Tables.lineitem(spark, dir)
         .select(col("l_orderkey").as("o_orderkey"), col("l_suppkey"),
@@ -2423,11 +2400,7 @@ object Relational {
         (col("l_suppkey") * 2 + 1).as("s"),
         datediff(col("l_shipdate"), col("o_orderdate")).cast("bigint")
           .as("d"))
-      .groupBy(col("c"), col("s")).agg(min(col("d")).as("w"))
-      // persisted: both union arms read the cache instead of each
-      // re-evaluating the fact join + min rollup (commercePairs rationale)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    base.count() // EAGER: both union arms consume
+      .groupBy(col("c"), col("s")).agg(min(col("d")).as("w")))
     val edges0 = base.select(col("c").as("src"), col("s").as("dst"),
         col("w"))
       .unionAll(base.select(col("s").as("src"), col("c").as("dst"),
@@ -3170,8 +3143,7 @@ object Relational {
     * where the query graph exercises only its correctness.
     */
   def graphScc(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val flows = Tables.lineitem(spark, dir)
+    val (flows, _) = materialize(Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_suppkey"), discPrice.as("rev"))
       .join(Tables.orders(spark, dir)
         .select(col("o_orderkey").as("l_orderkey"), col("o_custkey")),
@@ -3184,9 +3156,7 @@ object Relational {
         .select(col("s_suppkey").as("l_suppkey"),
           col("s_nationkey").as("b")),
         Seq("l_suppkey"))
-      .groupBy(col("a"), col("b")).agg(sum(col("rev")).as("rev"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    flows.count() // EAGER: edge build + totals both consume this cache
+      .groupBy(col("a"), col("b")).agg(sum(col("rev")).as("rev")))
     val tot = flows.groupBy(col("a")).agg(sum(col("rev")).as("t"))
     val e = flows.join(tot, Seq("a"))
       .filter(col("a") =!= col("b") && col("rev") * lit(25) > col("t"))
@@ -3526,7 +3496,6 @@ object Relational {
     * queries run on, persisted + eagerly counted, with its vertex set. */
   private def centralityGraph(spark: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    import org.apache.spark.storage.StorageLevel
     val cs = commercePairs(spark, dir)
     // every BFS round + the successor build consume the edge cache; once
     // it holds the rows the pair cache is dead weight
@@ -3534,9 +3503,7 @@ object Relational {
       cs.select(col("c").as("src"), col("s").as("dst"))
         .unionAll(cs.select(col("s").as("src"), col("c").as("dst"))),
       Seq(cs))
-    val verts = edges.select(col("src").as("v")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    verts.count() // eager: roots + the final left join consume
+    val (verts, _) = materialize(edges.select(col("src").as("v")).distinct())
     (edges, verts)
   }
 
@@ -3565,11 +3532,10 @@ object Relational {
     */
   private def brandesBackward(vis: DataFrame, edges: DataFrame,
       deltaSum: Column => Column): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val maxLvl = vis.agg(coalesce(max(col("lvl")), lit(0)).as("m"))
       .head().getInt(0)
     // shortest-path DAG successors: (root, v at l, w at l+1, σv, σw)
-    val sp = vis.select(col("root"), col("v"), col("lvl"),
+    val (sp, _) = materialize(vis.select(col("root"), col("v"), col("lvl"),
         col("sig").as("sigv"))
       .join(edges, col("v") === col("src"))
       .join(vis.select(col("root").as("wr"), col("v").as("w"),
@@ -3577,9 +3543,7 @@ object Relational {
         col("root") === col("wr") && col("dst") === col("w") &&
           col("wl") === col("lvl") + 1)
       .select(col("root"), col("v"), col("lvl"), col("sigv"), col("w"),
-        col("sigw"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    sp.count() // eager: one consumer per backward level
+        col("sigw")))
     // only the PREVIOUS level's δ is ever joined (successors of level-l
     // vertices sit exactly at level l+1), so each round checkpoints one
     // slim level and δ is the union of the checkpointed parts (the
@@ -3616,14 +3580,11 @@ object Relational {
       visStore: Option[String] = None,
       maxFold: Long = BrandesMaxFoldWidth,
       releaseAfterMaterialize: Seq[DataFrame] = Nil): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     // every BFS round + the successor build consume the edge cache;
     // only slim frontiers shuffle
     val (edges, _) = graft.Barriers.stationaryEdges(edges0,
       releaseAfterMaterialize)
-    val verts = edges.select(col("src").as("v")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    verts.count() // eager: roots + the final left join consume
+    val (verts, _) = materialize(edges.select(col("src").as("v")).distinct())
     // PREEMPTIVE fold-width guard: the δ fold width is bounded by the
     // max out-degree, measured here by a counting aggregate — safe at
     // ANY degree — before a single degree-sized fold buffer exists.
@@ -3658,7 +3619,9 @@ object Relational {
       case None => brandesForward(edges, verts)
     }
     val delta = brandesBackward(
-      visRaw.persist(StorageLevel.MEMORY_AND_DISK), edges,
+      // raw persist: brandesBackward's max-level pull is its first use
+      visRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      edges,
       GraftFunctions.sortedKeyFold(col("w"), _, maxFold,
         "brandes δ accumulation: use betweennessApproxCore at this scale"))
     // the contrib fold needs no guard: its width is the number of
@@ -3712,7 +3675,6 @@ object Relational {
   private[graft] def betweennessApproxCore(spark: SparkSession,
       edges0: DataFrame, nPivots: Int = 16,
       releaseAfterMaterialize: Seq[DataFrame] = Nil): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     require(nPivots >= 1, s"need at least one pivot: $nPivots")
     // every BFS round + the successor build consume the edge cache;
     // only slim frontiers shuffle
@@ -3724,15 +3686,14 @@ object Relational {
     // (r14 verdict #5). A sink sampled as pivot contributes 0 dependency
     // and still counts in k, so the |V|/k estimator stays unbiased over
     // the FULL vertex set — the same population exact BC sums over.
-    val verts = edges.select(col("src").as("v"))
-      .unionAll(edges.select(col("dst").as("v"))).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nVerts = verts.count() // eager: pivots, estimator scale, final join
+    val (verts, nVerts) = materialize(edges.select(col("src").as("v"))
+      .unionAll(edges.select(col("dst").as("v"))).distinct())
     val pivots = verts
       .orderBy(xxhash64(col("v")), col("v")) // v: total order under ties
       .limit(nPivots).select(col("v").as("root"))
     val vis = brandesForwardFrom(edges, pivots)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      // raw persist: the pivot count below is its first use
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val k = vis.filter(col("lvl") === 0).count() // pivots actually used
     val delta = brandesBackward(vis, edges, sum(_))
     val scale = nVerts.toDouble / k
@@ -3773,15 +3734,14 @@ object Relational {
     */
   def graphLouvainGain(spark: SparkSession, dir: String): DataFrame = {
     val cs = commercePairs(spark, dir)
-    val edges = cs.select(col("c").as("src"), col("s").as("dst"))
-      .unionAll(cs.select(col("s").as("src"), col("c").as("dst")))
-      .persist()
-    edges.count() // eager: degree, per-neighbor counts, and lpa (on miss)
-    cs.unpersist() // edge cache materialized — the pair cache is dead weight
-    val lbl = graft.ArtifactStore.readOrCompute(spark, "lpa_labels", dir) {
-      lpaCore(edges).select(col("v"), col("lbl"))
-    }.persist()
-    lbl.count() // eager: community sums + two edge-side joins consume
+    val (edges, _) = materialize(
+      cs.select(col("c").as("src"), col("s").as("dst"))
+        .unionAll(cs.select(col("s").as("src"), col("c").as("dst"))),
+      release = Seq(cs))
+    val (lbl, _) = materialize(
+      graft.ArtifactStore.readOrCompute(spark, "lpa_labels", dir) {
+        lpaCore(edges).select(col("v"), col("lbl"))
+      })
     val deg = edges.groupBy(col("src").as("v"))
       .agg(count(lit(1)).as("d"))
     val mrow = deg.agg(expr("sum(d) div 2").as("m"))
@@ -3993,18 +3953,16 @@ object Relational {
     * class, and only the 3-row class rollup leaves as double.
     */
   def qAbcAnalysis(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
     val dec = DecimalType(18, 2)
     val rev = Tables.lineitem(spark, dir)
       .groupBy(col("l_partkey").as("pk"))
       .agg(sum(col("l_extendedprice").cast(dec) *
         (lit(1) - col("l_discount").cast(dec))).as("r"))
-    val ranked = graft.Ranks.rowNumber(rev, "rk", col("r").desc, col("pk"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     // the eager count IS the row count — reuse it as a literal block
     // size instead of planning a second count aggregate + crossJoin
     // (the sanctioned 1-row driver pull, same as qBitmapDistinct's maxId)
-    val nRows = ranked.count()
+    val (ranked, nRows) = materialize(
+      graft.Ranks.rowNumber(rev, "rk", col("r").desc, col("pk")))
     val tot = ranked.agg(sum(col("r")).as("trev"))
     val blocked = ranked
       .withColumn("blk", expr(s"(rk - 1) div ${(nRows + 255) / 256}"))
@@ -4048,11 +4006,9 @@ object Relational {
     * the result, so DuckDB matches bit-for-bit.
     */
   def qBasketPairs(spark: SparkSession, dir: String): DataFrame = {
-    val b = Tables.lineitem(spark, dir)
+    val (b, _) = materialize(Tables.lineitem(spark, dir)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    b.count() // EAGER: pair join (both sides), singles, order count
+      .distinct())
     val nOrders = b.agg(countDistinct(col("ok")).as("n_orders"))
     val pairCounts = b.as("a")
       .join(b.as("c"), col("a.ok") === col("c.ok") && col("a.pk") < col("c.pk"))
@@ -4321,10 +4277,8 @@ object Relational {
     * back brand-co-partitioned; one moment aggregate per brand.
     */
   def qSizePriceSpearman(spark: SparkSession, dir: String): DataFrame = {
-    val parts = Tables.part(spark, dir)
-      .select(col("p_brand"), col("p_size"), col("p_retailprice"))
-      .persist()
-    parts.count() // eager: two rank derivations + the moment join
+    val (parts, _) = materialize(Tables.part(spark, dir)
+      .select(col("p_brand"), col("p_size"), col("p_retailprice")))
     def ranks(value: Column, name: String): DataFrame = {
       val w = Window.partitionBy(col("p_brand")).orderBy(col("v"))
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -4374,12 +4328,10 @@ object Relational {
     * |years| rows.
     */
   def qRevenueRetention(spark: SparkSession, dir: String): DataFrame = {
-    val yc = Tables.orders(spark, dir)
+    val (yc, _) = materialize(Tables.orders(spark, dir)
       .groupBy(year(col("o_orderdate")).cast("bigint").as("yr"),
         col("o_custkey"))
-      .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("rev"))
-      .persist()
-    yc.count() // eager: base totals + both semi-join sides consume it
+      .agg(sum(col("o_totalprice").cast(DecimalType(18, 2))).as("rev")))
     val tot = yc.groupBy(col("yr"))
       .agg(sum(col("rev")).as("tot_rev"),
         count(lit(1)).as("n_customers"))
@@ -4419,10 +4371,8 @@ object Relational {
     * broadcast back into the |types|²-row result.
     */
   def qUserOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val ut = Tables.events(spark, dir)
-      .select(col("user_id"), col("event_type")).distinct()
-      .persist()
-    ut.count() // eager: sizes + both join sides consume it
+    val (ut, _) = materialize(Tables.events(spark, dir)
+      .select(col("user_id"), col("event_type")).distinct())
     val sizes = ut.groupBy(col("event_type")).agg(count(lit(1)).as("n"))
     val inter = ut.select(col("user_id"), col("event_type").as("type_a"))
       .join(ut.select(col("user_id"), col("event_type").as("type_b")),
@@ -4580,8 +4530,7 @@ object Relational {
       driverEdgeBound: Long = MarkovDriverEdgeBound): DataFrame = {
     val spark = trans0.sparkSession
     import spark.implicits._
-    val trans = trans0.persist()
-    val nEdges = trans.count() // eager: row sums + the round joins consume
+    val (trans, nEdges) = materialize(trans0)
     val rows = trans.groupBy(col("prev")).agg(sum(col("n")).as("r"))
     val m = trans.join(rows, Seq("prev"))
       .select(col("prev"), col("cur"), col("n"), col("r"))
@@ -4606,8 +4555,7 @@ object Relational {
       }
       return pi.toSeq.toDF("state", "ppm").orderBy(col("state"))
     }
-    val mp = m.persist()
-    mp.count()
+    val (mp, _) = materialize(m)
     val (pi, _) = graft.Barriers.fixpoint("markov", Horizon(rounds))(
         trans.select(col("prev").as("state")).distinct()
           .select(col("state"), lit(1000000L).as("ppm"))) { (pi, _) =>
@@ -4976,13 +4924,11 @@ object Relational {
     * map-side-combined aggregate.
     */
   def qEventsEwma(spark: SparkSession, dir: String): DataFrame = {
-    val daily = Tables.events(spark, dir)
+    val (daily, _) = materialize(Tables.events(spark, dir)
       .select(col("event_type"),
         expr("unix_micros(ts) div 86400000000").as("day"))
       .groupBy(col("event_type"), col("day"))
-      .agg(count(lit(1)).as("c"))
-      .persist()
-    daily.count() // eager: probe + band sides race a cold cache otherwise
+      .agg(count(lit(1)).as("c")))
     val b = daily.select(col("event_type"), col("day").as("b_day"),
       col("c").as("b_c"))
     daily.join(b, Seq("event_type"))
@@ -5103,18 +5049,17 @@ object Relational {
     * EXACT production rounds, not a re-derivation.
     */
   private[graft] def hitsCore(cs0: DataFrame): (DataFrame, DataFrame) = {
-    val cs = cs0.persist()
-    cs.count() // eager: 6 downstream consumers race a cold cache otherwise
+    val (cs, _) = materialize(cs0)
     val h0 = cs.select(col("c")).distinct()
       .select(col("c"), lit(1L).cast("decimal(38,0)").as("h"))
     val a1 = cs.join(h0, "c").groupBy("s").agg(sum("h").as("a"))
     val h1 = cs.join(a1, "s").groupBy("c").agg(sum("a").as("h"))
     val a2 = cs.join(h1, "c").groupBy("s").agg(sum("h").as("a"))
     val h2 = cs.join(a2, "s").groupBy("c").agg(sum("a").as("h"))
-    val a3 = cs.join(h2, "c").groupBy("s").agg(sum("h").as("a")).persist()
-    a3.count() // consumers: h3 build + auth output
-    val h3 = cs.join(a3, "s").groupBy("c").agg(sum("a").as("h")).persist()
-    h3.count() // consumers: max-agg broadcast + hub output
+    val (a3, _) =
+      materialize(cs.join(h2, "c").groupBy("s").agg(sum("h").as("a")))
+    val (h3, _) =
+      materialize(cs.join(a3, "s").groupBy("c").agg(sum("a").as("h")))
     (h3, a3)
   }
 
@@ -5366,16 +5311,14 @@ object Relational {
     * crossJoin, then a TakeOrdered 20 — no window, no second shuffle.
     */
   def qCustomerMahalanobis(spark: SparkSession, dir: String): DataFrame = {
-    val per = Tables.orders(spark, dir)
+    val (per, _) = materialize(Tables.orders(spark, dir)
       .groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("x"),
         // re-narrow the sum to DECIMAL(18,2) (per-customer spend ≪ 1e16):
         // y·y and x·y then stay inside DECIMAL(38) on BOTH engines
         // instead of hitting engine-specific wide-decimal promotion
         sum(col("o_totalprice").cast("decimal(18,2)"))
-          .cast("decimal(18,2)").as("y"))
-      .persist()
-    per.count() // eager: global moments + the scored output both consume
+          .cast("decimal(18,2)").as("y")))
     val g = per.agg(
       count(lit(1)).cast("double").as("n"),
       sum(col("x")).cast("double").as("sx"),
@@ -5427,14 +5370,12 @@ object Relational {
     * aggregate for OLS.
     */
   def qOrdersTheilsen(spark: SparkSession, dir: String): DataFrame = {
-    val m = Tables.orders(spark, dir)
+    val (m, _) = materialize(Tables.orders(spark, dir)
       .groupBy((year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
         .cast("bigint").as("ym"))
       .agg(sum(col("o_totalprice").cast("decimal(18,2)"))
         .cast("decimal(18,2)").as("rev"))
-      .withColumn("rn", row_number().over(Window.orderBy(col("ym"))))
-      .persist()
-    m.count() // eager: pair join (both sides) + OLS moments consume
+      .withColumn("rn", row_number().over(Window.orderBy(col("ym")))))
     val a = m.select(col("rn").as("i"), col("rev").as("ra"))
     val b = m.select(col("rn").as("j"), col("rev").as("rb"))
     val slopes = a.join(b, col("j") > col("i"))
@@ -5491,11 +5432,10 @@ object Relational {
     */
   def graphAssortativity(spark: SparkSession, dir: String): DataFrame = {
     val cs = commercePairs(spark, dir)
-    val edges = cs.select(col("c").as("src"), col("s").as("dst"))
-      .unionAll(cs.select(col("s").as("src"), col("c").as("dst")))
-      .persist()
-    val m = edges.count() // eager: degree table + endpoint joins consume
-    cs.unpersist() // edge cache materialized — the pair cache is dead weight
+    val (edges, m) = materialize(
+      cs.select(col("c").as("src"), col("s").as("dst"))
+        .unionAll(cs.select(col("s").as("src"), col("c").as("dst"))),
+      release = Seq(cs))
     assortativityFrom(edges, useDecimal = m > AssortativityBigintMaxEdges)
   }
 
@@ -5606,19 +5546,16 @@ object Relational {
     * constant work at any SF.
     */
   def qEventsKendall(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
+    val (ev, _) = materialize(Tables.events(spark, dir)
       .select(expr("(unix_micros(ts) div 3600000000) % 24").as("hr"),
-        col("value"), col("event_id"))
-      .persist()
-    ev.count() // eager: the n agg and the rank sort both consume
+        col("value"), col("event_id")))
     val n = ev.agg(count(lit(1)).as("nn"))
-    val cells = graft.Ranks.rowNumber(ev, "rk", col("value"), col("event_id"))
+    val (cells, _) = materialize(
+      graft.Ranks.rowNumber(ev, "rk", col("value"), col("event_id"))
       .crossJoin(broadcast(n))
       .withColumn("dec", graft.Ranks.ntileOf(col("rk"), col("nn"), 10))
       .groupBy(col("hr"), col("dec"))
-      .agg(count(lit(1)).as("n"))
-      .persist()
-    cells.count() // eager: marginals + the pair join consume
+      .agg(count(lit(1)).as("n")))
     val a = cells.select(col("hr").as("x1"), col("dec").as("y1"),
       col("n").as("n1"))
     val b = cells.select(col("hr").as("x2"), col("dec").as("y2"),
@@ -5710,11 +5647,9 @@ object Relational {
     * marginal tables, and the reducer is a 1-row aggregate.
     */
   def qPartChi2(spark: SparkSession, dir: String): DataFrame = {
-    val obs = Tables.part(spark, dir)
+    val (obs, _) = materialize(Tables.part(spark, dir)
       .groupBy(col("p_type"), col("p_brand"))
-      .agg(count(lit(1)).as("o"))
-      .persist()
-    obs.count() // eager: two marginals + n + the grid join consume
+      .agg(count(lit(1)).as("o")))
     val rt = obs.groupBy(col("p_type")).agg(sum(col("o")).as("rt"))
     val ct = obs.groupBy(col("p_brand")).agg(sum(col("o")).as("ct"))
     val tot = obs.agg(sum(col("o")).as("n"),
@@ -5785,14 +5720,12 @@ object Relational {
         (col("o_totalprice").cast("decimal(18,2)") * 100)
           .cast("bigint").as("pc"))
       .repartition(nParts)
-    val one = base.agg(
+    val (one, _) = materialize(base.agg(
       org.apache.spark.sql.graft.GraftAggregates
         .subsampleSums(col("k"), col("pc"), B).as("reps"),
       count(lit(1)).as("n_orders"),
       (sum(col("pc")).cast("double") / lit(100.0) /
-        count(lit(1)).cast("double")).as("mean_full"))
-      .persist()
-    one.count() // eager: the replicate unnest + full-sample cols consume
+        count(lit(1)).cast("double")).as("mean_full")))
     val means = one
       .select(explode(col("reps")).as("r")) // 200 elements of ONE row
       .select(col("r.b").as("b"),
@@ -5839,7 +5772,7 @@ object Relational {
       .filter(col("prev").isNotNull)
       .groupBy(col("prev"), col("cur"))
       .agg(count(lit(1)).as("c"))
-    val perState = trans
+    val (perState, _) = materialize(trans
       .groupBy(col("prev"))
       .agg(count(lit(1)).as("n_next_types"),
         sum(col("c")).cast("bigint").as("n_a"),
@@ -5847,9 +5780,7 @@ object Relational {
           .as("clog"))
       .select(col("prev"), col("n_next_types"), col("n_a"),
         (log2(col("n_a").cast("double")) -
-          col("clog") / col("n_a").cast("double")).as("h_raw"))
-      .persist()
-    perState.count() // eager: the rate aggregate + the output consume
+          col("clog") / col("n_a").cast("double")).as("h_raw")))
     val rate = perState
       .agg((sum(col("n_a").cast("double") * col("h_raw")) /
         sum(col("n_a")).cast("double")).as("rate_raw"))
@@ -5876,13 +5807,11 @@ object Relational {
     * calendar-bounded series.
     */
   def qOrdersMadOutliers(spark: SparkSession, dir: String): DataFrame = {
-    val m = Tables.orders(spark, dir)
+    val (m, _) = materialize(Tables.orders(spark, dir)
       .groupBy((year(col("o_orderdate")) * 100 + month(col("o_orderdate")))
         .cast("bigint").as("ym"))
       .agg(sum(col("o_totalprice").cast("decimal(18,2)"))
-        .cast("decimal(18,2)").as("rev"))
-      .persist()
-    m.count() // eager: median pick + dev relation + the scored output
+        .cast("decimal(18,2)").as("rev")))
     val med = m
       .withColumn("rk", row_number().over(
         Window.orderBy(col("rev"), col("ym"))))
@@ -5927,15 +5856,14 @@ object Relational {
     */
   def graphModularity(spark: SparkSession, dir: String): DataFrame = {
     val cs = commercePairs(spark, dir)
-    val edges = cs.select(col("c").as("src"), col("s").as("dst"))
-      .unionAll(cs.select(col("s").as("src"), col("c").as("dst")))
-      .persist()
-    edges.count() // eager: degree + both label joins consume
-    cs.unpersist() // edge cache materialized — the pair cache is dead weight
-    val lbl = graft.ArtifactStore.readOrCompute(spark, "lpa_labels", dir) {
-      lpaCore(edges).select(col("v"), col("lbl"))
-    }.persist()
-    lbl.count() // eager: degree rollup + two edge-end joins consume
+    val (edges, _) = materialize(
+      cs.select(col("c").as("src"), col("s").as("dst"))
+        .unionAll(cs.select(col("s").as("src"), col("c").as("dst"))),
+      release = Seq(cs))
+    val (lbl, _) = materialize(
+      graft.ArtifactStore.readOrCompute(spark, "lpa_labels", dir) {
+        lpaCore(edges).select(col("v"), col("lbl"))
+      })
     val deg = edges.groupBy(col("src").as("v"))
       .agg(count(lit(1)).as("d"))
     val mrow = deg.agg(expr("sum(d) div 2").as("m"))
@@ -6040,20 +5968,19 @@ object Relational {
   private[graft] def rankJoinCore(cr: DataFrame, sr: DataFrame,
       bridge: DataFrame, k: Int,
       maxRanked: Long = RankJoinMaxRankedRows): (DataFrame, Int) = {
-    import org.apache.spark.storage.StorageLevel
     // inputs the caller already persisted are read, never released, here
-    val owned = Seq(cr, sr, bridge).filter(_.storageLevel == StorageLevel.NONE)
-    owned.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
+    val owned = Seq(cr, sr, bridge).filterNot(graft.Barriers.cached)
     // the returned top-k is its own materialized cache: once the loop has
     // counted it (or thrown), nothing reads the three inputs again
     val (topk, rounds) = try {
-      val nC = cr.count() // eager: sliced every round
-      val nS = sr.count()
+      // the ranked inputs are sliced and the bridge joined every round
+      val (_, nC) = materialize(cr)
+      val (_, nS) = materialize(sr)
       require(nC <= maxRanked && nS <= maxRanked,
         s"rank join inputs must be dimension-sized (≤$maxRanked " +
           s"ranked rows; got $nC / $nS): the per-round slice and the " +
           "full-coverage exit are TakeOrdered merges bounded by the input")
-      bridge.count() // eager: joined every round
+      materialize(bridge)
       def bd(r: org.apache.spark.sql.Row, i: Int): java.math.BigDecimal =
         r.getDecimal(i)
       val maxC = bd(cr.agg(max(col("crev"))).head(), 0)
@@ -6067,21 +5994,19 @@ object Relational {
         val cInt = c.min(Int.MaxValue.toLong).toInt // limit() takes Int;
         // past 2^31 ranked rows the TA must have terminated on the bound
         // (or the Budget throws — never a silent truncation)
-        val cs = cr.orderBy(col("crev").desc, col("custkey")).limit(cInt)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val ss = sr.orderBy(col("srev").desc, col("suppkey")).limit(cInt)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        cs.count(); ss.count() // eager: threshold row + candidate join
+        // each slice feeds its threshold row and the candidate join
+        val (cs, _) = materialize(
+          cr.orderBy(col("crev").desc, col("custkey")).limit(cInt))
+        val (ss, _) = materialize(
+          sr.orderBy(col("srev").desc, col("suppkey")).limit(cInt))
         val cand = bridge
           .join(broadcast(cs), Seq("custkey"))
           .join(broadcast(ss), Seq("suppkey"))
           .select(col("custkey"), col("suppkey"),
             (col("crev") + col("srev")).as("score"))
-        val topk = cand
+        val (topk, found) = materialize(cand
           .orderBy(col("score").desc, col("custkey"), col("suppkey"))
-          .limit(k)
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        val found = topk.count()
+          .limit(k))
         // full coverage is judged on the SLICED count cInt, not the raw
         // deepening counter c: if c saturated Int.MaxValue while an input
         // is larger, the slices are NOT total and declaring them so would

@@ -311,7 +311,8 @@ object Similarity {
           Dedup.EmbSeed)))
         .toDF("vec_id", "tbl", "bucket"),
       "tbl", "bucket", "vec_id")
-    // persist = plan barrier: the symmetrizing explode references sim_raw
+    // raw persist = plan barrier for one consumer: the symmetrizing
+    // explode references sim_raw
     // from two struct branches, and without the barrier CollapseProject
     // would inline the cosine kernel into both (2× eval per pair).
     // Released by GraftCaches.release(spark) after the caller's action —

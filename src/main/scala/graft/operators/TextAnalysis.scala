@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
-import graft.Barriers.{Horizon, Round}
+import graft.Barriers.{Horizon, Round, materialize}
 import graft.functions.GraftFunctions
 
 /** Text-analysis suite over the documents table (SURVEY.md §2.4).
@@ -273,12 +273,10 @@ object TextAnalysis {
       .select(col("doc_id"), explode(array_distinct(toks)).as("term"))
       .groupBy(col("term"))
       .agg(min(col("doc_id")).as("first_doc"))
-    val batches = first
+    val (batches, _) = materialize(first
       .groupBy(expr("first_doc div 50").as("batch"))
       .agg(count(lit(1)).as("new_terms"))
-      .withColumn("shard", expr("batch div 1024"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    batches.count() // eager: shard totals + the windowed pass both consume
+      .withColumn("shard", expr("batch div 1024")))
     val shardTot = batches.groupBy(col("shard"))
       .agg(sum(col("new_terms")).as("st"))
     val off = shardTot.as("a")
@@ -375,14 +373,10 @@ object TextAnalysis {
     * train scan, and hot grams are bounded by the per-doc distinct.
     */
   def textContamination(spark: SparkSession, dir: String): DataFrame = {
-    val grams3 =
-      """IF(size(w) < 3, array(),
-           transform(sequence(1, size(w) - 2),
-             i -> array_join(slice(w, i, 3), ' ')))"""
     val grams = Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("w"), hashBucket)
       .select(col("doc_id"), col("bucket"),
-        explode(array_distinct(expr(grams3))).as("gram"))
+        explode(array_distinct(Dedup.word3Grams(col("w")))).as("gram"))
     val train = grams.filter(col("bucket") < 90).select(col("gram")).distinct()
     val test = grams.filter(col("bucket") >= 95)
     test.join(train.withColumn("hit", lit(1L)), Seq("gram"), "left")
@@ -494,15 +488,13 @@ object TextAnalysis {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), toks.as("t"))
       .filter(size(col("t")) >= 2)
-    val big = docs.select(col("doc_id"), col("source"),
+    val (big, _) = materialize(docs.select(col("doc_id"), col("source"),
       posexplode(zip_with(
         slice(col("t"), lit(1), size(col("t")) - 1),
         slice(col("t"), lit(2), size(col("t")) - 1),
         (a, b) => struct(a.as("w1"), b.as("w2")))))
       .select(col("doc_id"), col("source"), (col("pos") + 1).as("pos"),
-        col("col.w1").as("w1"), col("col.w2").as("w2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    big.count() // eager: model counts + history counts + scoring join
+        col("col.w1").as("w1"), col("col.w2").as("w2")))
     val bc = big.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("cbg"))
     val hist = big.groupBy(col("w1")).agg(count(lit(1)).as("ch"))
@@ -565,15 +557,13 @@ object TextAnalysis {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"), toks.as("t"))
       .filter(size(col("t")) >= 2)
-    val big = docs.select(col("doc_id"), col("source"),
+    val (big, _) = materialize(docs.select(col("doc_id"), col("source"),
       posexplode(zip_with(
         slice(col("t"), lit(1), size(col("t")) - 1),
         slice(col("t"), lit(2), size(col("t")) - 1),
         (a, b) => struct(a.as("w1"), b.as("w2")))))
       .select(col("doc_id"), col("source"), (col("pos") + 1).as("pos"),
-        col("col.w1").as("w1"), col("col.w2").as("w2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    big.count() // eager: two models' counts + the scoring join consume
+        col("col.w1").as("w1"), col("col.w2").as("w2")))
     val bcAll = big.groupBy(col("w1"), col("w2"))
       .agg(count(lit(1)).as("cba"))
     val chAll = big.groupBy(col("w1")).agg(count(lit(1)).as("cha"))
@@ -777,14 +767,10 @@ object TextAnalysis {
     * text never crosses a shuffle.
     */
   def pipelineDecontaminate(spark: SparkSession, dir: String): DataFrame = {
-    val grams3 =
-      """IF(size(w) < 3, array(),
-           transform(sequence(1, size(w) - 2),
-             i -> array_join(slice(w, i, 3), ' ')))"""
     val grams = Tables.documents(spark, dir)
       .select(col("doc_id"), split(col("text"), " ").as("w"), hashBucket)
       .select(col("doc_id"), col("bucket"),
-        explode(array_distinct(expr(grams3))).as("gram"))
+        explode(array_distinct(Dedup.word3Grams(col("w")))).as("gram"))
     val testGrams = grams.filter(col("bucket") >= 95).select(col("gram")).distinct()
     val contaminated = grams.filter(col("bucket") < 90)
       .join(testGrams, Seq("gram"), "left_semi")
@@ -817,13 +803,11 @@ object TextAnalysis {
     */
   def pipelineTokenBudget(spark: SparkSession, dir: String): DataFrame = {
     val budget = 600L
-    val b = Tables.documents(spark, dir)
+    val (b, _) = materialize(Tables.documents(spark, dir)
       .select(col("doc_id"), col("source"),
         size(toks).cast("bigint").as("n_tokens"))
       .withColumn("ord", md5(col("doc_id").cast("string")))
-      .withColumn("shard", substring(col("ord"), 1, 2))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    b.count() // eager: the shard totals and the windowed pass both consume
+      .withColumn("shard", substring(col("ord"), 1, 2)))
     val shardTot = b.groupBy(col("source"), col("shard"))
       .agg(sum(col("n_tokens")).as("st"))
     val off = shardTot.as("a")
@@ -909,13 +893,10 @@ object TextAnalysis {
     * consumers).
     */
   def textJsDivergence(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val perST = Tables.documents(spark, dir)
+    val (perST, _) = materialize(Tables.documents(spark, dir)
       .select(col("source"), explode(toks).as("term"))
       .groupBy(col("source"), col("term"))
-      .agg(count(lit(1)).as("ca"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    perST.count() // eager: vocab totals, source totals, and the join
+      .agg(count(lit(1)).as("ca")))
     val glob = perST.groupBy(col("term")).agg(sum(col("ca")).as("ct"))
     val perS = perST.groupBy(col("source"))
       .agg(sum(col("ca")).as("na"), count(lit(1)).as("n_terms"))
@@ -1339,14 +1320,13 @@ object TextAnalysis {
   def pipelineContrastivePairs(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = Tables.documents(spark, dir).select(col("doc_id"))
-    // persisted + eagerly counted: both symmetrization arms below carry
-    // the full ngram-Jaccard AllPairs pipeline as their subtree, so the
-    // uncached plan evaluated that pipeline TWICE (r16; the commercePairs
-    // rationale — swapped union arms defeat exchange reuse). Released by
-    // the harness-level GraftCaches contract.
-    val pairs = Dedup.dedupNgramJaccard(spark, dir).select(col("i"), col("j"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pairs.count()
+    // cached: both symmetrization arms below carry the full ngram-Jaccard
+    // AllPairs pipeline as their subtree, so the uncached plan evaluated
+    // that pipeline TWICE (r16; the commercePairs rationale — swapped
+    // union arms defeat exchange reuse). Released by the harness-level
+    // GraftCaches contract.
+    val (pairs, _) = materialize(
+      Dedup.dedupNgramJaccard(spark, dir).select(col("i"), col("j")))
     val best = pairs.select(col("i").as("anchor"), col("j").as("pos"))
       .unionAll(pairs.select(col("j").as("anchor"), col("i").as("pos")))
       .groupBy(col("anchor")).agg(min(col("pos")).as("pos_id"))
@@ -1423,10 +1403,8 @@ object TextAnalysis {
     */
   private[graft] def blockDedupCore(docs: DataFrame): DataFrame = {
     val blocks = docBlocks(docs)
-    val slim = blocks
-      .select(col("doc_id"), col("idx"), xxhash64(col("block")).as("dig"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    slim.count() // EAGER: winner aggregate + reconstruct join consume this
+    val (slim, _) = materialize(blocks
+      .select(col("doc_id"), col("idx"), xxhash64(col("block")).as("dig")))
     val winners = slim
       .groupBy(col("dig"))
       .agg(min(struct(col("doc_id"), col("idx"))).as("w"))
@@ -1493,15 +1471,13 @@ object TextAnalysis {
     * joined back hash-by-hash; N broadcasts as a 1-row crossJoin.
     */
   def textCollocations(spark: SparkSession, dir: String): DataFrame = {
-    val big = Tables.documents(spark, dir)
+    val (big, _) = materialize(Tables.documents(spark, dir)
       .select(explode(arrays_zip(
         slice(toks, lit(1), size(toks) - 1).as("w1"),
         slice(toks, lit(2), size(toks) - 1).as("w2"))).as("b"))
       .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
       .groupBy(col("w1"), col("w2"))
-      .agg(count(lit(1)).as("c12"))
-      .persist()
-    big.count() // consumers: marginals ×2, N, and the joined output
+      .agg(count(lit(1)).as("c12")))
     val c1 = big.groupBy(col("w1")).agg(sum(col("c12")).cast("bigint").as("c1"))
     val c2 = big.groupBy(col("w2")).agg(sum(col("c12")).cast("bigint").as("c2"))
     val n = big.agg(sum(col("c12")).cast("bigint").as("n_bigrams"))

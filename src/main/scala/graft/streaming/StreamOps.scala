@@ -714,10 +714,8 @@ object StreamOps {
   def trainGramSet(trainDocs: DataFrame): DataFrame =
     trainDocs
       .select(split(col("text"), " ").as("w"))
-      .select(explode(array_distinct(expr(
-        """IF(size(w) < 3, array(),
-             transform(sequence(1, size(w) - 2),
-               i -> array_join(slice(w, i, 3), ' ')))"""))).as("gram"))
+      .select(explode(array_distinct(
+        graft.operators.Dedup.word3Grams(col("w")))).as("gram"))
       .distinct()
 
   /** stream_contamination: the decontamination gate applied ONLINE — a
@@ -733,10 +731,8 @@ object StreamOps {
   def contaminationStream(docs: DataFrame, trainGrams: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), split(col("text"), " ").as("w"))
-      .select(col("doc_id"), explode(array_distinct(expr(
-        """IF(size(w) < 3, array(),
-             transform(sequence(1, size(w) - 2),
-               i -> array_join(slice(w, i, 3), ' ')))"""))).as("gram"))
+      .select(col("doc_id"), explode(array_distinct(
+        graft.operators.Dedup.word3Grams(col("w")))).as("gram"))
       .join(trainGrams, Seq("gram"), "left_semi")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shared"))

@@ -11,7 +11,9 @@ import graft.operators.Relational
   * checkpoint dir (the executor-loss-survival property localCheckpoint
   * lacks at cluster scale). Also the round loop's contract
   * (Barriers.fixpoint) on a toy step: its stop rule, both limits, its
-  * round events and its exceptions.
+  * round events and its exceptions. And the shared-relation cache
+  * (Barriers.materialize): one count per call, the release after it, a
+  * caller's cache left as it was.
   */
 class BarriersSpec extends AnyFunSuite {
 
@@ -141,5 +143,79 @@ class BarriersSpec extends AnyFunSuite {
       }
     }
     assert(e eq boom)
+  }
+
+  import org.apache.spark.storage.StorageLevel
+
+  test("materialize: one count per call, returns the cached relation and " +
+      "its row count") {
+    def rel(r: Int) =
+      spark.range(0, 100, 1, 1).toDF("id").filter(col("id") % 3 === r)
+    val byHand = rel(1).persist(StorageLevel.MEMORY_AND_DISK)
+    val df = rel(0)
+    try {
+      val (_, hand) = TestSpark.launched(byHand.count())
+      val ((cached, n), first) = TestSpark.launched(Barriers.materialize(df))
+      assert(n === 34L)
+      assert(cached eq df)
+      assert(df.storageLevel === StorageLevel.MEMORY_AND_DISK)
+      // the call launches exactly what a hand-written persist + count
+      // does; on a cached input, exactly what a count of the cache does
+      assert(first.jobs >= 1)
+      assert(first.jobs === hand.jobs)
+      val ((_, again), second) = TestSpark.launched(Barriers.materialize(df))
+      val (_, plain) = TestSpark.launched(df.count())
+      assert(again === 34L)
+      assert(second.jobs === plain.jobs)
+    } finally { df.unpersist(); byHand.unpersist() }
+  }
+
+  test("materialize: `release` is unpersisted only after the count, so " +
+      "the count reads the released cache instead of recomputing it") {
+    val evals = spark.sparkContext.longAccumulator("upstream-evals")
+    val tick = udf { (x: Long) => evals.add(1); x }
+    val (up, nUp) = Barriers.materialize(
+      spark.range(0, 50, 1, 1).select(tick(col("id")).as("id")))
+    assert(nUp === 50L && evals.value === 50L)
+    val down = up.filter(col("id") < 20)
+    try {
+      val (_, n) = Barriers.materialize(down, release = Seq(up))
+      assert(n === 20L)
+      assert(evals.value === 50L,
+        "the count recomputed the released upstream cache")
+      assert(!Barriers.cached(up))
+      assert(Barriers.cached(down))
+    } finally { down.unpersist(); up.unpersist() }
+  }
+
+  test("materialize: an input the caller already cached keeps its storage " +
+      "level and stays cached") {
+    val mine = spark.range(0, 10, 1, 1).toDF("id")
+      .persist(StorageLevel.MEMORY_ONLY)
+    try {
+      mine.count()
+      val (same, n) = Barriers.materialize(mine)
+      assert(same eq mine)
+      assert(n === 10L)
+      assert(mine.storageLevel === StorageLevel.MEMORY_ONLY)
+      // releasing something else leaves the caller's cache alone
+      val other = spark.range(0, 5, 1, 1).toDF("id")
+      Barriers.materialize(mine.filter(col("id") < 5), release = Seq(other))
+      assert(mine.storageLevel === StorageLevel.MEMORY_ONLY)
+    } finally GraftCaches.release(spark)
+  }
+
+  test("q21_late_sole_supplier materializes its shared collapsed relation " +
+      "while its DataFrame is built") {
+    def build() = graft.operators.Relational
+      .q21LateSoleSupplier(spark, TestSpark.sfDir)
+    try {
+      build() // the first build may read table schemas: not counted
+      GraftCaches.release(spark)
+      val (_, launched) = TestSpark.launched(build())
+      assert(launched.jobs >= 1,
+        "the (orderkey, suppkey, late) relation feeds two consumers and " +
+          "must be counted before they are built")
+    } finally GraftCaches.release(spark)
   }
 }
