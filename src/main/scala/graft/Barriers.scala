@@ -22,7 +22,8 @@ final case class LoopRound(loop: String, round: Int, changed: Long,
   * rounds; the one shared-relation cache of every operator
   * ([[materialize]]: persist, eager count, upstream release), with the
   * graph cores' stationary edge cache on top of it ([[stationaryEdges]])
-  * and their driver-finish edge bound ([[DriverFinishEdgeBound]]); and
+  * and their driver-finish edge bound ([[DriverFinishEdgeBound]]; the
+  * finish itself is [[DriverGraph]]); and
   * the scoped reliable checkpoint of sinks that write into what they
   * read ([[withCheckpoint]]).
   *
@@ -209,30 +210,29 @@ object Barriers {
     materialize(edges.repartition(col("src")), release)
 
   /** Edge count at or under which a graph core finishes on the DRIVER
-    * (connected components' union-find, SCC's Tarjan scan, k-core's
-    * in-memory peel): far above any dimension-sized graph the queries
-    * feed, and bounded, so the collect is an explicitly bounded
+    * ([[DriverGraph]]: connected components' union-find, SCC's Tarjan
+    * scan, k-core's peel): far above any dimension-sized graph the
+    * queries feed, and bounded, so the collect is an explicitly bounded
     * finishing step, never a scale risk — above it the distributed loop
     * runs. Connected components applies it twice: first to the RAW pair
     * count (sf0.1 dedup_cluster: 964,854 pairs, union-found straight
     * from the pair cache, no contraction), then — only when the pairs
     * exceed it — to the contracted edge count (the 1,776 contracted
     * edges those pairs would contract to are what the second check
-    * would see). The bound gates WHICH engine finishes, never the
-    * answer: each core's spec asserts its regimes bit-identical.
+    * would see). SCC also requires its vertex count within it. The bound
+    * gates WHICH engine finishes, never the answer: each core's spec
+    * asserts its regimes bit-identical.
     *
-    * Driver memory at the bound is not the 4M slim rows' 64 MB. The
-    * `ScaleCheck ccdriver` drill (4M disjoint pairs — 8M union-find
-    * nodes, 4M moved into the root map, the worst shape for both; 4
-    * vCPUs, local mode, the same pairs also forced through the
-    * contraction) measured on the raw-pair finish: a 189 MB root-map
-    * broadcast; 1.38 GB live heap while the returned plan is held (its
-    * 4M-row local root relation and the broadcast copies; 0.09 GB on
-    * the contraction path); a 2.2–2.4 GB post-GC live peak during the
-    * phase, the same on both paths (executor buffers share that heap);
-    * 26–30 s against the contraction's 28–34 s; it completes under
-    * -Xmx3g. A driver finishing CC at the bound needs a heap of that
-    * order.
+    * Driver memory at the bound is mostly the hand-back, not the
+    * finish: [[DriverGraph]]'s arrays take about 0.3 GB at 8M vertices,
+    * its local relation one `UnsafeRow` per row, which Spark's local
+    * scan copies again. `ScaleCheck ccdriver` (4 vCPUs, local mode,
+    * -Xmx3g; live heap with the result plan held / largest live heap
+    * after a GC in the phase): CC raw pairs, 4M disjoint pairs (8M ids,
+    * 4M-row root map, 189 MB broadcast), 1.06 / 1.98 GB; k-core k = 1 on
+    * them (8M rows back) 1.72 / 3.07 GB, at the heap's limit; SCC on 1M
+    * disjoint 4-cycles 0.79 / 2.22 GB. A driver finishing at the bound
+    * needs a heap of about 3 GB.
     */
   val DriverFinishEdgeBound = 4000000L
 }

@@ -307,20 +307,26 @@ object ScaleCheck {
     pairs.unpersist()
   }
 
-  /** `runMain graft.ScaleCheck ccdriver [nPairs]` — connected components'
-    * raw-pair driver finish AT its bound (default nPairs =
-    * [[Barriers.DriverFinishEdgeBound]]): nPairs disjoint pairs
-    * (2k, 2k+1), the shape that maximizes both driver structures — every
-    * pair brings two fresh nodes into the union-find map (2·nPairs
-    * entries) and moves one of them into the broadcast root map (nPairs
-    * rows). The same pairs first run the contraction path (bound
-    * nPairs − 1) for comparison. Per phase it prints the largest heap
-    * any collection left live (GC notifications — the live-set peak a
-    * heap must hold; in local mode the executors' buffers share that
-    * heap, so it bounds the driver's share from above), the post-GC live
-    * heap before the phase and while its result plan is still held, and
-    * the broadcast size (the exchanges' dataSize metric); a wrong label
-    * throws.
+  /** `runMain graft.ScaleCheck ccdriver [nPairs]` — the graph family's
+    * driver finish ([[DriverGraph]]) AT its bound (default nPairs =
+    * [[Barriers.DriverFinishEdgeBound]]), in four phases:
+    *  - `contracted`, `raw_pairs`: connected components over nPairs
+    *    disjoint pairs (2k, 2k+1), the shape that maximizes both driver
+    *    structures — every pair brings two fresh ids (2·nPairs vertices)
+    *    and moves one of them into the broadcast root map (nPairs rows).
+    *    The contraction path (bound nPairs − 1) runs first for
+    *    comparison, then the raw-pair driver finish;
+    *  - `kcore`: the 1-core of the same pairs, where all 2·nPairs
+    *    vertices survive — the largest hand-back;
+    *  - `scc`: sccCore over nPairs/4 disjoint 4-cycles, nPairs vertices
+    *    and nPairs edges (its driver branch also requires the vertex
+    *    count within the bound, which the pairs' 2·nPairs exceed).
+    * Per phase it prints the largest heap any collection left live (GC
+    * notifications — the live-set peak a heap must hold; in local mode
+    * the executors' buffers share that heap, so it bounds the driver's
+    * share from above), the post-GC live heap before the phase and
+    * while its result plan is still held, and the broadcast size (the
+    * exchanges' dataSize metric); a wrong label or degree throws.
     */
   private def ccDriverDrill(spark: org.apache.spark.sql.SparkSession,
       nPairs: Long): Unit = {
@@ -331,6 +337,7 @@ object ScaleCheck {
     import javax.management.openmbean.CompositeData
     import com.sun.management.GarbageCollectionNotificationInfo
     import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.{Column, DataFrame}
     val pairs = spark.range(nPairs)
       .select((col("id") * 2).as("i"), (col("id") * 2 + 1).as("j"))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -359,18 +366,13 @@ object ScaleCheck {
       .collect { case e: NotificationEmitter => e }
     val helper =
       new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
-    def phase(tag: String, bound: Long): Unit = {
+    // `result` is the phase's (n, bad) aggregate over the finish's output
+    def phase(tag: String, input: String, want: Long)(
+        result: => DataFrame): Unit = {
       val live0 = liveMb()
       maxAfterGc.set(0L)
       gcs.foreach(_.addNotificationListener(listener, null, null))
-      val (q, row) = timed(s"cc_$tag") {
-        val cc = Dedup.connectedComponents(spark, pairs, universe,
-          driverFinishEdgeBound = bound)
-        val q = cc.agg(count(lit(1)).as("n"), sum(when(
-          col("canonical_id") =!= col("id") - col("id") % 2, 1L)
-          .otherwise(0L)).as("bad"))
-        (q, q.collect().head)
-      }
+      val (q, row) = timed(s"cc_$tag") { val q = result; (q, q.collect().head) }
       gcs.foreach(_.removeNotificationListener(listener))
       val held = liveMb() // q, and through it the plan, still referenced
       val bcastBytes = helper.collect(q.queryExecution.executedPlan) {
@@ -378,18 +380,36 @@ object ScaleCheck {
           b.metrics("dataSize").value
       }.sum
       val (n, bad) = (row.getLong(0), row.getLong(1))
-      println(s"SCALECHECK ccdriver $tag pairs=$nPairs labels=$n wrong=$bad " +
+      println(s"SCALECHECK ccdriver $tag $input labels=$n wrong=$bad " +
         s"live_before_mb=$live0 max_live_after_gc_mb=${maxAfterGc.get >> 20} " +
         s"live_with_plan_mb=$held broadcast_mb=${bcastBytes >> 20} " +
         s"xmx_mb=${Runtime.getRuntime.maxMemory >> 20}")
-      assert(n == 2 * nPairs && bad == 0,
-        s"ccdriver $tag labeling wrong: labels=$n (want ${2 * nPairs}) " +
-          s"wrong=$bad")
+      assert(n == want && bad == 0,
+        s"ccdriver $tag wrong: labels=$n (want $want) wrong=$bad")
     }
+    def tally(df: DataFrame, wrong: Column): DataFrame =
+      df.agg(count(lit(1)).as("n"), sum(when(wrong, 1L).otherwise(0L)))
+    def cc(bound: Long): DataFrame = tally(
+      Dedup.connectedComponents(spark, pairs, universe,
+        driverFinishEdgeBound = bound),
+      col("canonical_id") =!= col("id") - col("id") % 2)
     // contracted first: the raw-pair finish's broadcast outlives its plan
     // until the ContextCleaner runs, and would inflate the next baseline
-    phase("contracted", nPairs - 1)
-    phase("raw_pairs", nPairs)
+    phase("contracted", s"pairs=$nPairs", 2 * nPairs)(cc(nPairs - 1))
+    phase("raw_pairs", s"pairs=$nPairs", 2 * nPairs)(cc(nPairs))
+    phase("kcore", s"pairs=$nPairs", 2 * nPairs) {
+      val (core, rounds) = operators.Relational.kCoreCore(pairs, 1)
+      assert(rounds == 0, s"ccdriver kcore: $rounds peel rounds, want 0")
+      tally(core, col("core_degree") =!= 1L)
+    }
+    val nCycles = nPairs / 4
+    phase("scc", s"cycles=$nCycles", 4 * nCycles) {
+      val v = spark.range(4 * nCycles).select(col("id").as("v"))
+      tally(operators.Relational.sccCore(v,
+          v.select(col("v").as("src"),
+            (col("v") - col("v") % 4 + (col("v") + 1) % 4).as("dst"))),
+        col("scc_id") =!= col("v") - col("v") % 4)
+    }
     pairs.unpersist()
   }
 

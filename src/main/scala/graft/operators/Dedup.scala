@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{DriverGraph, Tables}
 import graft.Barriers.materialize
 import graft.functions.GraftFunctions
 
@@ -336,8 +336,9 @@ object Dedup {
     *
     * Scale shape: [[connectedComponents]] counts the persisted pair
     * relation and picks its finish on that count. Pairs at or under
-    * [[graft.Barriers.DriverFinishEdgeBound]] (964,854 at sf0.1) are
-    * collected once and union-found on the driver; above it the pair
+    * [[graft.Barriers.DriverFinishEdgeBound]] (4M; sf0.1 has 964,854)
+    * are collected once and union-found on the driver
+    * ([[graft.DriverGraph]]); above it the pair
     * graph is first CONTRACTED (one neighbor-min pass collapses each
     * near-dup clique to a supernode), then the supernode graph is
     * labeled by the same union-find when its edges fit the bound, by
@@ -365,8 +366,9 @@ object Dedup {
     * The finish regime is decided on the pair count the eager count
     * already paid for, the rule [[Relational.kCoreCore]] uses:
     *  - pairs ≤ `driverFinishEdgeBound`: the pairs are collected once
-    *    and union-found on the driver ([[componentRoots]]); no
-    *    contraction, no label cache;
+    *    and union-found on the driver ([[graft.DriverGraph.components]],
+    *    whose root map [[relabel]] broadcast-joins); no contraction, no
+    *    label cache;
     *  - above it: the neighbor-min contraction, then the same
     *    union-find over the contracted edges when THEY fit the bound,
     *    else [[Relational.minLabelFix]].
@@ -381,14 +383,14 @@ object Dedup {
     * reading that cache until [[graft.GraftCaches.release]].
     * The pair count, and the contracted edge count when the contraction
     * runs, are posted as round-0 [[graft.LoopRound]] events (detail
-    * `pairs`, `superEdges`).
+    * `pairs`, `superEdges`), and a driver finish posts its collected
+    * edge count (detail `driver`).
     */
   private[graft] def connectedComponents(spark: SparkSession,
       pairs: DataFrame, universe: DataFrame,
       releaseAfterMaterialize: Seq[DataFrame] = Nil,
       driverFinishEdgeBound: Long = graft.Barriers.DriverFinishEdgeBound)
       : DataFrame = {
-    import spark.implicits._
     // cache the UNDIRECTED pair relation once — half the rows of a
     // doubled edge list, and the one evaluation of the (expensive) pair
     // subtree that every downstream pass reads. (A pairs ∪ pairs.swap
@@ -409,10 +411,9 @@ object Dedup {
       // FINISH ON THE DRIVER straight from the pairs: the bound keeps the
       // collect a bounded finishing step, and a dimension-sized graph
       // pays one collect instead of the contraction's aggregates, label
-      // cache and edge cache. Null endpoints join nothing in the
-      // contraction, so they link nothing here either.
-      val roots = componentRoots(
-        p.select(col("i"), col("j")).na.drop().as[(Long, Long)].collect())
+      // cache and edge cache
+      val roots = DriverGraph.components(p.select(col("i"), col("j")),
+        "connectedComponents")
       if (owned) p.unpersist()
       return relabel(universe.select(col("id"), col("id").as("lab")), roots)
     }
@@ -460,7 +461,7 @@ object Dedup {
       // data: its size tracks how many clusters chain into each other,
       // which the bound just guarded
       val roots =
-        try componentRoots(edges.as[(Long, Long)].collect())
+        try DriverGraph.components(edges, "connectedComponents")
         finally edges.unpersist()
       return relabel(l0, roots)
     }
@@ -481,39 +482,13 @@ object Dedup {
       .select(col("id"), col("slab").as("canonical_id"))
   }
 
-  /** Driver union-find over a collected edge list — the one finisher of
-    * both [[connectedComponents]] driver regimes. Union-by-min keeps
-    * every root its component's minimum id; O(E α(E)). Returns
-    * (node, root) for every node whose root is not itself, so the
-    * broadcast root map carries only the nodes that move.
-    */
-  private def componentRoots(edges: Array[(Long, Long)]): Seq[(Long, Long)] = {
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
-      r
-    }
-    edges.foreach { case (s, d) =>
-      parent.getOrElseUpdate(s, s)
-      parent.getOrElseUpdate(d, d)
-      val rs = find(s); val rd = find(d)
-      if (rs != rd) parent(math.max(rs, rd)) = math.min(rs, rd)
-    }
-    parent.keysIterator.map(k => (k, find(k))).filter(kr => kr._1 != kr._2)
-      .toVector
-  }
-
-  /** (id, canonical_id) from (id, lab) labels and a union-find root map:
-    * a label the map does not move is its own component's root. */
-  private def relabel(labels: DataFrame, roots: Seq[(Long, Long)]): DataFrame = {
-    val spark = labels.sparkSession
-    import spark.implicits._
-    labels.join(broadcast(roots.toDF("lab", "slab")), Seq("lab"), "left_outer")
+  /** (id, canonical_id) from (id, lab) labels and a (lab, slab) root map
+    * ([[graft.DriverGraph.components]], which holds only the labels
+    * that move): a label the map does not move is its own component's
+    * root. */
+  private def relabel(labels: DataFrame, roots: DataFrame): DataFrame =
+    labels.join(broadcast(roots), Seq("lab"), "left_outer")
       .select(col("id"), coalesce(col("slab"), col("lab")).as("canonical_id"))
-  }
 
   // Bucket pair emission uses the custom streaming PairsGenerator
   // (GraftFunctions.pairs): a bucket of b ids yields its b·(b-1)/2

@@ -2268,8 +2268,9 @@ object Relational {
     * Scale shape: the pair relation persists once (digest-slim: two
     * longs per edge) and its eager count picks the finish. At or under
     * [[graft.Barriers.DriverFinishEdgeBound]] (this slice: a few hundred
-    * pairs) the pairs are collected once and union-found on the driver,
-    * so the query runs no contraction jobs at all. Above it the
+    * pairs) the pairs are collected once and union-found on the driver
+    * ([[graft.DriverGraph]]), so the query runs no contraction jobs at
+    * all. Above it the
     * contraction collapses the pairs to the inter-supernode graph, which
     * the same union-find finishes when its edges fit the bound and the
     * shared pointer-jump fixpoint [[minLabelFix]] otherwise — the bound
@@ -2781,8 +2782,8 @@ object Relational {
     * [[SccMaxRounds]] throw. Trading-bloc graphs (the query) condense
     * in 1-2 rounds; web-shaped graphs (giant SCC + shallow periphery)
     * in a handful. At or below [[graft.Barriers.DriverFinishEdgeBound]]
-    * the whole computation finishes driver-side instead: one
-    * [[sccTarjan]] scan over the collected edge list, so a
+    * the whole computation finishes driver-side instead: one Tarjan
+    * scan over the collected edge list ([[graft.DriverGraph.scc]]), so a
     * dimension-sized graph (graph_scc's nation digraph, ≤ 625 edges)
     * pays two collects instead of ~50 scheduled jobs of distributed
     * fixpoint overhead. SccSpec asserts both regimes bit-identical on
@@ -2803,7 +2804,7 @@ object Relational {
     *    and classes only subdivide, so more root SCCs peel per round;
     *  - MID-LOOP DRIVER FINISH: once the surviving subproblem fits the
     *    same bound the entry branch honors, the diameter-many tail
-    *    rounds collapse into one [[sccTarjan]] scan.
+    *    rounds collapse into one [[graft.DriverGraph.scc]] scan.
     */
   /** Trim-prologue round cap for [[sccCore]] (the "Trim" of the FW-BW-Trim
     * family, Slota-Rajamanickam-Madduri 2014; r14 verdict #3): a vertex
@@ -2827,61 +2828,6 @@ object Relational {
     */
   private[graft] val SccTrimRounds = 3
 
-  /** Driver-side iterative Tarjan over an explicit edge list — the
-    * bounded finishing branch of [[sccCore]]. Ids are arbitrary longs;
-    * returns v → min member id of v's SCC for every vertex in `verts`.
-    */
-  private[graft] def sccTarjan(verts: Array[Long],
-      edges: Array[(Long, Long)]): Map[Long, Long] = {
-    val idx = verts.zipWithIndex.toMap
-    val n = verts.length
-    val adj = Array.fill(n)(List.empty[Int])
-    edges.foreach { case (a, b) =>
-      // edges between unknown vertices are the caller's bug — loud
-      adj(idx(a)) ::= idx(b)
-    }
-    val index = Array.fill(n)(-1)
-    val low = new Array[Int](n)
-    val onStk = new Array[Boolean](n)
-    var cnt = 0
-    val stk = scala.collection.mutable.Stack[Int]()
-    val out = new Array[Long](n)
-    for (root <- 0 until n if index(root) < 0) {
-      var work = List((root, adj(root)))
-      index(root) = cnt; low(root) = cnt; cnt += 1
-      stk.push(root); onStk(root) = true
-      while (work.nonEmpty) {
-        val (node, rest) = work.head
-        rest match {
-          case w :: tail if index(w) < 0 =>
-            work = (node, tail) :: work.tail
-            index(w) = cnt; low(w) = cnt; cnt += 1
-            stk.push(w); onStk(w) = true
-            work = (w, adj(w)) :: work
-          case w :: tail =>
-            if (onStk(w)) low(node) = math.min(low(node), index(w))
-            work = (node, tail) :: work.tail
-          case Nil =>
-            work = work.tail
-            if (low(node) == index(node)) {
-              var comp = List.empty[Int]
-              var done = false
-              while (!done) {
-                val w = stk.pop(); onStk(w) = false; comp ::= w
-                if (w == node) done = true
-              }
-              val m = comp.iterator.map(verts).min
-              comp.foreach(v => out(v) = m)
-            }
-            work.headOption.foreach { case (p, _) =>
-              low(p) = math.min(low(p), low(node))
-            }
-        }
-      }
-    }
-    verts.zip(out).toMap
-  }
-
   /** [[sccCore]]'s round state: the surviving hashed vertices
     * (`nRemaining` of them), the live edges among them (`nLive`), and
     * the (hv, lbl) rows assigned so far, one checkpointed relation.
@@ -2900,7 +2846,6 @@ object Relational {
     // edge sides: xxhash64 is width-sensitive (int 5 and long 5 hash
     // differently), so a caller mixing integer edges with long vertices
     // would otherwise land in two disjoint hash spaces silently.
-    val spark = vertices0.sparkSession
     val vmap = graft.Barriers.roundBarrier(
       vertices0.select(col("v").cast("bigint").as("v")).distinct()
         .select(col("v"), xxhash64(col("v")).as("hv")))
@@ -2927,17 +2872,14 @@ object Relational {
       throw new IllegalArgumentException(
         s"sccCore: ${nLive - nValid} of $nLive edges reference vertices " +
           "absent from the vertex set — the labeling would silently " +
-          "exclude them (distributed) or crash opaquely (driver finish); " +
+          "exclude them (distributed) or fail later (driver finish); " +
           "pass a vertex relation covering every edge endpoint")
     if (nLive <= driverFinishEdgeBound && nVerts <= driverFinishEdgeBound) {
       // bounded DRIVER finish (the connectedComponents contract): a
       // dimension-sized digraph pays one Tarjan scan, not ~50 jobs of
       // distributed fixpoint overhead; regimes spec-asserted identical
-      val verts = vmap.select(col("v")).collect().map(_.getLong(0))
-      val es = rawLive.collect().map(r => (r.getLong(0), r.getLong(1)))
-      val lab = sccTarjan(verts, es).toSeq
-      import spark.implicits._
-      return lab.toDF("v", "scc_id")
+      return graft.DriverGraph.scc(vmap.select(col("v")), rawLive,
+        Seq("v", "scc_id"), "scc")
     }
     val chk = vmap.agg(count(lit(1)).as("n"),
       countDistinct(col("hv")).as("nh")).head()
@@ -3002,13 +2944,8 @@ object Relational {
     def finishIfBounded(st: SccState): SccState =
       if (st.nRemaining == 0 || st.nRemaining > driverFinishEdgeBound ||
           st.nLive > driverFinishEdgeBound) st
-      else {
-        val vs = st.remaining.select(col("hv")).collect().map(_.getLong(0))
-        val es = st.live.collect().map(r => (r.getLong(0), r.getLong(1)))
-        import spark.implicits._
-        st.copy(nRemaining = 0,
-          out = st.assigned(sccTarjan(vs, es).toSeq.toDF("hv", "lbl")))
-      }
+      else st.copy(nRemaining = 0, out = st.assigned(graft.DriverGraph.scc(
+        st.remaining.select(col("hv")), st.live, Seq("hv", "lbl"), "scc")))
     // one fixpoint over `edges`, made stationary for its rounds, with
     // every surviving vertex starting as its own label
     def minLabels(remaining: DataFrame, edges: DataFrame,
@@ -3230,8 +3167,9 @@ object Relational {
     *
     * Scale shape: simultaneous-removal peeling, two-regime like
     * [[Dedup.connectedComponents]] — an edge list at or under
-    * [[graft.Barriers.DriverFinishEdgeBound]] peels in memory (rounds are hash-
-    * map sweeps, free); above it each distributed round is ONE degree
+    * [[graft.Barriers.DriverFinishEdgeBound]] peels in memory
+    * ([[graft.DriverGraph.kCore]]: rounds are array sweeps, free); above
+    * it each distributed round is ONE degree
     * aggregate over the surviving edge list plus two co-partitioned
     * left-semi joins (never a broadcast of the O(V) keep set), landed
     * in a [[graft.Barriers.roundBarrier]] (the CLAUDE.md iterative
@@ -3258,38 +3196,21 @@ object Relational {
   /** The simultaneous-removal k-core peel under graph_kcore, on an
     * UNDIRECTED distinct (i, j) pair relation. Returns the surviving
     * per-vertex within-core degrees and the number of peel rounds the
-    * fixpoint took (0 = the input already was its own k-core).
+    * fixpoint took (0 = the input already was its own k-core). The
+    * driver peel ([[graft.DriverGraph.kCore]]) counts distinct
+    * neighbours and reports the rounds that removed a vertex.
     */
   private[graft] def kCoreCore(pairs: DataFrame, k: Int,
       driverEdgeBound: Long = graft.Barriers.DriverFinishEdgeBound)
       : (DataFrame, Int) = {
-    val spark = pairs.sparkSession
     val edges0 = graft.Barriers.roundBarrier(pairs.select(col("i"), col("j")))
     val n0 = edges0.count()
     if (n0 <= driverEdgeBound) {
       // bounded finishing step, not corpus data: peel in memory where a
-      // round is a hash-map sweep instead of a scheduled stage
-      import spark.implicits._
-      val adj = scala.collection.mutable.HashMap
-        .empty[Long, scala.collection.mutable.Set[Long]]
-      edges0.as[(Long, Long)].collect().foreach { case (a, b) =>
-        adj.getOrElseUpdate(a, scala.collection.mutable.Set.empty) += b
-        adj.getOrElseUpdate(b, scala.collection.mutable.Set.empty) += a
-      }
+      // round is an array sweep instead of a scheduled stage
+      val out = graft.DriverGraph.kCore(edges0, k, "kcore")
       edges0.unpersist()
-      var rounds = 0
-      var changed = true
-      while (changed) {
-        val drop = adj.collect { case (v, nb) if nb.size < k => v }.toSeq
-        if (drop.isEmpty) changed = false
-        else {
-          rounds += 1
-          drop.foreach { v => adj(v).foreach(u => adj(u) -= v); adj -= v }
-        }
-      }
-      val out = adj.iterator.map { case (v, nb) => (v, nb.size.toLong) }
-        .toSeq.toDF("v", "core_degree")
-      return (out, rounds)
+      return out
     }
     // every round but the last removes at least one edge, so n0 + 1
     // rounds always reach the fixpoint; a round over no edges reports 0
@@ -3823,7 +3744,11 @@ object Relational {
       .distinct()
     val deg = sp.groupBy(col("p")).agg(count(lit(1)).as("d"))
       .filter(col("d") >= 2L && col("d") <= LinkPredDfCap)
-    val e = sp.join(deg, Seq("p"))
+    // both sides of the self-join read `e`, one cached copy: AQE plans
+    // each uncached copy of the sp/deg subtree from whichever of its
+    // stages have finished, and the job count then varies from run to
+    // run (6 to 8 at sf0.01)
+    val (e, _) = materialize(sp.join(deg, Seq("p")))
     val pairs = e.select(col("p"), col("s").as("s1"), col("d"))
       .join(e.select(col("p"), col("s").as("s2")), Seq("p"))
       .filter(col("s1") < col("s2"))

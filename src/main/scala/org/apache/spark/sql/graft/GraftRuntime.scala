@@ -1,13 +1,23 @@
 package org.apache.spark.sql.graft
 
+import scala.collection.immutable.ArraySeq
+
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler.SparkListenerEvent
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.classic.Dataset
+import org.apache.spark.sql.types.LongType
 
-/** Block-manager introspection for the bench harness, and the poster of
-  * graft's own listener events.
+/** Block-manager introspection for the bench harness, the poster of
+  * graft's own listener events, and the local relation the graph
+  * family's driver finish hands back (graft.DriverGraph).
   *
   * Lives in the org.apache.spark.* tree because `BlockManagerMaster` and
-  * `SparkContext.listenerBus` are `private[spark]`: the bench needs to
+  * `SparkContext.listenerBus` are `private[spark]` and `Dataset.ofRows`
+  * is `private[sql]`: the bench needs to
   * OBSERVE how much storage memory is still pinned between queries
   * (leftover broadcast pieces, undrained unpersists) to tell a clean
   * session from the r5 accumulation pathology, and there is no public API
@@ -26,4 +36,13 @@ object GraftRuntime {
     */
   def post(sc: SparkContext, event: SparkListenerEvent): Unit =
     sc.listenerBus.post(event)
+
+  /** A local relation of non-null BIGINT columns `names` whose data is
+    * `rows` as they are: no `Row` or tuple per row, no renaming
+    * projection for the optimizer to fold into a second copy. */
+  def longRows(spark: SparkSession, names: Seq[String],
+      rows: Array[InternalRow]): DataFrame =
+    Dataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      LocalRelation(names.map(AttributeReference(_, LongType, nullable = false)()),
+        ArraySeq.unsafeWrapArray(rows)))
 }

@@ -122,11 +122,16 @@ class KcoreSpec extends AnyFunSuite {
          JOIN parquet.`/root/testdata/sf0.01/lineitem.parquet` l
            ON l.l_orderkey = o.o_orderkey
          WHERE l.l_quantity >= 49 AND o.o_orderpriority = '1-URGENT'""")
-    val dist = Relational.kCoreCore(slice, 2, driverEdgeBound = 0L)
-      ._1.as[(Long, Long)].collect().toMap
-    val drv = Relational.kCoreCore(slice, 2)
-      ._1.as[(Long, Long)].collect().toMap
+    val (dist, distRun) = TestSpark.launched(
+      Relational.kCoreCore(slice, 2, driverEdgeBound = 0L)
+      ._1.as[(Long, Long)].collect().toMap)
+    val (drv, drvRun) = TestSpark.launched(Relational.kCoreCore(slice, 2)
+      ._1.as[(Long, Long)].collect().toMap)
     assert(dist === drv && drv.nonEmpty)
+    // the default bound took the driver finish, bound 0 did not
+    def driverFinishes(l: TestSpark.Launched): Int =
+      l.rounds.count(r => r.loop == "kcore" && r.detail == "driver")
+    assert(driverFinishes(drvRun) === 1 && driverFinishes(distRun) === 0)
   }
 
   test("oracle margin: fixpoint ≤ half the unrolled chain on both shipped SFs") {

@@ -80,11 +80,16 @@ class SccSpec extends AnyFunSuite {
       if (edges.isEmpty)
         Seq.empty[(Long, Long)].toDF("src", "dst")
       else edges.toDF("src", "dst")
-    val driver = Relational.sccCore(v, e)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val dist = Relational.sccCore(v, e, driverFinishEdgeBound = 0L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val (driver, driverRun) = TestSpark.launched(Relational.sccCore(v, e)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    val (dist, distRun) = TestSpark.launched(
+      Relational.sccCore(v, e, driverFinishEdgeBound = 0L)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
     assert(driver === dist, "driver and distributed SCC regimes disagree")
+    // the default bound took the driver finish, bound 0 did not
+    def driverFinishes(l: TestSpark.Launched): Int =
+      l.rounds.count(r => r.loop == "scc" && r.detail == "driver")
+    assert(driverFinishes(driverRun) === 1 && driverFinishes(distRun) === 0)
     dist
   }
 
