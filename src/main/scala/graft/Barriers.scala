@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.SparkListenerEvent
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{array, col, explode, struct}
 import org.apache.spark.storage.StorageLevel
 
 /** One round of a [[Barriers.fixpoint]] loop, posted on the session's
@@ -21,9 +21,10 @@ final case class LoopRound(loop: String, round: Int, changed: Long,
   * coreset and k-means) and round-barrier materialization for its
   * rounds; the one shared-relation cache of every operator
   * ([[materialize]]: persist, eager count, upstream release), with the
-  * graph cores' stationary edge cache on top of it ([[stationaryEdges]])
-  * and their driver-finish edge bound ([[DriverFinishEdgeBound]]; the
-  * finish itself is [[DriverGraph]]); and
+  * graph cores' stationary edge cache on top of it ([[stationaryEdges]]),
+  * the one-read directed edge list of an undirected relation
+  * ([[symmetrize]]) and their driver-finish edge bound
+  * ([[DriverFinishEdgeBound]]; the finish itself is [[DriverGraph]]); and
   * the scoped reliable checkpoint of sinks that write into what they
   * read ([[withCheckpoint]]).
   *
@@ -208,6 +209,23 @@ object Barriers {
   def stationaryEdges(edges: DataFrame,
       release: Seq[DataFrame] = Nil): (DataFrame, Long) =
     materialize(edges.repartition(col("src")), release)
+
+  /** Both directed edges of every row of an undirected `(a, b)` relation,
+    * in ONE read: each row emits (a→src, b→dst) and (b→src, a→dst), and
+    * the `carried` columns ride along on both. A two-arm union of
+    * swapped selects returns the same multiset but plants `pairs` in the
+    * plan twice, and the arms' exchanges are not reused (their canonical
+    * plans differ), so an uncached `pairs` would be evaluated twice.
+    * Never persist a relation only so that such arms can share it.
+    */
+  def symmetrize(pairs: DataFrame, a: String, b: String,
+      carried: String*): DataFrame = {
+    def arm(from: String, to: String) =
+      struct(col(from).as("src") +: col(to).as("dst") +: carried.map(col): _*)
+    pairs.select(explode(array(arm(a, b), arm(b, a))).as("e"))
+      .select(col("e.src").as("src") +: col("e.dst").as("dst") +:
+        carried.map(c => col(s"e.$c").as(c)): _*)
+  }
 
   /** Edge count at or under which a graph core finishes on the DRIVER
     * ([[DriverGraph]]: connected components' union-find, SCC's Tarjan

@@ -12,10 +12,10 @@ import org.apache.spark.sql.functions._
   *
   * Pass 1 is a range-partitioned sort (every partition bounded n/P,
   * fully parallel); pass 2 is zipWithIndex's per-partition count +
-  * offset scan. This is the tokenId idiom (Dedup.scala vocabulary
-  * ranks, pipeline_contrastive_pairs doc ranks) promoted to a shared
-  * helper — the one legitimate RDD drop-down, because Spark SQL has no
-  * dense global rank without a single-partition WindowExec.
+  * offset scan. Dedup.scala's vocabulary ids and
+  * pipeline_contrastive_pairs' doc ranks both rank through it — the one
+  * legitimate RDD drop-down, because Spark SQL has no dense global rank
+  * without a single-partition WindowExec.
   */
 object Ranks {
 

@@ -209,8 +209,7 @@ object ScaleCheck {
     // 3+4) LPA and pagerank over the symmetrized relation: the vertex
     // count sits ABOVE PagerankBroadcastMaxVertices, so the repartition
     // routing engages exactly as it would on a cluster — no forcing
-    val sym = pairs.select(col("i").as("src"), col("j").as("dst"))
-      .unionAll(pairs.select(col("j").as("src"), col("i").as("dst")))
+    val sym = Barriers.symmetrize(pairs, "i", "j")
     assert(nTouched > operators.Relational.PagerankBroadcastMaxVertices,
       s"drill graph too small to engage the repartition branch: $nTouched")
     val lpa = timed("lpa_repartition") {
@@ -439,9 +438,7 @@ object ScaleCheck {
     val pairs = powerLawPairs(spark, nDraws, v)
       .persist(StorageLevel.MEMORY_AND_DISK)
     val e = timed("cen_build_pairs")(pairs.count())
-    val (sym, _) = Barriers.stationaryEdges(
-      pairs.select(col("i").as("src"), col("j").as("dst"))
-        .unionAll(pairs.select(col("j").as("src"), col("i").as("dst"))))
+    val (sym, _) = Barriers.stationaryEdges(Barriers.symmetrize(pairs, "i", "j"))
     val verts = sym.select(col("src").as("v")).distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
     val nV = verts.count()

@@ -234,19 +234,20 @@ object Dedup {
     */
   /** Returns the pair relation AND its internal caches (t, ids, post) so
     * each caller applies the right cache scope: dedup_ngram_jaccard's
-    * RETURNED plan reads `ids` in the rerank joins, so its caches must
-    * survive the call (the GraftCaches contract); dedup_cluster consumes
-    * the pairs into its own persisted relation, after which these caches
-    * are dead weight and release inline (see connectedComponents).
+    * and pipeline_contrastive_pairs' RETURNED plans read `ids` in the
+    * rerank joins, so their caches must survive the call (the
+    * GraftCaches contract); dedup_cluster consumes the pairs into its
+    * own persisted relation, after which these caches are dead weight
+    * and release inline (see connectedComponents).
     */
-  private def ngramPairs(spark: SparkSession, dir: String)
+  private[operators] def ngramPairs(spark: SparkSession, dir: String)
       : (DataFrame, Seq[DataFrame]) = {
     // repartition: single-row-group testdata parquet would tokenize in ONE
     // task; t feeds the df count and the vocab-id join.
     val t = Tables.documents(spark, dir)
       .repartition(col("doc_id"))
       .select(col("doc_id"), array_sort(array_distinct(toks)).as("tset"))
-      // raw persist: the vocab ranking's zipWithIndex job below fills it
+      // raw persist: the vocab ranking's position job below fills it
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val tok = t.select(col("doc_id"), explode(col("tset")).as("token"))
     // dense integer id per token in global-rarity order (df asc, token
@@ -254,31 +255,22 @@ object Dedup {
     // so jaccard over tid sets is VALUE-IDENTICAL to jaccard over token
     // sets — and one sorted tid array now serves double duty: ascending
     // order IS both the AllPairs prefix order (lowest ids = globally
-    // rarest) and the rerank kernel's merge order. Rank assignment is the
-    // two-pass distributed shape (range-partitioned sort, then
-    // zipWithIndex's per-partition offset scan) — a crawl vocabulary is
-    // billions of distinct tokens, so a row_number window (one reducer
-    // holding the whole vocabulary) is not an option. This is the one
-    // legitimate RDD drop-down: Spark SQL has no dense global rank
-    // without a single-partition window.
-    val vocab = {
-      import spark.implicits._
-      tok.groupBy(col("token")).agg(count(lit(1)).as("df"))
-        .sort(col("df"), col("token"))
-        .select(col("token")).as[String]
-        .rdd.zipWithIndex()
-        .map { case (tkn, i) =>
-          val id = i + 1
-          // tid is an INT on purpose (half the array bytes of a long
-          // through the postings/rerank path); past 2^31 distinct
-          // tokens the id must fail LOUDLY (the fixpoint-cap
-          // contract), never wrap into colliding ranks — at that
-          // vocabulary the int-packed design needs revisiting anyway
-          require(id <= Int.MaxValue, s"vocabulary rank $id exceeds int ids")
-          (tkn, id.toInt)
-        }
-        .toDF("token", "tid")
-    }
+    // rarest) and the rerank kernel's merge order. The rank is the
+    // two-pass distributed [[graft.Ranks.rowNumber]]: a crawl vocabulary
+    // is billions of distinct tokens, so a row_number window (one reducer
+    // holding the whole vocabulary) is not an option.
+    // tid is an INT on purpose (half the array bytes of a long through
+    // the postings/rerank path); past 2^31 distinct tokens the id must
+    // fail LOUDLY (the fixpoint-cap contract), never wrap into colliding
+    // ranks — at that vocabulary the int-packed design needs revisiting
+    val vocab = graft.Ranks.rowNumber(
+        tok.groupBy(col("token")).agg(count(lit(1)).as("df")),
+        "rk", col("df"), col("token"))
+      .select(col("token"),
+        when(col("rk") <= Int.MaxValue, col("rk").cast("int"))
+          .otherwise(raise_error(concat(lit("vocabulary rank "),
+            col("rk").cast("string"), lit(" exceeds int ids"))))
+          .as("tid"))
     // per-doc sorted tid set (one agg — the (df, token) struct sort the
     // string form needed is gone); feeds the postings and both rerank
     // sides. No broadcast hint on vocab: it is corpus-proportional (a
@@ -353,7 +345,7 @@ object Dedup {
     connectedComponents(spark,
       pairs.select(col("i"), col("j")),
       Tables.documents(spark, dir).select(col("doc_id").as("id")),
-      releaseAfterMaterialize = upstream)
+      release = upstream)
       .select(col("id").as("doc_id"), col("canonical_id"))
       .orderBy(col("doc_id"))
   }
@@ -372,7 +364,7 @@ object Dedup {
     *  - above it: the neighbor-min contraction, then the same
     *    union-find over the contracted edges when THEY fit the bound,
     *    else [[Relational.minLabelFix]].
-    * Caches in `releaseAfterMaterialize` fed the pair subtree and nothing
+    * Caches in `release` fed the pair subtree and nothing
     * else; they are unpersisted as soon as the pair cache holds its rows
     * ([[graft.Barriers.materialize]]). The pair cache is released here
     * only when this call persisted it: right after the collect under
@@ -388,7 +380,7 @@ object Dedup {
     */
   private[graft] def connectedComponents(spark: SparkSession,
       pairs: DataFrame, universe: DataFrame,
-      releaseAfterMaterialize: Seq[DataFrame] = Nil,
+      release: Seq[DataFrame] = Nil,
       driverFinishEdgeBound: Long = graft.Barriers.DriverFinishEdgeBound)
       : DataFrame = {
     // cache the UNDIRECTED pair relation once — half the rows of a
@@ -405,7 +397,7 @@ object Dedup {
     // for limit rows, so the expensive materializing pass runs nearly
     // serial (dedup_cluster 4.2 → 8.2 s measured).
     val owned = !graft.Barriers.cached(pairs)
-    val (p, nPairs) = materialize(pairs, releaseAfterMaterialize)
+    val (p, nPairs) = materialize(pairs, release)
     graft.Barriers.postSetup("connectedComponents", nPairs, "pairs")
     if (nPairs <= driverFinishEdgeBound) {
       // FINISH ON THE DRIVER straight from the pairs: the bound keeps the
@@ -450,10 +442,7 @@ object Dedup {
         .join(l0.select(col("id").as("j"), col("lab").as("ld")), Seq("j"))
         .filter(col("ls") =!= col("ld"))
         .select(col("ls"), col("ld")).distinct()
-        .select(explode(array(
-          struct(col("ls").as("src"), col("ld").as("dst")),
-          struct(col("ld").as("src"), col("ls").as("dst")))).as("e"))
-        .select(col("e.src").as("src"), col("e.dst").as("dst")),
+        .transform(graft.Barriers.symmetrize(_, "ls", "ld")),
       if (owned) Seq(p) else Nil)
     graft.Barriers.postSetup("connectedComponents", nSuperEdges, "superEdges")
     if (nSuperEdges <= driverFinishEdgeBound) {
@@ -1064,16 +1053,14 @@ object Dedup {
       .join(core.select(col("id").as("j")), Seq("j"), "left_semi")
     val cc = connectedComponents(spark, coreEdges, core)
       .select(col("id"), col("canonical_id"))
-    val sym = pairs.select(col("i").as("a"), col("j").as("b"))
-      .unionAll(pairs.select(col("j").as("a"), col("i").as("b")))
-    val border = sym
-      .join(cc.select(col("id").as("b"), col("canonical_id")), Seq("b"))
-      .join(core.select(col("id").as("a")), Seq("a"), "left_anti")
-      .groupBy(col("a")).agg(min(col("canonical_id")).as("b_cluster"))
+    val border = graft.Barriers.symmetrize(pairs, "i", "j")
+      .join(cc.select(col("id").as("dst"), col("canonical_id")), Seq("dst"))
+      .join(core.select(col("id").as("src")), Seq("src"), "left_anti")
+      .groupBy(col("src")).agg(min(col("canonical_id")).as("b_cluster"))
     Tables.embeddings(spark, dir).select(col("vec_id"))
       .join(cc.select(col("id").as("vec_id"),
         col("canonical_id").as("c_cluster")), Seq("vec_id"), "left_outer")
-      .join(border.select(col("a").as("vec_id"), col("b_cluster")),
+      .join(border.select(col("src").as("vec_id"), col("b_cluster")),
         Seq("vec_id"), "left_outer")
       .select(col("vec_id"),
         when(col("c_cluster").isNotNull, lit("core"))

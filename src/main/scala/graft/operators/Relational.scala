@@ -1955,8 +1955,7 @@ object Relational {
       .agg(sum(col("contrib")).as("c"))
 
   private[graft] def pagerankCore(edges0: DataFrame, rounds: Int = 10,
-      broadcastMaxVertices: Long = PagerankBroadcastMaxVertices,
-      releaseAfterMaterialize: Seq[DataFrame] = Nil): DataFrame = {
+      broadcastMaxVertices: Long = PagerankBroadcastMaxVertices): DataFrame = {
     // the outdeg self-join consumes edges0 twice, but deliberately
     // WITHOUT a persist: both consumers end in the identical exchange
     // subtree, so ReuseExchange computes the caller's plan once anyway —
@@ -1966,8 +1965,7 @@ object Relational {
     // 10 rounds + the vertex/dangling builds consume the edge cache
     val (edges, _) = graft.Barriers.stationaryEdges(
       edges0.join(edges0.groupBy(col("src")).agg(count(lit(1)).as("outdeg")),
-        Seq("src")),
-      releaseAfterMaterialize)
+        Seq("src")))
     // vertices derive from the CACHED edge relation, not edges0 — the
     // outdeg inner join preserves every edge row (its build side is
     // edges0's own groupBy), so the src/dst vertex set is identical and
@@ -2028,30 +2026,31 @@ object Relational {
     scores
   }
 
-  /** The distinct (customer 2k, supplier 2k+1) commerce pair relation
-    * shared by the graph family, PERSISTED and eagerly counted. The
-    * symmetric edge list every consumer builds is a 2-arm union over
-    * this relation — and several consumers additionally self-join it
-    * for degrees — so each plan carries the orders⋈lineitem distinct
-    * subtree 2-4 times. Uncached, every occurrence re-evaluates the
-    * join+distinct (AQE's exchange reuse does not collapse the swapped
-    * union arms: the arms' distinct aggregates produce different output
-    * orders, so the canonical plans differ above the exchange); the
-    * r16 same-window A/B measured the pagerank edge build at ~1.9-3.0 s
-    * warm uncached vs ~1.2-1.9 s with this cache. Callers pass the
-    * handle as the `release` of the cache built from it — their core's
-    * `releaseAfterMaterialize` or their own [[graft.Barriers.materialize]]
-    * — so it goes as soon as that cache holds its rows.
+  /** The commerce graph's one vertex-id codec: customer k is vertex 2k
+    * and supplier k is vertex 2k+1, so one BIGINT key space carries both
+    * sides of the bipartite graph. [[vertexSide]] and [[vertexKey]]
+    * decode a vertex-id column back to ("customer" | "supplier", k).
     */
-  private def commercePairs(spark: SparkSession, dir: String): DataFrame =
-    materialize(Tables.orders(spark, dir)
+  private def customerVertex(custkey: Column): Column = custkey * 2
+  private def supplierVertex(suppkey: Column): Column = suppkey * 2 + 1
+  private def vertexSide(v: String): Column =
+    when(col(v) % 2 === 0, lit("customer")).otherwise(lit("supplier"))
+  private def vertexKey(v: String): Column = expr(s"$v div 2").cast("bigint")
+
+  /** The symmetric (src, dst) edge list the commerce graph family runs
+    * on: both directions of every distinct (customer, supplier) pair,
+    * read once ([[graft.Barriers.symmetrize]]) and uncached — each
+    * consumer's own edge cache is the one cache.
+    */
+  private def commerceEdges(spark: SparkSession, dir: String): DataFrame =
+    graft.Barriers.symmetrize(Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"))
       .join(Tables.lineitem(spark, dir)
         .select(col("l_orderkey").as("o_orderkey"), col("l_suppkey")),
         Seq("o_orderkey"))
-      .select((col("o_custkey") * 2).as("c"),
-        (col("l_suppkey") * 2 + 1).as("s"))
-      .distinct())._1
+      .select(customerVertex(col("o_custkey")).as("c"),
+        supplierVertex(col("l_suppkey")).as("s"))
+      .distinct(), "c", "s")
 
   /** §2.2 graph_pagerank over the commerce graph — see [[pagerankCore]]
     * for the loop; the symmetric edge set has no dangling nodes, so the
@@ -2060,14 +2059,10 @@ object Relational {
     * bit-for-bit.
     */
   def graphPagerank(spark: SparkSession, dir: String): DataFrame = {
-    val cs = commercePairs(spark, dir)
-    val edges0 = cs.select(col("c").as("src"), col("s").as("dst"))
-      .unionAll(cs.select(col("s").as("src"), col("c").as("dst")))
-    pagerankCore(edges0, releaseAfterMaterialize = Seq(cs))
+    pagerankCore(commerceEdges(spark, dir))
       .select(
-        when(col("v") % 2 === 0, lit("customer")).otherwise(lit("supplier"))
-          .as("node_type"),
-        expr("v div 2").cast("bigint").as("entity_key"),
+        vertexSide("v").as("node_type"),
+        vertexKey("v").as("entity_key"),
         col("s").as("score_ppm"))
       .orderBy(col("score_ppm").desc, col("node_type"), col("entity_key"))
   }
@@ -2093,13 +2088,10 @@ object Relational {
     * co-partitioned above, barriered rounds.
     */
   def graphPersonalizedPagerank(spark: SparkSession, dir: String): DataFrame = {
-    val cs = commercePairs(spark, dir)
-    val edges0 = cs.select(col("c").as("src"), col("s").as("dst"))
-      .unionAll(cs.select(col("s").as("src"), col("c").as("dst")))
-    pprCore(edges0, releaseAfterMaterialize = Seq(cs)).select(
-        when(col("v") % 2 === 0, lit("customer")).otherwise(lit("supplier"))
-          .as("node_type"),
-        expr("v div 2").cast("bigint").as("entity_key"),
+    pprCore(commerceEdges(spark, dir))
+      .select(
+        vertexSide("v").as("node_type"),
+        vertexKey("v").as("entity_key"),
         col("s").as("ppr_ppm"))
       .orderBy(col("ppr_ppm").desc, col("node_type"), col("entity_key"))
   }
@@ -2113,13 +2105,11 @@ object Relational {
     */
   private[graft] def pprCore(edges0: DataFrame, nSeeds: Int = 4,
       rounds: Int = 10,
-      broadcastMaxVertices: Long = PagerankBroadcastMaxVertices,
-      releaseAfterMaterialize: Seq[DataFrame] = Nil): DataFrame = {
+      broadcastMaxVertices: Long = PagerankBroadcastMaxVertices): DataFrame = {
     // rounds + the seed/routing builds consume the edge cache
     val (edges, _) = graft.Barriers.stationaryEdges(
       edges0.join(edges0.groupBy(col("src")).agg(count(lit(1)).as("outdeg")),
-        Seq("src")),
-      releaseAfterMaterialize)
+        Seq("src")))
     val nVerts = edges.select(col("src")).distinct().count()
     val routed: DataFrame => DataFrame =
       if (nVerts <= broadcastMaxVertices) broadcast
@@ -2151,11 +2141,9 @@ object Relational {
     * vertex that only ever appears as a src keeps exactly its self-vote.
     */
   private[graft] def lpaCore(edges0: DataFrame, rounds: Int = 4,
-      broadcastMaxVertices: Long = PagerankBroadcastMaxVertices,
-      releaseAfterMaterialize: Seq[DataFrame] = Nil): DataFrame = {
+      broadcastMaxVertices: Long = PagerankBroadcastMaxVertices): DataFrame = {
     // all rounds consume the edge cache
-    val (edges, _) = graft.Barriers.stationaryEdges(edges0,
-      releaseAfterMaterialize)
+    val (edges, _) = graft.Barriers.stationaryEdges(edges0)
     val labels0 = graft.Barriers.roundBarrier(
       edges.select(col("src").as("v"))
         .unionAll(edges.select(col("dst").as("v")))
@@ -2230,23 +2218,18 @@ object Relational {
   }
 
   def graphLabelProp(spark: SparkSession, dir: String): DataFrame = {
-    val cs = commercePairs(spark, dir)
-    val edges0 = cs.select(col("c").as("src"), col("s").as("dst"))
-      .unionAll(cs.select(col("s").as("src"), col("c").as("dst")))
     // publish the raw (v, lbl) labeling (ArtifactStore "lpa_labels") so
     // graph_modularity evaluates the STORED communities instead of
     // re-running the propagation it grades — this query stays the
     // pipeline and always pays its own compute + materialization
     graft.ArtifactStore.publish(spark, "lpa_labels", dir) {
-      lpaCore(edges0, releaseAfterMaterialize = Seq(cs))
+      lpaCore(commerceEdges(spark, dir))
         .select(col("v"), col("lbl"))
     }.select(
-      when(col("v") % 2 === 0, lit("customer")).otherwise(lit("supplier"))
-        .as("node_type"),
-      expr("v div 2").cast("bigint").as("entity_key"),
-      when(col("lbl") % 2 === 0, lit("customer")).otherwise(lit("supplier"))
-        .as("community_type"),
-      expr("lbl div 2").cast("bigint").as("community_key"))
+      vertexSide("v").as("node_type"),
+      vertexKey("v").as("entity_key"),
+      vertexSide("lbl").as("community_type"),
+      vertexKey("lbl").as("community_key"))
       .orderBy(col("node_type"), col("entity_key"))
   }
 
@@ -2293,20 +2276,18 @@ object Relational {
     val universe = pairs.select(col("i").as("id"))
       .unionAll(pairs.select(col("j").as("id"))).distinct()
     Dedup.connectedComponents(spark, pairs, universe).select(
-      when(col("id") % 2 === 0, lit("customer")).otherwise(lit("supplier"))
-        .as("node_type"),
-      expr("id div 2").cast("bigint").as("entity_key"),
-      when(col("canonical_id") % 2 === 0, lit("customer"))
-        .otherwise(lit("supplier")).as("component_type"),
-      expr("canonical_id div 2").cast("bigint").as("component_key"))
+      vertexSide("id").as("node_type"),
+      vertexKey("id").as("entity_key"),
+      vertexSide("canonical_id").as("component_type"),
+      vertexKey("canonical_id").as("component_key"))
       .orderBy(col("node_type"), col("entity_key"))
   }
 
   /** The fragmented commerce-graph slice shared by the reachability
     * queries (connected components, shortest paths): urgent high-volume
-    * flows only — o_orderpriority = 1-URGENT ∧ l_quantity ≥ 49. Vertex
-    * ids interleave customers (2k) and suppliers (2k+1) so one long key
-    * space carries both sides of the bipartite graph.
+    * flows only — o_orderpriority = 1-URGENT ∧ l_quantity ≥ 49, as
+    * undirected (i, j) pairs of [[customerVertex]] and [[supplierVertex]]
+    * ids.
     */
   private def urgentSlicePairs(spark: SparkSession, dir: String): DataFrame =
     Tables.orders(spark, dir)
@@ -2316,7 +2297,8 @@ object Relational {
         .filter(col("l_quantity") >= 49)
         .select(col("l_orderkey").as("o_orderkey"), col("l_suppkey")),
         Seq("o_orderkey"))
-      .select((col("o_custkey") * 2).as("i"), (col("l_suppkey") * 2 + 1).as("j"))
+      .select(customerVertex(col("o_custkey")).as("i"),
+        supplierVertex(col("l_suppkey")).as("j"))
       .distinct()
 
   /** §2.2 graph_shortest_paths: multi-source BFS hop distances over the
@@ -2345,17 +2327,12 @@ object Relational {
     * bit-for-bit.
     */
   def graphShortestPaths(spark: SparkSession, dir: String): DataFrame = {
-    // cached: both union arms below read it instead of each re-evaluating
-    // the urgent-slice join+distinct (the commercePairs rationale)
-    val (pairs, _) = materialize(urgentSlicePairs(spark, dir))
-    val edges0 = pairs.select(col("i").as("src"), col("j").as("dst"))
-      .unionAll(pairs.select(col("j").as("src"), col("i").as("dst")))
-    bfsCore(edges0, 3, BfsMaxHops, releaseAfterMaterialize = Seq(pairs))
+    bfsCore(graft.Barriers.symmetrize(urgentSlicePairs(spark, dir), "i", "j"),
+      3, BfsMaxHops)
       .select(
-      when(col("id") % 2 === 0, lit("customer")).otherwise(lit("supplier"))
-        .as("node_type"),
-      expr("id div 2").cast("bigint").as("entity_key"),
-      col("hops"))
+        vertexSide("id").as("node_type"),
+        vertexKey("id").as("entity_key"),
+        col("hops"))
       .orderBy(col("hops"), col("node_type"), col("entity_key"))
   }
 
@@ -2389,27 +2366,20 @@ object Relational {
     * anti-join + union, never a full rebuild.
     */
   def graphWeightedSssp(spark: SparkSession, dir: String): DataFrame = {
-    // cached: both union arms read it instead of each re-evaluating the
-    // fact join + min rollup (commercePairs rationale)
-    val (base, _) = materialize(Tables.orders(spark, dir)
+    val base = Tables.orders(spark, dir)
       .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"))
       .join(Tables.lineitem(spark, dir)
         .select(col("l_orderkey").as("o_orderkey"), col("l_suppkey"),
           col("l_shipdate")),
         Seq("o_orderkey"))
-      .select((col("o_custkey") * 2).as("c"),
-        (col("l_suppkey") * 2 + 1).as("s"),
+      .select(customerVertex(col("o_custkey")).as("c"),
+        supplierVertex(col("l_suppkey")).as("s"),
         datediff(col("l_shipdate"), col("o_orderdate")).cast("bigint")
           .as("d"))
-      .groupBy(col("c"), col("s")).agg(min(col("d")).as("w")))
-    val edges0 = base.select(col("c").as("src"), col("s").as("dst"),
-        col("w"))
-      .unionAll(base.select(col("s").as("src"), col("c").as("dst"),
-        col("w")))
-    ssspCore(edges0, releaseAfterMaterialize = Seq(base)).select(
-        when(col("id") % 2 === 0, lit("customer")).otherwise(lit("supplier"))
-          .as("node_type"),
-        expr("id div 2").cast("bigint").as("entity_key"),
+      .groupBy(col("c"), col("s")).agg(min(col("d")).as("w"))
+    ssspCore(graft.Barriers.symmetrize(base, "c", "s", "w")).select(
+        vertexSide("id").as("node_type"),
+        vertexKey("id").as("entity_key"),
         col("dist").as("min_delay_days"))
       .orderBy(col("node_type"), col("entity_key"))
   }
@@ -2421,11 +2391,9 @@ object Relational {
     * out so ScaleCheck can drive the loop on the 25M-edge drill graph.
     */
   private[graft] def ssspCore(edges0: DataFrame, nSeeds: Int = 3,
-      maxRounds: Int = SsspMaxRounds,
-      releaseAfterMaterialize: Seq[DataFrame] = Nil): DataFrame = {
+      maxRounds: Int = SsspMaxRounds): DataFrame = {
     // seeds + every relaxation round consume the edge cache
-    val (edges, _) = graft.Barriers.stationaryEdges(edges0,
-      releaseAfterMaterialize)
+    val (edges, _) = graft.Barriers.stationaryEdges(edges0)
     val seeds = edges.filter(col("src") % 2 === 0)
       .select(col("src").as("id")).distinct()
       .orderBy(col("id")).limit(nSeeds)
@@ -3119,11 +3087,9 @@ object Relational {
     */
   private[graft] def bfsCore(edges0: DataFrame, nSeeds: Int,
       maxHops: Long,
-      broadcastMaxVertices: Long = PagerankBroadcastMaxVertices,
-      releaseAfterMaterialize: Seq[DataFrame] = Nil): DataFrame = {
+      broadcastMaxVertices: Long = PagerankBroadcastMaxVertices): DataFrame = {
     // seeds + every BFS round consume the edge cache
-    val (edges, _) = graft.Barriers.stationaryEdges(edges0,
-      releaseAfterMaterialize)
+    val (edges, _) = graft.Barriers.stationaryEdges(edges0)
     val seeds = edges.filter(col("src") % 2 === 0)
       .select(col("src").as("id")).distinct()
       .orderBy(col("id")).limit(nSeeds)
@@ -3186,9 +3152,8 @@ object Relational {
   def graphKcore(spark: SparkSession, dir: String): DataFrame = {
     val (core, _) = kCoreCore(urgentSlicePairs(spark, dir), 2)
     core.select(
-      when(col("v") % 2 === 0, lit("customer")).otherwise(lit("supplier"))
-        .as("node_type"),
-      expr("v div 2").cast("bigint").as("entity_key"),
+      vertexSide("v").as("node_type"),
+      vertexKey("v").as("entity_key"),
       col("core_degree"))
       .orderBy(col("node_type"), col("entity_key"))
   }
@@ -3274,15 +3239,10 @@ object Relational {
     * ≤ 8·|V| rows end to end.
     */
   def graphBetweenness(spark: SparkSession, dir: String): DataFrame = {
-    val cs = commercePairs(spark, dir)
-    val edges0 = cs.select(col("c").as("src"), col("s").as("dst"))
-      .unionAll(cs.select(col("s").as("src"), col("c").as("dst")))
-    betweennessCore(spark, edges0, Some(dir),
-      releaseAfterMaterialize = Seq(cs))
+    betweennessCore(spark, commerceEdges(spark, dir), Some(dir))
       .select(
-        when(col("v") % 2 === 0, lit("customer")).otherwise(lit("supplier"))
-          .as("node_type"),
-        expr("v div 2").cast("bigint").as("entity_key"),
+        vertexSide("v").as("node_type"),
+        vertexKey("v").as("entity_key"),
         col("centrality"))
       .orderBy(col("node_type"), col("entity_key"))
   }
@@ -3304,15 +3264,10 @@ object Relational {
     */
   def graphBetweennessApprox(spark: SparkSession, dir: String,
       nPivots: Int = 16): DataFrame = {
-    val cs = commercePairs(spark, dir)
-    val edges0 = cs.select(col("c").as("src"), col("s").as("dst"))
-      .unionAll(cs.select(col("s").as("src"), col("c").as("dst")))
-    betweennessApproxCore(spark, edges0, nPivots,
-      releaseAfterMaterialize = Seq(cs))
+    betweennessApproxCore(spark, commerceEdges(spark, dir), nPivots)
       .select(
-        when(col("v") % 2 === 0, lit("customer")).otherwise(lit("supplier"))
-          .as("node_type"),
-        expr("v div 2").cast("bigint").as("entity_key"),
+        vertexSide("v").as("node_type"),
+        vertexKey("v").as("entity_key"),
         col("centrality"))
       .orderBy(col("node_type"), col("entity_key"))
   }
@@ -3348,9 +3303,8 @@ object Relational {
         sum(expr("27720 div lvl")).as("hnum"))
     verts.join(h, Seq("v"), "left_outer")
       .select(
-        when(col("v") % 2 === 0, lit("customer")).otherwise(lit("supplier"))
-          .as("node_type"),
-        expr("v div 2").cast("bigint").as("entity_key"),
+        vertexSide("v").as("node_type"),
+        vertexKey("v").as("entity_key"),
         coalesce(col("n_roots_reached"), lit(0L)).as("n_roots_reached"),
         coalesce(col("sum_dist"), lit(0L)).as("sum_dist"),
         round(coalesce(col("hnum"), lit(0L)).cast("double") / lit(27720.0),
@@ -3417,13 +3371,8 @@ object Relational {
     * queries run on, persisted + eagerly counted, with its vertex set. */
   private def centralityGraph(spark: SparkSession,
       dir: String): (DataFrame, DataFrame) = {
-    val cs = commercePairs(spark, dir)
-    // every BFS round + the successor build consume the edge cache; once
-    // it holds the rows the pair cache is dead weight
-    val (edges, _) = graft.Barriers.stationaryEdges(
-      cs.select(col("c").as("src"), col("s").as("dst"))
-        .unionAll(cs.select(col("s").as("src"), col("c").as("dst"))),
-      Seq(cs))
+    // every BFS round + the successor build consume the edge cache
+    val (edges, _) = graft.Barriers.stationaryEdges(commerceEdges(spark, dir))
     val (verts, _) = materialize(edges.select(col("src").as("v")).distinct())
     (edges, verts)
   }
@@ -3499,12 +3448,10 @@ object Relational {
   private[graft] def betweennessCore(spark: SparkSession,
       edges0: DataFrame,
       visStore: Option[String] = None,
-      maxFold: Long = BrandesMaxFoldWidth,
-      releaseAfterMaterialize: Seq[DataFrame] = Nil): DataFrame = {
+      maxFold: Long = BrandesMaxFoldWidth): DataFrame = {
     // every BFS round + the successor build consume the edge cache;
     // only slim frontiers shuffle
-    val (edges, _) = graft.Barriers.stationaryEdges(edges0,
-      releaseAfterMaterialize)
+    val (edges, _) = graft.Barriers.stationaryEdges(edges0)
     val (verts, _) = materialize(edges.select(col("src").as("v")).distinct())
     // PREEMPTIVE fold-width guard: the δ fold width is bounded by the
     // max out-degree, measured here by a counting aggregate — safe at
@@ -3594,13 +3541,11 @@ object Relational {
     * slim per-level frontiers, one checkpointed level per backward round.
     */
   private[graft] def betweennessApproxCore(spark: SparkSession,
-      edges0: DataFrame, nPivots: Int = 16,
-      releaseAfterMaterialize: Seq[DataFrame] = Nil): DataFrame = {
+      edges0: DataFrame, nPivots: Int = 16): DataFrame = {
     require(nPivots >= 1, s"need at least one pivot: $nPivots")
     // every BFS round + the successor build consume the edge cache;
     // only slim frontiers shuffle
-    val (edges, _) = graft.Barriers.stationaryEdges(edges0,
-      releaseAfterMaterialize)
+    val (edges, _) = graft.Barriers.stationaryEdges(edges0)
     // src ∪ dst: pure-sink vertices are never path-interior (BC 0) but
     // they ARE in the exact core's output domain — a caller swapping
     // exact → approx past the fold cap must not see the relation narrow
@@ -3654,11 +3599,7 @@ object Relational {
     * sort with the unique vertex id as the total tie-break.
     */
   def graphLouvainGain(spark: SparkSession, dir: String): DataFrame = {
-    val cs = commercePairs(spark, dir)
-    val (edges, _) = materialize(
-      cs.select(col("c").as("src"), col("s").as("dst"))
-        .unionAll(cs.select(col("s").as("src"), col("c").as("dst"))),
-      release = Seq(cs))
+    val (edges, _) = materialize(commerceEdges(spark, dir))
     val (lbl, _) = materialize(
       graft.ArtifactStore.readOrCompute(spark, "lpa_labels", dir) {
         lpaCore(edges).select(col("v"), col("lbl"))
@@ -3696,9 +3637,8 @@ object Relational {
       .orderBy(col("gain_num").desc, col("src"))
       .limit(20)
       .select(
-        when(col("src") % 2 === 0, lit("customer")).otherwise(lit("supplier"))
-          .as("node_type"),
-        expr("src div 2").cast("bigint").as("entity_key"),
+        vertexSide("src").as("node_type"),
+        vertexKey("src").as("entity_key"),
         // raw community labels (2·key + type bit): lossless — a div-2
         // "key" would collide customer and supplier communities
         col("la").cast("bigint").as("from_label"),
@@ -5356,11 +5296,7 @@ object Relational {
     * with the degree shuffle); the moment reducer is a 1-row aggregate.
     */
   def graphAssortativity(spark: SparkSession, dir: String): DataFrame = {
-    val cs = commercePairs(spark, dir)
-    val (edges, m) = materialize(
-      cs.select(col("c").as("src"), col("s").as("dst"))
-        .unionAll(cs.select(col("s").as("src"), col("c").as("dst"))),
-      release = Seq(cs))
+    val (edges, m) = materialize(commerceEdges(spark, dir))
     assortativityFrom(edges, useDecimal = m > AssortativityBigintMaxEdges)
   }
 
@@ -5780,11 +5716,7 @@ object Relational {
     * the gate IS the stored ≡ recompute claim.
     */
   def graphModularity(spark: SparkSession, dir: String): DataFrame = {
-    val cs = commercePairs(spark, dir)
-    val (edges, _) = materialize(
-      cs.select(col("c").as("src"), col("s").as("dst"))
-        .unionAll(cs.select(col("s").as("src"), col("c").as("dst"))),
-      release = Seq(cs))
+    val (edges, _) = materialize(commerceEdges(spark, dir))
     val (lbl, _) = materialize(
       graft.ArtifactStore.readOrCompute(spark, "lpa_labels", dir) {
         lpaCore(edges).select(col("v"), col("lbl"))
@@ -5810,9 +5742,8 @@ object Relational {
       .withColumn("total",
         sum(col("num")).over(Window.partitionBy(lit(1))))
       .select(
-        when(col("lbl") % 2 === 0, lit("customer"))
-          .otherwise(lit("supplier")).as("community_type"),
-        expr("lbl div 2").cast("bigint").as("community_key"),
+        vertexSide("lbl").as("community_type"),
+        vertexKey("lbl").as("community_key"),
         col("n_members"), col("dsum").as("degree_sum"),
         col("e_in").as("internal_edges"),
         round(col("num").cast("double") /

@@ -1310,30 +1310,23 @@ object TextAnalysis {
     * the pair set is retry-stable and growth-stable per anchor.
     *
     * Scale shape: positives reuse the graded near-dup pair relation
-    * unchanged; the dense doc rank is the two-pass distributed
-    * assignment (range sort + zipWithIndex — the tokenId idiom, never a
+    * unchanged, read once for both directions; the dense doc rank is
+    * the two-pass distributed [[graft.Ranks.rowNumber]] (never a
     * corpus-wide row_number window); negative resolution is THREE
     * equi-joins-worth of probe rows (posexplode of 3 ranks per anchor)
     * into the rank relation, then a min-struct pick by probe priority —
     * no range join, no nested loop, O(anchors) shuffle rows.
     */
   def pipelineContrastivePairs(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
     val docs = Tables.documents(spark, dir).select(col("doc_id"))
-    // cached: both symmetrization arms below carry the full ngram-Jaccard
-    // AllPairs pipeline as their subtree, so the uncached plan evaluated
-    // that pipeline TWICE (r16; the commercePairs rationale — swapped
-    // union arms defeat exchange reuse). Released by the harness-level
-    // GraftCaches contract.
-    val (pairs, _) = materialize(
-      Dedup.dedupNgramJaccard(spark, dir).select(col("i"), col("j")))
-    val best = pairs.select(col("i").as("anchor"), col("j").as("pos"))
-      .unionAll(pairs.select(col("j").as("anchor"), col("i").as("pos")))
-      .groupBy(col("anchor")).agg(min(col("pos")).as("pos_id"))
-    // dense rank over doc ids — two-pass distributed (sort + zipWithIndex)
-    val ids = docs.sort(col("doc_id")).select(col("doc_id")).as[Long]
-      .rdd.zipWithIndex()
-      .map { case (d, r) => (d, r) }.toDF("doc_id", "rk")
+    // the unordered pair relation: dedup_ngram_jaccard's sort would only
+    // be undone by the aggregate; its caches stay for GraftCaches.release
+    val best = graft.Barriers.symmetrize(
+        Dedup.ngramPairs(spark, dir)._1, "i", "j")
+      .groupBy(col("src").as("anchor")).agg(min(col("dst")).as("pos_id"))
+    // dense 0-based rank over doc ids — two-pass distributed
+    val ids = graft.Ranks.rowNumber(docs, "rk1", col("doc_id"))
+      .select(col("doc_id"), (col("rk1") - 1).as("rk"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
     val probes = best.crossJoin(broadcast(n))
       .withColumn("h0",

@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.scalacheck.{Gen, Prop, Test => SCTest}
+import org.scalacheck.Prop.propBoolean
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Relational
@@ -13,7 +16,8 @@ import graft.operators.Relational
   * (Barriers.fixpoint) on a toy step: its stop rule, both limits, its
   * round events and its exceptions. And the shared-relation cache
   * (Barriers.materialize): one count per call, the release after it, a
-  * caller's cache left as it was.
+  * caller's cache left as it was. And the one-read symmetrization
+  * (Barriers.symmetrize): the two-arm union's rows from one leaf.
   */
 class BarriersSpec extends AnyFunSuite {
 
@@ -203,6 +207,44 @@ class BarriersSpec extends AnyFunSuite {
       Barriers.materialize(mine.filter(col("id") < 5), release = Seq(other))
       assert(mine.storageLevel === StorageLevel.MEMORY_ONLY)
     } finally GraftCaches.release(spark)
+  }
+
+  test("symmetrize emits the two-arm union's rows as a multiset, over " +
+      "duplicates, null endpoints, self-pairs and a carried column") {
+    import spark.implicits._
+    val id = Gen.frequency(1 -> Gen.const(Option.empty[Long]),
+      4 -> Gen.choose(-3L, 3L).map(Option(_)))
+    val rowsGen = Gen.choose(0, 12).flatMap(Gen.listOfN(_, for {
+      a <- id
+      b <- Gen.frequency(1 -> Gen.const(a), 3 -> id) // self-pairs
+      w <- Gen.option(Gen.choose(0L, 9L))
+    } yield (a, b, w)))
+    def bag(df: DataFrame) =
+      df.collect().groupBy(r => r.toSeq).view.mapValues(_.length).toMap
+    val prop = Prop.forAll(rowsGen) { rows =>
+      val pairs = rows.toDF("a", "b", "w")
+      val union = pairs.select(col("a").as("src"), col("b").as("dst"), col("w"))
+        .unionAll(pairs.select(col("b").as("src"), col("a").as("dst"), col("w")))
+      val sym = Barriers.symmetrize(pairs, "a", "b", "w")
+      (sym.schema.map(f => (f.name, f.dataType)) ==
+        union.schema.map(f => (f.name, f.dataType)) &&
+        bag(sym) == bag(union)) :| s"rows=$rows"
+    }
+    val res = SCTest.check(
+      SCTest.Parameters.default.withMinSuccessfulTests(40), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("symmetrize reads an uncached input once; the two-arm union reads " +
+      "it twice") {
+    val pairs = spark.range(0, 20, 1, 2)
+      .select(col("id").as("i"), (col("id") + 1).as("j"))
+    def leaves(df: DataFrame) =
+      df.queryExecution.optimizedPlan.collectLeaves().size
+    val union = pairs.select(col("i").as("src"), col("j").as("dst"))
+      .unionAll(pairs.select(col("j").as("src"), col("i").as("dst")))
+    assert(leaves(union) === 2)
+    assert(leaves(Barriers.symmetrize(pairs, "i", "j")) === 1)
   }
 
   test("q21_late_sole_supplier materializes its shared collapsed relation " +
