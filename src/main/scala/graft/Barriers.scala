@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.scheduler.SparkListenerEvent
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.runtime.NonLocalReturnControl
+
+import org.apache.spark.sql.{DataFrame, SparkSession, classic}
 import org.apache.spark.sql.functions.{array, col, explode, struct}
 import org.apache.spark.storage.StorageLevel
 
@@ -20,8 +23,10 @@ final case class LoopRound(loop: String, round: Int, changed: Long,
   * the graph family, both quantile bisections, the rank join, BPE, the
   * coreset and k-means) and round-barrier materialization for its
   * rounds; the one shared-relation cache of every operator
-  * ([[materialize]]: persist, eager count, upstream release), with the
-  * graph cores' stationary edge cache on top of it ([[stationaryEdges]]),
+  * ([[materialize]]: persist and eager count; [[persist]] alone for a
+  * plan barrier), with the graph cores' stationary edge cache on top of
+  * it ([[stationaryEdges]]), the one cache scope that releases what an
+  * operator's result does not read ([[scoped]]),
   * the one-read directed edge list of an undirected relation
   * ([[symmetrize]]) and their driver-finish edge bound
   * ([[DriverFinishEdgeBound]]; the finish itself is [[DriverGraph]]); and
@@ -169,18 +174,87 @@ object Barriers {
     }
   }
 
-  /** Whether `df`'s plan is already in the session cache (persisted by
-    * this or an equal plan). Operators that release only the caches they
-    * made test their inputs with it before [[materialize]].
+  /** The cache scopes open on this thread, innermost first: each holds
+    * the SQL caches [[persist]] made while its body ran.
     */
-  def cached(df: DataFrame): Boolean = df.storageLevel != StorageLevel.NONE
+  private val scopes = new ThreadLocal[List[mutable.ArrayBuffer[DataFrame]]] {
+    override def initialValue(): List[mutable.ArrayBuffer[DataFrame]] = Nil
+  }
 
-  /** The one shared-relation combinator: persist `df` at
-    * MEMORY_AND_DISK (an input that is already [[cached]] keeps its
-    * storage level), EAGERLY count it before any consumer is built,
-    * then unpersist the caches in `release`, which fed only its subtree
-    * and are dead weight once it holds the rows. Returns the cached
-    * relation and its row count.
+  /** Run `body` and release every SQL cache that [[persist]] (so also
+    * [[materialize]] and [[stationaryEdges]]) made on this thread while it
+    * ran and that its result does not read: the one place an operator's
+    * caches are released. A cache `persist` found already cached is not
+    * recorded, so a caller's cache is never released here.
+    *
+    * On return a recorded cache is kept when the result reads it: its
+    * `InMemoryRelation` is in the `withCachedData` plan of a DataFrame
+    * the result holds (in a tuple, an option, a case class or a
+    * collection), or it feeds a kept cache whose buffers are not loaded
+    * yet (unpersisting the input of an unfilled cache recompiles that
+    * cache without it, and its first action recomputes the whole subtree
+    * — the CLAUDE.md "recomputes the whole loop" hazard). Every other
+    * recorded cache is unpersisted, and the kept ones pass to the
+    * enclosing scope; outside any scope they stay for
+    * [[GraftCaches.release]]. A throw from `body` unpersists every
+    * recorded cache, then propagates.
+    *
+    * It reads plans only and launches no job. It covers SQL caches only:
+    * round-barrier checkpoints are left to the ContextCleaner and
+    * [[GraftCaches.release]], since a loop's returned state can be the
+    * barrier itself.
+    */
+  def scoped[A](body: => A): A = {
+    val made = mutable.ArrayBuffer.empty[DataFrame]
+    val outer = scopes.get
+    scopes.set(made :: outer)
+    def keep(result: Any): Unit = if (made.nonEmpty) {
+      val kept = org.apache.spark.sql.graft.GraftRuntime
+        .cachesRead(frames(result).toSeq, made.toSeq)
+      // newest first: a cache is dropped before the caches it reads
+      made.reverseIterator.filterNot(kept.contains).foreach(_.unpersist())
+      outer.headOption.foreach(_ ++= kept)
+    }
+    try {
+      val result = body
+      keep(result)
+      result
+    } catch {
+      // a `return` out of `body` returns its value like any other result
+      case r: NonLocalReturnControl[_] => keep(r.value); throw r
+      case t: Throwable =>
+        made.reverseIterator.foreach(_.unpersist())
+        throw t
+    } finally scopes.set(outer)
+  }
+
+  /** The DataFrames a scope's result holds. */
+  private def frames(a: Any): Iterator[classic.Dataset[_]] =
+    a match {
+      case d: classic.Dataset[_] => Iterator(d)
+      case i: Iterable[_] => i.iterator.flatMap(frames)
+      case p: Product => p.productIterator.flatMap(frames)
+      case _ => Iterator.empty
+    }
+
+  /** Persist `df` at MEMORY_AND_DISK without counting it, unless its plan
+    * is already cached (by this or an equal plan — that cache keeps its
+    * storage level and is not recorded), and record the new cache in the
+    * innermost open [[scoped]]. Alone, for a single-consumer plan barrier
+    * or a cache whose first use is an action the operator runs anyway;
+    * every shared relation goes through [[materialize]].
+    */
+  def persist(df: DataFrame): DataFrame = {
+    if (df.storageLevel == StorageLevel.NONE) {
+      df.persist(StorageLevel.MEMORY_AND_DISK)
+      scopes.get.headOption.foreach(_ += df)
+    }
+    df
+  }
+
+  /** The one shared-relation combinator: [[persist]] `df`, then EAGERLY
+    * count it before any consumer is built. Returns the cached relation
+    * and its row count.
     *
     * This is the CLAUDE.md cache invariant in one place. A relation with
     * two or more consumers is persisted, not checkpointed: the cache
@@ -188,27 +262,22 @@ object Barriers {
     * counted before its consumers exist: the scheduler runs independent
     * consumer stages concurrently, and against a cold cache each of them
     * recomputes the upstream pipeline (r5: containment 6 s isolated vs
-    * 118 s in-suite). The caller owns the returned cache: it unpersists
-    * it when its result no longer reads it, or leaves it to
+    * 118 s in-suite). The enclosing [[scoped]] releases the cache once
+    * nothing the operator returns reads it; outside a scope it stays for
     * [[GraftCaches.release]].
     */
-  def materialize(df: DataFrame,
-      release: Seq[DataFrame] = Nil): (DataFrame, Long) = {
-    if (!cached(df)) df.persist(StorageLevel.MEMORY_AND_DISK)
-    val n = df.count()
-    release.foreach(_.unpersist())
-    (df, n)
+  def materialize(df: DataFrame): (DataFrame, Long) = {
+    persist(df)
+    (df, df.count())
   }
 
   /** The edge list a graph loop joins every round, made STATIONARY:
     * partitioned once by `src` (the per-round join key, so rounds
     * shuffle only the slim frontier/label side, never the edges) and
-    * [[materialize]]d, releasing `release`. Returns the cache and its
-    * row count; the caller unpersists the cache when its loop is done.
+    * [[materialize]]d. Returns the cache and its row count.
     */
-  def stationaryEdges(edges: DataFrame,
-      release: Seq[DataFrame] = Nil): (DataFrame, Long) =
-    materialize(edges.repartition(col("src")), release)
+  def stationaryEdges(edges: DataFrame): (DataFrame, Long) =
+    materialize(edges.repartition(col("src")))
 
   /** Both directed edges of every row of an undirected `(a, b)` relation,
     * in ONE read: each row emits (a→src, b→dst) and (b→src, a→dst), and

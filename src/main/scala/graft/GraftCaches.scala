@@ -5,14 +5,17 @@ import org.apache.spark.sql.SparkSession
 /** Session-wide cache release — the library-level contract for embedding
   * graft operators.
   *
-  * Several operators persist intermediate relations as multi-consumer
-  * caches or plan barriers (dedup clustering, sim_knn_graph's scored pairs,
-  * graph_triangles' edge list). The RETURNED DataFrames are lazy, so those
-  * persists cannot be released inside the operator — the caller's action
-  * hasn't run yet. The contract is therefore: run your action(s), then call
-  * `GraftCaches.release(spark)`. Bench / Verify / Scratch all honor it
-  * between queries; any other embedding should do the same or the session
-  * leaks one cached relation per operator call.
+  * An operator's cache scope ([[Barriers.scoped]]) releases every cache
+  * its returned plan does not read. The caches that plan does read
+  * (sim_knn_graph's scored pairs, graph_triangles' edge list,
+  * graph_connected_components' pairs) and those of operators without a
+  * scope cannot be released inside the operator: the RETURNED DataFrame
+  * is lazy and the caller's action has not run yet. Round-barrier
+  * checkpoints are never released by a scope either. The contract is
+  * therefore: run your action(s), then call `GraftCaches.release(spark)`.
+  * Bench / Verify / Scratch all honor it between queries; any other
+  * embedding should do the same or the session leaks one cached relation
+  * per operator call.
   */
 object GraftCaches {
   /** Drop every SQL cache and raw persisted RDD in the session, blocking
@@ -26,5 +29,17 @@ object GraftCaches {
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = true))
     System.gc()
+  }
+
+  /** Entries in the session's SQL cache. `CacheManager` exposes only
+    * `isEmpty`, so its private `cachedData` is read reflectively; for
+    * observability (Scratch, the cache specs), never for a decision.
+    */
+  def sqlCaches(spark: SparkSession): Int = {
+    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val f = cm.getClass.getDeclaredField("cachedData")
+    f.setAccessible(true)
+    f.get(cm).asInstanceOf[IndexedSeq[_]].size
   }
 }

@@ -138,7 +138,8 @@ object ScaleCheck {
       val universe = edgeRel.select(col("i").as("id"))
         .unionAll(edgeRel.select(col("j").as("id"))).distinct()
       val cc = timed(s"cc_pointer_jump_$tag") {
-        val cc0 = operators.Dedup.connectedComponents(spark, edgeRel,
+        val (counted, nEdges) = Barriers.materialize(edgeRel)
+        val cc0 = operators.Dedup.connectedComponents(spark, counted, nEdges,
           universe, driverFinishEdgeBound = 0L)
           .persist(StorageLevel.MEMORY_AND_DISK)
         cc0.count(); cc0
@@ -389,7 +390,7 @@ object ScaleCheck {
     def tally(df: DataFrame, wrong: Column): DataFrame =
       df.agg(count(lit(1)).as("n"), sum(when(wrong, 1L).otherwise(0L)))
     def cc(bound: Long): DataFrame = tally(
-      Dedup.connectedComponents(spark, pairs, universe,
+      Dedup.connectedComponents(spark, pairs, nPairs, universe,
         driverFinishEdgeBound = bound),
       col("canonical_id") =!= col("id") - col("id") % 2)
     // contracted first: the raw-pair finish's broadcast outlives its plan

@@ -5,8 +5,9 @@ import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Dev tool: run one named query, print how many Spark jobs it launched
-  * while its DataFrame was built and how many during the collect, then
-  * its explain and first 20 rows. Not part of the driver contract.
+  * while its DataFrame was built and how many during the collect, and
+  * how many SQL caches it left before [[GraftCaches.release]], then its
+  * explain and first 20 rows. Not part of the driver contract.
   */
 object Scratch {
   private val Marker = "scratch-marker"
@@ -40,7 +41,8 @@ object Scratch {
     val rows = df.collect()
     val collected = jobsSoFar()
     println(s"SCRATCH $name build_jobs=${built - before} " +
-      s"action_jobs=${collected - built} rows=${rows.length}")
+      s"action_jobs=${collected - built} rows=${rows.length} " +
+      s"sql_caches=${GraftCaches.sqlCaches(spark)}")
     df.explain("formatted")
     println(df.columns.mkString(" | "))
     rows.take(20).foreach(r => println(r.mkString(" | ")))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{DriverGraph, Tables}
-import graft.Barriers.materialize
+import graft.Barriers.{materialize, persist, scoped}
 import graft.functions.GraftFunctions
 
 /** LLM-pipeline deduplication suite (SURVEY.md §2.3).
@@ -204,8 +204,8 @@ object Dedup {
       .repartition(col("doc_id")) // single-row-group parquet → spread CPU
       .select(col("doc_id"), toks.as("w"))
       .select(col("doc_id"), expr(grams).as("hs"))
-      // raw persist: a plan barrier for its one consumer, no count needed
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // a plan barrier for its one consumer, no count needed
+      .transform(persist)
     hashed
       .select(col("doc_id"), explode(expr(sel)).as("span_fp"))
       .distinct() // a fingerprint often wins many consecutive windows
@@ -232,23 +232,15 @@ object Dedup {
     * DOUBLE multiply rounds differently than DuckDB's exact DECIMAL and
     * could shift the prefix boundary by one.
     */
-  /** Returns the pair relation AND its internal caches (t, ids, post) so
-    * each caller applies the right cache scope: dedup_ngram_jaccard's
-    * and pipeline_contrastive_pairs' RETURNED plans read `ids` in the
-    * rerank joins, so their caches must survive the call (the
-    * GraftCaches contract); dedup_cluster consumes the pairs into its
-    * own persisted relation, after which these caches are dead weight
-    * and release inline (see connectedComponents).
-    */
-  private[operators] def ngramPairs(spark: SparkSession, dir: String)
-      : (DataFrame, Seq[DataFrame]) = {
+  private[operators] def ngramPairs(spark: SparkSession,
+      dir: String): DataFrame = {
     // repartition: single-row-group testdata parquet would tokenize in ONE
     // task; t feeds the df count and the vocab-id join.
     val t = Tables.documents(spark, dir)
       .repartition(col("doc_id"))
       .select(col("doc_id"), array_sort(array_distinct(toks)).as("tset"))
-      // raw persist: the vocab ranking's position job below fills it
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // no count: the vocab ranking's position job below fills it
+      .transform(persist)
     val tok = t.select(col("doc_id"), explode(col("tset")).as("token"))
     // dense integer id per token in global-rarity order (df asc, token
     // asc). The BIJECTION token↔tid preserves set sizes and intersections,
@@ -306,28 +298,27 @@ object Dedup {
           col("b.n") * 10 >= col("a.n") * 9)
       .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
       .distinct()
-    val pairs = cand
+    cand
       .join(ids.select(col("doc_id").as("i"), col("ts").as("ts_i")), Seq("i"))
       .join(ids.select(col("doc_id").as("j"), col("ts").as("ts_j")), Seq("j"))
       .select(col("i"), col("j"),
         round(GraftFunctions.jaccardSortedInt(col("ts_i"), col("ts_j")), 6)
           .as("jac"))
       .filter(col("jac") >= 0.9)
-    (pairs, Seq(t, ids, post))
   }
 
   /** §2.3 dedup_ngram_jaccard: token-set Jaccard near-dup pairs via exact
     * prefix filtering — graded against the EXHAUSTIVE all-pairs oracle.
     */
   def dedupNgramJaccard(spark: SparkSession, dir: String): DataFrame =
-    ngramPairs(spark, dir)._1.orderBy(col("i"), col("j"))
+    ngramPairs(spark, dir).orderBy(col("i"), col("j"))
 
   /** §2.3 dedup_cluster: near-dup pairs → connected components → one
     * canonical doc per duplicate cluster (the step a pipeline actually
     * applies before training: keep the canonical, drop the rest).
     *
-    * Scale shape: [[connectedComponents]] counts the persisted pair
-    * relation and picks its finish on that count. Pairs at or under
+    * Scale shape: the pair relation is persisted and counted, and
+    * [[connectedComponents]] picks its finish on that count. Pairs at or under
     * [[graft.Barriers.DriverFinishEdgeBound]] (4M; sf0.1 has 964,854)
     * are collected once and union-found on the driver
     * ([[graft.DriverGraph]]); above it the pair
@@ -340,15 +331,17 @@ object Dedup {
     * components via a recursive CTE, so the gate proves the labeling
     * exact, not an approximation.
     */
-  def dedupCluster(spark: SparkSession, dir: String): DataFrame = {
-    val (pairs, upstream) = ngramPairs(spark, dir)
-    connectedComponents(spark,
-      pairs.select(col("i"), col("j")),
-      Tables.documents(spark, dir).select(col("doc_id").as("id")),
-      release = upstream)
-      .select(col("id").as("doc_id"), col("canonical_id"))
-      .orderBy(col("doc_id"))
-  }
+  def dedupCluster(spark: SparkSession, dir: String): DataFrame =
+    scoped {
+      // the inner scope releases the ngram pipeline's caches as soon as
+      // the pair cache holds its rows
+      val (pairs, nPairs) = scoped(
+        materialize(ngramPairs(spark, dir).select(col("i"), col("j"))))
+      connectedComponents(spark, pairs, nPairs,
+        Tables.documents(spark, dir).select(col("doc_id").as("id")))
+        .select(col("id").as("doc_id"), col("canonical_id"))
+        .orderBy(col("doc_id"))
+    }
 
   /** Connected components over an undirected (i, j) pair relation:
     * (id, canonical_id = component minimum) for every id in `universe`.
@@ -364,31 +357,26 @@ object Dedup {
     *  - above it: the neighbor-min contraction, then the same
     *    union-find over the contracted edges when THEY fit the bound,
     *    else [[Relational.minLabelFix]].
-    * Caches in `release` fed the pair subtree and nothing
-    * else; they are unpersisted as soon as the pair cache holds its rows
-    * ([[graft.Barriers.materialize]]). The pair cache is released here
-    * only when this call persisted it: right after the collect under
-    * the bound, with the contracted edge cache above it. `pairs` the
-    * caller already persisted stay the caller's — a caller whose
-    * `universe` reads the pairs (graph_connected_components derives it
-    * from them) persists them itself, so the returned plan keeps
-    * reading that cache until [[graft.GraftCaches.release]].
+    * `pairs` arrive cached and counted ([[graft.Barriers.materialize]],
+    * `nPairs` its count): the caller's cache scope decides when they
+    * go, so a caller can release what fed them as soon as they hold
+    * their rows (dedup_cluster), and one whose `universe` reads them
+    * (graph_connected_components) keeps them. The label and edge caches
+    * made here are released by this call's [[graft.Barriers.scoped]].
     * The pair count, and the contracted edge count when the contraction
     * runs, are posted as round-0 [[graft.LoopRound]] events (detail
     * `pairs`, `superEdges`), and a driver finish posts its collected
     * edge count (detail `driver`).
     */
   private[graft] def connectedComponents(spark: SparkSession,
-      pairs: DataFrame, universe: DataFrame,
-      release: Seq[DataFrame] = Nil,
+      pairs: DataFrame, nPairs: Long, universe: DataFrame,
       driverFinishEdgeBound: Long = graft.Barriers.DriverFinishEdgeBound)
-      : DataFrame = {
-    // cache the UNDIRECTED pair relation once — half the rows of a
+      : DataFrame = scoped {
+    // the UNDIRECTED pair relation is cached once — half the rows of a
     // doubled edge list, and the one evaluation of the (expensive) pair
     // subtree that every downstream pass reads. (A pairs ∪ pairs.swap
     // self-union would additionally plant that subtree in the plan twice.)
-    // Pairs the caller already persisted are read, never released, here.
-    // The count's answer picks the finish regime.
+    // Its count's answer picks the finish regime.
     //
     // count-then-collect, deliberately: the count materializes the persist
     // at full parallelism; the collect then drains the cache. A fused
@@ -396,17 +384,14 @@ object Dedup {
     // scales up 1→4→16… partitions in sequential rounds while it hunts
     // for limit rows, so the expensive materializing pass runs nearly
     // serial (dedup_cluster 4.2 → 8.2 s measured).
-    val owned = !graft.Barriers.cached(pairs)
-    val (p, nPairs) = materialize(pairs, release)
     graft.Barriers.postSetup("connectedComponents", nPairs, "pairs")
     if (nPairs <= driverFinishEdgeBound) {
       // FINISH ON THE DRIVER straight from the pairs: the bound keeps the
       // collect a bounded finishing step, and a dimension-sized graph
       // pays one collect instead of the contraction's aggregates, label
       // cache and edge cache
-      val roots = DriverGraph.components(p.select(col("i"), col("j")),
+      val roots = DriverGraph.components(pairs.select(col("i"), col("j")),
         "connectedComponents")
-      if (owned) p.unpersist()
       return relabel(universe.select(col("id"), col("id").as("lab")), roots)
     }
     // CONTRACTION pass before the finish: l0(v) = min(v, direct neighbors).
@@ -421,8 +406,8 @@ object Dedup {
     // recursive-CTE oracle still matches bit-for-bit. Neighbor-min over
     // the undirected relation = min over both roles, merged — the doubled
     // edge list never materializes.
-    val nbrMin = p.groupBy(col("i").as("id")).agg(min(col("j")).as("nm"))
-      .unionAll(p.groupBy(col("j").as("id")).agg(min(col("i")).as("nm")))
+    val nbrMin = pairs.groupBy(col("i").as("id")).agg(min(col("j")).as("nm"))
+      .unionAll(pairs.groupBy(col("j").as("id")).agg(min(col("i")).as("nm")))
       .groupBy(col("id")).agg(min(col("nm")).as("nm"))
     // the edge build reads l0 from two join stages (i-side and j-side)
     // and the final labeling reads it again
@@ -435,34 +420,26 @@ object Dedup {
     // collapse in the distinct. Only the TINY contracted relation is
     // symmetrized into both directions, and it is made stationary ONCE
     // here — the driver finish collects it, the fixpoint joins it every
-    // round. Once it holds its rows the pair cache, if this call owns
-    // it, is dead weight.
+    // round
     val (edges, nSuperEdges) = graft.Barriers.stationaryEdges(
-      p.join(l0.select(col("id").as("i"), col("lab").as("ls")), Seq("i"))
+      pairs.join(l0.select(col("id").as("i"), col("lab").as("ls")), Seq("i"))
         .join(l0.select(col("id").as("j"), col("lab").as("ld")), Seq("j"))
         .filter(col("ls") =!= col("ld"))
         .select(col("ls"), col("ld")).distinct()
-        .transform(graft.Barriers.symmetrize(_, "ls", "ld")),
-      if (owned) Seq(p) else Nil)
+        .transform(graft.Barriers.symmetrize(_, "ls", "ld")))
     graft.Barriers.postSetup("connectedComponents", nSuperEdges, "superEdges")
     if (nSuperEdges <= driverFinishEdgeBound) {
       // the contracted graph is cluster-adjacency structure, not corpus
       // data: its size tracks how many clusters chain into each other,
       // which the bound just guarded
-      val roots =
-        try DriverGraph.components(edges, "connectedComponents")
-        finally edges.unpersist()
-      return relabel(l0, roots)
+      return relabel(l0, DriverGraph.components(edges, "connectedComponents"))
     }
     // the shared pointer-jump fixpoint over the contracted graph, every
-    // supernode starting as its own label; its result is checkpoint-
-    // truncated, so the edge cache can go as soon as it returns
-    val labels =
-      try Relational.minLabelFix(
-        l0.select(col("lab").as("id")).distinct()
-          .select(col("id"), col("id").as("lab")),
-        edges, "connectedComponents")
-      finally edges.unpersist()
+    // supernode starting as its own label
+    val labels = Relational.minLabelFix(
+      l0.select(col("lab").as("id")).distinct()
+        .select(col("id"), col("id").as("lab")),
+      edges, "connectedComponents")
     // expand the contraction: an id's component label is the fixpoint
     // label of its supernode (supernode ids are member ids, so the min
     // over supernodes in a component IS the component's minimum id)
@@ -770,11 +747,14 @@ object Dedup {
     * RHP-blocked pair relation.
     */
   def dedupSemantic(spark: SparkSession, dir: String): DataFrame =
-    connectedComponents(spark,
-      embeddingPairs(spark, dir).select(col("i"), col("j")),
-      Tables.embeddings(spark, dir).select(col("vec_id").as("id")))
-      .select(col("id").as("vec_id"), col("canonical_id"))
-      .orderBy(col("vec_id"))
+    scoped {
+      val (pairs, nPairs) =
+        materialize(embeddingPairs(spark, dir).select(col("i"), col("j")))
+      connectedComponents(spark, pairs, nPairs,
+        Tables.embeddings(spark, dir).select(col("vec_id").as("id")))
+        .select(col("id").as("vec_id"), col("canonical_id"))
+        .orderBy(col("vec_id"))
+    }
 
   /** §2.3 graph_triangles: per-vertex triangle counts + local clustering
     * coefficient over the semantic similarity graph (the embedding pair
@@ -976,10 +956,8 @@ object Dedup {
       .groupBy(col("pi"), col("pj"))
       .agg(count(lit(1)).as("shared"))
       .filter(col("shared") >= 4)
-      .select(explode(array(
-        struct(col("pi").as("a"), col("pj").as("b")),
-        struct(col("pj").as("a"), col("pi").as("b")))).as("p"))
-      .select(col("p.a").as("i"), col("p.b").as("j"))
+      .transform(graft.Barriers.symmetrize(_, "pi", "pj"))
+      .select(col("src").as("i"), col("dst").as("j"))
     pairs
       .join(d.select(col("doc_id").as("i"), col("sh").as("sh_i")), Seq("i"))
       .join(d.select(col("doc_id").as("j"), col("sh").as("sh_j")), Seq("j"))
@@ -1039,8 +1017,9 @@ object Dedup {
     * publishes it, PlanAuditSpec audits this plan directly (the public
     * query's plan is the stored-relation scan).
     */
-  private[graft] def dbscanLabels(spark: SparkSession, dir: String): DataFrame = {
-    // both released by GraftCaches.release(spark) after the caller's action
+  private[graft] def dbscanLabels(spark: SparkSession,
+      dir: String): DataFrame = scoped {
+    // the result reads pairs and core: they stay for GraftCaches.release
     val (pairs, _) = materialize(embeddingPairs(spark, dir, minSim = DbscanTau)
       .select(col("i"), col("j")))
     val deg = pairs.select(col("i").as("id"))
@@ -1048,10 +1027,10 @@ object Dedup {
       .groupBy(col("id")).agg(count(lit(1)).as("n_nbrs"))
     val (core, _) = materialize(
       deg.filter(col("n_nbrs") >= DbscanMinPts).select(col("id")))
-    val coreEdges = pairs
+    val (coreEdges, nCoreEdges) = materialize(pairs
       .join(core.select(col("id").as("i")), Seq("i"), "left_semi")
-      .join(core.select(col("id").as("j")), Seq("j"), "left_semi")
-    val cc = connectedComponents(spark, coreEdges, core)
+      .join(core.select(col("id").as("j")), Seq("j"), "left_semi"))
+    val cc = connectedComponents(spark, coreEdges, nCoreEdges, core)
       .select(col("id"), col("canonical_id"))
     val border = graft.Barriers.symmetrize(pairs, "i", "j")
       .join(cc.select(col("id").as("dst"), col("canonical_id")), Seq("dst"))

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.Tables
-import graft.Barriers.{Budget, Horizon, Round, materialize}
+import graft.Barriers.{Budget, Horizon, Round, materialize, persist, scoped}
 import graft.functions.GraftFunctions
 
 /** Warehouse-query suite (SURVEY.md §2.1 queries + §2.2).
@@ -476,7 +476,7 @@ object Relational {
     * bootstrap (single-value groups) cost no round job.
     */
   private[graft] def groupQuantileBisectCore(rows0: DataFrame,
-      fan: Int = GroupBisectFan): DataFrame = {
+      fan: Int = GroupBisectFan): DataFrame = scoped {
     val spark = rows0.sparkSession
     import spark.implicits._
     val (rows, _) = materialize(rows0)
@@ -491,7 +491,6 @@ object Relational {
         "Ranks.groupedRowNumber (two-pass distributed rank), not a " +
         "driver-coordinated bracket search")
     if (gstats.isEmpty) {
-      rows.unpersist()
       return spark.emptyDataFrame
         .select(lit("").as("pct"), lit("").as("grp"),
           lit(0L).as("k"), lit(0L).as("n_rows"),
@@ -593,7 +592,6 @@ object Relational {
           s"mids=${midsByGrp.map(_._2.length).sum}")
       }
     }
-    rows.unpersist()
     brackets
       .map(b => (b.pct, b.grp, b.k, b.n, b.hi, b.hi.toDouble / 100.0))
       .toDF("pct", "grp", "k", "n_rows", "value_cents", "value")
@@ -1955,7 +1953,8 @@ object Relational {
       .agg(sum(col("contrib")).as("c"))
 
   private[graft] def pagerankCore(edges0: DataFrame, rounds: Int = 10,
-      broadcastMaxVertices: Long = PagerankBroadcastMaxVertices): DataFrame = {
+      broadcastMaxVertices: Long = PagerankBroadcastMaxVertices)
+      : DataFrame = scoped {
     // the outdeg self-join consumes edges0 twice, but deliberately
     // WITHOUT a persist: both consumers end in the identical exchange
     // subtree, so ReuseExchange computes the caller's plan once anyway —
@@ -2017,12 +2016,6 @@ object Relational {
       // round barrier: O(1) lineage
       Round(graft.Barriers.roundBarrier(next), -1)
     }
-    // the returned plan is a checkpoint-truncated LogicalRDD — it holds
-    // the final scores and references NONE of the stationary caches, so
-    // they release inline (the dedupCluster pattern) instead of leaning
-    // on the harness-level GraftCaches contract
-    edges.unpersist(); vertices.unpersist()
-    if (dangling != null) dangling.unpersist()
     scores
   }
 
@@ -2105,7 +2098,8 @@ object Relational {
     */
   private[graft] def pprCore(edges0: DataFrame, nSeeds: Int = 4,
       rounds: Int = 10,
-      broadcastMaxVertices: Long = PagerankBroadcastMaxVertices): DataFrame = {
+      broadcastMaxVertices: Long = PagerankBroadcastMaxVertices)
+      : DataFrame = scoped {
     // rounds + the seed/routing builds consume the edge cache
     val (edges, _) = graft.Barriers.stationaryEdges(
       edges0.join(edges0.groupBy(col("src")).agg(count(lit(1)).as("outdeg")),
@@ -2128,7 +2122,6 @@ object Relational {
         .select(col("dst").as("v"), col("sn").as("s"))
       Round(graft.Barriers.roundBarrier(next), -1)
     }
-    edges.unpersist() // checkpoint-truncated result references no cache
     scores
   }
 
@@ -2141,7 +2134,8 @@ object Relational {
     * vertex that only ever appears as a src keeps exactly its self-vote.
     */
   private[graft] def lpaCore(edges0: DataFrame, rounds: Int = 4,
-      broadcastMaxVertices: Long = PagerankBroadcastMaxVertices): DataFrame = {
+      broadcastMaxVertices: Long = PagerankBroadcastMaxVertices)
+      : DataFrame = scoped {
     // all rounds consume the edge cache
     val (edges, _) = graft.Barriers.stationaryEdges(edges0)
     val labels0 = graft.Barriers.roundBarrier(
@@ -2168,7 +2162,6 @@ object Relational {
       Round(graft.Barriers.roundBarrier(
         votes.select(col("dst").as("v"), col("best.l").as("lbl"))), -1)
     }
-    edges.unpersist()
     labels
   }
 
@@ -2267,15 +2260,14 @@ object Relational {
     * always survives the prune) matches bit-for-bit.
     */
   def graphConnectedComponents(spark: SparkSession, dir: String): DataFrame = {
-    // released by GraftCaches.release(spark) after the caller's action
-    val pairs = urgentSlicePairs(spark, dir)
-      // raw persist: connectedComponents' count is its first use
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // the result reads it: released by GraftCaches.release(spark) after
+    // the caller's action
+    val (pairs, nPairs) = materialize(urgentSlicePairs(spark, dir))
     // universe = the slice's endpoints, derived FROM the persisted pair
     // relation (plan-matches its cache — the join above evaluates once)
     val universe = pairs.select(col("i").as("id"))
       .unionAll(pairs.select(col("j").as("id"))).distinct()
-    Dedup.connectedComponents(spark, pairs, universe).select(
+    Dedup.connectedComponents(spark, pairs, nPairs, universe).select(
       vertexSide("id").as("node_type"),
       vertexKey("id").as("entity_key"),
       vertexSide("canonical_id").as("component_type"),
@@ -2391,7 +2383,7 @@ object Relational {
     * out so ScaleCheck can drive the loop on the 25M-edge drill graph.
     */
   private[graft] def ssspCore(edges0: DataFrame, nSeeds: Int = 3,
-      maxRounds: Int = SsspMaxRounds): DataFrame = {
+      maxRounds: Int = SsspMaxRounds): DataFrame = scoped {
     // seeds + every relaxation round consume the edge cache
     val (edges, _) = graft.Barriers.stationaryEdges(edges0)
     val seeds = edges.filter(col("src") % 2 === 0)
@@ -2418,7 +2410,6 @@ object Relational {
           col("id") === col("iid"), "left_anti")
           .unionAll(improved)), improved), nImproved)
     }
-    edges.unpersist() // checkpoint-truncated result references no cache
     dist
   }
 
@@ -2917,12 +2908,9 @@ object Relational {
     // one fixpoint over `edges`, made stationary for its rounds, with
     // every surviving vertex starting as its own label
     def minLabels(remaining: DataFrame, edges: DataFrame,
-        what: String): DataFrame = {
-      val (stationary, _) = graft.Barriers.stationaryEdges(edges)
-      try minLabelFix(
-        remaining.select(col("hv").as("id"), col("hv").as("lab")),
-        stationary, what)
-      finally stationary.unpersist()
+        what: String): DataFrame = scoped {
+      minLabelFix(remaining.select(col("hv").as("id"), col("hv").as("lab")),
+        graft.Barriers.stationaryEdges(edges)._1, what)
     }
     val (last, _) = graft.Barriers.fixpoint("scc", Budget(SccMaxRounds))(
         finishIfBounded(trimmed)) { (st, round) =>
@@ -3047,7 +3035,7 @@ object Relational {
     * drilled on a 25M-edge layered planted graph (ScaleCheck scc),
     * where the query graph exercises only its correctness.
     */
-  def graphScc(spark: SparkSession, dir: String): DataFrame = {
+  def graphScc(spark: SparkSession, dir: String): DataFrame = scoped {
     val (flows, _) = materialize(Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_suppkey"), discPrice.as("rev"))
       .join(Tables.orders(spark, dir)
@@ -3070,7 +3058,6 @@ object Relational {
     val nations = Tables.nation(spark, dir)
       .select(col("n_nationkey").cast("bigint").as("v"), col("n_name"))
     val labels = sccCore(nations.select(col("v")), e)
-    flows.unpersist() // labels is checkpoint-truncated — no cache refs
     val sizes = labels.groupBy(col("scc_id"))
       .agg(count(lit(1)).as("scc_size"))
     nations.join(labels, Seq("v"))
@@ -3087,7 +3074,8 @@ object Relational {
     */
   private[graft] def bfsCore(edges0: DataFrame, nSeeds: Int,
       maxHops: Long,
-      broadcastMaxVertices: Long = PagerankBroadcastMaxVertices): DataFrame = {
+      broadcastMaxVertices: Long = PagerankBroadcastMaxVertices)
+      : DataFrame = scoped {
     // seeds + every BFS round consume the edge cache
     val (edges, _) = graft.Barriers.stationaryEdges(edges0)
     val seeds = edges.filter(col("src") % 2 === 0)
@@ -3115,7 +3103,6 @@ object Relational {
       else Round((graft.Barriers.roundBarrier(visited.unionAll(fresh)), fresh,
         nFresh), nFresh)
     }
-    edges.unpersist()
     visited
   }
 
@@ -3173,9 +3160,7 @@ object Relational {
     if (n0 <= driverEdgeBound) {
       // bounded finishing step, not corpus data: peel in memory where a
       // round is an array sweep instead of a scheduled stage
-      val out = graft.DriverGraph.kCore(edges0, k, "kcore")
-      edges0.unpersist()
-      return out
+      return graft.DriverGraph.kCore(edges0, k, "kcore")
     }
     // every round but the last removes at least one edge, so n0 + 1
     // rounds always reach the fixpoint; a round over no edges reports 0
@@ -3487,8 +3472,8 @@ object Relational {
       case None => brandesForward(edges, verts)
     }
     val delta = brandesBackward(
-      // raw persist: brandesBackward's max-level pull is its first use
-      visRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+      // no count: brandesBackward's max-level pull is its first use
+      persist(visRaw),
       edges,
       GraftFunctions.sortedKeyFold(col("w"), _, maxFold,
         "brandes δ accumulation: use betweennessApproxCore at this scale"))
@@ -3557,9 +3542,8 @@ object Relational {
     val pivots = verts
       .orderBy(xxhash64(col("v")), col("v")) // v: total order under ties
       .limit(nPivots).select(col("v").as("root"))
-    val vis = brandesForwardFrom(edges, pivots)
-      // raw persist: the pivot count below is its first use
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // no count: the pivot count below is its first use
+    val vis = persist(brandesForwardFrom(edges, pivots))
     val k = vis.filter(col("lvl") === 0).count() // pivots actually used
     val delta = brandesBackward(vis, edges, sum(_))
     val scale = nVerts.toDouble / k
@@ -4392,7 +4376,7 @@ object Relational {
     */
   private[graft] def markovStationaryCore(trans0: DataFrame,
       rounds: Int = 10,
-      driverEdgeBound: Long = MarkovDriverEdgeBound): DataFrame = {
+      driverEdgeBound: Long = MarkovDriverEdgeBound): DataFrame = scoped {
     val spark = trans0.sparkSession
     import spark.implicits._
     val (trans, nEdges) = materialize(trans0)
@@ -4406,7 +4390,6 @@ object Relational {
       // an order-free integer sum per target state — so the labeling is
       // bit-identical to the join loop below (spec-asserted).
       val edges = m.as[(String, String, Long, Long)].collect()
-      trans.unpersist()
       var pi: Map[String, Long] =
         edges.iterator.map(_._1).distinct.map(_ -> 1000000L).toMap
       for (_ <- 1 to rounds) {
@@ -4432,9 +4415,6 @@ object Relational {
           .agg(sum(col("contrib")).cast("bigint").as("ppm"))
           .select(col("cur").as("state"), col("ppm"))), -1)
     }
-    // the result is checkpoint-truncated (for rounds ≥ 1) and references
-    // neither cache
-    trans.unpersist(); mp.unpersist()
     pi.orderBy(col("state"))
   }
 
@@ -5823,30 +5803,29 @@ object Relational {
 
   private[graft] def rankJoinCore(cr: DataFrame, sr: DataFrame,
       bridge: DataFrame, k: Int,
-      maxRanked: Long = RankJoinMaxRankedRows): (DataFrame, Int) = {
-    // inputs the caller already persisted are read, never released, here
-    val owned = Seq(cr, sr, bridge).filterNot(graft.Barriers.cached)
-    // the returned top-k is its own materialized cache: once the loop has
-    // counted it (or thrown), nothing reads the three inputs again
-    val (topk, rounds) = try {
-      // the ranked inputs are sliced and the bridge joined every round
-      val (_, nC) = materialize(cr)
-      val (_, nS) = materialize(sr)
-      require(nC <= maxRanked && nS <= maxRanked,
-        s"rank join inputs must be dimension-sized (≤$maxRanked " +
-          s"ranked rows; got $nC / $nS): the per-round slice and the " +
-          "full-coverage exit are TakeOrdered merges bounded by the input")
-      materialize(bridge)
-      def bd(r: org.apache.spark.sql.Row, i: Int): java.math.BigDecimal =
-        r.getDecimal(i)
-      val maxC = bd(cr.agg(max(col("crev"))).head(), 0)
-      val maxS = bd(sr.agg(max(col("srev"))).head(), 0)
-      // a Budget, not a truncation: c covers both inputs long before 40
-      // quadruplings (the full-coverage branch below is the guaranteed
-      // exit); a round reports 0 exactly when it returns the top-k, else
-      // its slice depth
-      val ((_, result), rounds) = graft.Barriers.fixpoint("rank-join",
-          Budget(40))((64L, Option.empty[DataFrame])) { case ((c, _), _) =>
+      maxRanked: Long = RankJoinMaxRankedRows): (DataFrame, Int) = scoped {
+    // the ranked inputs are sliced and the bridge joined every round; the
+    // returned top-k is its own materialized cache, so the core's scope
+    // releases all three once the loop has counted it
+    val (_, nC) = materialize(cr)
+    val (_, nS) = materialize(sr)
+    require(nC <= maxRanked && nS <= maxRanked,
+      s"rank join inputs must be dimension-sized (≤$maxRanked " +
+        s"ranked rows; got $nC / $nS): the per-round slice and the " +
+        "full-coverage exit are TakeOrdered merges bounded by the input")
+    materialize(bridge)
+    def bd(r: org.apache.spark.sql.Row, i: Int): java.math.BigDecimal =
+      r.getDecimal(i)
+    val maxC = bd(cr.agg(max(col("crev"))).head(), 0)
+    val maxS = bd(sr.agg(max(col("srev"))).head(), 0)
+    // a Budget, not a truncation: c covers both inputs long before 40
+    // quadruplings (the full-coverage branch below is the guaranteed
+    // exit); a round reports 0 exactly when it returns the top-k, else
+    // its slice depth. Each round's scope releases its slices, and its
+    // top-k unless the round returns it
+    val ((_, result), rounds) = graft.Barriers.fixpoint("rank-join",
+        Budget(40))((64L, Option.empty[DataFrame])) { case ((c, _), _) =>
+      scoped {
         val cInt = c.min(Int.MaxValue.toLong).toInt // limit() takes Int;
         // past 2^31 ranked rows the TA must have terminated on the bound
         // (or the Budget throws — never a silent truncation)
@@ -5876,18 +5855,15 @@ object Relational {
           val kth = bd(topk.agg(min(col("score"))).head(), 0)
           kth.compareTo(bound) > 0
         })
-        if (!done) topk.unpersist()
-        cs.unpersist(); ss.unpersist()
         if (done) Round((c, Some(topk)), 0, s"c=$c found=$found")
         else Round((c * 4, None), c, s"c=$c found=$found")
       }
-      (result.get, rounds)
-    } finally owned.foreach(_.unpersist())
+    }
     // order on the exact DECIMAL score (the oracle's ORDER BY key) and
     // cast to double only in the select list: two distinct decimals
     // collapsing to one double must still order by decimal, not by the
     // (custkey, suppkey) tie-break
-    val out = topk
+    val out = result.get
       .orderBy(col("score").desc, col("custkey"), col("suppkey"))
       .select(col("custkey"), col("suppkey"),
         col("score").cast("double").as("pair_score"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.Barriers.{Horizon, Round}
+import graft.Barriers.{Horizon, Round, persist}
 import graft.functions.GraftFunctions
 
 /** Approximate-nearest-neighbor search over the embeddings table
@@ -311,24 +311,18 @@ object Similarity {
           Dedup.EmbSeed)))
         .toDF("vec_id", "tbl", "bucket"),
       "tbl", "bucket", "vec_id")
-    // raw persist = plan barrier for one consumer: the symmetrizing
-    // explode references sim_raw
-    // from two struct branches, and without the barrier CollapseProject
-    // would inline the cosine kernel into both (2× eval per pair).
-    // Released by GraftCaches.release(spark) after the caller's action —
-    // the embedding contract; it cannot be unpersisted here because the
-    // returned plan still reads it
-    val scored = cand
+    // plan barrier for one consumer: the symmetrizing explode references
+    // sim_raw from two struct branches, and without the barrier
+    // CollapseProject would inline the cosine kernel into both (2× eval
+    // per pair). The returned plan reads it: it stays for
+    // GraftCaches.release(spark) after the caller's action
+    val scored = persist(cand
       .join(e.select(col("vec_id").as("i"), col("embedding").as("v_i")), Seq("i"))
       .join(e.select(col("vec_id").as("j"), col("embedding").as("v_j")), Seq("j"))
       .select(col("i"), col("j"),
-        GraftFunctions.cosine(col("v_i"), col("v_j")).as("sim_raw"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val sym = scored.select(explode(array(
-        struct(col("i").as("q_id"), col("j").as("c_id"), col("sim_raw")),
-        struct(col("j").as("q_id"), col("i").as("c_id"), col("sim_raw")))).as("e"))
-      .select(col("e.q_id").as("q_id"), col("e.c_id").as("c_id"),
-        col("e.sim_raw").as("sim_raw"))
+        GraftFunctions.cosine(col("v_i"), col("v_j")).as("sim_raw")))
+    val sym = graft.Barriers.symmetrize(scored, "i", "j", "sim_raw")
+      .select(col("src").as("q_id"), col("dst").as("c_id"), col("sim_raw"))
     topK(sym, k = 3)
       .select(col("q_id").as("vec_id"), col("rank"),
         col("c_id").as("nbr_id"), col("sim"))

@@ -1322,7 +1322,7 @@ object TextAnalysis {
     // the unordered pair relation: dedup_ngram_jaccard's sort would only
     // be undone by the aggregate; its caches stay for GraftCaches.release
     val best = graft.Barriers.symmetrize(
-        Dedup.ngramPairs(spark, dir)._1, "i", "j")
+        Dedup.ngramPairs(spark, dir), "i", "j")
       .groupBy(col("src").as("anchor")).agg(min(col("dst")).as("pos_id"))
     // dense 0-based rank over doc ids — two-pass distributed
     val ids = graft.Ranks.rowNumber(docs, "rk1", col("doc_id"))

@@ -15,8 +15,10 @@ import graft.operators.Relational
   * lacks at cluster scale). Also the round loop's contract
   * (Barriers.fixpoint) on a toy step: its stop rule, both limits, its
   * round events and its exceptions. And the shared-relation cache
-  * (Barriers.materialize): one count per call, the release after it, a
-  * caller's cache left as it was. And the one-read symmetrization
+  * (Barriers.materialize): one count per call, a caller's cache left as
+  * it was. And the cache scope (Barriers.scoped): what its result reads
+  * stays, the rest goes, a throw releases all of it, nested scopes hand
+  * their kept caches outward. And the one-read symmetrization
   * (Barriers.symmetrize): the two-arm union's rows from one leaf.
   */
 class BarriersSpec extends AnyFunSuite {
@@ -174,22 +176,26 @@ class BarriersSpec extends AnyFunSuite {
     } finally { df.unpersist(); byHand.unpersist() }
   }
 
-  test("materialize: `release` is unpersisted only after the count, so " +
-      "the count reads the released cache instead of recomputing it") {
+  test("materialize in a scope: the upstream cache is released only " +
+      "after the downstream count, so the count reads it instead of " +
+      "recomputing it") {
     val evals = spark.sparkContext.longAccumulator("upstream-evals")
     val tick = udf { (x: Long) => evals.add(1); x }
-    val (up, nUp) = Barriers.materialize(
-      spark.range(0, 50, 1, 1).select(tick(col("id")).as("id")))
-    assert(nUp === 50L && evals.value === 50L)
-    val down = up.filter(col("id") < 20)
+    var up: DataFrame = null
     try {
-      val (_, n) = Barriers.materialize(down, release = Seq(up))
+      val (down, n) = Barriers.scoped {
+        val (u, nUp) = Barriers.materialize(
+          spark.range(0, 50, 1, 1).select(tick(col("id")).as("id")))
+        assert(nUp === 50L && evals.value === 50L)
+        up = u
+        Barriers.materialize(u.filter(col("id") < 20))
+      }
       assert(n === 20L)
       assert(evals.value === 50L,
         "the count recomputed the released upstream cache")
-      assert(!Barriers.cached(up))
-      assert(Barriers.cached(down))
-    } finally { down.unpersist(); up.unpersist() }
+      assert(up.storageLevel === StorageLevel.NONE)
+      assert(down.storageLevel === StorageLevel.MEMORY_AND_DISK)
+    } finally GraftCaches.release(spark)
   }
 
   test("materialize: an input the caller already cached keeps its storage " +
@@ -198,14 +204,87 @@ class BarriersSpec extends AnyFunSuite {
       .persist(StorageLevel.MEMORY_ONLY)
     try {
       mine.count()
-      val (same, n) = Barriers.materialize(mine)
-      assert(same eq mine)
-      assert(n === 10L)
+      Barriers.scoped {
+        val (same, n) = Barriers.materialize(mine)
+        assert(same eq mine)
+        assert(n === 10L)
+        assert(mine.storageLevel === StorageLevel.MEMORY_ONLY)
+        Barriers.materialize(mine.filter(col("id") < 5))
+        Barriers.persist(mine)
+        () // the scope's result reads no cache
+      }
       assert(mine.storageLevel === StorageLevel.MEMORY_ONLY)
-      // releasing something else leaves the caller's cache alone
-      val other = spark.range(0, 5, 1, 1).toDF("id")
-      Barriers.materialize(mine.filter(col("id") < 5), release = Seq(other))
-      assert(mine.storageLevel === StorageLevel.MEMORY_ONLY)
+    } finally GraftCaches.release(spark)
+  }
+
+  private def rel(from: Long, until: Long): DataFrame =
+    spark.range(from, until, 1, 1).toDF("id")
+
+  test("scoped: an unreferenced cache is released, a referenced one is " +
+      "kept") {
+    GraftCaches.release(spark)
+    try {
+      var dropped: DataFrame = null
+      val kept = Barriers.scoped {
+        dropped = Barriers.materialize(rel(0, 30))._1
+        Barriers.materialize(rel(100, 120))._1.filter(col("id") > 103)
+      }
+      assert(dropped.storageLevel === StorageLevel.NONE)
+      assert(GraftCaches.sqlCaches(spark) === 1)
+      assert(kept.count() === 16L)
+    } finally GraftCaches.release(spark)
+  }
+
+  test("scoped: a throw releases every recorded cache, a nested scope's " +
+      "kept caches included") {
+    GraftCaches.release(spark)
+    val boom = new IllegalStateException("toy operator failed")
+    val e = intercept[IllegalStateException] {
+      Barriers.scoped {
+        Barriers.scoped(Barriers.materialize(rel(0, 10))._1)
+        Barriers.materialize(rel(10, 20))
+        Barriers.persist(rel(20, 30))
+        throw boom
+      }
+    }
+    assert(e eq boom)
+    assert(GraftCaches.sqlCaches(spark) === 0)
+  }
+
+  test("scoped: a nested scope hands its kept caches to the enclosing " +
+      "scope, which releases them when its own result does not read them") {
+    GraftCaches.release(spark)
+    try {
+      var inner: DataFrame = null
+      val outer = Barriers.scoped {
+        inner = Barriers.scoped(Barriers.materialize(rel(0, 10))._1)
+        assert(inner.storageLevel === StorageLevel.MEMORY_AND_DISK,
+          "the inner scope's result reads it")
+        Barriers.materialize(rel(50, 60))._1
+      }
+      assert(inner.storageLevel === StorageLevel.NONE)
+      assert(outer.storageLevel === StorageLevel.MEMORY_AND_DISK)
+      assert(GraftCaches.sqlCaches(spark) === 1)
+    } finally GraftCaches.release(spark)
+  }
+
+  test("scoped: a recorded cache that feeds an unfilled kept cache is " +
+      "kept, so the kept cache's first action reads it") {
+    GraftCaches.release(spark)
+    val evals = spark.sparkContext.longAccumulator("feeding-evals")
+    val tick = udf { (x: Long) => evals.add(1); x }
+    try {
+      var up: DataFrame = null
+      val down = Barriers.scoped {
+        up = Barriers.materialize(
+          spark.range(0, 40, 1, 1).select(tick(col("id")).as("id")))._1
+        Barriers.persist(up.filter(col("id") % 2 === 0)) // not counted
+      }
+      assert(evals.value === 40L)
+      assert(up.storageLevel === StorageLevel.MEMORY_AND_DISK,
+        "the input of an unfilled kept cache was released")
+      assert(down.count() === 20L)
+      assert(evals.value === 40L, "the kept cache recomputed its input")
     } finally GraftCaches.release(spark)
   }
 

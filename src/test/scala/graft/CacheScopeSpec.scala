@@ -4,28 +4,19 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Dedup, Relational}
 
-/** In-plan cache scoping: operators whose RETURNED plan no longer
-  * references their internal persists must release them inline; only
+/** In-plan cache scoping: an operator's cache scope (Barriers.scoped)
+  * must release every cache its RETURNED plan no longer reads; only
   * true plan-referenced barriers may rely on the harness-level
   * GraftCaches.release contract. This spec runs operators back-to-back
   * WITHOUT GraftCaches.release and asserts the session's SQL-cache
-  * population stays at exactly the documented barriers.
+  * population stays at exactly the documented barriers, and checks that
+  * no operator persists or unpersists by hand.
   */
 class CacheScopeSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
-  /** Entry count of the session CacheManager — the API exposes only
-    * isEmpty, so the private cachedData IndexedSeq is read reflectively
-    * (test-only observability, not a runtime dependency).
-    */
-  private def sqlCacheCount: Int = {
-    val cm = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sharedState.cacheManager
-    val f = cm.getClass.getDeclaredField("cachedData")
-    f.setAccessible(true)
-    f.get(cm).asInstanceOf[IndexedSeq[_]].size
-  }
+  private def sqlCacheCount: Int = GraftCaches.sqlCaches(spark)
 
   test("pagerank and dedup_cluster release every SQL cache inline; " +
       "graph_connected_components leaves exactly its one plan-referenced " +
@@ -95,5 +86,43 @@ class CacheScopeSpec extends AnyFunSuite {
     assert(mine.storageLevel !== org.apache.spark.storage.StorageLevel.NONE)
     GraftCaches.release(spark)
     assert(sqlCacheCount === 0)
+  }
+
+  test("every core whose scope releases its caches leaves, run back to " +
+      "back without GraftCaches.release, only the caches its result reads") {
+    val dir = TestSpark.sfDir
+    GraftCaches.release(spark) // clean baseline only — never called again
+    // the session's SQL-cache count after each query, in order: round-
+    // barrier results and driver finishes read no cache; q_rank_join's
+    // result reads its top-k; sim_dbscan's result reads its pair and
+    // core caches, and a rerun reuses both
+    val want = Seq("graph_ppr" -> 0, "graph_label_propagation" -> 0,
+      "graph_weighted_sssp" -> 0, "graph_shortest_paths" -> 0,
+      "graph_scc" -> 0, "q_markov_stationary" -> 0,
+      "q_group_quantile_bisect" -> 0, "q_quantile_bisect" -> 0,
+      "dedup_semantic" -> 0, "q_rank_join" -> 1, "sim_dbscan" -> 3,
+      "sim_dbscan" -> 3)
+    val got = want.map { case (q, _) =>
+      SparkEntry.queries(q)(spark, dir).collect()
+      q -> sqlCacheCount
+    }
+    assert(got === want)
+    GraftCaches.release(spark)
+    assert(sqlCacheCount === 0)
+  }
+
+  test("graft.operators and Ranks hold no hand-written persist or " +
+      "unpersist: every cache goes through Barriers and its scope") {
+    val files = new java.io.File("src/main/scala/graft/operators").listFiles()
+      .filter(_.getName.endsWith(".scala")).toSeq :+
+      new java.io.File("src/main/scala/graft/Ranks.scala")
+    val hits = for {
+      f <- files
+      (line, i) <- scala.util.Using.resource(
+        scala.io.Source.fromFile(f, "UTF-8"))(_.getLines().toList).zipWithIndex
+      if line.contains(".persist(") || line.contains(".unpersist(")
+    } yield s"${f.getName}:${i + 1}: ${line.trim}"
+    assert(files.count(_.isFile) > 1)
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -59,14 +59,19 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     (got, regime)
   }
 
-  /** The labeling plus the connectedComponents events the call posted. */
+  /** The labeling plus the connectedComponents events the call posted.
+    * The pairs are cached and counted in a scope around the call, the
+    * dedup_cluster shape: the pair cache goes once the labeling is built.
+    */
   private def runRounds(pairs: Seq[(Long, Long)], universe: Seq[Long],
       bound: Long): (Map[Long, Long], Seq[graft.LoopRound]) = {
     import spark.implicits._
     val (got, launched) = TestSpark.launched {
-      Dedup.connectedComponents(spark, pairs.toDF("i", "j"),
-          universe.toDF("id"), driverFinishEdgeBound = bound)
-        .as[(Long, Long)].collect().toMap
+      graft.Barriers.scoped {
+        val (p, n) = graft.Barriers.materialize(pairs.toDF("i", "j"))
+        Dedup.connectedComponents(spark, p, n, universe.toDF("id"),
+          driverFinishEdgeBound = bound)
+      }.as[(Long, Long)].collect().toMap
     }
     (got, launched.rounds.filter(_.loop == "connectedComponents"))
   }
@@ -155,8 +160,9 @@ class ConnectedComponentsSpec extends AnyFunSuite {
   test("neither finish regime leaves its pair or edge cache behind") {
     // the only SQL cache a call may leave is one its returned plan
     // reads: the contracted-label relation l0 in the contracted
-    // regimes, nothing in the raw-pair driver finish (the pair cache is
-    // released inline) unless the caller persisted the pairs itself.
+    // regimes, nothing in the raw-pair driver finish (the caller's scope
+    // releases the pair cache) unless the caller persisted the pairs
+    // itself and reads them.
     // The stationary edge cache never survives. Cached Datasets are the
     // persistent RDDs Spark names after their plan; round barriers are
     // unnamed.
@@ -191,7 +197,7 @@ class ConnectedComponentsSpec extends AnyFunSuite {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val uni = pairsDf.select(col("i").as("id"))
         .unionAll(pairsDf.select(col("j").as("id"))).distinct()
-      val got = Dedup.connectedComponents(spark, pairsDf, uni)
+      val got = Dedup.connectedComponents(spark, pairsDf, pairsDf.count(), uni)
         .as[(Long, Long)].collect().toMap
       assert(got === reference(chainClique, chainClique.flatMap(e => Seq(e._1, e._2))))
     }
@@ -218,7 +224,8 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     val uni = pairsDf.select(col("i").as("id"))
       .unionAll(pairsDf.select(col("j").as("id"))).distinct()
     import spark.implicits._
-    val dist = Dedup.connectedComponents(spark, pairsDf, uni,
+    val (p, n) = graft.Barriers.materialize(pairsDf)
+    val dist = Dedup.connectedComponents(spark, p, n, uni,
         driverFinishEdgeBound = -1L)
       .as[(Long, Long)].collect().toMap
     val decoded = byQuery.map { r =>
