@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{DriverGraph, Tables}
@@ -12,9 +13,12 @@ import graft.functions.GraftFunctions
   * Every operator is linear or block-bounded — no O(n²) self-join ever
   * touches the full corpus:
   *  - exact dedup is one hash-groupBy (map-side combined);
-  *  - jaccard near-dup candidates come from rare-token prefix postings
-  *    (exact AllPairs — lossless, and stopwords never index);
-  *  - MinHash/LSH and SimHash bound candidate pairs by band buckets;
+  *  - Jaccard near-dup candidates (token sets, shingle sets, chunk
+  *    digests) come from one rare-token prefix filter,
+  *    [[jaccardCandidates]] (exact AllPairs — lossless, and stopwords
+  *    never index);
+  *  - SimHash and the cross-load MinHash twin bound candidate pairs by
+  *    band buckets;
   *  - embedding near-dup candidates come from label-free RHP buckets
   *    (16 tables × 4 sign bits, constants shared with the oracle).
   * At cluster scale the only skew risk is a hot band bucket; AQE skew-join
@@ -211,100 +215,100 @@ object Dedup {
       .distinct() // a fingerprint often wins many consecutive windows
   }
 
-  /** Unsorted near-dup pair relation (i < j, rounded jac ≥ 0.9) — shared
-    * by the pair query and the clustering operator.
+  /** Candidate pairs of an exact set-similarity join at Jaccard ≥
+    * num/den — the AllPairs prefix filter (Bayardo et al.) behind
+    * dedup_ngram_jaccard (9/10 over token sets), dedup_minhash_lsh (1/2
+    * over word 3-shingle sets) and mm_cdc_incremental (1/2 over chunk
+    * digests). `probe` and `index` are (id, set) relations whose sets
+    * hold distinct tokens; `df` is (token, df).
     *
-    * EXACT prefix filtering (AllPairs/ppjoin family): every doc's distinct
-    * tokens are ordered by GLOBAL rarity (df asc, token asc — identical in
-    * both engines via pure integer/lexicographic sorts), and only the
-    * first p = n - ceil(0.9·n) + 1 rarest tokens are indexed. Two sets
-    * with Jaccard ≥ 0.9 MUST share a prefix token (pigeonhole on the
-    * overlap bound), so candidate generation is LOSSLESS — the oracle is
-    * the exhaustive all-pairs scan, and this replaced a (lang,
-    * length-bucket) blocking that silently missed 91% of true pairs
-    * (cross-language duplicates and bucket straddlers; 790 of 9020 at
-    * sf0.01). Cost is bounded the way a 100 TB corpus needs: postings
-    * exist only for each doc's ~n/10 RAREST tokens, so stopword postings
-    * never form quadratic cliques, and candidate volume tracks the true
-    * near-dup pair count (which is itself quadratic only inside genuine
-    * duplicate cliques — the pairs the operator must emit anyway).
-    * ceil(0.9·n) is computed as (9n+9) div 10 in pure integers: a 0.9
-    * DOUBLE multiply rounds differently than DuckDB's exact DECIMAL and
-    * could shift the prefix boundary by one.
+    * Every set orders its tokens by global rarity (df asc, token asc; a
+    * token absent from `df` ranks as df 0) and posts only its first
+    * n − ⌈num·n/den⌉ + 1. Two sets at Jaccard ≥ num/den share at least
+    * ⌈num·n/den⌉ tokens of each side's n (the intersection is at least
+    * num/den of the union, hence of either set), so the rarest shared
+    * token sits inside both prefixes: no true pair is lost, and the
+    * oracle is the exhaustive all-pairs scan. ⌈num·n/den⌉ is the integer
+    * (n·num + den − 1) div den — a double product rounds differently from
+    * DuckDB's exact DECIMAL and could move the prefix boundary by one.
+    * The order is one `row_number` per id window, so no global rank job
+    * runs and tokens need no integer vocabulary. Cost tracks the rare
+    * tokens: a common token ranks out of every prefix, so stopword
+    * postings never form quadratic cliques.
+    *
+    * The token equi-join also keeps only size-compatible pairs,
+    * den·min(nᵢ, nⱼ) ≥ num·max(nᵢ, nⱼ) (the intersection is bounded by
+    * the smaller set, the union by the larger), in exact integers. Output:
+    * distinct bare (i = probe id, j = index id) for the caller's exact
+    * rerank; nothing here launches a job. A self-join passes the same
+    * relation twice and keeps i < j ([[selfJaccardCandidates]]): both join
+    * sides are the same posting plan, so exchange reuse evaluates it once.
+    */
+  private[graft] def jaccardCandidates(probe: DataFrame, index: DataFrame,
+      df: DataFrame, num: Int, den: Int): DataFrame = {
+    val rarity = df.toDF("token", "df")
+    val byId = Window.partitionBy(col("id"))
+    // (token, id, n) prefix postings; both sides alias all three columns
+    // the same way, so a self-join's two sides are one canonical plan
+    def posts(sets: DataFrame, id: String, n: String, token: String) =
+      sets.toDF("id", "set")
+        .select(col("id"), size(col("set")).as("n"),
+          explode(col("set")).as("token"))
+        .join(rarity, Seq("token"), "left_outer")
+        .withColumn("rn", row_number().over(byId.orderBy(
+          coalesce(col("df"), lit(0L)), col("token"))))
+        .filter(col("rn") <=
+          col("n") - expr(s"(n * $num + ${den - 1}) div $den") + 1)
+        .select(col("token").as(token), col("id").as(id), col("n").as(n))
+    posts(probe, "i", "ni", "ti")
+      .join(posts(index, "j", "nj", "tj"), col("ti") === col("tj") &&
+        col("ni") * den >= col("nj") * num &&
+        col("nj") * den >= col("ni") * num)
+      .select(col("i"), col("j"))
+      .distinct()
+  }
+
+  /** [[jaccardCandidates]] of `sets` against itself, df counted over
+    * `sets`: the distinct candidate pairs i < j of a self-join.
+    */
+  private[graft] def selfJaccardCandidates(sets: DataFrame, num: Int,
+      den: Int): DataFrame = {
+    val s = sets.toDF("id", "set")
+    val df = s.select(explode(col("set")).as("token"))
+      .groupBy(col("token")).agg(count(lit(1)).as("df"))
+    jaccardCandidates(s, s, df, num, den).filter(col("i") < col("j"))
+  }
+
+  /** Unsorted near-dup pair relation (i < j, rounded jac ≥ 0.9) over
+    * distinct whitespace-token sets — shared by the pair query, the
+    * clustering operator and pipeline_contrastive_pairs. Candidates come
+    * from [[jaccardCandidates]] at 9/10; the sorted token sets rerank by
+    * one merge walk per pair. This replaced a (lang, length-bucket)
+    * blocking that silently missed 91% of true pairs (cross-language
+    * duplicates and bucket straddlers; 790 of 9020 at sf0.01).
     */
   private[operators] def ngramPairs(spark: SparkSession,
       dir: String): DataFrame = {
     // repartition: single-row-group testdata parquet would tokenize in ONE
-    // task; t feeds the df count and the vocab-id join.
-    val t = Tables.documents(spark, dir)
+    // task; the df count, the postings and both rerank joins read t
+    val (t, _) = materialize(Tables.documents(spark, dir)
       .repartition(col("doc_id"))
-      .select(col("doc_id"), array_sort(array_distinct(toks)).as("tset"))
-      // no count: the vocab ranking's position job below fills it
-      .transform(persist)
-    val tok = t.select(col("doc_id"), explode(col("tset")).as("token"))
-    // dense integer id per token in global-rarity order (df asc, token
-    // asc). The BIJECTION token↔tid preserves set sizes and intersections,
-    // so jaccard over tid sets is VALUE-IDENTICAL to jaccard over token
-    // sets — and one sorted tid array now serves double duty: ascending
-    // order IS both the AllPairs prefix order (lowest ids = globally
-    // rarest) and the rerank kernel's merge order. The rank is the
-    // two-pass distributed [[graft.Ranks.rowNumber]]: a crawl vocabulary
-    // is billions of distinct tokens, so a row_number window (one reducer
-    // holding the whole vocabulary) is not an option.
-    // tid is an INT on purpose (half the array bytes of a long through
-    // the postings/rerank path); past 2^31 distinct tokens the id must
-    // fail LOUDLY (the fixpoint-cap contract), never wrap into colliding
-    // ranks — at that vocabulary the int-packed design needs revisiting
-    val vocab = graft.Ranks.rowNumber(
-        tok.groupBy(col("token")).agg(count(lit(1)).as("df")),
-        "rk", col("df"), col("token"))
-      .select(col("token"),
-        when(col("rk") <= Int.MaxValue, col("rk").cast("int"))
-          .otherwise(raise_error(concat(lit("vocabulary rank "),
-            col("rk").cast("string"), lit(" exceeds int ids"))))
-          .as("tid"))
-    // per-doc sorted tid set (one agg — the (df, token) struct sort the
-    // string form needed is gone); feeds the postings and both rerank
-    // sides. No broadcast hint on vocab: it is corpus-proportional (a
-    // crawl's distinct-token set is huge) — size-based planning decides.
-    // The explicit fixed-width repartition matters: AQE coalesces the tiny
-    // agg shuffle to ONE partition, the cache then pins that layout, and
-    // because hashpartitioning(doc_id) satisfies the candidate distinct's
-    // (i, j) distribution, the whole 22M-row distinct ran exchange-free on
-    // a single task (12s). Pinning the partition count keeps every
-    // downstream stage at full width.
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    // ids feeds the postings and both rerank joins, post both sides of
-    // its own self-join
-    val (ids, _) = materialize(tok.join(vocab, Seq("token"))
-      .groupBy(col("doc_id"))
-      .agg(array_sort(collect_list(col("tid"))).as("ts"))
-      .repartition(nParts, col("doc_id")))
-    val n = size(col("ts"))
-    val (post, _) = materialize(ids
-      .select(col("doc_id"), size(col("ts")).as("n"), explode(slice(col("ts"),
-        lit(1), (n - expr("(size(ts) * 9 + 9) div 10") + 1).cast("int")))
-        .as("tid")))
-    // AllPairs SIZE filter alongside the prefix condition — lossless:
-    // jac ≥ 0.9 forces 10·min(|a|,|b|) ≥ 9·max(|a|,|b|) (intersection is
-    // bounded by the smaller set, union by the larger), so size-mismatched
-    // candidates are pruned in the join itself, in exact integers, before
-    // the distinct ever sees them.
-    val cand = post.alias("a")
-      .join(post.alias("b"),
-        col("a.tid") === col("b.tid") &&
-          col("a.doc_id") < col("b.doc_id") &&
-          col("a.n") * 10 >= col("b.n") * 9 &&
-          col("b.n") * 10 >= col("a.n") * 9)
-      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
-      .distinct()
-    cand
-      .join(ids.select(col("doc_id").as("i"), col("ts").as("ts_i")), Seq("i"))
-      .join(ids.select(col("doc_id").as("j"), col("ts").as("ts_j")), Seq("j"))
-      .select(col("i"), col("j"),
-        round(GraftFunctions.jaccardSortedInt(col("ts_i"), col("ts_j")), 6)
-          .as("jac"))
-      .filter(col("jac") >= 0.9)
+      .select(col("doc_id"), array_sort(array_distinct(toks)).as("tset")))
+    setPairs(t, 9, 10)
+  }
+
+  /** The (i < j, jac) pairs at rounded Jaccard ≥ num/den of a persisted
+    * (doc_id, set) relation of sorted distinct string sets: candidates
+    * from [[selfJaccardCandidates]], then the exact rerank.
+    */
+  private def setPairs(sets: DataFrame, num: Int, den: Int): DataFrame = {
+    val s = sets.toDF("doc_id", "set")
+    selfJaccardCandidates(s, num, den)
+      .join(s.select(col("doc_id").as("i"), col("set").as("s_i")), Seq("i"))
+      .join(s.select(col("doc_id").as("j"), col("set").as("s_j")), Seq("j"))
+      .select(col("i"), col("j"), round(jaccard(col("s_i"), col("s_j")), 6)
+        .as("jac"))
+      .filter(col("jac") >= num.toDouble / den)
   }
 
   /** §2.3 dedup_ngram_jaccard: token-set Jaccard near-dup pairs via exact
@@ -474,7 +478,7 @@ object Dedup {
   private[graft] val BucketWidthCap = 1024
 
   /** Width-capped bucket pair emission — the shared candidate core of the
-    * LSH family (minhash bands, simhash bands, RHP embedding buckets).
+    * LSH family (simhash bands, pHash bands, RHP embedding buckets).
     *
     * TWO-PASS (the cdcCandidatePairs / dedupContainment shape): pass 1 is
     * a count-only groupBy over the slim posting rows — map-side-combined
@@ -490,8 +494,8 @@ object Dedup {
   private[graft] def cappedBucketPairs(posts0: DataFrame, k1: String, k2: String,
       v: String, maxWidth: Int = BucketWidthCap): (DataFrame, DataFrame) = {
     // posts feeds the width pass and the pair-emission join, so the
-    // caller's bucket kernel (rhpBuckets / the 16-way band transform /
-    // simhash banding) evaluates once per query. The cache is slim (id,
+    // caller's bucket kernel (rhpBuckets / simhash or pHash banding)
+    // evaluates once per query. The cache is slim (id,
     // 2×int) posting rows, never payloads; release is the harness's
     // clearCache-per-query contract.
     val (posts, _) = materialize(posts0)
@@ -507,61 +511,46 @@ object Dedup {
     (pairs, cliques)
   }
 
-  /** §2.3 dedup_minhash_lsh: MinHash(128) + LSH banding (16 bands × 8 rows)
-    * over word 3-shingles, then exact-Jaccard rerank of candidates only.
+  /** §2.3 dedup_minhash_lsh: word 3-shingle near-dup pairs at exact
+    * Jaccard ≥ 0.5 — graded against DuckDB's exhaustive all-pairs scan.
+    * The query keeps its name from the MinHash + 16×8 LSH banding it ran
+    * before; banding proposed a pair of Jaccard 0.5 with probability
+    * 1 − (1 − 0.5⁸)¹⁶ ≈ 6 %, so it passed only while the planted
+    * duplicates sat ≥ 0.9. Candidates now come from the exact AllPairs
+    * prefix filter, [[jaccardCandidates]] at 1/2, and rerank by exact
+    * Jaccard: the query is exact at its declared threshold.
     *
-    * Shape, built for 100 TB:
-    *  - the signature pipeline runs ONCE: (doc_id, band, bhash) rows flow
-    *    into a single groupBy(band, bhash) — no band self-join recomputing
-    *    minhashes on both sides;
-    *  - only slim (doc_id, 2×int) rows cross the bucket shuffle; shingle
-    *    sets rejoin afterwards for the rerank, so wide arrays never shuffle
-    *    on the candidate path;
-    *  - docs with no 3-shingles (< 3 tokens) are filtered BEFORE banding:
-    *    their sentinel signatures are identical, and at crawl scale
-    *    millions of empty docs would otherwise form a full candidate
-    *    clique in every band;
-    *  - candidates are distinct'd on bare ids, then exact Jaccard keeps
-    *    pairs ≥ 0.5 — the oracle checks against DuckDB's exhaustive
-    *    all-pairs Jaccard, so LSH recall itself is being graded.
+    * Shape: the shingle sets are persisted and counted once (the df count,
+    * the postings and both rerank joins read them); only slim (token, id,
+    * size) postings and bare id pairs cross the candidate shuffles, and
+    * the sets rejoin only for the rerank. A doc with no 3-shingles (< 3
+    * tokens) posts nothing, so short docs cannot form a candidate clique.
     */
   def dedupMinhashLsh(spark: SparkSession, dir: String): DataFrame =
-    minhashLshPairs(minhashSketch(spark, dir))
+    // repartition first: single-row-group local files would otherwise
+    // shingle the whole corpus in one task
+    shinglePairs(materialize(shingleSets(Tables.documents(spark, dir)
+      .repartition(col("doc_id"))))._1)
 
-  /** The post-shingle pipeline of [[dedupMinhashLsh]] — 16×8 banding of
-    * the 128-minima signature, width-capped bucket pair generation, exact
-    * Jaccard rerank ≥ 0.5 — over an ALREADY persisted-and-counted
-    * (doc_id, sh, sig) relation. Factored so the large-regime drill
-    * (`ScaleCheck dedup`) runs the SHIPPED pipeline on a generated
-    * million-doc corpus; the caller owns the persist + eager-count
-    * contract (the relation feeds the banding and both rerank joins).
+  /** The post-shingle pipeline of [[dedupMinhashLsh]] — candidates at 1/2,
+    * exact Jaccard rerank ≥ 0.5, ordered by (i, j) — over an ALREADY
+    * persisted-and-counted relation whose first two columns are
+    * (doc_id, sh). Factored so the large-regime drill (`ScaleCheck
+    * dedup`) runs the shipped join on a generated million-doc corpus.
     */
-  private[graft] def minhashLshPairs(cached: DataFrame): DataFrame = {
-    val docs = cached.filter(size(col("sh")) > 0)
-    val bands = docs
-      .select(col("doc_id"),
-        posexplode(transform(sequence(lit(0), lit(15)),
-          b => hash(slice(col("sig"), b * 8 + 1, lit(8))))))
-      .toDF("doc_id", "band", "bhash")
-    val (cand, _) = cappedBucketPairs(bands, "band", "bhash", "doc_id")
-    cand
-      .join(docs.select(col("doc_id").as("i"), col("sh").as("sh_i")), Seq("i"))
-      .join(docs.select(col("doc_id").as("j"), col("sh").as("sh_j")), Seq("j"))
-      .select(col("i"), col("j"),
-        round(jaccard(col("sh_i"), col("sh_j")), 6).as("jac"))
-      .filter(col("jac") >= 0.5)
+  private[graft] def shinglePairs(sets: DataFrame): DataFrame =
+    setPairs(sets.select(col("doc_id"), col("sh")), 1, 2)
       .orderBy(col("i"), col("j"))
-  }
 
   /** §2.3 dedup_simhash: 64-bit SimHash near-dup via banding — a pair with
     * hamming distance ≤ 3 must agree on at least one of 4 16-bit bands
     * (pigeonhole ⇒ recall is exactly 1), so candidates come from 4 bucket
     * groupBys, never O(n²). Signatures compute once and ride through the
     * bucket shuffle as one long; token-less docs are filtered before
-    * banding (all-zero signatures would form a clique, as with minhash).
+    * banding (all-zero signatures would form one clique).
     */
   def dedupSimhash(spark: SparkSession, dir: String): DataFrame =
-    // the cache is also a plan barrier (see dedupMinhashLsh): one
+    // the cache is also a plan barrier (see minhashSketch): one
     // simhash64 eval per doc instead of one per band projection after
     // CollapseProject
     hammingBandPairs(materialize(Tables.documents(spark, dir)
@@ -662,10 +651,19 @@ object Dedup {
   private[graft] def embeddingBucketSqlExprs(alias: String): Seq[String] =
     RhpBlocking.bucketSqlExprs(alias, EmbTables, EmbBits, EmbDim, EmbSeed)
 
+  /** The (vec_id, tbl, bucket) RHP posting rows of an embeddings
+    * relation: one row per hash table — the input of dedup_embedding's
+    * and dedup_lsh_cliques' width-capped bucket pass.
+    */
+  private def rhpPosts(embeddings: DataFrame): DataFrame =
+    embeddings.select(col("vec_id"), posexplode(GraftFunctions.rhpBuckets(
+        col("embedding"), EmbTables, EmbBits, EmbDim, EmbSeed)))
+      .toDF("vec_id", "tbl", "bucket")
+
   /** §2.3 dedup_embedding: embedding-cosine near-dup pairs over an
     * UNLABELED corpus — candidate blocking by coordinate-difference RHP
     * buckets (8 tables × 4 sign bits), then exact-cosine rerank ≥ 0.4.
-    * Same bucket-pipeline shape as dedup_minhash_lsh: slim (vec_id, table,
+    * Same bucket-pipeline shape as dedup_simhash: slim (vec_id, table,
     * bucket) rows through one groupBy, pair emission from sorted bucket
     * arrays, vectors rejoined only for the rerank. Blocking recall vs the
     * exhaustive all-pairs scan is measured in DedupSpec; the oracle blocks
@@ -680,11 +678,7 @@ object Dedup {
   private def embeddingPairs(spark: SparkSession, dir: String,
       minSim: Double = 0.4): DataFrame = {
     val e = Tables.embeddings(spark, dir)
-    val (cand, _) = cappedBucketPairs(
-      e.select(col("vec_id"), posexplode(GraftFunctions.rhpBuckets(
-          col("embedding"), EmbTables, EmbBits, EmbDim, EmbSeed)))
-        .toDF("vec_id", "tbl", "bucket"),
-      "tbl", "bucket", "vec_id")
+    val (cand, _) = cappedBucketPairs(rhpPosts(e), "tbl", "bucket", "vec_id")
     cand
       .join(e.select(col("vec_id").as("i"), col("embedding").as("v_i")), Seq("i"))
       .join(e.select(col("vec_id").as("j"), col("embedding").as("v_j")), Seq("j"))
@@ -728,11 +722,7 @@ object Dedup {
     * array for an over-cap bucket ever exists ([[cappedBucketPairs]]).
     */
   def dedupLshCliques(spark: SparkSession, dir: String): DataFrame = {
-    val (_, cliques) = cappedBucketPairs(
-      Tables.embeddings(spark, dir)
-        .select(col("vec_id"), posexplode(GraftFunctions.rhpBuckets(
-          col("embedding"), EmbTables, EmbBits, EmbDim, EmbSeed)))
-        .toDF("vec_id", "tbl", "bucket"),
+    val (_, cliques) = cappedBucketPairs(rhpPosts(Tables.embeddings(spark, dir)),
       "tbl", "bucket", "vec_id", maxWidth = CliqueReportCap)
     cliques.orderBy(col("tbl"), col("bucket"))
   }
@@ -814,13 +804,15 @@ object Dedup {
   /** §2.3 dedup_incremental_minhash: cross-load NEAR-dup dedup — the
     * reference's incremental set-difference (etl.py:80-92) lifted from
     * exact IDs to sketches. The standing corpus (doc_id < 250) keeps its
-    * MinHash BAND table as a warehouse relation (the same 16×8 banding as
-    * [[dedupMinhashLsh]], so the table is buildable once and appended per
-    * load); an arriving feed banded the same way joins band-buckets
+    * MinHash BAND table as a warehouse relation (16×8 banding of the
+    * [[minhashSketch]] signature, so the table is buildable once and
+    * appended per load); an arriving feed banded the same way joins
+    * band-buckets
     * against it, candidates rerank by EXACT shingle Jaccard, and a feed
     * document is dropped iff some warehouse document holds jac ≥ 0.9.
     * The oracle is the EXHAUSTIVE feed×warehouse Jaccard scan — banding
-    * recall is graded, not assumed (same contract as dedup_minhash_lsh).
+    * recall is graded, not assumed. At 0.9 the 16×8 S-curve proposes a
+    * pair with probability ≈ 0.9999, so banding stays here.
     *
     * Scale shape: the warehouse band table is O(16·|corpus|) slim
     * (band, bhash, id) rows — persisted once, never recomputed per load;
@@ -847,7 +839,8 @@ object Dedup {
 
   /** The persisted (doc_id, sh, sig) sketch relation — shingle set +
     * MinHash(128) signature, the artifact a warehouse materializes once
-    * per corpus, read by dedup_minhash_lsh and dedup_incremental_minhash.
+    * per corpus, read by dedup_incremental_minhash (and, through
+    * [[sketchOf]], by the streaming twin).
     */
   private[operators] def minhashSketch(spark: SparkSession,
       dir: String): DataFrame = {

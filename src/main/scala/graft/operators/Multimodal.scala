@@ -313,28 +313,23 @@ object Multimodal {
     docs.select(col("doc_id"), GraftFunctions.cdcChunks(col("payload")).as("digs"))
 
   /** Feed payloads CONFIRMED as CDC near-dups of the standing corpus:
-    * a PREFIX-FILTERED digest join against the STORED warehouse inverted
-    * index proposes candidates, exact integer Jaccard (≥ 0.5) against
-    * the stored digest sets confirms. Candidate recall is exactly 1 BY
-    * CONSTRUCTION (that is why mm_cdc_incremental can carry an
-    * EXHAUSTIVE oracle with no banding-recall caveat), via the AllPairs
-    * prefix lemma — the dedup_ngram_jaccard machinery applied to chunk
-    * digests: under any one global total order over digests, a pair
-    * with set intersection ≥ α must collide within the first
-    * |set| − α + 1 elements of EACH side. The graded predicate
-    * 2I ≥ n_f + n_w − I (multiset sizes n, set intersection I) forces
-    * I ≥ (n_f+n_w)/3 and min(n) ≥ max(n)/2, hence I ≥ ⌈|set|/2⌉ per
-    * side — so each side indexes/probes only its ⌊|set|/2⌋+1 globally
-    * RAREST digests (order: warehouse df asc, digest asc; a digest the
-    * warehouse has never seen is rarest of all). Without the prefix the
-    * raw index join is catastrophically dense here BY CONSTRUCTION of
-    * the chunker: boundary ≡ 0 mod 7 makes ~7-byte average chunks, so
-    * almost every payload pair shares SOME common digest — measured at
-    * sf0.1: 967,822 candidate pairs for 23 true dups, the whole cost of
-    * the operator, vs ~3k pairs with the prefix. A pathologically
-    * common chunk (an all-zeros block, a shared container header) now
-    * bounds itself: high-df digests rank OUT of every prefix, so no df
-    * cap — and no lossy carve-out — is needed.
+    * [[Dedup.jaccardCandidates]] at 1/2 — feed digest sets probing the
+    * STORED warehouse digest sets, rarity from the stored inverted index
+    * (a digest the warehouse has never seen ranks as df 0, rarest of
+    * all) — proposes candidates, and exact integer Jaccard (≥ 0.5) over
+    * the stored digest sets confirms. The graded predicate
+    * 2I ≥ n_f + n_w − I over the distinct digest sets `cdcChunks` emits
+    * is Jaccard ≥ 1/2, so candidate recall is exactly 1 BY CONSTRUCTION
+    * (that is why mm_cdc_incremental can carry an EXHAUSTIVE oracle with
+    * no banding-recall caveat). Without the prefix the raw index join is
+    * catastrophically dense here BY CONSTRUCTION of the chunker:
+    * boundary ≡ 0 mod 7 makes ~7-byte average chunks, so almost every
+    * payload pair shares SOME common digest — measured at sf0.1: 967,822
+    * candidate pairs for 23 true dups, the whole cost of the operator,
+    * vs ~3k pairs with the prefix. A pathologically common chunk (an
+    * all-zeros block, a shared container header) bounds itself: high-df
+    * digests rank OUT of every prefix, so no df cap — and no lossy
+    * carve-out — is needed.
     *
     * Incremental contract: the prefix index derives from the SAME
     * stored relations the warehouse already keeps (inverted index →
@@ -343,42 +338,19 @@ object Multimodal {
     * delta and only 8-byte digests ever shuffle.
     */
   private[graft] def cdcIncrementalDup(whIndex: DataFrame, whSigs: DataFrame,
-      feedSigs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // global rarity order = (warehouse df, digest); feed-only digests
-    // carry df 0 — rarest, and harmless: they cannot collide anyway
-    val whDf = whIndex.groupBy(col("dig")).agg(count(lit(1)).as("df"))
-    val byDoc = Window.partitionBy(col("doc_id"))
-    def prefixPosts(sigs: DataFrame): DataFrame =
-      sigs.select(col("doc_id"), explode(array_distinct(col("digs"))).as("dig"))
-        .join(whDf, Seq("dig"), "left_outer")
-        .select(col("doc_id"), col("dig"),
-          coalesce(col("df"), lit(0L)).as("df"))
-        .select(col("doc_id"), col("dig"),
-          row_number().over(byDoc.orderBy(col("df"), col("dig"))).as("rn"),
-          count(lit(1)).over(byDoc).as("n"))
-        .filter(col("rn") <= col("n") / 2 + 1)
-        .select(col("doc_id"), col("dig"))
-    prefixPosts(feedSigs).toDF("f_id", "dig")
-      .join(prefixPosts(whSigs).toDF("w_id", "dig"), Seq("dig"))
-      .select(col("f_id"), col("w_id"))
-      .distinct()
-      .join(feedSigs.select(col("doc_id").as("f_id"), col("digs").as("digs_f")),
-        Seq("f_id"))
-      .join(whSigs.select(col("doc_id").as("w_id"), col("digs").as("digs_w")),
-        Seq("w_id"))
-      // multiset-size compatibility (min ≥ max/2 is NECESSARY for the
-      // graded predicate): kills mismatched candidates before the
-      // per-pair intersect pays for them
-      .filter(least(size(col("digs_f")), size(col("digs_w"))) * 2 >=
-        greatest(size(col("digs_f")), size(col("digs_w"))))
-      .select(col("f_id"),
+      feedSigs: DataFrame): DataFrame =
+    Dedup.jaccardCandidates(feedSigs, whSigs,
+        whIndex.groupBy(col("dig")).agg(count(lit(1)).as("df")), 1, 2)
+      .join(feedSigs.select(col("doc_id").as("i"), col("digs").as("digs_f")),
+        Seq("i"))
+      .join(whSigs.select(col("doc_id").as("j"), col("digs").as("digs_w")),
+        Seq("j"))
+      .select(col("i"),
         size(array_intersect(col("digs_f"), col("digs_w"))).as("inter"),
         (size(col("digs_f")) + size(col("digs_w"))).as("tot"))
       .filter(col("inter") * 2 >= col("tot") - col("inter"))
-      .select(col("f_id").as("doc_id"))
+      .select(col("i").as("doc_id"))
       .distinct()
-  }
 
   /** §2.4 mm_cdc_incremental: cross-load CDC near-dup dedup — the
     * reference's incremental set-difference (etl.py:80-92) lifted to

@@ -120,8 +120,9 @@ class PlanAuditSpec extends AnyFunSuite {
     val dbscanPlan = graft.operators.Dedup
       .dbscanLabels(spark, TestSpark.sfDir)
       .queryExecution.executedPlan.toString
-    for ((q, p) <- Seq("dedup_ngram_jaccard", "dedup_editdistance",
-        "dedup_containment", "warehouse_ivm", "q_markov_stationary")
+    for ((q, p) <- Seq("dedup_ngram_jaccard", "dedup_minhash_lsh",
+        "mm_cdc_incremental", "dedup_editdistance", "dedup_containment",
+        "warehouse_ivm", "q_markov_stationary")
         .map(q => q -> plan(q)) :+ ("sim_dbscan(labels)" -> dbscanPlan)) {
       assert(!p.contains("CartesianProduct"), s"$q:\n$p")
       assert(!p.contains("BroadcastNestedLoopJoin"), s"$q:\n$p")
