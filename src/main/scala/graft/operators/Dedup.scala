@@ -240,43 +240,54 @@ object Dedup {
     * den·min(nᵢ, nⱼ) ≥ num·max(nᵢ, nⱼ) (the intersection is bounded by
     * the smaller set, the union by the larger), in exact integers. Output:
     * distinct bare (i = probe id, j = index id) for the caller's exact
-    * rerank; nothing here launches a job. A self-join passes the same
-    * relation twice and keeps i < j ([[selfJaccardCandidates]]): both join
-    * sides are the same posting plan, so exchange reuse evaluates it once.
+    * rerank; nothing here launches a job. A self-join is
+    * [[selfJaccardCandidates]].
     */
   private[graft] def jaccardCandidates(probe: DataFrame, index: DataFrame,
-      df: DataFrame, num: Int, den: Int): DataFrame = {
-    val rarity = df.toDF("token", "df")
-    val byId = Window.partitionBy(col("id"))
-    // (token, id, n) prefix postings; both sides alias all three columns
-    // the same way, so a self-join's two sides are one canonical plan
-    def posts(sets: DataFrame, id: String, n: String, token: String) =
-      sets.toDF("id", "set")
-        .select(col("id"), size(col("set")).as("n"),
-          explode(col("set")).as("token"))
-        .join(rarity, Seq("token"), "left_outer")
-        .withColumn("rn", row_number().over(byId.orderBy(
-          coalesce(col("df"), lit(0L)), col("token"))))
-        .filter(col("rn") <=
-          col("n") - expr(s"(n * $num + ${den - 1}) div $den") + 1)
-        .select(col("token").as(token), col("id").as(id), col("n").as(n))
-    posts(probe, "i", "ni", "ti")
-      .join(posts(index, "j", "nj", "tj"), col("ti") === col("tj") &&
+      df: DataFrame, num: Int, den: Int): DataFrame =
+    postingPairs(prefixTokens(probe, df, num, den),
+      prefixTokens(index, df, num, den), num, den)
+
+  /** The (token, id, n) prefix postings of an (id, set) relation under
+    * the rarity order of `df` ([[jaccardCandidates]]).
+    */
+  private def prefixTokens(sets: DataFrame, df: DataFrame, num: Int,
+      den: Int): DataFrame =
+    sets.toDF("id", "set")
+      .select(col("id"), size(col("set")).as("n"),
+        explode(col("set")).as("token"))
+      .join(df.toDF("token", "df"), Seq("token"), "left_outer")
+      .withColumn("rn", row_number().over(Window.partitionBy(col("id"))
+        .orderBy(coalesce(col("df"), lit(0L)), col("token"))))
+      .filter(col("rn") <=
+        col("n") - expr(s"(n * $num + ${den - 1}) div $den") + 1)
+      .select(col("token"), col("id"), col("n"))
+
+  /** Distinct (i, j) of two posting relations that share a token and
+    * pass the size filter of [[jaccardCandidates]].
+    */
+  private def postingPairs(p: DataFrame, q: DataFrame, num: Int,
+      den: Int): DataFrame =
+    p.toDF("ti", "i", "ni")
+      .join(q.toDF("tj", "j", "nj"), col("ti") === col("tj") &&
         col("ni") * den >= col("nj") * num &&
         col("nj") * den >= col("ni") * num)
       .select(col("i"), col("j"))
       .distinct()
-  }
 
   /** [[jaccardCandidates]] of `sets` against itself, df counted over
-    * `sets`: the distinct candidate pairs i < j of a self-join.
+    * `sets`: the distinct candidate pairs i < j of a self-join. The
+    * postings feed both join sides, so they are materialized once: as
+    * two plans, a side the planner broadcasts would evaluate the rarity
+    * join and the prefix window a second time.
     */
   private[graft] def selfJaccardCandidates(sets: DataFrame, num: Int,
       den: Int): DataFrame = {
     val s = sets.toDF("id", "set")
     val df = s.select(explode(col("set")).as("token"))
       .groupBy(col("token")).agg(count(lit(1)).as("df"))
-    jaccardCandidates(s, s, df, num, den).filter(col("i") < col("j"))
+    val (posts, _) = materialize(prefixTokens(s, df, num, den))
+    postingPairs(posts, posts, num, den).filter(col("i") < col("j"))
   }
 
   /** Unsorted near-dup pair relation (i < j, rounded jac ≥ 0.9) over
@@ -513,12 +524,10 @@ object Dedup {
 
   /** §2.3 dedup_minhash_lsh: word 3-shingle near-dup pairs at exact
     * Jaccard ≥ 0.5 — graded against DuckDB's exhaustive all-pairs scan.
-    * The query keeps its name from the MinHash + 16×8 LSH banding it ran
-    * before; banding proposed a pair of Jaccard 0.5 with probability
-    * 1 − (1 − 0.5⁸)¹⁶ ≈ 6 %, so it passed only while the planted
-    * duplicates sat ≥ 0.9. Candidates now come from the exact AllPairs
-    * prefix filter, [[jaccardCandidates]] at 1/2, and rerank by exact
-    * Jaccard: the query is exact at its declared threshold.
+    * The name is historical: 16×8 MinHash banding proposes a Jaccard-0.5
+    * pair with probability 1 − (1 − 0.5⁸)¹⁶ ≈ 6 %, so candidates come
+    * from the lossless AllPairs prefix filter, [[jaccardCandidates]] at
+    * 1/2, and rerank by exact Jaccard.
     *
     * Shape: the shingle sets are persisted and counted once (the df count,
     * the postings and both rerank joins read them); only slim (token, id,
@@ -534,8 +543,7 @@ object Dedup {
 
   /** The post-shingle pipeline of [[dedupMinhashLsh]] — candidates at 1/2,
     * exact Jaccard rerank ≥ 0.5, ordered by (i, j) — over an ALREADY
-    * persisted-and-counted relation whose first two columns are
-    * (doc_id, sh). Factored so the large-regime drill (`ScaleCheck
+    * persisted-and-counted relation with columns doc_id and sh. Factored so the large-regime drill (`ScaleCheck
     * dedup`) runs the shipped join on a generated million-doc corpus.
     */
   private[graft] def shinglePairs(sets: DataFrame): DataFrame =

@@ -2,6 +2,9 @@ package graft.operators
 
 import scala.util.Random
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.window.WindowExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -88,6 +91,7 @@ class JaccardCandidatesSpec extends AnyFunSuite {
         if i < j && atLeast(a, b, num, den)) yield (i, j)).toSet
       assertLossless(cand, byId, byId, truth, num, den)
     }
+    graft.GraftCaches.release(spark) // the posting caches
   }
 
   test("probe × index with tokens absent from df: candidates ⊇ " +
@@ -112,7 +116,7 @@ class JaccardCandidatesSpec extends AnyFunSuite {
   }
 
   test("the prefix prunes: at 9/10 most token-sharing pairs are never " +
-      "proposed") {
+      "proposed, and a self-join evaluates its postings once") {
     import spark.implicits._
     val sets = corpora(new Random(5), 50, 0L)
     val rel = sets.map { case (id, s) => (id, s.toSeq.map(_.toLong)) }
@@ -121,11 +125,16 @@ class JaccardCandidatesSpec extends AnyFunSuite {
     val sharing = (for ((i, a) <- sets; (j, b) <- sets
       if i < j && (a & b).nonEmpty) yield 1).size
     assert(nCand * 4 < sharing, s"$nCand candidates of $sharing sharing pairs")
-    // both join sides are one posting plan: its exchange is reused
+    // both join sides read one posting cache: the prefix window runs
+    // only inside it, never again on a join side
     val plan = Dedup.selfJaccardCandidates(rel, 9, 10)
     plan.collect()
-    val p = plan.queryExecution.executedPlan.toString
-    assert(p.contains("ReusedExchange"), p)
-    assert(!p.contains("BroadcastNestedLoopJoin"), p)
+    val exec = plan.queryExecution.executedPlan
+    val helper = new AdaptiveSparkPlanHelper {}
+    assert(helper.collect(exec) { case w: WindowExec => w }.isEmpty, exec)
+    assert(helper.collect(exec) { case c: InMemoryTableScanExec => c }
+      .size >= 2, exec)
+    assert(!exec.toString.contains("BroadcastNestedLoopJoin"), exec)
+    graft.GraftCaches.release(spark)
   }
 }
