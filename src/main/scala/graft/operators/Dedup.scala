@@ -301,11 +301,12 @@ object Dedup {
   private[operators] def ngramPairs(spark: SparkSession,
       dir: String): DataFrame = {
     // repartition: single-row-group testdata parquet would tokenize in ONE
-    // task; the df count, the postings and both rerank joins read t
-    val (t, _) = materialize(Tables.documents(spark, dir)
+    // task; the df count, the postings and both rerank joins read the
+    // token sets (no count: the posting count fills the cache)
+    setPairs(persist(Tables.documents(spark, dir)
       .repartition(col("doc_id"))
-      .select(col("doc_id"), array_sort(array_distinct(toks)).as("tset")))
-    setPairs(t, 9, 10)
+      .select(col("doc_id"), array_sort(array_distinct(toks)).as("tset"))),
+      9, 10)
   }
 
   /** The (i < j, jac) pairs at rounded Jaccard ≥ num/den of a persisted
@@ -529,8 +530,9 @@ object Dedup {
     * from the lossless AllPairs prefix filter, [[jaccardCandidates]] at
     * 1/2, and rerank by exact Jaccard.
     *
-    * Shape: the shingle sets are persisted and counted once (the df count,
-    * the postings and both rerank joins read them); only slim (token, id,
+    * Shape: the shingle sets are persisted once (the df count, the
+    * postings and both rerank joins read them; the posting count is
+    * their first read and fills the cache); only slim (token, id,
     * size) postings and bare id pairs cross the candidate shuffles, and
     * the sets rejoin only for the rerank. A doc with no 3-shingles (< 3
     * tokens) posts nothing, so short docs cannot form a candidate clique.
@@ -538,12 +540,12 @@ object Dedup {
   def dedupMinhashLsh(spark: SparkSession, dir: String): DataFrame =
     // repartition first: single-row-group local files would otherwise
     // shingle the whole corpus in one task
-    shinglePairs(materialize(shingleSets(Tables.documents(spark, dir)
-      .repartition(col("doc_id"))))._1)
+    shinglePairs(persist(shingleSets(Tables.documents(spark, dir)
+      .repartition(col("doc_id")))))
 
   /** The post-shingle pipeline of [[dedupMinhashLsh]] — candidates at 1/2,
     * exact Jaccard rerank ≥ 0.5, ordered by (i, j) — over an ALREADY
-    * persisted-and-counted relation with columns doc_id and sh. Factored so the large-regime drill (`ScaleCheck
+    * persisted relation with columns doc_id and sh. Factored so the large-regime drill (`ScaleCheck
     * dedup`) runs the shipped join on a generated million-doc corpus.
     */
   private[graft] def shinglePairs(sets: DataFrame): DataFrame =
