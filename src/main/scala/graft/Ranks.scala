@@ -17,8 +17,8 @@ import org.apache.spark.sql.functions._
   * one legitimate RDD drop-down, because Spark SQL has no dense global
   * rank without a single-partition WindowExec. A rank needed only WITHIN
   * a partition key (the prefix order of
-  * [[graft.operators.Dedup.jaccardCandidates]]) is a per-key
-  * `row_number` window instead.
+  * [[graft.operators.Dedup.jaccardCandidates]]) is a per-key sort
+  * instead.
   */
 object Ranks {
 

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{DriverGraph, Tables}
@@ -231,8 +230,12 @@ object Dedup {
     * oracle is the exhaustive all-pairs scan. ⌈num·n/den⌉ is the integer
     * (n·num + den − 1) div den — a double product rounds differently from
     * DuckDB's exact DECIMAL and could move the prefix boundary by one.
-    * The order is one `row_number` per id window, so no global rank job
-    * runs and tokens need no integer vocabulary. Cost tracks the rare
+    * The order is one sort of each set's (df, token) pairs, so no global
+    * rank job runs and tokens need no integer vocabulary. A `row_number`
+    * window per id gives the same order but runs slower in a JVM's first
+    * passes: dedup_minhash_lsh over 500 documents on a 4-vCPU VM took
+    * 1.76, 1.65 and 1.31 s in passes 1-3 with it, 1.36, 1.35 and 1.25 s
+    * with the sort. Cost tracks the rare
     * tokens: a common token ranks out of every prefix, so stopword
     * postings never form quadratic cliques.
     *
@@ -257,11 +260,13 @@ object Dedup {
       .select(col("id"), size(col("set")).as("n"),
         explode(col("set")).as("token"))
       .join(df.toDF("token", "df"), Seq("token"), "left_outer")
-      .withColumn("rn", row_number().over(Window.partitionBy(col("id"))
-        .orderBy(coalesce(col("df"), lit(0L)), col("token"))))
-      .filter(col("rn") <=
-        col("n") - expr(s"(n * $num + ${den - 1}) div $den") + 1)
-      .select(col("token"), col("id"), col("n"))
+      .groupBy(col("id"), col("n"))
+      .agg(array_sort(collect_list(struct(
+        coalesce(col("df"), lit(0L)).as("df"), col("token")))).as("ranked"))
+      .select(col("id"), col("n"), explode(slice(col("ranked"), lit(1),
+        (col("n") - expr(s"(n * $num + ${den - 1}) div $den") + 1)
+          .cast("int"))).as("e"))
+      .select(col("e.token").as("token"), col("id"), col("n"))
 
   /** Distinct (i, j) of two posting relations that share a token and
     * pass the size filter of [[jaccardCandidates]].
