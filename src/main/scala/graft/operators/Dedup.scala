@@ -12,12 +12,10 @@ import graft.functions.GraftFunctions
   * Every operator is linear or block-bounded — no O(n²) self-join ever
   * touches the full corpus:
   *  - exact dedup is one hash-groupBy (map-side combined);
-  *  - Jaccard near-dup candidates (token sets, shingle sets, chunk
-  *    digests) come from one rare-token prefix filter,
-  *    [[jaccardCandidates]] (exact AllPairs — lossless, and stopwords
-  *    never index);
-  *  - SimHash and the cross-load MinHash twin bound candidate pairs by
-  *    band buckets;
+  *  - exact Jaccard near-dup candidates (token sets, chunk digests) come
+  *    from one rare-token prefix filter, [[jaccardCandidates]] (exact
+  *    AllPairs — lossless, and stopwords never index);
+  *  - MinHash/LSH and SimHash bound candidate pairs by band buckets;
   *  - embedding near-dup candidates come from label-free RHP buckets
   *    (16 tables × 4 sign bits, constants shared with the oracle).
   * At cluster scale the only skew risk is a hot band bucket; AQE skew-join
@@ -216,9 +214,8 @@ object Dedup {
 
   /** Candidate pairs of an exact set-similarity join at Jaccard ≥
     * num/den — the AllPairs prefix filter (Bayardo et al.) behind
-    * dedup_ngram_jaccard (9/10 over token sets), dedup_minhash_lsh (1/2
-    * over word 3-shingle sets) and mm_cdc_incremental (1/2 over chunk
-    * digests). `probe` and `index` are (id, set) relations whose sets
+    * dedup_ngram_jaccard (9/10 over token sets) and mm_cdc_incremental
+    * (1/2 over chunk digests). `probe` and `index` are (id, set) relations whose sets
     * hold distinct tokens; `df` is (token, df).
     *
     * Every set orders its tokens by global rarity (df asc, token asc; a
@@ -231,13 +228,11 @@ object Dedup {
     * (n·num + den − 1) div den — a double product rounds differently from
     * DuckDB's exact DECIMAL and could move the prefix boundary by one.
     * The order is one sort of each set's (df, token) pairs, so no global
-    * rank job runs and tokens need no integer vocabulary. A `row_number`
-    * window per id gives the same order but runs slower in a JVM's first
-    * passes: dedup_minhash_lsh over 500 documents on a 4-vCPU VM took
-    * 1.76, 1.65 and 1.31 s in passes 1-3 with it, 1.36, 1.35 and 1.25 s
-    * with the sort. Cost tracks the rare
-    * tokens: a common token ranks out of every prefix, so stopword
-    * postings never form quadratic cliques.
+    * rank job runs and tokens need no integer vocabulary (a `row_number`
+    * window per id gives the same order, but measured slower in a JVM's
+    * first passes on a 4-vCPU VM). Cost tracks the rare tokens: a common
+    * token ranks out of every prefix, so stopword postings never form
+    * quadratic cliques.
     *
     * The token equi-join also keeps only size-compatible pairs,
     * den·min(nᵢ, nⱼ) ≥ num·max(nᵢ, nⱼ) (the intersection is bounded by
@@ -284,7 +279,7 @@ object Dedup {
     * `sets`: the distinct candidate pairs i < j of a self-join. The
     * postings feed both join sides, so they are materialized once: as
     * two plans, a side the planner broadcasts would evaluate the rarity
-    * join and the prefix window a second time.
+    * join and the prefix sort a second time.
     */
   private[graft] def selfJaccardCandidates(sets: DataFrame, num: Int,
       den: Int): DataFrame = {
@@ -495,7 +490,7 @@ object Dedup {
   private[graft] val BucketWidthCap = 1024
 
   /** Width-capped bucket pair emission — the shared candidate core of the
-    * LSH family (simhash bands, pHash bands, RHP embedding buckets).
+    * LSH family (minhash bands, simhash bands, RHP embedding buckets).
     *
     * TWO-PASS (the cdcCandidatePairs / dedupContainment shape): pass 1 is
     * a count-only groupBy over the slim posting rows — map-side-combined
@@ -511,8 +506,8 @@ object Dedup {
   private[graft] def cappedBucketPairs(posts0: DataFrame, k1: String, k2: String,
       v: String, maxWidth: Int = BucketWidthCap): (DataFrame, DataFrame) = {
     // posts feeds the width pass and the pair-emission join, so the
-    // caller's bucket kernel (rhpBuckets / simhash or pHash banding)
-    // evaluates once per query. The cache is slim (id,
+    // caller's bucket kernel (rhpBuckets / the 16-way band transform /
+    // simhash banding) evaluates once per query. The cache is slim (id,
     // 2×int) posting rows, never payloads; release is the harness's
     // clearCache-per-query contract.
     val (posts, _) = materialize(posts0)
@@ -528,44 +523,61 @@ object Dedup {
     (pairs, cliques)
   }
 
-  /** §2.3 dedup_minhash_lsh: word 3-shingle near-dup pairs at exact
-    * Jaccard ≥ 0.5 — graded against DuckDB's exhaustive all-pairs scan.
-    * The name is historical: 16×8 MinHash banding proposes a Jaccard-0.5
-    * pair with probability 1 − (1 − 0.5⁸)¹⁶ ≈ 6 %, so candidates come
-    * from the lossless AllPairs prefix filter, [[jaccardCandidates]] at
-    * 1/2, and rerank by exact Jaccard.
+  /** §2.3 dedup_minhash_lsh: MinHash(128) + LSH banding (16 bands × 8 rows)
+    * over word 3-shingles, then exact-Jaccard rerank of candidates only.
     *
-    * Shape: the shingle sets are persisted once (the df count, the
-    * postings and both rerank joins read them; the posting count is
-    * their first read and fills the cache); only slim (token, id,
-    * size) postings and bare id pairs cross the candidate shuffles, and
-    * the sets rejoin only for the rerank. A doc with no 3-shingles (< 3
-    * tokens) posts nothing, so short docs cannot form a candidate clique.
+    * Shape, built for 100 TB:
+    *  - the signature pipeline runs ONCE: (doc_id, band, bhash) rows flow
+    *    into a single groupBy(band, bhash) — no band self-join recomputing
+    *    minhashes on both sides;
+    *  - only slim (doc_id, 2×int) rows cross the bucket shuffle; shingle
+    *    sets rejoin afterwards for the rerank, so wide arrays never shuffle
+    *    on the candidate path;
+    *  - docs with no 3-shingles (< 3 tokens) are filtered BEFORE banding:
+    *    their sentinel signatures are identical, and at crawl scale
+    *    millions of empty docs would otherwise form a full candidate
+    *    clique in every band;
+    *  - candidates are distinct'd on bare ids, then exact Jaccard keeps
+    *    pairs ≥ 0.5 — the oracle checks against DuckDB's exhaustive
+    *    all-pairs Jaccard, so LSH recall itself is being graded.
     */
   def dedupMinhashLsh(spark: SparkSession, dir: String): DataFrame =
-    // repartition first: single-row-group local files would otherwise
-    // shingle the whole corpus in one task
-    shinglePairs(persist(shingleSets(Tables.documents(spark, dir)
-      .repartition(col("doc_id")))))
+    minhashLshPairs(minhashSketch(spark, dir))
 
-  /** The post-shingle pipeline of [[dedupMinhashLsh]] — candidates at 1/2,
-    * exact Jaccard rerank ≥ 0.5, ordered by (i, j) — over an ALREADY
-    * persisted relation with columns doc_id and sh. Factored so the large-regime drill (`ScaleCheck
-    * dedup`) runs the shipped join on a generated million-doc corpus.
+  /** The post-shingle pipeline of [[dedupMinhashLsh]] — 16×8 banding of
+    * the 128-minima signature, width-capped bucket pair generation, exact
+    * Jaccard rerank ≥ 0.5 — over an ALREADY persisted-and-counted
+    * (doc_id, sh, sig) relation. Factored so the large-regime drill
+    * (`ScaleCheck dedup`) runs the SHIPPED pipeline on a generated
+    * million-doc corpus; the caller owns the persist + eager-count
+    * contract (the relation feeds the banding and both rerank joins).
     */
-  private[graft] def shinglePairs(sets: DataFrame): DataFrame =
-    setPairs(sets.select(col("doc_id"), col("sh")), 1, 2)
+  private[graft] def minhashLshPairs(cached: DataFrame): DataFrame = {
+    val docs = cached.filter(size(col("sh")) > 0)
+    val bands = docs
+      .select(col("doc_id"),
+        posexplode(transform(sequence(lit(0), lit(15)),
+          b => hash(slice(col("sig"), b * 8 + 1, lit(8))))))
+      .toDF("doc_id", "band", "bhash")
+    val (cand, _) = cappedBucketPairs(bands, "band", "bhash", "doc_id")
+    cand
+      .join(docs.select(col("doc_id").as("i"), col("sh").as("sh_i")), Seq("i"))
+      .join(docs.select(col("doc_id").as("j"), col("sh").as("sh_j")), Seq("j"))
+      .select(col("i"), col("j"),
+        round(jaccard(col("sh_i"), col("sh_j")), 6).as("jac"))
+      .filter(col("jac") >= 0.5)
       .orderBy(col("i"), col("j"))
+  }
 
   /** §2.3 dedup_simhash: 64-bit SimHash near-dup via banding — a pair with
     * hamming distance ≤ 3 must agree on at least one of 4 16-bit bands
     * (pigeonhole ⇒ recall is exactly 1), so candidates come from 4 bucket
     * groupBys, never O(n²). Signatures compute once and ride through the
     * bucket shuffle as one long; token-less docs are filtered before
-    * banding (all-zero signatures would form one clique).
+    * banding (all-zero signatures would form a clique, as with minhash).
     */
   def dedupSimhash(spark: SparkSession, dir: String): DataFrame =
-    // the cache is also a plan barrier (see minhashSketch): one
+    // the cache is also a plan barrier (see dedupMinhashLsh): one
     // simhash64 eval per doc instead of one per band projection after
     // CollapseProject
     hammingBandPairs(materialize(Tables.documents(spark, dir)
@@ -678,7 +690,7 @@ object Dedup {
   /** §2.3 dedup_embedding: embedding-cosine near-dup pairs over an
     * UNLABELED corpus — candidate blocking by coordinate-difference RHP
     * buckets (8 tables × 4 sign bits), then exact-cosine rerank ≥ 0.4.
-    * Same bucket-pipeline shape as dedup_simhash: slim (vec_id, table,
+    * Same bucket-pipeline shape as dedup_minhash_lsh: slim (vec_id, table,
     * bucket) rows through one groupBy, pair emission from sorted bucket
     * arrays, vectors rejoined only for the rerank. Blocking recall vs the
     * exhaustive all-pairs scan is measured in DedupSpec; the oracle blocks
@@ -819,15 +831,13 @@ object Dedup {
   /** §2.3 dedup_incremental_minhash: cross-load NEAR-dup dedup — the
     * reference's incremental set-difference (etl.py:80-92) lifted from
     * exact IDs to sketches. The standing corpus (doc_id < 250) keeps its
-    * MinHash BAND table as a warehouse relation (16×8 banding of the
-    * [[minhashSketch]] signature, so the table is buildable once and
-    * appended per load); an arriving feed banded the same way joins
-    * band-buckets
+    * MinHash BAND table as a warehouse relation (the same 16×8 banding as
+    * [[dedupMinhashLsh]], so the table is buildable once and appended per
+    * load); an arriving feed banded the same way joins band-buckets
     * against it, candidates rerank by EXACT shingle Jaccard, and a feed
     * document is dropped iff some warehouse document holds jac ≥ 0.9.
     * The oracle is the EXHAUSTIVE feed×warehouse Jaccard scan — banding
-    * recall is graded, not assumed. At 0.9 the 16×8 S-curve proposes a
-    * pair with probability ≈ 0.9999, so banding stays here.
+    * recall is graded, not assumed (same contract as dedup_minhash_lsh).
     *
     * Scale shape: the warehouse band table is O(16·|corpus|) slim
     * (band, bhash, id) rows — persisted once, never recomputed per load;
@@ -854,8 +864,7 @@ object Dedup {
 
   /** The persisted (doc_id, sh, sig) sketch relation — shingle set +
     * MinHash(128) signature, the artifact a warehouse materializes once
-    * per corpus, read by dedup_incremental_minhash (and, through
-    * [[sketchOf]], by the streaming twin).
+    * per corpus, read by dedup_minhash_lsh and dedup_incremental_minhash.
     */
   private[operators] def minhashSketch(spark: SparkSession,
       dir: String): DataFrame = {

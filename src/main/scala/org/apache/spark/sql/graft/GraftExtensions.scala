@@ -158,7 +158,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
     ext.injectTableFunction((FunctionIdentifier("graft_minhash_dedup"),
       info("graft_minhash_dedup",
-        "graft_minhash_dedup(corpus_dir) - near-duplicate document pairs at exact word 3-shingle Jaccard >= 0.5 (prefix-filter join; table function)"),
+        "graft_minhash_dedup(corpus_dir) - MinHash-LSH near-duplicate pairs over a corpus's documents (table function)"),
       (c0: Seq[Expression]) => { val c = arity(c0, 1, "graft_minhash_dedup")
         graft.operators.Dedup.dedupMinhashLsh(
             org.apache.spark.sql.SparkSession.active,

@@ -6,10 +6,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.{TestSpark, Tables}
 import graft.functions.GraftFunctions
 
-/** Gates for the near-dup operators: candidate generation (prefix
-  * filter or banding) must reproduce its exact exhaustive counterpart
-  * (recall, not just precision), and the empty-token clique failure mode
-  * must stay fixed.
+/** Gates for the banded near-dup operators: banding must reproduce its
+  * exact exhaustive counterpart (recall, not just precision), and the
+  * empty-token clique failure mode must stay fixed.
   */
 class DedupSpec extends AnyFunSuite {
 
@@ -71,38 +70,6 @@ class DedupSpec extends AnyFunSuite {
 
     assert(lsh.map(_.toSeq).toSeq === exact.map(_.toSeq).toSeq)
     assert(lsh.nonEmpty) // the sf has planted near-dups; an empty pass is vacuous
-  }
-
-  test("dedup_minhash_lsh keeps every planted pair at shingle Jaccard " +
-      "0.5-0.7") {
-    import spark.implicits._
-    // 20 pairs of 40-token docs, each pair over its own vocabulary; the
-    // partner replaces 3 or 4 tokens 10 apart, each killing 3 of the 38
-    // shingles: Jaccard 29/47 ≈ 0.617 or 26/50 = 0.52 — the range 16×8
-    // banding proposes with probability ≈ 0.29 and ≈ 0.08
-    val docs = (0 until 20).flatMap { p =>
-      val words = (0 until 40).map(k => s"w${p}_$k")
-      val edits = if (p % 2 == 0) Seq(5, 15, 25) else Seq(5, 15, 25, 35)
-      val partner = words.indices.map(k =>
-        if (edits.contains(k)) s"x${p}_$k" else words(k))
-      Seq((2L * p, words.mkString(" ")), (2L * p + 1, partner.mkString(" ")))
-    }
-    val dir = TestSpark.tmpDir("dedup_mid_jaccard")
-    docs.toDF("doc_id", "text")
-      .withColumn("lang", lit("en")).withColumn("source", lit("t"))
-      .withColumn("n_chars", length(col("text")))
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    def shingles(t: String) = t.split(" ").sliding(3).map(_.mkString(" ")).toSet
-    val jacs = (0 until 20).map { p =>
-      val (a, b) = (shingles(docs(2 * p)._2), shingles(docs(2 * p + 1)._2))
-      (a & b).size.toDouble / (a | b).size
-    }
-    assert(jacs.forall(j => j >= 0.5 && j <= 0.7), jacs)
-    val got = Dedup.dedupMinhashLsh(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
-    val want = (0 until 20).map(p => (2L * p, 2L * p + 1,
-      BigDecimal(jacs(p)).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble))
-    assert(got === want)
   }
 
   test("dedup_simhash banding equals exhaustive hamming<=3 (pigeonhole recall=1)") {
