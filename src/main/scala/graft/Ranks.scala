@@ -12,13 +12,10 @@ import org.apache.spark.sql.functions._
   *
   * Pass 1 is a range-partitioned sort (every partition bounded n/P,
   * fully parallel); pass 2 is zipWithIndex's per-partition count +
-  * offset scan. pipeline_contrastive_pairs' doc ranks, the
-  * cumulative-revenue blocks and the event deciles rank through it — the
-  * one legitimate RDD drop-down, because Spark SQL has no dense global
-  * rank without a single-partition WindowExec. A rank needed only WITHIN
-  * a partition key (the prefix order of
-  * [[graft.operators.Dedup.jaccardCandidates]]) is a per-key sort
-  * instead.
+  * offset scan. Dedup.scala's vocabulary ids and
+  * pipeline_contrastive_pairs' doc ranks both rank through it — the one
+  * legitimate RDD drop-down, because Spark SQL has no dense global rank
+  * without a single-partition WindowExec.
   */
 object Ranks {
 

@@ -1990,7 +1990,7 @@ object SparkEntry {
                 SELECT id, 0 FROM seeds
                 UNION
                 SELECT e.dst, w.d + 1 FROM w JOIN e ON e.src = w.id
-                WHERE w.d < ${graft.operators.Relational.SsspMaxRounds})
+                WHERE w.d < ${graft.operators.Relational.BfsMaxHops})
               SELECT id, min(d) AS hops FROM w GROUP BY id)
          SELECT CASE WHEN id % 2 = 0 THEN 'customer' ELSE 'supplier' END
                   AS node_type,

@@ -37,6 +37,9 @@ object GraftFunctions {
   def pairs(sortedIds: Column): Column = GraftColumns.pairs(sortedIds)
   /** Jaccard of two sorted+distinct string arrays (single merge walk). */
   def jaccardSorted(a: Column, b: Column): Column = GraftColumns.jaccardSorted(a, b)
+  /** Jaccard of two sorted+distinct int arrays (id-mapped fast path). */
+  def jaccardSortedInt(a: Column, b: Column): Column =
+    GraftColumns.jaccardSortedInt(a, b)
   def containmentSorted(a: Column, b: Column): Column =
     GraftColumns.containmentSorted(a, b)
   /** 64-bit FNV-1a rolling fingerprint of a string. */

@@ -167,6 +167,25 @@ object GraftKernels {
     inter.toDouble / (na + nb - inter)
   }
 
+  /** Jaccard over SORTED, DISTINCT int arrays — the id-mapped fast path of
+    * [[jaccardSorted]]: token ids are assigned by a bijection (dense rank
+    * of the vocabulary), so set sizes and intersections — and therefore
+    * the jaccard value — are IDENTICAL to the string-set form, while the
+    * merge walk compares ints instead of UTF8 byte strings.
+    */
+  def jaccardSortedInt(a: ArrayData, b: ArrayData): Double = {
+    val na = a.numElements(); val nb = b.numElements()
+    if (na == 0 && nb == 0) return 0.0
+    var i = 0; var j = 0; var inter = 0
+    while (i < na && j < nb) {
+      val x = a.getInt(i); val y = b.getInt(j)
+      if (x == y) { inter += 1; i += 1; j += 1 }
+      else if (x < y) i += 1
+      else j += 1
+    }
+    inter.toDouble / (na + nb - inter)
+  }
+
   /** One-sided containment |a ∩ b| / |a| over sorted+distinct string sets —
     * same single merge walk as jaccardSorted (O(n+m), no per-pair hash set).
     */

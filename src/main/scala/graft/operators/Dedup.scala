@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.{DriverGraph, Tables}
@@ -214,58 +215,62 @@ object Dedup {
 
   /** Candidate pairs of an exact set-similarity join at Jaccard ≥
     * num/den — the AllPairs prefix filter (Bayardo et al.) behind
-    * dedup_ngram_jaccard (9/10 over token sets) and mm_cdc_incremental
-    * (1/2 over chunk digests). `probe` and `index` are (id, set) relations whose sets
-    * hold distinct tokens; `df` is (token, df).
-    *
-    * Every set orders its tokens by global rarity (df asc, token asc; a
-    * token absent from `df` ranks as df 0) and posts only its first
-    * n − ⌈num·n/den⌉ + 1. Two sets at Jaccard ≥ num/den share at least
-    * ⌈num·n/den⌉ tokens of each side's n (the intersection is at least
-    * num/den of the union, hence of either set), so the rarest shared
-    * token sits inside both prefixes: no true pair is lost, and the
-    * oracle is the exhaustive all-pairs scan. ⌈num·n/den⌉ is the integer
-    * (n·num + den − 1) div den — a double product rounds differently from
-    * DuckDB's exact DECIMAL and could move the prefix boundary by one.
-    * The order is one sort of each set's (df, token) pairs, so no global
-    * rank job runs and tokens need no integer vocabulary (a `row_number`
-    * window per id gives the same order, but measured slower in a JVM's
-    * first passes on a 4-vCPU VM). Cost tracks the rare tokens: a common
-    * token ranks out of every prefix, so stopword postings never form
-    * quadratic cliques.
-    *
-    * The token equi-join also keeps only size-compatible pairs,
-    * den·min(nᵢ, nⱼ) ≥ num·max(nᵢ, nⱼ) (the intersection is bounded by
-    * the smaller set, the union by the larger), in exact integers. Output:
-    * distinct bare (i = probe id, j = index id) for the caller's exact
-    * rerank; nothing here launches a job. A self-join is
-    * [[selfJaccardCandidates]].
+    * mm_cdc_incremental (1/2) and, as [[selfJaccardCandidates]],
+    * dedup_ngram_jaccard (9/10). `probe` and `index` are (id, set)
+    * relations of distinct-token sets; `df` is (token, df). Each set
+    * orders its tokens by rarity (df asc, token asc, one `row_number`
+    * window per id; a token absent from `df` is df 0) and posts only its
+    * first n − ⌈num·n/den⌉ + 1: a pair at Jaccard ≥ num/den shares at
+    * least ⌈num·n/den⌉ of each side's n tokens, so under ANY one global
+    * order its first shared token sits in both prefixes — lossless, and
+    * the oracle is the exhaustive scan. Rarity is for cost: a common
+    * token ranks out of every prefix. The token equi-join also keeps only
+    * den·min(nᵢ, nⱼ) ≥ num·max(nᵢ, nⱼ). All in exact integers (a double
+    * product could move the prefix boundary against DuckDB's DECIMAL).
+    * Output: distinct (i = probe id, j = index id); no job runs here.
     */
   private[graft] def jaccardCandidates(probe: DataFrame, index: DataFrame,
       df: DataFrame, num: Int, den: Int): DataFrame =
-    postingPairs(prefixTokens(probe, df, num, den),
-      prefixTokens(index, df, num, den), num, den)
+    postingPairs(rarityPosts(probe, df, num, den),
+      rarityPosts(index, df, num, den), num, den)
 
-  /** The (token, id, n) prefix postings of an (id, set) relation under
-    * the rarity order of `df` ([[jaccardCandidates]]).
+  /** [[jaccardCandidates]] of `sets` against itself, for sets whose
+    * arrays are ALREADY in one global token order (ascending ids of a
+    * rarity-ranked vocabulary): the distinct pairs i < j, over postings
+    * materialized once for both join sides.
     */
-  private def prefixTokens(sets: DataFrame, df: DataFrame, num: Int,
+  private[graft] def selfJaccardCandidates(sets: DataFrame, num: Int,
+      den: Int): DataFrame = {
+    val (posts, _) = materialize(prefixPosts(sets, num, den))
+    postingPairs(posts, posts, num, den).filter(col("i") < col("j"))
+  }
+
+  /** (token, id, n) prefix postings under the rarity order of `df`. */
+  private def rarityPosts(sets: DataFrame, df: DataFrame, num: Int,
       den: Int): DataFrame =
     sets.toDF("id", "set")
       .select(col("id"), size(col("set")).as("n"),
         explode(col("set")).as("token"))
       .join(df.toDF("token", "df"), Seq("token"), "left_outer")
-      .groupBy(col("id"), col("n"))
-      .agg(array_sort(collect_list(struct(
-        coalesce(col("df"), lit(0L)).as("df"), col("token")))).as("ranked"))
-      .select(col("id"), col("n"), explode(slice(col("ranked"), lit(1),
-        (col("n") - expr(s"(n * $num + ${den - 1}) div $den") + 1)
-          .cast("int"))).as("e"))
-      .select(col("e.token").as("token"), col("id"), col("n"))
+      .select(col("token"), col("id"), col("n"),
+        row_number().over(Window.partitionBy(col("id"))
+          .orderBy(coalesce(col("df"), lit(0L)), col("token"))).as("rn"))
+      .filter(col("rn") <= prefixLen(num, den))
+      .select(col("token"), col("id"), col("n"))
 
-  /** Distinct (i, j) of two posting relations that share a token and
-    * pass the size filter of [[jaccardCandidates]].
-    */
+  /** (token, id, n) prefix postings of sets already in the global order. */
+  private def prefixPosts(sets: DataFrame, num: Int, den: Int): DataFrame =
+    sets.toDF("id", "set")
+      .select(col("id"), size(col("set")).as("n"), col("set"))
+      .select(explode(slice(col("set"), lit(1), prefixLen(num, den)
+        .cast("int"))).as("token"), col("id"), col("n"))
+
+  /** n − ⌈num·n/den⌉ + 1 over the size column `n`, in integers. */
+  private def prefixLen(num: Int, den: Int): Column =
+    col("n") - expr(s"(n * $num + ${den - 1}) div $den") + 1
+
+  /** Distinct (i, j) of two posting relations sharing a token, under
+    * the size filter of [[jaccardCandidates]]. */
   private def postingPairs(p: DataFrame, q: DataFrame, num: Int,
       den: Int): DataFrame =
     p.toDF("ti", "i", "ni")
@@ -275,52 +280,59 @@ object Dedup {
       .select(col("i"), col("j"))
       .distinct()
 
-  /** [[jaccardCandidates]] of `sets` against itself, df counted over
-    * `sets`: the distinct candidate pairs i < j of a self-join. The
-    * postings feed both join sides, so they are materialized once: as
-    * two plans, a side the planner broadcasts would evaluate the rarity
-    * join and the prefix sort a second time.
-    */
-  private[graft] def selfJaccardCandidates(sets: DataFrame, num: Int,
-      den: Int): DataFrame = {
-    val s = sets.toDF("id", "set")
-    val df = s.select(explode(col("set")).as("token"))
-      .groupBy(col("token")).agg(count(lit(1)).as("df"))
-    val (posts, _) = materialize(prefixTokens(s, df, num, den))
-    postingPairs(posts, posts, num, den).filter(col("i") < col("j"))
-  }
-
-  /** Unsorted near-dup pair relation (i < j, rounded jac ≥ 0.9) over
-    * distinct whitespace-token sets — shared by the pair query, the
-    * clustering operator and pipeline_contrastive_pairs. Candidates come
-    * from [[jaccardCandidates]] at 9/10; the sorted token sets rerank by
-    * one merge walk per pair. This replaced a (lang, length-bucket)
-    * blocking that silently missed 91% of true pairs (cross-language
-    * duplicates and bucket straddlers; 790 of 9020 at sf0.01).
+  /** Unsorted near-dup pair relation (i < j, rounded jac ≥ 0.9) — shared
+    * by the pair query, the clustering operator and
+    * pipeline_contrastive_pairs. Candidates: [[selfJaccardCandidates]] at
+    * 9/10 over int token ids assigned in rarity order, so one sorted id
+    * set is both the prefix order and the rerank kernel's merge order
+    * (over the string sets with a per-set rarity sort the query ran
+    * 5.6 → 10.0 s at sf0.1 on 4 cores). This replaced a (lang,
+    * length-bucket) blocking that silently missed 91% of true pairs
+    * (cross-language duplicates and bucket straddlers; 790 of 9020 at
+    * sf0.01).
     */
   private[operators] def ngramPairs(spark: SparkSession,
       dir: String): DataFrame = {
     // repartition: single-row-group testdata parquet would tokenize in ONE
-    // task; the df count, the postings and both rerank joins read the
-    // token sets (no count: the posting count fills the cache)
-    setPairs(persist(Tables.documents(spark, dir)
+    // task; t feeds the df count and the vocab-id join.
+    val t = Tables.documents(spark, dir)
       .repartition(col("doc_id"))
-      .select(col("doc_id"), array_sort(array_distinct(toks)).as("tset"))),
-      9, 10)
-  }
-
-  /** The (i < j, jac) pairs at rounded Jaccard ≥ num/den of a persisted
-    * (doc_id, set) relation of sorted distinct string sets: candidates
-    * from [[selfJaccardCandidates]], then the exact rerank.
-    */
-  private def setPairs(sets: DataFrame, num: Int, den: Int): DataFrame = {
-    val s = sets.toDF("doc_id", "set")
-    selfJaccardCandidates(s, num, den)
-      .join(s.select(col("doc_id").as("i"), col("set").as("s_i")), Seq("i"))
-      .join(s.select(col("doc_id").as("j"), col("set").as("s_j")), Seq("j"))
-      .select(col("i"), col("j"), round(jaccard(col("s_i"), col("s_j")), 6)
-        .as("jac"))
-      .filter(col("jac") >= num.toDouble / den)
+      .select(col("doc_id"), array_sort(array_distinct(toks)).as("tset"))
+      // no count: the vocab ranking's position job below fills it
+      .transform(persist)
+    val tok = t.select(col("doc_id"), explode(col("tset")).as("token"))
+    // dense integer id per token in global-rarity order (df asc, token
+    // asc): a BIJECTION, so jaccard over tid sets equals jaccard over
+    // token sets. The rank is the two-pass distributed
+    // [[graft.Ranks.rowNumber]] (a crawl vocabulary is too big for one
+    // window reducer). tid is an INT (half a long's array bytes); past
+    // 2^31 distinct tokens it fails LOUDLY, never wraps into colliding ranks
+    val vocab = graft.Ranks.rowNumber(
+        tok.groupBy(col("token")).agg(count(lit(1)).as("df")),
+        "rk", col("df"), col("token"))
+      .select(col("token"),
+        when(col("rk") <= Int.MaxValue, col("rk").cast("int"))
+          .otherwise(raise_error(concat(lit("vocabulary rank "),
+            col("rk").cast("string"), lit(" exceeds int ids"))))
+          .as("tid"))
+    // per-doc sorted tid set (one agg), read by the postings and both
+    // rerank sides; no broadcast hint on the corpus-sized vocab. The
+    // fixed-width repartition matters: AQE coalesced the agg shuffle to
+    // ONE partition, the cache pinned it, and as hashpartitioning(doc_id)
+    // satisfied the candidate distinct's distribution, a 22M-row distinct
+    // ran on one task (12 s).
+    val nParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val (ids, _) = materialize(tok.join(vocab, Seq("token"))
+      .groupBy(col("doc_id"))
+      .agg(array_sort(collect_list(col("tid"))).as("ts"))
+      .repartition(nParts, col("doc_id")))
+    selfJaccardCandidates(ids, 9, 10)
+      .join(ids.select(col("doc_id").as("i"), col("ts").as("ts_i")), Seq("i"))
+      .join(ids.select(col("doc_id").as("j"), col("ts").as("ts_j")), Seq("j"))
+      .select(col("i"), col("j"),
+        round(GraftFunctions.jaccardSortedInt(col("ts_i"), col("ts_j")), 6)
+          .as("jac"))
+      .filter(col("jac") >= 0.9)
   }
 
   /** §2.3 dedup_ngram_jaccard: token-set Jaccard near-dup pairs via exact

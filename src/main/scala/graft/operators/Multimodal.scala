@@ -321,15 +321,12 @@ object Multimodal {
     * 2I ≥ n_f + n_w − I over the distinct digest sets `cdcChunks` emits
     * is Jaccard ≥ 1/2, so candidate recall is exactly 1 BY CONSTRUCTION
     * (that is why mm_cdc_incremental can carry an EXHAUSTIVE oracle with
-    * no banding-recall caveat). Without the prefix the raw index join is
-    * catastrophically dense here BY CONSTRUCTION of the chunker:
-    * boundary ≡ 0 mod 7 makes ~7-byte average chunks, so almost every
-    * payload pair shares SOME common digest — measured at sf0.1: 967,822
-    * candidate pairs for 23 true dups, the whole cost of the operator,
-    * vs ~3k pairs with the prefix. A pathologically common chunk (an
-    * all-zeros block, a shared container header) bounds itself: high-df
-    * digests rank OUT of every prefix, so no df cap — and no lossy
-    * carve-out — is needed.
+    * no banding-recall caveat). The prefix is what makes the join
+    * affordable: ~7-byte average chunks (boundary ≡ 0 mod 7) make almost
+    * every payload pair share SOME digest — at sf0.1 the raw index join
+    * proposed 967,822 candidates for 23 true dups, the prefix ~3k — and
+    * a pathologically common chunk (an all-zeros block, a shared
+    * container header) ranks OUT of every prefix, so no lossy df cap.
     *
     * Incremental contract: the prefix index derives from the SAME
     * stored relations the warehouse already keeps (inverted index →

@@ -2298,30 +2298,42 @@ object Relational {
     * component query on — "how many trading hops from the hub customers
     * does each reachable counterparty sit". Seeds are the slice's three
     * smallest customer ids (deterministic, always present); unreached
-    * vertices and vertices beyond [[SsspMaxRounds]] hops are absent from
+    * vertices and vertices beyond [[BfsMaxHops]] hops are absent from
     * the result, so the answer is well-defined on any diameter.
     *
-    * It is [[ssspCore]] over unit weights: there a frontier round is a
-    * BFS level — the same seeds, horizon and early exit, and every vertex
-    * a round improves is one it reaches for the first time, at its hop
-    * count. Hop minimality is BFS order — all integers, so the DuckDB
+    * Scale shape: the frontier algorithm, not the closure — each round
+    * joins only the CURRENT frontier (what changed last round) into the
+    * stationary edge cache, never the whole visited set, so total work
+    * is O(edges · 1) across the loop on any graph the frontier sweeps
+    * once (a recursive-closure rewrite re-expands every visited vertex
+    * every round). Edges persist pre-partitioned by src with an eager
+    * count (the multi-consumer cache contract); the frontier broadcasts
+    * below [[PagerankBroadcastMaxVertices]] and falls back to a
+    * src-co-partitioned shuffle join above it; newly-found vertices
+    * leave via one left-anti join against the visited relation per
+    * round; every round lands in a [[graft.Barriers.roundBarrier]]
+    * (O(1) lineage — the CLAUDE.md iterative contract) and the loop
+    * exits early on an empty frontier (a cheap count on checkpointed
+    * rows). Hop minimality is BFS order — all integers, so the DuckDB
     * recursive-CTE oracle (min-hops walk, depth-bounded) matches
     * bit-for-bit.
     */
-  def graphShortestPaths(spark: SparkSession, dir: String): DataFrame =
-    ssspCore(graft.Barriers.symmetrize(
-        urgentSlicePairs(spark, dir).withColumn("w", lit(1L)), "i", "j", "w"))
+  def graphShortestPaths(spark: SparkSession, dir: String): DataFrame = {
+    bfsCore(graft.Barriers.symmetrize(urgentSlicePairs(spark, dir), "i", "j"),
+      3, BfsMaxHops)
       .select(
         vertexSide("id").as("node_type"),
         vertexKey("id").as("entity_key"),
-        col("dist").as("hops"))
+        col("hops"))
       .orderBy(col("hops"), col("node_type"), col("entity_key"))
+  }
 
-  /** Relaxation-round cap for [[graphWeightedSssp]] and
-    * [[graphShortestPaths]] — both engines run exactly this many
-    * Bellman-Ford rounds, so distances are the exact minima over ≤ 8-edge
-    * paths (the bounded-horizon SSSP contract; a converged run exits
-    * early with the identical result). */
+  private[graft] val BfsMaxHops = 8L
+
+  /** Relaxation-round cap for [[graphWeightedSssp]] — both engines run
+    * exactly this many Bellman-Ford rounds, so distances are the exact
+    * minima over ≤ 8-edge paths (the bounded-horizon SSSP contract; a
+    * converged run exits early with the identical result). */
   private[graft] val SsspMaxRounds = 8
 
   /** §2.2 graph_weighted_sssp: single-source shortest paths with edge
@@ -2364,22 +2376,11 @@ object Relational {
       .orderBy(col("node_type"), col("entity_key"))
   }
 
-  /** The frontier Bellman-Ford loop under graph_weighted_sssp and
-    * graph_shortest_paths, on a general weighted DIRECTED (src, dst, w)
-    * relation (pass both directions for undirected semantics): (id,
-    * dist) for every vertex within [[SsspMaxRounds]] relaxations of the
-    * seeds (the `nSeeds` smallest even vertex ids appearing as a src, the
-    * hub rule). Split out so ScaleCheck can drive the loop on the
-    * 25M-edge drill graph.
-    *
-    * Scale shape: the frontier algorithm, not the closure — each round
-    * joins only the vertices improved last round into the stationary
-    * edge cache (persisted pre-partitioned by src with an eager count),
-    * never the whole distance table, so on unit weights total work is
-    * O(edges · 1) across the loop; every round lands in a
-    * [[graft.Barriers.roundBarrier]] (O(1) lineage — the CLAUDE.md
-    * iterative contract) and the loop exits early when nothing improves
-    * (a cheap count on checkpointed rows).
+  /** The frontier Bellman-Ford loop under graph_weighted_sssp, on a
+    * general weighted (src, dst, w) relation: (id, dist) for every
+    * vertex within [[SsspMaxRounds]] relaxations of the seeds (the
+    * `nSeeds` smallest even vertex ids, the bfsCore hub rule). Split
+    * out so ScaleCheck can drive the loop on the 25M-edge drill graph.
     */
   private[graft] def ssspCore(edges0: DataFrame, nSeeds: Int = 3,
       maxRounds: Int = SsspMaxRounds): DataFrame = scoped {
@@ -3065,6 +3066,46 @@ object Relational {
       .orderBy(col("n_name"))
   }
 
+  /** The frontier BFS loop under graph_shortest_paths, on a general
+    * DIRECTED edge list (pass both directions for undirected semantics,
+    * as graphShortestPaths does). Seeds are the `nSeeds` smallest
+    * even-numbered vertex ids appearing as a src (the query's hub rule);
+    * returns (id, hops) for every vertex within `maxHops` of a seed.
+    */
+  private[graft] def bfsCore(edges0: DataFrame, nSeeds: Int,
+      maxHops: Long,
+      broadcastMaxVertices: Long = PagerankBroadcastMaxVertices)
+      : DataFrame = scoped {
+    // seeds + every BFS round consume the edge cache
+    val (edges, _) = graft.Barriers.stationaryEdges(edges0)
+    val seeds = edges.filter(col("src") % 2 === 0)
+      .select(col("src").as("id")).distinct()
+      .orderBy(col("id")).limit(nSeeds)
+    val visited0 = graft.Barriers.roundBarrier(
+      seeds.select(col("id"), lit(0).cast("bigint").as("hops")))
+    // state: (visited, frontier, |frontier|) — a round's one count of
+    // its fresh vertices is both its `changed` and the next round's
+    // routing decision
+    val ((visited, _, _), _) = graft.Barriers.fixpoint("bfs", Horizon(maxHops))(
+        (visited0, visited0, visited0.count())) {
+        case ((visited, frontier, nFrontier), hop) =>
+      val routed =
+        if (nFrontier <= broadcastMaxVertices) broadcast(frontier)
+        else frontier.repartition(col("id"))
+      val candidates = edges
+        .join(routed, col("src") === col("id"))
+        .select(col("dst").as("id")).distinct()
+      val fresh = graft.Barriers.roundBarrier(
+        candidates.join(visited.select(col("id")), Seq("id"), "left_anti")
+          .select(col("id"), lit(hop.toLong).as("hops")))
+      val nFresh = fresh.count()
+      if (nFresh == 0) Round((visited, frontier, nFrontier), 0)
+      else Round((graft.Barriers.roundBarrier(visited.unionAll(fresh)), fresh,
+        nFresh), nFresh)
+    }
+    visited
+  }
+
   /** §2.2 graph_kcore: the 2-core of the urgent-flow commerce slice —
     * iteratively peel every vertex with fewer than k=2 surviving
     * neighbors until nothing changes; what remains is the cyclic
@@ -3120,35 +3161,31 @@ object Relational {
     // bounded finishing step, not corpus data: peel in memory where a
     // round is an array sweep instead of a scheduled stage
     if (n0 <= driverEdgeBound) graft.DriverGraph.kCore(edges0, k, "kcore")
-    else distributedKCore(edges0, n0, k)
-  }
-
-  /** [[kCoreCore]]'s distributed peel over its counted input edges. */
-  private def distributedKCore(edges0: DataFrame, n0: Long,
-      k: Int): (DataFrame, Int) = {
-    // every round but the last removes at least one edge, so n0 + 1
-    // rounds always reach the fixpoint; a round over no edges reports 0
-    // without a job
-    val ((edges, _), rounds) = graft.Barriers.fixpoint("kcore", Budget(n0 + 1))(
-        (edges0, n0)) { case ((edges, n), _) =>
-      if (n == 0) Round((edges, n), 0)
-      else {
-        val deg = edges.select(col("i").as("v"))
-          .unionAll(edges.select(col("j").as("v")))
-          .groupBy(col("v")).agg(count(lit(1)).as("d"))
-        val keep = deg.filter(col("d") >= k).select(col("v"))
-        val next = graft.Barriers.roundBarrier(edges
-          .join(keep.select(col("v").as("i")), Seq("i"), "left_semi")
-          .join(keep.select(col("v").as("j")), Seq("j"), "left_semi")
-          .select(col("i"), col("j")))
-        val m = next.count()
-        if (m == n) Round((edges, n), 0) else Round((next, m), n - m)
+    else {
+      // every round but the last removes at least one edge, so n0 + 1
+      // rounds always reach the fixpoint; a round over no edges reports 0
+      // without a job
+      val ((edges, _), rounds) = graft.Barriers.fixpoint("kcore", Budget(n0 + 1))(
+          (edges0, n0)) { case ((edges, n), _) =>
+        if (n == 0) Round((edges, n), 0)
+        else {
+          val deg = edges.select(col("i").as("v"))
+            .unionAll(edges.select(col("j").as("v")))
+            .groupBy(col("v")).agg(count(lit(1)).as("d"))
+          val keep = deg.filter(col("d") >= k).select(col("v"))
+          val next = graft.Barriers.roundBarrier(edges
+            .join(keep.select(col("v").as("i")), Seq("i"), "left_semi")
+            .join(keep.select(col("v").as("j")), Seq("j"), "left_semi")
+            .select(col("i"), col("j")))
+          val m = next.count()
+          if (m == n) Round((edges, n), 0) else Round((next, m), n - m)
+        }
       }
+      // the last round removed nothing
+      (edges.select(col("i").as("v")).unionAll(edges.select(col("j").as("v")))
+        .groupBy(col("v")).agg(count(lit(1)).cast("bigint").as("core_degree")),
+        rounds - 1)
     }
-    // the last round removed nothing
-    (edges.select(col("i").as("v")).unionAll(edges.select(col("j").as("v")))
-      .groupBy(col("v")).agg(count(lit(1)).cast("bigint").as("core_degree")),
-      rounds - 1)
   }
 
   /** Forward-BFS level cap for [[graphBetweenness]] — both engines

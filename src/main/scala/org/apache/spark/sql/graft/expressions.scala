@@ -91,6 +91,29 @@ case class JaccardSorted(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** jaccard_sorted_int(array<int>, array<int>) → double — the id-mapped
+  * fast path of [[JaccardSorted]] (bijective token ids preserve the value).
+  */
+case class JaccardSortedInt(left: Expression, right: Expression)
+    extends BinaryExpression with ExpectsInputTypes {
+  override def inputTypes: Seq[AbstractDataType] =
+    Seq(ArrayType(IntegerType), ArrayType(IntegerType))
+  override def dataType: DataType = DoubleType
+
+  override def nullSafeEval(a: Any, b: Any): Any =
+    GraftKernels.jaccardSortedInt(
+      a.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData],
+      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
+
+  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev,
+      (a, b) => s"graft.functions.GraftKernels.jaccardSortedInt($a, $b)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
 /** containment_sorted(array<string>, array<string>) → double: |a∩b|/|a|.
   * Inputs MUST be sorted and distinct, like [[JaccardSorted]].
   */
@@ -616,6 +639,8 @@ object GraftColumns {
 
   def cosine(a: Column, b: Column): Column = col(CosineSimilarity(ex(a), ex(b)))
   def jaccardSorted(a: Column, b: Column): Column = col(JaccardSorted(ex(a), ex(b)))
+  def jaccardSortedInt(a: Column, b: Column): Column =
+    col(JaccardSortedInt(ex(a), ex(b)))
   def containmentSorted(a: Column, b: Column): Column =
     col(ContainmentSorted(ex(a), ex(b)))
   def pairs(sortedIds: Column): Column = col(PairsGenerator(ex(sortedIds)))

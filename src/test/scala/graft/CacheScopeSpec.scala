@@ -32,10 +32,9 @@ class CacheScopeSpec extends AnyFunSuite {
       "pagerank must not leave SQL caches for the harness to clean")
 
     // dedup_cluster's pairs fit the driver-finish bound: its upstream
-    // ngram-pipeline caches (the token sets and their postings) release
-    // once the pair cache is counted, and the pair cache after its
-    // collect — the returned plan reads only the documents scan and a
-    // broadcast root map
+    // ngram-pipeline caches (t, ids, post) release once the pair cache is
+    // counted, and the pair cache after its collect — the returned plan
+    // reads only the documents scan and a broadcast root map
     val r1 = Dedup.dedupCluster(spark, dir).collect()
     assert(sqlCacheCount === 0, "cluster run 1 must leave no SQL cache")
     val r2 = Dedup.dedupCluster(spark, dir).collect()

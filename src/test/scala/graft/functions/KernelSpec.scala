@@ -142,6 +142,24 @@ class KernelSpec extends AnyFunSuite {
       GraftKernels.rhpSignature(v2, 8, 43) != GraftKernels.rhpSignature(v2, 8, 42))
   }
 
+  test("jaccardSortedInt == jaccardSorted under any id bijection") {
+    def iArr(xs: Seq[Int]): GenericArrayData = new GenericArrayData(xs.toArray)
+    val rng = new scala.util.Random(7)
+    for (_ <- 1 to 200) {
+      val universe = (0 until 40).map(i => f"tok$i%02d")
+      val a = rng.shuffle(universe).take(1 + rng.nextInt(20)).sorted
+      val b = rng.shuffle(universe).take(1 + rng.nextInt(20)).sorted
+      // a random bijection universe -> distinct ints, order-preserved per set
+      val ids = rng.shuffle((1 to 1000).toList).take(universe.size)
+      val idOf = universe.zip(ids).toMap
+      val ai = a.map(idOf).sorted
+      val bi = b.map(idOf).sorted
+      val s = GraftKernels.jaccardSorted(sArr(a), sArr(b))
+      val i = GraftKernels.jaccardSortedInt(iArr(ai), iArr(bi))
+      assert(s === i, s"bijection changed jaccard: $a vs $b")
+    }
+  }
+
   test("histL1 edit-distance bound is lossless: L1 > 2k never holds for edit <= k") {
     def hist(s: String): GenericArrayData = {
       val h = new Array[Int](64)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.functions.{col, explode}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
@@ -16,11 +17,13 @@ import graft.TestSpark
   * Jaccard ≥ num/den, and reranked by exact Jaccard they must equal
   * those pairs. A third of the sets are one-token edits of an earlier
   * set, so pairs sit on and around every threshold (a 9-set inside a
-  * 10-set is exactly 9/10). Both shapes run: the self-join the dedup
-  * queries use (string tokens, df counted over the sets) and the
-  * probe × index join of mm_cdc_incremental (long tokens, df from a
-  * random subset of the index's tokens, so probe-only and index tokens
-  * alike are absent from it and rank as df 0).
+  * 10-set is exactly 9/10). Both shapes run: the self-join (string
+  * tokens; through `jaccardCandidates` with df counted over the sets,
+  * and through `selfJaccardCandidates` on sets already in one global
+  * order, as dedup_ngram_jaccard's id sets are) and the probe × index
+  * join of mm_cdc_incremental (long tokens, df from a random subset of
+  * the index's tokens, so probe-only and index tokens alike are absent
+  * from it and rank as df 0).
   */
 class JaccardCandidatesSpec extends AnyFunSuite {
 
@@ -81,16 +84,21 @@ class JaccardCandidatesSpec extends AnyFunSuite {
       "at 1/2, 2/3 and 9/10") {
     import spark.implicits._
     val sets = corpora(new Random(17), 50, 0L)
-    val rel = sets.map { case (id, s) => (id, s.toSeq.map(t => f"t$t%04d")) }
-      .toDF("doc_id", "sh")
+    // sorted arrays: the token order selfJaccardCandidates relies on
+    val rel = sets.map { case (id, s) =>
+      (id, s.toSeq.sorted.map(t => f"t$t%04d")) }.toDF("doc_id", "sh")
+    val df = rel.select(explode(col("sh")).as("t")).groupBy("t").count()
     val byId = sets.toMap
     for ((num, den) <- thresholds) {
-      val cand = Dedup.selfJaccardCandidates(rel, num, den)
-        .as[(Long, Long)].collect().toSeq
-      assert(cand.forall { case (i, j) => i < j })
       val truth = (for ((i, a) <- sets; (j, b) <- sets
         if i < j && atLeast(a, b, num, den)) yield (i, j)).toSet
-      assertLossless(cand, byId, byId, truth, num, den)
+      for (c <- Seq(Dedup.selfJaccardCandidates(rel, num, den),
+          Dedup.jaccardCandidates(rel, rel, df, num, den)
+            .filter(col("i") < col("j")))) {
+        val cand = c.as[(Long, Long)].collect().toSeq
+        assert(cand.forall { case (i, j) => i < j })
+        assertLossless(cand, byId, byId, truth, num, den)
+      }
     }
     graft.GraftCaches.release(spark) // the posting caches
   }
@@ -120,15 +128,14 @@ class JaccardCandidatesSpec extends AnyFunSuite {
       "proposed, and a self-join evaluates its postings once") {
     import spark.implicits._
     val sets = corpora(new Random(5), 50, 0L)
-    val rel = sets.map { case (id, s) => (id, s.toSeq.map(_.toLong)) }
+    val rel = sets.map { case (id, s) => (id, s.toSeq.sorted.map(_.toLong)) }
       .toDF("doc_id", "sh")
     val nCand = Dedup.selfJaccardCandidates(rel, 9, 10).count()
     val sharing = (for ((i, a) <- sets; (j, b) <- sets
       if i < j && (a & b).nonEmpty) yield 1).size
     assert(nCand * 4 < sharing, s"$nCand candidates of $sharing sharing pairs")
-    // both join sides read one posting cache: the per-set prefix sort
-    // (a collect_list aggregate) runs only inside it, never again on a
-    // join side
+    // both join sides read one posting cache, and sets already in the
+    // global order are never re-sorted (no collect_list aggregate)
     val plan = Dedup.selfJaccardCandidates(rel, 9, 10)
     plan.collect()
     val exec = plan.queryExecution.executedPlan

@@ -4,18 +4,19 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.TestSpark
 
-/** graph_shortest_paths' loop — the frontier Bellman-Ford `ssspCore`
-  * over unit weights — on synthetic graphs against a driver-side BFS
-  * reference. The commerce-slice operator itself is oracle-gated
-  * (graph_shortest_paths, recursive-CTE oracle); this spec covers what
-  * the oracle cannot: the early-exit on a drained frontier, unreached
-  * vertices staying absent, and the hop cutoff.
+/** The bfsCore frontier loop on synthetic graphs against a driver-side
+  * BFS reference, in BOTH frontier-routing regimes (broadcast below the
+  * vertex bound, src-co-partitioned shuffle above it — the bound gates
+  * WHICH join ships, never the answer). The commerce-slice operator
+  * itself is oracle-gated (graph_shortest_paths, recursive-CTE oracle);
+  * this spec covers what the oracle cannot: the early-exit on a drained
+  * frontier, unreached vertices staying absent, and the hop cutoff.
   */
 class ShortestPathsSpec extends AnyFunSuite {
 
   private lazy val spark = TestSpark.spark
 
-  /** Driver BFS from the nSeeds smallest even src ids, ssspCore's rule. */
+  /** Driver BFS from the nSeeds smallest even src ids, bfsCore's rule. */
   private def reference(edges: Seq[(Long, Long)], nSeeds: Int,
       maxHops: Long): Map[Long, Long] = {
     val adj = edges.groupBy(_._1).map { case (s, es) => s -> es.map(_._2) }
@@ -34,11 +35,11 @@ class ShortestPathsSpec extends AnyFunSuite {
     dist.toMap
   }
 
-  private def run(edges: Seq[(Long, Long)], nSeeds: Int,
-      maxHops: Int): Map[Long, Long] = {
+  private def run(edges: Seq[(Long, Long)], nSeeds: Int, maxHops: Long,
+      broadcastMaxVertices: Long): Map[Long, Long] = {
     import spark.implicits._
-    Relational.ssspCore(edges.map { case (a, b) => (a, b, 1L) }
-        .toDF("src", "dst", "w"), nSeeds, maxHops)
+    Relational.bfsCore(edges.toDF("src", "dst"), nSeeds, maxHops,
+        broadcastMaxVertices)
       .as[(Long, Long)].collect().toMap
   }
 
@@ -52,7 +53,7 @@ class ShortestPathsSpec extends AnyFunSuite {
   private val apart = sym(Seq((100L, 101L)))
 
   test("chain distances match the reference; disconnected stays absent") {
-    val got = run(chain ++ apart, 1, 20)
+    val got = run(chain ++ apart, 1, 20L, broadcastMaxVertices = 1000000L)
     assert(got === reference(chain ++ apart, 1, 20L))
     assert(!got.contains(100L) && !got.contains(101L))
     assert(got(11L) === 11L)
@@ -60,22 +61,30 @@ class ShortestPathsSpec extends AnyFunSuite {
 
   test("early-exit: maxHops far beyond the diameter still terminates " +
       "with exact distances") {
-    val got = run(chain, 1, 1000)
+    val got = run(chain, 1, 1000L, broadcastMaxVertices = 1000000L)
     assert(got === reference(chain, 1, 1000L))
   }
 
   test("hop cutoff truncates the walk") {
-    val got = run(chain, 1, 3)
+    val got = run(chain, 1, 3L, broadcastMaxVertices = 1000000L)
     assert(got === reference(chain, 1, 3L))
     assert(got.values.max === 3L)
     assert(!got.contains(4L))
+  }
+
+  test("both frontier-routing regimes agree bit-for-bit") {
+    val edges = chain ++ apart ++ sym(Seq((2L, 50L), (50L, 51L), (4L, 51L)))
+    val viaBroadcast = run(edges, 2, 8L, broadcastMaxVertices = 1000000L)
+    val viaShuffle = run(edges, 2, 8L, broadcastMaxVertices = 0L)
+    assert(viaBroadcast === viaShuffle)
+    assert(viaBroadcast === reference(edges, 2, 8L))
   }
 
   test("multi-source: three seeds each claim their nearer vertices") {
     // three stars around even hubs 0, 2, 4 with distinct leaf sets
     val edges = sym(Seq((0L, 11L), (0L, 13L), (2L, 15L), (2L, 17L),
       (4L, 19L), (11L, 21L)))
-    val got = run(edges, 3, 8)
+    val got = run(edges, 3, 8L, broadcastMaxVertices = 1000000L)
     assert(got === reference(edges, 3, 8L))
     assert(got(0L) === 0L && got(2L) === 0L && got(4L) === 0L)
     assert(got(21L) === 2L)
