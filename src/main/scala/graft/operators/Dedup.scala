@@ -241,7 +241,7 @@ object Dedup {
     */
   private[graft] def selfJaccardCandidates(sets: DataFrame, num: Int,
       den: Int): DataFrame = {
-    val (posts, _) = materialize(prefixPosts(sets, num, den))
+    val (posts, _) = materialize(orderedPosts(sets, num, den))
     postingPairs(posts, posts, num, den).filter(col("i") < col("j"))
   }
 
@@ -259,7 +259,7 @@ object Dedup {
       .select(col("token"), col("id"), col("n"))
 
   /** (token, id, n) prefix postings of sets already in the global order. */
-  private def prefixPosts(sets: DataFrame, num: Int, den: Int): DataFrame =
+  private def orderedPosts(sets: DataFrame, num: Int, den: Int): DataFrame =
     sets.toDF("id", "set")
       .select(col("id"), size(col("set")).as("n"), col("set"))
       .select(explode(slice(col("set"), lit(1), prefixLen(num, den)
